@@ -29,16 +29,26 @@ docs' MinHash signatures + LSH band hashes (operators/dedup.py's exact
 band derivation, shared code), a new doc is rejected when a band collision
 verifies above the Jaccard threshold via the signature-agreement estimate.
 Same at-least-once contract, same compaction story (`near_compact_state`).
+
+The additive faces further down (cms, qsketch, drift, rolling_drift, index,
+rules, cluster, seasonal) are exactly-once instead: each is one
+:class:`AdditiveState` spec run by the shared fenced apply/stream/read.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.errors import AnalysisException
+
+from logstash_filter_geoip_spark.streaming.pipeline import foreach_batch_stream
 
 STATE_SCHEMA = T.StructType([T.StructField("content_h", T.StringType())])
 
@@ -61,15 +71,25 @@ def _content_hash(key_cols: tuple[str, ...]):
     return F.md5(F.concat_ws("\x00", *parts))
 
 
+def _local_only(path: str) -> None:
+    """Reject a remote path before anything is written for it: every state
+    swap in this module is a local directory rename."""
+    if "://" in path:
+        raise NotImplementedError(
+            f"{path!r}: incremental state is swapped in place via os.rename "
+            "and supports local paths only; for remote state use a "
+            "transactional table format (Delta/Iceberg MERGE, or append "
+            "and OPTIMIZE)")
+
+
 def _recover_interrupted_compaction(state_path: str) -> None:
-    """A crash inside ``compact_state``'s directory swap can leave the live
+    """A crash inside a ``_swap_dir`` directory swap can leave the live
     state under ``<state>.old`` (swap half-done) or a stale ``.old``/
-    ``.compact`` beside a healthy state. Roll forward/back so the seen-set
-    is never silently lost and the next compaction never trips on leftovers.
-    Local paths only — remote compaction is rejected up front."""
+    ``.compact`` beside a healthy state. Roll forward/back so the state
+    is never silently lost and the next swap never trips on leftovers.
+    Local paths only — remote swaps are rejected up front."""
     if "://" in state_path:
         return
-    import shutil
     old = state_path.rstrip("/") + ".old"
     tmp = state_path.rstrip("/") + ".compact"
     if os.path.exists(old):
@@ -83,6 +103,27 @@ def _recover_interrupted_compaction(state_path: str) -> None:
         shutil.rmtree(tmp)
 
 
+def _swap_dir(df: DataFrame, path: str, batch_id: int | None = None) -> None:
+    """Replace the parquet directory `path` with `df`, which may itself
+    read `path`: materialize to `<path>.compact` (plus `_commit.json` when
+    a fenced face passes its `batch_id`, so data and fence publish in one
+    rename), then rename-swap. Every crash point is rolled forward/back by
+    _recover_interrupted_compaction on the next read or swap."""
+    _local_only(path)
+    tmp = path.rstrip("/") + ".compact"
+    df.write.mode("overwrite").parquet(tmp)
+    if batch_id is not None:
+        with open(os.path.join(tmp, "_commit.json"), "w") as f:
+            json.dump({"batch_id": batch_id}, f)
+    if os.path.exists(path):
+        old = path.rstrip("/") + ".old"
+        os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old)
+    else:
+        os.rename(tmp, path)
+
+
 def _read_state_df(spark: SparkSession, state_path: str,
                    schema: T.StructType) -> DataFrame:
     _recover_interrupted_compaction(state_path)
@@ -94,10 +135,6 @@ def _read_state_df(spark: SparkSession, state_path: str,
         return spark.read.schema(schema).parquet(state_path)
     except AnalysisException:
         return spark.createDataFrame([], schema)
-
-
-def _read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _read_state_df(spark, state_path, STATE_SCHEMA)
 
 
 def dedup_batch_against_state(batch: DataFrame, seen: DataFrame,
@@ -124,32 +161,33 @@ def dedup_stream(spark: SparkSession, input_path: str, output_path: str,
     """File-source → foreachBatch(first-seen filter → append) with the
     seen-hash state in `state_path`. availableNow drains pending input and
     stops (test/CI mode); omit for a continuous deployment."""
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
+    return foreach_batch_stream(
+        spark, input_path, schema, checkpoint_path,
+        lambda batch, batch_id: _admit_first_seen(
+            spark, batch, output_path, state_path, key_cols, id_col),
+        available_now)
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        seen = _read_state(spark, state_path)
-        fresh = dedup_batch_against_state(batch, seen, key_cols, id_col)
-        # two writes need the batch twice; keep it to ONE upstream compute
-        fresh = fresh.persist()
-        try:
-            # all-duplicate batches are common under replay: skip both
-            # writes so output/state file counts don't grow by empty parts
-            if fresh.isEmpty():
-                return
-            (fresh.drop("content_h").write.mode("append")
-                  .parquet(os.path.join(output_path, "data")))
-            (fresh.select("content_h").write.mode("append")
-                  .parquet(state_path))
-        finally:
-            fresh.unpersist()
 
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def _admit_first_seen(spark: SparkSession, batch: DataFrame,
+                      output_path: str, state_path: str,
+                      key_cols: tuple[str, ...], id_col: str) -> None:
+    """One first-seen micro-batch: append the admitted rows to
+    `<output_path>/data`, THEN their hashes to the state (at-least-once)."""
+    seen = _read_state_df(spark, state_path, STATE_SCHEMA)
+    fresh = dedup_batch_against_state(batch, seen, key_cols, id_col)
+    # two writes need the batch twice; keep it to ONE upstream compute
+    fresh = fresh.persist()
+    try:
+        # all-duplicate batches are common under replay: skip both
+        # writes so output/state file counts don't grow by empty parts
+        if fresh.isEmpty():
+            return
+        (fresh.drop("content_h").write.mode("append")
+              .parquet(os.path.join(output_path, "data")))
+        (fresh.select("content_h").write.mode("append")
+              .parquet(state_path))
+    finally:
+        fresh.unpersist()
 
 
 def _compact_dir(spark: SparkSession, state_path: str,
@@ -158,11 +196,7 @@ def _compact_dir(spark: SparkSession, state_path: str,
     schema=None reads whatever the directory holds (the near-dup state's
     id type is input-derived, not fixed). A directory that was never
     created (no state written yet) compacts to 0 without touching disk."""
-    if "://" in state_path:
-        raise NotImplementedError(
-            "state compaction swaps directories via os.rename and supports "
-            "local paths only; for remote state use a transactional table "
-            "format (e.g. append to a Delta/Iceberg table and OPTIMIZE)")
+    _local_only(state_path)
     _recover_interrupted_compaction(state_path)
     if not os.path.exists(state_path):
         return 0
@@ -171,16 +205,8 @@ def _compact_dir(spark: SparkSession, state_path: str,
     else:
         seen = _read_state_df(spark, state_path, schema).distinct().persist()
     n = seen.count()
-    tmp = state_path.rstrip("/") + ".compact"
-    seen.write.mode("overwrite").parquet(tmp)
+    _swap_dir(seen, state_path)
     seen.unpersist()
-    import shutil
-    old = state_path.rstrip("/") + ".old"
-    # swap: any crash point here is rolled forward/back by
-    # _recover_interrupted_compaction on the next read or compaction
-    os.rename(state_path, old)
-    os.rename(tmp, state_path)
-    shutil.rmtree(old)
     return n
 
 
@@ -225,12 +251,10 @@ def _meta_guard(state_path: str, spec: dict, what: str,
     an existing pin differs (restarting with changed parameters would
     silently corrupt additive/probed state — each caller states the
     concrete consequence)."""
-    import json
     os.makedirs(state_path, exist_ok=True)
     mp = os.path.join(state_path, "meta.json")
     if os.path.exists(mp):
-        with open(mp) as f:
-            saved = json.load(f)
+        saved = _pinned_meta(state_path)
         if saved != spec:
             raise ValueError(
                 f"{what} state at {state_path!r} was written with "
@@ -238,8 +262,17 @@ def _meta_guard(state_path: str, spec: dict, what: str,
                 f"{consequence} Use the original parameters or a fresh "
                 "state path.")
     else:
-        with open(mp, "w") as f:
+        # publish atomically: a kill mid-dump must not leave a truncated
+        # pin that fails every restart with a JSON decode error
+        tmp = mp + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(spec, f)
+        os.replace(tmp, mp)
+
+
+def _pinned_meta(state_path: str) -> dict:
+    with open(os.path.join(state_path, "meta.json")) as f:
+        return json.load(f)
 
 
 def _near_meta_guard(state_path: str, n_hashes: int, n_bands: int,
@@ -401,10 +434,6 @@ def near_dedup_stream(spark: SparkSession, input_path: str, output_path: str,
     sigs_path = os.path.join(state_path, "sigs")
     id_type = schema[id_col].dataType
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
     def handle(batch: DataFrame, batch_id: int) -> None:
         _near_meta_guard(state_path, nh, nb, id_type.simpleString())
         state_bands = _read_state_df(spark, bands_path,
@@ -431,11 +460,8 @@ def near_dedup_stream(spark: SparkSession, input_path: str, output_path: str,
         finally:
             kept.unpersist()
 
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_batch_stream(spark, input_path, schema, checkpoint_path,
+                                handle, available_now)
 
 
 def near_compact_state(spark: SparkSession, state_path: str) -> tuple[int, int]:
@@ -463,29 +489,6 @@ def _dim_schema(batch: DataFrame, keys: tuple[str, ...],
         T.StructField("valid_from", T.TimestampType()),
         T.StructField("valid_to", T.TimestampType()),
     ])
-
-
-def _swap_write(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Replace a parquet directory we may also be READING in the same job:
-    materialize to `<path>.compact`, then the same crash-safe rename swap
-    as state compaction (rolled forward/back by
-    _recover_interrupted_compaction on the next read). Local FS only —
-    remote dimension state belongs in a transactional table format."""
-    if "://" in path:
-        raise NotImplementedError(
-            "scd2_stream swaps the dimension directory via os.rename and "
-            "supports local paths only; for remote state use a "
-            "transactional table format (Delta/Iceberg MERGE)")
-    import shutil
-    tmp = path.rstrip("/") + ".compact"
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        old = path.rstrip("/") + ".old"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, path)
 
 
 def scd2_apply_batch(current: DataFrame, batch: DataFrame,
@@ -528,10 +531,6 @@ def scd2_stream(spark: SparkSession, input_path: str, dim_path: str,
     write then rewrites an identical directory. Exactly-once without any
     transactional sink, because the operator itself is a converging merge.
     """
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
     def handle(batch: DataFrame, batch_id: int) -> None:
         current = _read_state_df(spark, dim_path,
                                  _dim_schema(batch, keys, attrs))
@@ -539,13 +538,10 @@ def scd2_stream(spark: SparkSession, input_path: str, dim_path: str,
                                   full_snapshot)
         if merged is None:
             return
-        _swap_write(spark, merged, dim_path)
+        _swap_dir(merged, dim_path)
 
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_batch_stream(spark, input_path, schema, checkpoint_path,
+                                handle, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -569,55 +565,42 @@ def novel_template_stream(spark: SparkSession, input_path: str,
     from logstash_filter_geoip_spark.operators.semistructured import \
         log_template
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        seen = _read_state(spark, state_path)
-        t = batch.withColumn("__template", log_template(F.col(text_col)))
-        fresh = dedup_batch_against_state(t, seen, ("__template",), id_col)
-        fresh = fresh.persist()
-        try:
-            if fresh.isEmpty():
-                return
-            (fresh.withColumnRenamed("__template", "template")
-                  .drop("content_h").write.mode("append")
-                  .parquet(os.path.join(output_path, "data")))
-            (fresh.select("content_h").write.mode("append")
-                  .parquet(state_path))
-        finally:
-            fresh.unpersist()
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_batch_stream(
+        spark, input_path, schema, checkpoint_path,
+        lambda batch, batch_id: _admit_first_seen(
+            spark, batch.withColumn("template",
+                                    log_template(F.col(text_col))),
+            output_path, state_path, ("template",), id_col),
+        available_now)
 
 
 # ---------------------------------------------------------------------------
-# streaming count-min sketch maintenance (exactly-once via batch fencing)
+# fenced additive state (exactly-once via batch-id fencing)
 # ---------------------------------------------------------------------------
 
-_CMS_SCHEMA = T.StructType([
-    T.StructField("depth", T.IntegerType()),
-    T.StructField("bucket", T.IntegerType()),
-    T.StructField("c", T.LongType()),
-])
 
+@dataclass(frozen=True)
+class AdditiveState:
+    """One fenced additive face: state that grows by pure ADDITION, so a
+    replayed micro-batch must not be re-applied (unlike the converging
+    scd2/sample merges). The generic apply/stream/read below run every
+    face the same way: meta pin, batch-id fence, union + merge, and one
+    rename swap that publishes the merged state with its fence.
 
-def _cms_meta_guard(state_path: str, w: int, d: int, salt: str,
-                    hash_basis: str) -> None:
-    """Pin (w, d, salt, hash_basis) beside the sketch state: counters are
-    only addable under the EXACT bucket hash that wrote them — restarting
-    with different parameters would silently fold incompatible counters
-    (garbage minima), so a mismatch raises instead (the near-dup meta
-    contract)."""
-    _meta_guard(state_path,
-                {"w": w, "d": d, "salt": salt, "hash_basis": hash_basis},
-                "cms",
-                "counters from different bucket hashes cannot be added.")
+    ``build(batch, prev)`` is stage 1 — the batch's own counters (``prev``
+    is the current state or None; index anti-joins it, first-wins).
+    ``merge`` folds ``prev ∪ fresh`` back to one row per key; ``read_face``
+    is stage 2, the batch operator's arithmetic over the stored counters.
+    ``schema`` fixes the state's read schema (None infers it on read)."""
+    face: str
+    consequence: str
+    subdir: str
+    meta: dict
+    build: Callable[[DataFrame, DataFrame | None], DataFrame]
+    merge: Callable[[DataFrame], DataFrame] = lambda union: union
+    read_face: Callable[..., DataFrame] = lambda counts: counts
+    max_files: int = 4
+    schema: T.StructType | None = None
 
 
 def _sketch_state_read(spark: SparkSession, sketch_path: str,
@@ -626,9 +609,7 @@ def _sketch_state_read(spark: SparkSession, sketch_path: str,
     INSIDE the swapped directory (`_commit.json`, underscore-prefixed so
     the parquet reader ignores it), so counters and the fence commit
     atomically in one rename. With ``schema=None`` a missing state reads
-    as None (schema inferred from the first written state thereafter);
-    shared by every additive-sketch stream (CMS, qsketch)."""
-    import json
+    as None (schema inferred from the first written state thereafter)."""
     _recover_interrupted_compaction(sketch_path)
     if not os.path.exists(sketch_path):
         empty = (spark.createDataFrame([], schema)
@@ -643,28 +624,75 @@ def _sketch_state_read(spark: SparkSession, sketch_path: str,
     return reader.parquet(sketch_path), committed
 
 
-def _sketch_swap_commit(merged: DataFrame, sketch_path: str,
-                        batch_id: int) -> None:
-    """Write merged counters + `_commit.json` to a sibling dir, then
-    rename-swap — counters and fence become visible in ONE atomic rename
-    (the cms_apply_batch contract, shared by every additive sketch)."""
-    import json
-    import shutil
-    tmp = sketch_path.rstrip("/") + ".compact"
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, "_commit.json"), "w") as f:
-        json.dump({"batch_id": batch_id}, f)
-    if os.path.exists(sketch_path):
-        old = sketch_path.rstrip("/") + ".old"
-        os.rename(sketch_path, old)
-        os.rename(tmp, sketch_path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, sketch_path)
+def _additive_apply_batch(spark: SparkSession, spec: AdditiveState,
+                          batch: DataFrame, batch_id: int,
+                          path: str) -> bool:
+    """One maintenance step of any additive face; False when fenced (the
+    fence contract is spelled out on cms_apply_batch)."""
+    prev, committed = _sketch_state_read(spark, path, spec.schema)
+    if batch_id <= committed:
+        return False
+    fresh = spec.build(batch, prev)
+    merged = fresh if prev is None else spec.merge(prev.unionByName(fresh))
+    _swap_dir(merged.coalesce(1), path, batch_id)
+    return True
 
 
-def _cms_state_read(spark: SparkSession, sketch_path: str):
-    return _sketch_state_read(spark, sketch_path, _CMS_SCHEMA)
+def _additive_stream(spark: SparkSession, spec: AdditiveState,
+                     input_path: str, state_path: str, checkpoint_path: str,
+                     schema: T.StructType, available_now: bool):
+    """File-source → foreachBatch(fenced apply) into
+    `<state_path>/<spec.subdir>`, with `spec.meta` pinned beside it first.
+    Local state paths only (the rename swap)."""
+    _local_only(state_path)
+    _meta_guard(state_path, spec.meta, spec.face, spec.consequence)
+    path = os.path.join(state_path, spec.subdir)
+    return foreach_batch_stream(
+        spark, input_path, schema, checkpoint_path,
+        lambda batch, batch_id: _additive_apply_batch(
+            spark, spec, batch, batch_id, path),
+        available_now, spec.max_files)
+
+
+def _additive_state_read(spark: SparkSession, spec: AdditiveState,
+                         state_path: str, *args, **kw):
+    """Stage 2 over the drained state: ``spec.read_face(counts, ...)``."""
+    counts, _ = _sketch_state_read(
+        spark, os.path.join(state_path, spec.subdir), schema=None)
+    if counts is None:
+        raise FileNotFoundError(f"no {spec.face} state at {state_path!r}")
+    return spec.read_face(counts, *args, **kw)
+
+
+def _sum_by(keys: tuple[str, ...], *cols: str):
+    """Merge for faces whose counters are plain per-key sums."""
+    return lambda union: union.groupBy(*keys).agg(
+        *[F.sum(c).alias(c) for c in cols])
+
+
+# ---------------------------------------------------------------------------
+# streaming count-min sketch maintenance
+# ---------------------------------------------------------------------------
+
+_CMS_SCHEMA = T.StructType([
+    T.StructField("depth", T.IntegerType()),
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("c", T.LongType()),
+])
+
+
+def _cms_state(key_col: str, w: int, d: int, salt: str,
+               hash_basis: str) -> AdditiveState:
+    # counters are only addable under the EXACT bucket hash that wrote
+    # them: a changed (w, d, salt, basis) would fold garbage minima
+    from logstash_filter_geoip_spark.operators.aggregate import (cms_build,
+                                                                 cms_merge)
+    return AdditiveState(
+        "cms", "counters from different bucket hashes cannot be added.",
+        "sketch", {"w": w, "d": d, "salt": salt, "hash_basis": hash_basis},
+        lambda batch, prev: cms_build(batch, key_col, w, d, salt,
+                                      hash_basis),
+        cms_merge, schema=_CMS_SCHEMA)
 
 
 def cms_apply_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
@@ -680,15 +708,9 @@ def cms_apply_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     (Corollary, pinned by test: wiping the CHECKPOINT while keeping the
     state double-counts — the fence is per-batch-id, so the checkpoint is
     part of this operator's state, unlike scd2_stream's.)"""
-    from logstash_filter_geoip_spark.operators.aggregate import (cms_build,
-                                                                 cms_merge)
-    prev, committed = _cms_state_read(spark, sketch_path)
-    if batch_id <= committed:
-        return False
-    fresh = cms_build(batch, key_col, w, d, salt, hash_basis)
-    merged = cms_merge(prev.unionByName(fresh))
-    _sketch_swap_commit(merged, sketch_path, batch_id)
-    return True
+    return _additive_apply_batch(
+        spark, _cms_state(key_col, w, d, salt, hash_basis), batch,
+        batch_id, sketch_path)
 
 
 def cms_stream(spark: SparkSession, input_path: str, state_path: str,
@@ -706,26 +728,9 @@ def cms_stream(spark: SparkSession, input_path: str, state_path: str,
     from logstash_filter_geoip_spark.operators.aggregate import CMS_D, CMS_W
     w = CMS_W if w is None else w
     d = CMS_D if d is None else d
-    if "://" in state_path:
-        raise NotImplementedError(
-            "cms_stream swaps the state directory via os.rename and "
-            "supports local paths only")
-    sketch_path = os.path.join(state_path, "sketch")
-    _cms_meta_guard(state_path, w, d, salt, hash_basis)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        cms_apply_batch(spark, batch, batch_id, sketch_path, key_col,
-                        w, d, salt, hash_basis)
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _additive_stream(
+        spark, _cms_state(key_col, w, d, salt, hash_basis), input_path,
+        state_path, checkpoint_path, schema, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -733,17 +738,17 @@ def cms_stream(spark: SparkSession, input_path: str, state_path: str,
 # ---------------------------------------------------------------------------
 
 
-def _qsketch_meta_guard(state_path: str, keys: tuple[str, ...],
-                        value_col: str, sub_bits: int) -> None:
-    """Pin (keys, value_col, sub_bits) beside the state: bucket lower
-    bounds are only addable under the EXACT bucketing that wrote them (a
-    different sub_bits silently mixes incompatible bucket grids — wrong
-    quantiles, no error), so a mismatch raises (the cms meta contract)."""
-    _meta_guard(state_path,
-                {"keys": list(keys), "value_col": value_col,
-                 "sub_bits": sub_bits},
-                "qsketch",
-                "counters from different bucketings cannot be added.")
+def _qsketch_state(keys: tuple[str, ...], value_col: str,
+                   sub_bits: int) -> AdditiveState:
+    # a different sub_bits silently mixes incompatible bucket grids
+    from logstash_filter_geoip_spark.operators.aggregate import (
+        qsketch_build, qsketch_merge)
+    return AdditiveState(
+        "qsketch", "counters from different bucketings cannot be added.",
+        "sketch",
+        {"keys": list(keys), "value_col": value_col, "sub_bits": sub_bits},
+        lambda batch, prev: qsketch_build(batch, keys, value_col, sub_bits),
+        lambda union: qsketch_merge(union, keys))
 
 
 def qsketch_apply_batch(spark: SparkSession, batch: DataFrame,
@@ -752,21 +757,13 @@ def qsketch_apply_batch(spark: SparkSession, batch: DataFrame,
                         sub_bits: int) -> bool:
     """One quantile-sketch maintenance step; returns False when fenced.
 
-    Exactly like cms_apply_batch: bucket counters are pure ADDITION (not
-    idempotent), so the committed batch id rides inside the swapped state
-    directory and a replayed batch_id is a no-op. The state schema is
-    whatever qsketch_build emits for (keys, bucket, c) — inferred on
-    read, so keyed sketches of any key type round-trip."""
-    from logstash_filter_geoip_spark.operators.aggregate import (
-        qsketch_build, qsketch_merge)
-    prev, committed = _sketch_state_read(spark, sketch_path, schema=None)
-    if batch_id <= committed:
-        return False
-    fresh = qsketch_build(batch, keys, value_col, sub_bits)
-    merged = (fresh if prev is None
-              else qsketch_merge(prev.unionByName(fresh), keys))
-    _sketch_swap_commit(merged, sketch_path, batch_id)
-    return True
+    Bucket counters are pure ADDITION, so this is the shared additive
+    fence (see cms_apply_batch). The state schema is whatever
+    qsketch_build emits for (keys, bucket, c) — inferred on read, so
+    keyed sketches of any key type round-trip."""
+    return _additive_apply_batch(
+        spark, _qsketch_state(keys, value_col, sub_bits), batch, batch_id,
+        sketch_path)
 
 
 def qsketch_stream(spark: SparkSession, input_path: str, state_path: str,
@@ -785,42 +782,14 @@ def qsketch_stream(spark: SparkSession, input_path: str, state_path: str,
     from logstash_filter_geoip_spark.operators.aggregate import \
         QSKETCH_SUB_BITS
     sub_bits = QSKETCH_SUB_BITS if sub_bits is None else sub_bits
-    if "://" in state_path:
-        raise NotImplementedError(
-            "qsketch_stream swaps the state directory via os.rename and "
-            "supports local paths only")
-    sketch_path = os.path.join(state_path, "sketch")
-    _qsketch_meta_guard(state_path, keys, value_col, sub_bits)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        qsketch_apply_batch(spark, batch, batch_id, sketch_path, keys,
-                            value_col, sub_bits)
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _additive_stream(
+        spark, _qsketch_state(keys, value_col, sub_bits), input_path,
+        state_path, checkpoint_path, schema, available_now)
 
 
 # ---------------------------------------------------------------------------
 # streaming distribution-drift maintenance (operators/drift.py's twin)
 # ---------------------------------------------------------------------------
-
-
-def _drift_meta_guard(state_path: str, spec: dict) -> None:
-    """Pin the full bucket/split spec beside the state: side counts are
-    only addable under the EXACT bucket rule and split timestamp that
-    wrote them (a different split silently mixes windows; a different
-    binning mixes bucket grids), so a mismatch raises (the cms meta
-    contract)."""
-    _meta_guard(state_path, spec, "drift",
-                "side counts from different bucket/split rules cannot "
-                "be added.")
 
 
 def _drift_spec(cat_col: str | None, value_col: str | None,
@@ -839,13 +808,7 @@ def _drift_spec(cat_col: str | None, value_col: str | None,
             "ts_col": ts_col, "split_ts": split_ts}
 
 
-def _drift_bucket_name(spec: dict) -> str:
-    return spec["col"] if spec["kind"] == "categorical" else "bucket_idx"
-
-
 def _drift_bucket(spec: dict):
-    from pyspark.sql import functions as F
-
     from logstash_filter_geoip_spark.operators.aggregate import \
         bucket_idx_expr
     if spec["kind"] == "categorical":
@@ -854,31 +817,30 @@ def _drift_bucket(spec: dict):
                             spec["n_buckets"]), "bucket_idx")
 
 
+def _drift_state(spec: dict) -> AdditiveState:
+    # the full bucket rule AND split timestamp are pinned: a different
+    # split silently mixes windows, a different binning mixes grids
+    from logstash_filter_geoip_spark.operators import drift
+    bucket, name = _drift_bucket(spec)
+    return AdditiveState(
+        "drift", "side counts from different bucket/split rules cannot "
+        "be added.", "counts", spec,
+        lambda batch, prev: drift.side_counts(
+            batch, bucket, name, spec["ts_col"], spec["split_ts"]),
+        _sum_by((name,), "n_base", "n_curr"),
+        lambda counts, lift: drift.with_shares(counts, name, lift))
+
+
 def drift_apply_batch(spark: SparkSession, batch: DataFrame,
                       batch_id: int, counts_path: str,
                       spec: dict) -> bool:
     """One drift-state maintenance step; returns False when fenced.
 
-    Side counts are pure ADDITION (not idempotent) — the same
-    exactly-once contract as cms/qsketch_apply_batch: the committed batch
-    id rides inside the swapped state directory, so a replayed batch_id
-    is a no-op; wiping the CHECKPOINT while keeping the state
+    Side counts are pure ADDITION — the shared additive fence (see
+    cms_apply_batch); wiping the CHECKPOINT while keeping the state
     double-counts (the checkpoint is part of this operator's state)."""
-    from pyspark.sql import functions as F
-
-    from logstash_filter_geoip_spark.operators import drift
-    prev, committed = _sketch_state_read(spark, counts_path, schema=None)
-    if batch_id <= committed:
-        return False
-    bucket, name = _drift_bucket(spec)
-    fresh = drift.side_counts(batch, bucket, name, spec["ts_col"],
-                              spec["split_ts"])
-    merged = (fresh if prev is None
-              else prev.unionByName(fresh).groupBy(name)
-                       .agg(F.sum("n_base").alias("n_base"),
-                            F.sum("n_curr").alias("n_curr")))
-    _sketch_swap_commit(merged, counts_path, batch_id)
-    return True
+    return _additive_apply_batch(spark, _drift_state(spec), batch,
+                                 batch_id, counts_path)
 
 
 def drift_state_read(spark: SparkSession, state_path: str,
@@ -889,18 +851,8 @@ def drift_state_read(spark: SparkSession, state_path: str,
     row-identical to the batch operator on the union of its inputs
     (equality test-pinned). Answerable any time without event rescans;
     compose with drift.drift_summary for the TVD rollup."""
-    import json
-
-    from logstash_filter_geoip_spark.operators import drift
-    mp = os.path.join(state_path, "meta.json")
-    with open(mp) as f:
-        spec = json.load(f)
-    name = _drift_bucket_name(spec)
-    counts, _ = _sketch_state_read(
-        spark, os.path.join(state_path, "counts"), schema=None)
-    if counts is None:
-        raise FileNotFoundError(f"no drift state at {state_path!r}")
-    return drift.with_shares(counts, name, lift)
+    return _additive_state_read(
+        spark, _drift_state(_pinned_meta(state_path)), state_path, lift)
 
 
 def drift_stream(spark: SparkSession, input_path: str, state_path: str,
@@ -917,27 +869,23 @@ def drift_stream(spark: SparkSession, input_path: str, state_path: str,
     meta-pinned; replay safety = the batch-id fence committed atomically
     with the counters (see drift_apply_batch). Local state paths only
     (the rename swap); remote state belongs in a transactional table."""
-    if "://" in state_path:
-        raise NotImplementedError(
-            "drift_stream swaps the state directory via os.rename and "
-            "supports local paths only")
     spec = _drift_spec(cat_col, value_col, lo, hi, n_buckets, ts_col,
                        split_ts)
-    counts_path = os.path.join(state_path, "counts")
-    _drift_meta_guard(state_path, spec)
+    return _additive_stream(spark, _drift_state(spec), input_path,
+                            state_path, checkpoint_path, schema,
+                            available_now)
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        drift_apply_batch(spark, batch, batch_id, counts_path, spec)
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def _rolling_drift_state(spec: dict) -> AdditiveState:
+    from logstash_filter_geoip_spark.operators import drift
+    col = spec["col"]
+    return AdditiveState(
+        "rolling-drift", "counts from different bucket granularities or "
+        "category columns cannot be added.", "counts", spec,
+        lambda batch, prev: drift.rolling_counts_stage(
+            batch, col, spec["ts_col"], spec["bucket"]),
+        _sum_by(("bucket_ts", col), "n"),
+        lambda counts, lift: drift.rolling_shares(counts, col, lift))
 
 
 def rolling_drift_apply_batch(spark: SparkSession, batch: DataFrame,
@@ -947,20 +895,8 @@ def rolling_drift_apply_batch(spark: SparkSession, batch: DataFrame,
     Per-(bucket_ts, category) counts are pure ADDITION — same fence
     contract as drift_apply_batch; state size = calendar buckets ×
     categories (one row per pair, however much traffic flows)."""
-    from pyspark.sql import functions as F
-
-    from logstash_filter_geoip_spark.operators import drift
-    prev, committed = _sketch_state_read(spark, counts_path, schema=None)
-    if batch_id <= committed:
-        return False
-    fresh = drift.rolling_counts_stage(batch, spec["col"], spec["ts_col"],
-                                       spec["bucket"])
-    merged = (fresh if prev is None
-              else prev.unionByName(fresh)
-                       .groupBy("bucket_ts", spec["col"])
-                       .agg(F.sum("n").alias("n")))
-    _sketch_swap_commit(merged, counts_path, batch_id)
-    return True
+    return _additive_apply_batch(spark, _rolling_drift_state(spec), batch,
+                                 batch_id, counts_path)
 
 
 def rolling_drift_state_read(spark: SparkSession, state_path: str,
@@ -968,16 +904,9 @@ def rolling_drift_state_read(spark: SparkSession, state_path: str,
     """Read face: drift.rolling_shares — the IDENTICAL stage-2 arithmetic
     as the batch operator, so a drained stream's rolling-drift relation
     is row-identical to rolling_drift on the union of its inputs."""
-    import json
-
-    from logstash_filter_geoip_spark.operators import drift
-    with open(os.path.join(state_path, "meta.json")) as f:
-        spec = json.load(f)
-    counts, _ = _sketch_state_read(
-        spark, os.path.join(state_path, "counts"), schema=None)
-    if counts is None:
-        raise FileNotFoundError(f"no rolling-drift state at {state_path!r}")
-    return drift.rolling_shares(counts, spec["col"], lift)
+    return _additive_state_read(
+        spark, _rolling_drift_state(_pinned_meta(state_path)), state_path,
+        lift)
 
 
 def rolling_drift_stream(spark: SparkSession, input_path: str,
@@ -990,30 +919,11 @@ def rolling_drift_stream(spark: SparkSession, input_path: str,
     parquet state. Spec meta-pinned (a different bucket granularity or
     category column cannot be added); exactly-once = the CMS batch-id
     fence. Local state paths only (the rename swap)."""
-    if "://" in state_path:
-        raise NotImplementedError(
-            "rolling_drift_stream swaps the state directory via os.rename "
-            "and supports local paths only")
     spec = {"kind": "rolling", "col": cat_col, "ts_col": ts_col,
             "bucket": bucket}
-    counts_path = os.path.join(state_path, "counts")
-    _meta_guard(state_path, spec, "rolling-drift",
-                "counts from different bucket granularities or category "
-                "columns cannot be added.")
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        rolling_drift_apply_batch(spark, batch, batch_id, counts_path,
-                                  spec)
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _additive_stream(spark, _rolling_drift_state(spec), input_path,
+                            state_path, checkpoint_path, schema,
+                            available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -1044,7 +954,7 @@ def sample_apply_batch(spark: SparkSession, batch: DataFrame,
     w = Window.partitionBy(strata_col).orderBy(rk.asc(), F.col(key_col))
     kept = (union.withColumn("__rn", F.row_number().over(w))
                  .where(F.col("__rn") <= k).drop("__rn"))
-    _swap_write(spark, kept, state_path)
+    _swap_dir(kept, state_path)
 
 
 def sample_state_read(spark: SparkSession, state_path: str,
@@ -1054,9 +964,7 @@ def sample_state_read(spark: SparkSession, state_path: str,
     read, the drift_state_read convention — the state stores rows only;
     rank is a pure function of the kept set). Row-identical to running
     sampling.sample_exact_k over everything ingested so far."""
-    import json
-    with open(os.path.join(state_path, "meta.json")) as f:
-        saved = json.load(f)
+    saved = _pinned_meta(state_path)
     spec = {"kind": "exact_k_sample", "strata_col": strata_col,
             "key_col": key_col, "k": k, "salt": salt}
     if saved != spec:
@@ -1082,10 +990,7 @@ def sample_stream(spark: SparkSession, input_path: str, state_path: str,
     batch parity test pins it). The spec is meta-pinned — resuming with a
     different (strata, key, k, salt) raises instead of silently mixing
     two different draws. Local state paths only (the rename swap)."""
-    if "://" in state_path:
-        raise NotImplementedError(
-            "sample_stream swaps the state directory via os.rename and "
-            "supports local paths only")
+    _local_only(state_path)
     spec = {"kind": "exact_k_sample", "strata_col": strata_col,
             "key_col": key_col, "k": k, "salt": salt}
     rows_path = os.path.join(state_path, "rows")
@@ -1093,19 +998,12 @@ def sample_stream(spark: SparkSession, input_path: str, state_path: str,
                 "rows selected under different specs are different draws "
                 "and cannot be merged.")
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
     def handle(batch: DataFrame, batch_id: int) -> None:
         sample_apply_batch(spark, batch, rows_path, strata_col, key_col,
                            k, salt)
 
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_batch_stream(spark, input_path, schema, checkpoint_path,
+                                handle, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -1113,18 +1011,31 @@ def sample_stream(spark: SparkSession, input_path: str, state_path: str,
 # ---------------------------------------------------------------------------
 
 
-def _index_meta_guard(state_path: str, text_col: str, id_type: str) -> None:
-    """Pin (tokenizer, text column, id type) beside the index: postings
-    built under a different tokenizer/text column are a DIFFERENT index —
-    merging them silently skews df/dl for every query, so mismatch raises
-    (the near-dup meta contract)."""
-    from logstash_filter_geoip_spark.operators.retrieval import WORD_RE
-    _meta_guard(state_path,
-                {"kind": "postings_index", "word_re": WORD_RE,
-                 "text_col": text_col, "id_type": id_type},
-                "postings index",
-                "postings from different tokenizers/columns cannot be "
-                "merged.")
+def _index_state(text_col: str, id_type: str) -> AdditiveState:
+    # postings built under a different tokenizer/text column are a
+    # DIFFERENT index: merging them silently skews df/dl for every query
+    from logstash_filter_geoip_spark.operators.retrieval import (
+        WORD_RE, build_postings)
+
+    def build(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        if prev is not None:
+            seen = prev.where(F.col("term").isNull()).select("doc_id")
+            batch = batch.join(seen, "doc_id", "left_anti")
+        post = build_postings(batch, text_col).select(
+            "term", "doc_id", F.col("dl").cast("int").alias("dl"),
+            F.col("tf").cast("long").alias("tf"))
+        dld = batch.select(
+            F.lit(None).cast("string").alias("term"), "doc_id",
+            F.size(F.regexp_extract_all(F.lower(F.col(text_col)),
+                                        F.lit(WORD_RE), 0)).alias("dl"),
+            F.lit(None).cast("long").alias("tf"))
+        return post.unionByName(dld)
+
+    return AdditiveState(
+        "postings index", "postings from different tokenizers/columns "
+        "cannot be merged.", "index",
+        {"kind": "postings_index", "word_re": WORD_RE,
+         "text_col": text_col, "id_type": id_type}, build)
 
 
 def index_state_read(spark: SparkSession, index_path: str):
@@ -1147,9 +1058,8 @@ def index_apply_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     """One index-maintenance step; returns False when the batch was fenced.
 
     Appends are NOT idempotent (a replayed batch would double tf/df), so
-    the CMS batch-id fence applies: the committed id rides inside the
-    swapped state directory. Re-ingested doc_ids are FIRST-WINS — the
-    batch anti-joins the already-admitted doc set (the dedup_stream
+    the shared additive fence applies. Re-ingested doc_ids are FIRST-WINS
+    — the batch anti-joins the already-admitted doc set (the dedup_stream
     admission semantic), so re-publishing a doc never corrupts df.
 
     State rows use ONE union schema: posting rows (term, doc_id, dl, tf)
@@ -1157,26 +1067,8 @@ def index_apply_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     NULL-text docs — they count toward N but not sum_dl, mirroring the
     batch scan's F.sum semantics).
     """
-    from logstash_filter_geoip_spark.operators.retrieval import (WORD_RE,
-                                                                 build_postings)
-    prev, committed = _sketch_state_read(spark, index_path, None)
-    if batch_id <= committed:
-        return False
-    if prev is not None:
-        seen = prev.where(F.col("term").isNull()).select("doc_id")
-        batch = batch.join(seen, "doc_id", "left_anti")
-    post = build_postings(batch, text_col).select(
-        "term", "doc_id", F.col("dl").cast("int").alias("dl"),
-        F.col("tf").cast("long").alias("tf"))
-    dld = batch.select(
-        F.lit(None).cast("string").alias("term"), "doc_id",
-        F.size(F.regexp_extract_all(F.lower(F.col(text_col)),
-                                    F.lit(WORD_RE), 0)).alias("dl"),
-        F.lit(None).cast("long").alias("tf"))
-    fresh = post.unionByName(dld)
-    merged = prev.unionByName(fresh) if prev is not None else fresh
-    _sketch_swap_commit(merged, index_path, batch_id)
-    return True
+    spec = _index_state(text_col, str(batch.schema["doc_id"].dataType))
+    return _additive_apply_batch(spark, spec, batch, batch_id, index_path)
 
 
 def index_stream(spark: SparkSession, input_path: str, state_path: str,
@@ -1194,26 +1086,9 @@ def index_stream(spark: SparkSession, input_path: str, state_path: str,
     appends (the dedup_stream boundary); the fence/meta/first-wins
     semantics carry over unchanged.
     """
-    if "://" in state_path:
-        raise NotImplementedError(
-            "index_stream swaps the state directory via os.rename and "
-            "supports local paths only")
-    index_path = os.path.join(state_path, "index")
-    id_type = str(schema["doc_id"].dataType)
-    _index_meta_guard(state_path, text_col, id_type)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        index_apply_batch(spark, batch, batch_id, index_path, text_col)
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    spec = _index_state(text_col, str(schema["doc_id"].dataType))
+    return _additive_stream(spark, spec, input_path, state_path,
+                            checkpoint_path, schema, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -1221,18 +1096,27 @@ def index_stream(spark: SparkSession, input_path: str, state_path: str,
 # ---------------------------------------------------------------------------
 
 
-def _rules_meta_guard(state_path: str, basket_col: str, item_col: str,
-                      max_basket: int, item_type: str) -> None:
-    """Pin (basket_col, item_col, max_basket, item_type) beside the state:
-    counters are only addable under the EXACT universe rule that wrote
-    them (a different max_basket silently mixes incompatible universes —
-    wrong supports, no error), so a mismatch raises (the cms meta
-    contract)."""
-    _meta_guard(state_path,
-                {"basket_col": basket_col, "item_col": item_col,
-                 "max_basket": max_basket, "item_type": item_type},
-                "rules",
-                "counters from different basket universes cannot be added.")
+def _rules_state(basket_col: str, item_col: str, max_basket: int,
+                 item_type: str) -> AdditiveState:
+    # a different max_basket silently mixes incompatible universes
+    from logstash_filter_geoip_spark.operators.basket import (
+        merge_rule_counts, rule_counts, rules_from_counts)
+    return AdditiveState(
+        "rules", "counters from different basket universes cannot be added.",
+        "sketch",
+        {"basket_col": basket_col, "item_col": item_col,
+         "max_basket": max_basket, "item_type": item_type},
+        # cache=False: the operator-internal persists have no unpersist
+        # handle here, so a continuous stream would leak one CacheManager
+        # entry pair PER MICRO-BATCH; the swap evaluates the plan exactly
+        # once and micro-batches are small, so subtree re-execution is the
+        # cheaper side of the trade
+        lambda batch, prev: rule_counts(batch, basket_col, item_col,
+                                        max_basket, cache=False),
+        merge_rule_counts, rules_from_counts,
+        # one file per trigger: whole baskets per file is the
+        # basket-atomic ingestion contract
+        max_files=1)
 
 
 def rules_apply_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
@@ -1246,25 +1130,11 @@ def rules_apply_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     across batches is counted as two disjoint sub-baskets — its
     cross-batch pairs are silently lost; route such feeds through the
     batch operator over a completed snapshot instead. Addition is NOT
-    idempotent, so exactly-once is the CMS batch-id fence committed
-    atomically inside the swapped state directory."""
-    from logstash_filter_geoip_spark.operators.basket import (
-        merge_rule_counts, rule_counts)
-    prev, committed = _sketch_state_read(spark, sketch_path, schema=None)
-    if batch_id <= committed:
-        return False
-    # cache=False: the operator-internal persists have no unpersist handle
-    # here, so a continuous stream would leak one CacheManager entry pair
-    # PER MICRO-BATCH (the persist-then-unpersist discipline of every
-    # apply-batch in this file); the swap evaluates the plan exactly once
-    # and micro-batches are small, so subtree re-execution is the cheaper
-    # side of the trade
-    fresh = rule_counts(batch, basket_col, item_col, max_basket,
-                        cache=False)
-    merged = (fresh if prev is None
-              else merge_rule_counts(prev.unionByName(fresh)))
-    _sketch_swap_commit(merged, sketch_path, batch_id)
-    return True
+    idempotent, so exactly-once is the shared additive batch-id fence."""
+    item_type = batch.schema[item_col].dataType.simpleString()
+    return _additive_apply_batch(
+        spark, _rules_state(basket_col, item_col, max_basket, item_type),
+        batch, batch_id, sketch_path)
 
 
 def rules_state_read(spark: SparkSession, state_path: str,
@@ -1272,13 +1142,9 @@ def rules_state_read(spark: SparkSession, state_path: str,
     """The current rule relation from stored counters — the identical
     stage-2 arithmetic as the batch operator (basket.rules_from_counts),
     no basket rescans."""
-    from logstash_filter_geoip_spark.operators.basket import \
-        rules_from_counts
-    counts, _ = _sketch_state_read(
-        spark, os.path.join(state_path, "sketch"), schema=None)
-    if counts is None:
-        raise FileNotFoundError(f"no rules state under {state_path}")
-    return rules_from_counts(counts, min_pair_n=min_pair_n)
+    return _additive_state_read(
+        spark, _rules_state(**_pinned_meta(state_path)), state_path,
+        min_pair_n=min_pair_n)
 
 
 def rules_stream(spark: SparkSession, input_path: str, state_path: str,
@@ -1296,28 +1162,10 @@ def rules_stream(spark: SparkSession, input_path: str, state_path: str,
     Local state paths only (the rename swap)."""
     from logstash_filter_geoip_spark.operators.basket import MAX_BASKET
     max_basket = MAX_BASKET if max_basket is None else max_basket
-    if "://" in state_path:
-        raise NotImplementedError(
-            "rules_stream swaps the state directory via os.rename and "
-            "supports local paths only")
-    sketch_path = os.path.join(state_path, "sketch")
     item_type = schema[item_col].dataType.simpleString()
-    _rules_meta_guard(state_path, basket_col, item_col, max_basket,
-                      item_type)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(input_path))
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        rules_apply_batch(spark, batch, batch_id, sketch_path, basket_col,
-                          item_col, max_basket)
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _additive_stream(
+        spark, _rules_state(basket_col, item_col, max_basket, item_type),
+        input_path, state_path, checkpoint_path, schema, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -1325,19 +1173,20 @@ def rules_stream(spark: SparkSession, input_path: str, state_path: str,
 # ---------------------------------------------------------------------------
 
 
-def _cluster_meta_guard(state_path: str, centroids: list[list[int]],
-                        dim: int, emb_col: str) -> None:
-    """Pin the FULL centroid matrix (k×dim BIGINTs — argument-bounded)
-    beside the state: occupancy counters are only addable under the EXACT
-    centroids that wrote them (changed centroids silently mix two
-    different cluster geometries into one counter set), so a mismatch
-    raises (the cms meta contract)."""
-    _meta_guard(state_path,
-                {"centroids": [[int(x) for x in c] for c in centroids],
-                 "dim": dim, "emb_col": emb_col},
-                "cluster",
-                "occupancy counters from different centroid sets cannot "
-                "be added.")
+def _cluster_state(centroids: list[list[int]], dim: int,
+                   emb_col: str) -> AdditiveState:
+    # the FULL centroid matrix (k×dim BIGINTs — argument-bounded) is
+    # pinned: changed centroids would mix two cluster geometries
+    from logstash_filter_geoip_spark.operators.clustering import \
+        cluster_profile
+    return AdditiveState(
+        "cluster", "occupancy counters from different centroid sets cannot "
+        "be added.", "sketch",
+        {"centroids": [[int(x) for x in c] for c in centroids],
+         "dim": dim, "emb_col": emb_col},
+        lambda batch, prev: cluster_profile(batch, centroids, dim=dim,
+                                            emb_col=emb_col),
+        _sum_by(("cid",), "n_members", "inertia"))
 
 
 def cluster_apply_batch(spark: SparkSession, batch: DataFrame,
@@ -1351,18 +1200,9 @@ def cluster_apply_batch(spark: SparkSession, batch: DataFrame,
     forked) — and profiles are pure ADDITION across inputs (not
     idempotent), so exactly-once is the shared sketch batch-id fence
     committed atomically with the counters."""
-    from logstash_filter_geoip_spark.operators.clustering import \
-        cluster_profile
-    prev, committed = _sketch_state_read(spark, sketch_path, schema=None)
-    if batch_id <= committed:
-        return False
-    fresh = cluster_profile(batch, centroids, dim=dim, emb_col=emb_col)
-    merged = (fresh if prev is None
-              else prev.unionByName(fresh).groupBy("cid")
-                       .agg(F.sum("n_members").alias("n_members"),
-                            F.sum("inertia").alias("inertia")))
-    _sketch_swap_commit(merged, sketch_path, batch_id)
-    return True
+    return _additive_apply_batch(
+        spark, _cluster_state(centroids, dim, emb_col), batch, batch_id,
+        sketch_path)
 
 
 def cluster_state_read(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1370,11 +1210,8 @@ def cluster_state_read(spark: SparkSession, state_path: str) -> DataFrame:
     row-identical to batch clustering.cluster_profile over the union of
     every ingested input (equality test-pinned), answered any time from
     ≤ k rows of state with no vector rescan."""
-    counts, _ = _sketch_state_read(
-        spark, os.path.join(state_path, "sketch"), schema=None)
-    if counts is None:
-        raise FileNotFoundError(f"no cluster state at {state_path!r}")
-    return counts
+    return _additive_state_read(
+        spark, _cluster_state(**_pinned_meta(state_path)), state_path)
 
 
 def cluster_stream(spark: SparkSession, input_path: str, state_path: str,
@@ -1394,26 +1231,9 @@ def cluster_stream(spark: SparkSession, input_path: str, state_path: str,
     belongs in a transactional table."""
     from logstash_filter_geoip_spark.operators.clustering import DIM
     dim = DIM if dim is None else dim
-    if "://" in state_path:
-        raise NotImplementedError(
-            "cluster_stream swaps the state directory via os.rename and "
-            "supports local paths only")
-    sketch_path = os.path.join(state_path, "sketch")
-    _cluster_meta_guard(state_path, centroids, dim, emb_col)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        cluster_apply_batch(spark, batch, batch_id, sketch_path,
-                            centroids, dim, emb_col)
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _additive_stream(
+        spark, _cluster_state(centroids, dim, emb_col), input_path,
+        state_path, checkpoint_path, schema, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -1421,14 +1241,15 @@ def cluster_stream(spark: SparkSession, input_path: str, state_path: str,
 # ---------------------------------------------------------------------------
 
 
-def _seasonal_meta_guard(state_path: str, ts_col: str) -> None:
-    """Pin the timestamp column beside the state: daily-hour cell counts
-    are only addable under the SAME bucketing input (a different ts
-    column silently mixes calendars), so a mismatch raises (the cms meta
-    contract)."""
-    _meta_guard(state_path, {"ts_col": ts_col}, "seasonal",
-                "daily-hour counts from different ts columns cannot "
-                "be added.")
+def _seasonal_state(ts_col: str) -> AdditiveState:
+    # a different ts column silently mixes calendars
+    from logstash_filter_geoip_spark.operators import hygiene
+    return AdditiveState(
+        "seasonal", "daily-hour counts from different ts columns cannot "
+        "be added.", "counts", {"ts_col": ts_col},
+        lambda batch, prev: hygiene.seasonal_daily(batch, ts_col),
+        _sum_by(("event_type", "day", "hr"), "n_events"),
+        hygiene.seasonal_flags)
 
 
 def seasonal_apply_batch(spark: SparkSession, batch: DataFrame,
@@ -1436,24 +1257,11 @@ def seasonal_apply_batch(spark: SparkSession, batch: DataFrame,
                          ts_col: str) -> bool:
     """One seasonal-state maintenance step; returns False when fenced.
 
-    Daily-hour cell counts are pure ADDITION (not idempotent) — the same
-    exactly-once contract as cms/qsketch/drift_apply_batch: the committed
-    batch id rides inside the swapped state directory, so a replayed
-    batch_id is a no-op; the checkpoint is part of this operator's
-    state."""
-    from pyspark.sql import functions as F
-
-    from logstash_filter_geoip_spark.operators import hygiene
-    prev, committed = _sketch_state_read(spark, counts_path, schema=None)
-    if batch_id <= committed:
-        return False
-    fresh = hygiene.seasonal_daily(batch, ts_col)
-    merged = (fresh if prev is None
-              else prev.unionByName(fresh)
-                       .groupBy("event_type", "day", "hr")
-                       .agg(F.sum("n_events").alias("n_events")))
-    _sketch_swap_commit(merged, counts_path, batch_id)
-    return True
+    Daily-hour cell counts are pure ADDITION (not idempotent) — the
+    shared additive fence (see cms_apply_batch); the checkpoint is part
+    of this operator's state."""
+    return _additive_apply_batch(spark, _seasonal_state(ts_col), batch,
+                                 batch_id, counts_path)
 
 
 def seasonal_stream(spark: SparkSession, input_path: str, state_path: str,
@@ -1465,25 +1273,9 @@ def seasonal_stream(spark: SparkSession, input_path: str, state_path: str,
     flows (the rolling_drift calendar-sized precedent). The ts column is
     meta-pinned; replay safety = the batch-id fence committed atomically
     with the counters. Local state paths only (the rename swap)."""
-    if "://" in state_path:
-        raise NotImplementedError(
-            "seasonal_stream swaps the state directory via os.rename and "
-            "supports local paths only")
-    counts_path = os.path.join(state_path, "counts")
-    _seasonal_meta_guard(state_path, ts_col)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        seasonal_apply_batch(spark, batch, batch_id, counts_path, ts_col)
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _additive_stream(spark, _seasonal_state(ts_col), input_path,
+                            state_path, checkpoint_path, schema,
+                            available_now)
 
 
 def seasonal_state_read(spark: SparkSession, state_path: str,
@@ -1495,14 +1287,10 @@ def seasonal_state_read(spark: SparkSession, state_path: str,
     relation is row-identical to the batch operator on the union of its
     inputs (equality test-pinned). Answerable any time without event
     rescans."""
-    from logstash_filter_geoip_spark.operators import hygiene
-    counts, _ = _sketch_state_read(
-        spark, os.path.join(state_path, "counts"), schema=None)
-    if counts is None:
-        raise FileNotFoundError(f"no seasonal state at {state_path!r}")
     kw = {}
     if over_pct is not None:
         kw["over_pct"] = over_pct
     if under_pct is not None:
         kw["under_pct"] = under_pct
-    return hygiene.seasonal_flags(counts, **kw)
+    return _additive_state_read(
+        spark, _seasonal_state(**_pinned_meta(state_path)), state_path, **kw)

@@ -111,6 +111,24 @@ def enrich_batch(batch: DataFrame, dim: DataFrame | None,
                   event_time_col=event_time_col)
 
 
+def foreach_batch_stream(spark: SparkSession, input_path: str,
+                         schema: T.StructType, checkpoint_path: str,
+                         handle: Callable[[DataFrame, int], None],
+                         available_now: bool, max_files: int = 4):
+    """File-source → foreachBatch(`handle`) with checkpoint: the one stream
+    wiring of every foreachBatch query in this package. availableNow
+    drains pending input and stops (test/CI mode); a continuous
+    deployment omits it."""
+    writer = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", max_files)
+              .parquet(input_path)
+              .writeStream.foreachBatch(handle)
+              .option("checkpointLocation", checkpoint_path))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def run_stream(spark: SparkSession, input_path: str, output_path: str,
                checkpoint_path: str,
                dim_provider: Callable[[], DataFrame | None],
@@ -131,9 +149,6 @@ def run_stream(spark: SparkSession, input_path: str, output_path: str,
     (pinned by test), which the wall-clock swap cannot guarantee.
     """
     config = config or _default_config()
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         dim, dim_v6, _ = _provided_dims(dim_provider, spark, config)
@@ -143,12 +158,8 @@ def run_stream(spark: SparkSession, input_path: str, output_path: str,
             .partitionBy("role")
             .parquet(os.path.join(output_path, "sinks")))
 
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    return q
+    return foreach_batch_stream(spark, input_path, TRANSCRIPT_SCHEMA,
+                                checkpoint_path, handle, available_now)
 
 
 CONV_STATE_SCHEMA = T.StructType([
@@ -583,10 +594,6 @@ def dq_stream_gate(spark: SparkSession, input_path: str, output_path: str,
     """
     from ..operators.dq import dq_quarantine
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
-
     def handle(batch: DataFrame, batch_id: int) -> None:
         labeled = dq_quarantine(batch, checks).persist()
         try:
@@ -612,8 +619,5 @@ def dq_stream_gate(spark: SparkSession, input_path: str, output_path: str,
         finally:
             labeled.unpersist()
 
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return foreach_batch_stream(spark, input_path, schema, checkpoint_path,
+                                handle, available_now)

@@ -80,8 +80,9 @@ def test_replay_fence_is_noop_and_next_id_applies(spark, tmp_path):
     df = spark.createDataFrame(BATCH_1, _SCHEMA)
     sk = os.path.join(p["state"], "sketch")
     os.makedirs(p["state"], exist_ok=True)
-    incremental._rules_meta_guard(p["state"], "order_id", "item", 3,
-                                  "string")
+    spec = incremental._rules_state("order_id", "item", 3, "string")
+    incremental._meta_guard(p["state"], spec.meta, spec.face,
+                            spec.consequence)
     assert incremental.rules_apply_batch(spark, df, 0, sk, "order_id",
                                          "item", 3) is True
     before = _rows(spark.read.parquet(sk))

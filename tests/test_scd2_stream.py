@@ -125,7 +125,7 @@ def test_scd2_stream_matches_batch_merges(spark, tmp_path):
 def test_scd2_stream_remote_dim_path_raises(spark):
     df = spark.createDataFrame([("a", 1, _T1)], SCHEMA)
     with pytest.raises(NotImplementedError, match="local paths"):
-        incremental._swap_write(spark, df, "s3a://bucket/dim")
+        incremental._swap_dir(df, "s3a://bucket/dim")
 
 
 # ---------------------------------------------------------------------------
