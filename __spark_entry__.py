@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 
 from logstash_filter_geoip_spark.config import GeoIPConfig
 from logstash_filter_geoip_spark.functions.grok import compile_grok, grok_extract
-from logstash_filter_geoip_spark.functions.parse import parse_transcripts
+from logstash_filter_geoip_spark.functions.parse import (parse_transcripts,
+                                                         source_may_contain_v6)
 from logstash_filter_geoip_spark.operators import conversation
 from logstash_filter_geoip_spark.operators import aggregate as agg
 from logstash_filter_geoip_spark.operators import stats as _stats
@@ -360,9 +361,7 @@ def _enrich_flat(spark: SparkSession, sf_dir: str, database: str,
     dim, vend_v6 = vendored_dims(spark, database)
     e = enrich(_parsed(spark, sf_dir), dim, cfg,
                dim_v6=vend_v6 if with_v6 else None,
-               # ip_str comes from the IPv4-only regex — provably ':'-free,
-               # so the v4-only configuration may skip the v6 key machinery
-               source_may_contain_v6=not (source == "ip_str" and not with_v6))
+               source_may_contain_v6=source_may_contain_v6(source))
     return e.select(
         "conv_id", "turn_idx",
         *[F.col(path).alias(alias) for alias, path in cols],
@@ -539,7 +538,8 @@ def q_enrich_city_from_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load_city_csv(spark, blocks, locs)
     cfg = GeoIPConfig(source="ip_str", target="geoip", database="City",
                       ecs_compatibility=True)
-    e = enrich(_parsed(spark, sf_dir), dim, cfg, source_may_contain_v6=False)
+    e = enrich(_parsed(spark, sf_dir), dim, cfg,
+               source_may_contain_v6=source_may_contain_v6(cfg.source))
     return e.select(
         "conv_id", "turn_idx",
         F.col("geoip.ip").alias("ip"),

@@ -32,6 +32,14 @@ ERROR_CODE_RE = r"(E\d{3})"
 TOOL_RE = r"\b(search|bash|geoip|browser|python)\b"
 
 
+def source_may_contain_v6(source: str) -> bool:
+    """False only for parse_transcripts' `ip_str`: IPV4_RE matches digits
+    and dots, so that column can never hold a ':' and enrich() may take its
+    v4-only path (no Arrow key UDF) when no v6 dim is attached. Every other
+    source — `ip_any`, `ip6_str`, a user column — may hold a v6 literal."""
+    return source != "ip_str"
+
+
 def first_ipv4(text: Column) -> Column:
     """First IPv4-shaped literal in `text`, else null.
 

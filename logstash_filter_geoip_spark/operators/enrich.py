@@ -10,7 +10,8 @@ Execution shape (SURVEY.md §2.3 J1/J2, §4.2):
     tests/test_plan_shape.py.
   * left-outer always: a turn never drops or duplicates (ranges disjoint).
   * the pipeline is Column expressions inside whole-stage-codegen spans,
-    with exactly ONE Arrow-vectorized node: the ipv6_to_key pandas UDF that
+    with at most ONE Arrow-vectorized node (none on the v4-only path,
+    `source_may_contain_v6=False`): the ipv6_to_key pandas UDF that
     materializes the 128-bit (hi, lo) join key (a deliberate barrier — see
     the inline note in enrich(); measured 30× cheaper than the pure-Column
     parser, whose tree was re-inlined per downstream reference). No
@@ -197,11 +198,18 @@ def prepare_dim_v6(dim_v6: DataFrame) -> DataFrame:
 
 
 def _index_dim_v6(dim_v6: DataFrame):
-    """Driver-side prep for the v6 ``index`` lookup mode: collect + sort the
-    dim by (start_hi, start_lo), broadcast the numpy range arrays for the
-    LPM UDF, and re-create the same rows WITH their sort index as the
-    equi-join build side (one source of truth for the ordering — the UDF's
-    searchsorted position IS the join key).
+    """Driver-side prep for the v6 ``index`` lookup mode: pull the dim as
+    Arrow, sort it by (start_hi, start_lo), broadcast the numpy range
+    arrays for the LPM UDF, and hand the same sorted table WITH its row
+    position back to the JVM as the equi-join build side (one source of
+    truth for the ordering — the UDF's searchsorted position IS the join
+    key).
+
+    The build side is an Arrow-created local relation (LocalTableScan), not
+    a DataFrame over Python rows: `createDataFrame(list_of_tuples)` plans as
+    a pickled-row `Scan ExistingRDD` that every query re-runs as a job of
+    its own. Columns stay Arrow end to end — never pandas, which would turn
+    nullable longs (dma_code) into float64 (the functions.ipkeys lesson).
 
     Driver-resident by design: the reference's workers each hold the whole
     .mmdb in RAM (GeoIPFilter.java:173-197); a full production GeoLite2 v6
@@ -209,26 +217,29 @@ def _index_dim_v6(dim_v6: DataFrame):
     broadcast the bucket mode already ships, minus the replication.
 
     Memoized ON the dim object (r6): repeated enrich() calls against the
-    SAME dim DataFrame (the vendored_dims mtime-cache returns one object
-    per file) were re-collecting, re-sorting, and re-broadcasting the
-    index per call — ~0.4 s of pure driver work in every headline bench
-    query. Identity-attached, so a hot-swapped dim (a NEW DataFrame
-    object) naturally builds a fresh index — the dim-swap semantics are
-    unchanged; this is reference-data prep in the vendored_dims
-    mtime-cache class, never a result cache."""
+    SAME dim DataFrame were re-collecting, re-sorting, and re-broadcasting
+    the index per call — ~0.4 s of pure driver work in every headline bench
+    query. The memo hits only while the caller holds the dim object:
+    `vendored_dims` builds new DataFrames on every call, so each of its
+    results indexes afresh. Identity-attached, so a hot-swapped dim (a NEW
+    DataFrame object) naturally builds a fresh index — the dim-swap
+    semantics are unchanged; this is reference-data prep, never a result
+    cache."""
     import numpy as np
+    import pyarrow as pa
     cached = getattr(dim_v6, "_lpm_index_cache", None)
     if cached is not None:
         return cached
     spark = dim_v6.sparkSession
-    rows = dim_v6.collect()
-    rows.sort(key=lambda r: (r["start_hi"], r["start_lo"]))
-    arrs = {k: np.array([r[k] for r in rows], dtype=np.int64)
+    table = dim_v6.toArrow().sort_by([("start_hi", "ascending"),
+                                      ("start_lo", "ascending")])
+    arrs = {k: np.asarray(table.column(k).to_numpy(), dtype=np.int64)
             for k in ("start_hi", "start_lo", "end_hi", "end_lo")}
+    table = table.append_column(
+        "dim_idx6", pa.array(np.arange(table.num_rows, dtype=np.int64)))
     schema = T.StructType(list(dim_v6.schema.fields)
                           + [T.StructField("dim_idx6", T.LongType(), False)])
-    indexed = spark.createDataFrame(
-        [tuple(r) + (i,) for i, r in enumerate(rows)], schema)
+    indexed = spark.createDataFrame(table, schema)
     dim6_b = indexed.select(
         "dim_idx6", *[F.col(c).alias(_DIM6_PREFIX + c) for c in dim_v6.columns])
     out = (spark.sparkContext.broadcast(arrs), dim6_b)

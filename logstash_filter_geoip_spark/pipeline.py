@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import GeoIPConfig
-from .functions.parse import parse_transcripts
+from .functions.parse import parse_transcripts, source_may_contain_v6
 from .operators import aggregate as agg
 from .operators.enrich import enrich
 from .sources.geolite2 import (GOLDEN_ROWS_V6, load_dim_v6, validate_dim,
@@ -44,7 +44,8 @@ def enriched_transcripts(spark: SparkSession, sf_dir: str,
     elif dim_v6 is None and config.source == "ip_any" \
             and config.database in GOLDEN_ROWS_V6:
         dim_v6 = load_dim_v6(spark, config.database)
-    return enrich(parsed, dim, config, dim_v6=dim_v6)
+    return enrich(parsed, dim, config, dim_v6=dim_v6,
+                  source_may_contain_v6=source_may_contain_v6(config.source))
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -641,8 +641,20 @@ def load_dim_mmdb(spark: SparkSession, path: str, database: str = "City",
     through so a legitimately wide managed database stays loadable."""
     rows4, rows6 = mmdb_dim_rows(path, database,
                                  max_span=max_span, max_total=max_total)
-    return (spark.createDataFrame(rows4, SCHEMAS[database]),
-            spark.createDataFrame(rows6, SCHEMAS_V6[database]))
+    return (_local_dim(spark, rows4, SCHEMAS[database]),
+            _local_dim(spark, rows6, SCHEMAS_V6[database]))
+
+
+def _local_dim(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Rows → a JVM-local relation (LocalTableScan) through an Arrow table
+    typed by `schema`. `createDataFrame(list_of_tuples)` plans as a
+    pickled-row `Scan ExistingRDD` that every query over the dim re-runs
+    as a Python-fed job of its own."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    cols = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays(cols, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -691,8 +703,8 @@ def vendored_dims(spark: SparkSession,
     cached = _vendored_rows(database)
     if cached is None:
         return load_dim(spark, database), load_dim_v6(spark, database)
-    return (spark.createDataFrame(list(cached[0]), SCHEMAS[database]),
-            spark.createDataFrame(list(cached[1]), SCHEMAS_V6[database]))
+    return (_local_dim(spark, cached[0], SCHEMAS[database]),
+            _local_dim(spark, cached[1], SCHEMAS_V6[database]))
 
 
 def vendored_dim_sql(database: str, alias4: str = "d",

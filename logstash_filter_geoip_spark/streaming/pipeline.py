@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import GeoIPConfig
-from ..functions.parse import parse_transcripts
+from ..functions.parse import parse_transcripts, source_may_contain_v6
 from ..operators.enrich import enrich
 from ..sources.geolite2 import GOLDEN_ROWS_V6, vendored_dims
 
@@ -108,6 +108,7 @@ def enrich_batch(batch: DataFrame, dim: DataFrame | None,
     if dim_v6 is None and auto_v6:
         dim_v6 = _auto_dim_v6(batch.sparkSession, config)
     return enrich(parsed, dim, config, dim_v6=dim_v6,
+                  source_may_contain_v6=source_may_contain_v6(config.source),
                   event_time_col=event_time_col)
 
 
