@@ -399,6 +399,54 @@ def components(spark, sf_dir: str, scale_factor: int, workdir: str):
                             dim_v6=dim_v6),
         "geoip.geo.country_iso_code").collect())
 
+    # ----- operators outside the bench.py suites; per-row outputs drain
+    # through aggregates over their computed columns (a bare count() lets
+    # Catalyst prune the expressions) -----
+    add("extra.sft_pairs", lambda: conversation.sft_pairs(transcripts())
+        .agg(F.count(F.lit(1)), F.sum(F.length("response"))).collect())
+    add("extra.render_chat", lambda: conversation.render_chat(transcripts())
+        .agg(F.count(F.lit(1)), F.sum(F.length("chat_text"))).collect())
+    add("extra.loss_mask_spans", lambda: conversation.loss_mask_spans(
+        transcripts()).agg(F.sum("tok_end")).collect())
+    add("extra.truncate_context", lambda: conversation.truncate_context(
+        transcripts(), 24).agg(F.sum("n_tok"), F.count(F.lit(1))).collect())
+    add("extra.tool_chains", lambda: conversation.tool_chains(transcripts())
+        .agg(F.sum("n_convs"), F.count(F.lit(1))).collect())
+    add("extra.error_runs", lambda: conversation.error_runs(transcripts())
+        .agg(F.sum("n_error_turns"), F.max("max_error_run")).collect())
+    add("extra.canned_replies", lambda: conversation.canned_replies(
+        transcripts()).agg(F.sum("canned"), F.sum("n_uses")).collect())
+
+    def _ev_day():
+        return ev().withColumn("day", F.date_trunc("day", F.col("ts")))
+    add("extra.k_anonymity", lambda: dq.k_anonymity(
+        _ev_day(), ["event_type", "day"], 60).collect())
+    add("extra.k_anonymity_flags", lambda: dq.k_anonymity_flags(
+        _ev_day(), ["event_type", "day"], 60).agg(F.sum("at_risk"))
+        .collect())
+    add("extra.distinct_sketches", lambda: agg.distinct_sketches(
+        _ev_day(), ("event_type",), "user_id", "day").count())
+    add("extra.fuzzy_name_pairs", lambda: entity.fuzzy_name_pairs(
+        rd("part"), "p_name").count())
+    add("extra.split_leakage", lambda: hygiene.split_leakage(docs())
+        .agg(F.count(F.lit(1)), F.count_distinct("split_a", "split_b"))
+        .collect())
+
+    def _zorder_layout():
+        out = tempfile.mkdtemp(prefix="zorder_", dir=workdir)
+        layout.zorder_layout(
+            ev(), F.pmod(F.col("user_id"), F.lit(65536)),
+            F.datediff(F.col("ts").cast("date"),
+                       F.lit("2024-01-01").cast("date")),
+            n_files=16).write.mode("overwrite").parquet(out)
+    add("extra.zorder_layout", _zorder_layout)
+    add("extra.pricing_summary", lambda: relational.pricing_summary(
+        rd("lineitem")).collect())
+    add("extra.build_postings", lambda: retrieval.build_postings(docs())
+        .agg(F.count(F.lit(1)), F.sum("tf")).collect())
+    add("extra.domain_counts", lambda: web.domain_counts(
+        web._events_urls(spark, sf_dir)).collect())
+
     return C
 
 

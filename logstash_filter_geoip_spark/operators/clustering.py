@@ -27,11 +27,12 @@ Scale shape (100 TB): each Lloyd round is ONE narrow scan (column-pruned to
 vec_id + embedding) + a two-phase hash aggregate onto K groups — map-side
 partial rows are K per task, the Exchange carries K × partitions rows, and
 the K×(D+1) sums collect to the driver (bounded by the k/dim ARGUMENTS, the
-similarity ≤64-query precedent — never data-sized). Assignment is a pure
-codegen integer expression over centroid LITERALS: no join, no broadcast,
-no Python, no HOF anywhere. n_iter rounds = n_iter+1 scans, the honest
-Lloyd cost; nothing is cached because at target scale the input does not
-fit memory and the scan is the cheap part.
+similarity ≤64-query precedent — never data-sized). Assignment is ONE
+ArrowEvalPython projection: vectorized int64 numpy with the centroid
+matrix in the Python closure, so the plan is the same every round — no
+join, no broadcast, no Exchange. n_iter rounds = n_iter+1 scans, the
+honest Lloyd cost; nothing is cached because at target scale the input
+does not fit memory and the scan is the cheap part.
 
 Overflow audit: coordinates are in [0, 2·SHIFT] after clamp+shift, so
 dist2 ≤ D·(2·SHIFT)² ≈ 2.7e8; per-cluster BIGINT sums of dist2/coords stay
@@ -46,8 +47,7 @@ is exact at ANY cardinality: every intermediate is integer.
 
 from __future__ import annotations
 
-from functools import reduce
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
@@ -63,39 +63,36 @@ SHIFT = 1024     # clamp bound; shifted coords live in [0, 2*SHIFT]
 
 
 # ---------------------------------------------------------------------------
-# the ONE integerization rule (both engines read these two functions)
+# the ONE integerization rule (numpy for Spark, SQL for the oracle)
 # ---------------------------------------------------------------------------
 
 
-def _int_dim_col(emb_col: str, i: int):
-    """Spark: clamped-shifted integer coordinate i (BIGINT, non-negative)."""
-    q = F.floor(F.get(F.col(emb_col), i).cast("double")
-                * F.lit(SCALE) + F.lit(0.5))
-    return (F.least(F.greatest(q, F.lit(-SHIFT)), F.lit(SHIFT))
-            + F.lit(SHIFT))
-
-
 def _int_dim_sql(emb_expr: str, i: int) -> str:
-    """DuckDB: the identical expression (1-based array index)."""
+    """DuckDB: clamped-shifted integer coordinate i (1-based array index)."""
     return (f"least(greatest(CAST(floor(CAST({emb_expr}[{i + 1}] AS DOUBLE)"
             f" * {SCALE} + 0.5) AS BIGINT), {-SHIFT}), {SHIFT}) + {SHIFT}")
 
 
-def int_vectors(emb: DataFrame, emb_col: str = "embedding",
-                dim: int = DIM,
-                keep: tuple[str, ...] = ()) -> DataFrame:
-    """(vec_id, h, x0..x{dim-1} [, keep...]) — the integerized working
-    relation.
+def _quantize(v: pd.Series) -> np.ndarray:
+    """(rows × dim) int64 matrix of a Series of vectors under the same rule:
+    np.floor == SQL floor on IEEE doubles, then the same clamp+shift."""
+    x = np.array(v.tolist(), dtype=np.float64)
+    return (np.clip(np.floor(x * SCALE + 0.5), -SHIFT, SHIFT)
+            + SHIFT).astype(np.int64)
 
-    Per-dim columns (not an array) keep every downstream expression inside
-    whole-stage codegen: array element math would need HOFs
-    (CodegenFallback) or repeated F.get trees. ``h`` is the deterministic
-    init rank key."""
-    cols = [F.col("vec_id"),
-            md5_hash60(F.col("vec_id").cast("string")).alias("h")]
-    cols += [_int_dim_col(emb_col, i).alias(f"x{i}") for i in range(dim)]
-    cols += [F.col(c) for c in keep]
-    return emb.select(*cols)
+
+def _argmin_rows(xi: np.ndarray, cmat: np.ndarray) -> np.ndarray:
+    """Per row of ``xi``, the index of the nearest ``cmat`` row by exact
+    int64 dist2. The strict ``<`` update never replaces an equal best, so
+    ties keep the LOWEST index — the oracle's ORDER BY dist2, cid."""
+    best_d = ((xi - cmat[0]) ** 2).sum(axis=1)
+    best_c = np.zeros(len(xi), dtype=np.int32)
+    for j in range(1, len(cmat)):
+        d = ((xi - cmat[j]) ** 2).sum(axis=1)
+        better = d < best_d
+        best_d = np.where(better, d, best_d)
+        best_c = np.where(better, np.int32(j), best_c)
+    return best_c
 
 
 # ---------------------------------------------------------------------------
@@ -103,36 +100,16 @@ def int_vectors(emb: DataFrame, emb_col: str = "embedding",
 # ---------------------------------------------------------------------------
 
 
-def _assign_cols(centroids: list[list[int]], dim: int):
-    """(cid Column, dist2 Column) from centroid LITERALS — pure codegen."""
-    dists = [
-        reduce(lambda a, b: a + b,
-               [(F.col(f"x{i}") - F.lit(c[i])) * (F.col(f"x{i}")
-                                                  - F.lit(c[i]))
-                for i in range(dim)])
-        for c in centroids]
-    m = F.least(*dists) if len(dists) > 1 else dists[0]
-    # first-match CASE == lowest cid on ties (the oracle's ORDER BY
-    # dist2, cid row_number spells the same total order)
-    cid = F.when(dists[0] == m, F.lit(0))
-    for j in range(1, len(dists)):
-        cid = cid.when(dists[j] == m, F.lit(j))
-    return cid.cast("int").alias("cid"), m.alias("dist2")
-
-
 def kmeans_assign(emb: DataFrame, k: int = K_CLUSTERS, n_iter: int = N_ITER,
-                  dim: int = DIM, emb_col: str = "embedding",
-                  impl: str = "arrow") -> DataFrame:
+                  dim: int = DIM, emb_col: str = "embedding") -> DataFrame:
     """(vec_id, cid, dist2) after ``n_iter`` Lloyd rounds.
 
     Deterministic end-to-end: hash-ranked init, integer distances, total
     tie order, truncating-mean updates, empty clusters frozen. Each round
-    collects exactly k×(dim+1) BIGINTs (argument-bounded). ``impl``
-    selects the assignment evaluation (see :func:`assign_fixed`) — both
-    are value-identical; "arrow" is the default (compile-cost lesson)."""
+    collects exactly k×(dim+1) BIGINTs (argument-bounded)."""
     cents = train_centroids(emb, k=k, n_iter=n_iter, dim=dim,
-                            emb_col=emb_col, impl=impl)
-    return assign_fixed(emb, cents, dim=dim, emb_col=emb_col, impl=impl)
+                            emb_col=emb_col)
+    return assign_fixed(emb, cents, dim=dim, emb_col=emb_col)
 
 
 _ASSIGN_T = T.StructType([
@@ -146,22 +123,18 @@ def _assign_udf(centroids: list[list[int]]):
     """pandas UDF Column: (cid, dist2, second2) struct under fixed
     centroids (second2 = the second-smallest distance, NULL at k=1).
 
-    The numpy mirror of the Column/SQL rule, value-identical by
-    construction: integerization is the same ``floor(x·SCALE + 0.5)``
-    double expression (np.floor == SQL floor on IEEE doubles) with the
-    same clamp+shift; distances are exact int64; ties keep the LOWEST cid
-    (the strict ``<`` update never replaces an equal best — the
-    first-match CASE / ORDER BY dist2, cid total order), and a tied
-    second stays equal to best (margin 0, matching the oracle's rn=2
-    row). Centroids ride the closure (k×dim ints, argument-bounded)."""
-    import numpy as np
+    The numpy mirror of the oracle's SQL rule, value-identical by
+    construction: the shared ``_quantize`` integerization; distances are
+    exact int64; ties keep the LOWEST cid (the strict ``<`` update never
+    replaces an equal best — the ORDER BY dist2, cid total order), and a
+    tied second stays equal to best (margin 0, matching the oracle's rn=2
+    row). Its own loop, not ``_argmin_rows``, because it also tracks
+    second2. Centroids ride the closure (k×dim ints, argument-bounded)."""
     cmat = np.array(centroids, dtype=np.int64)
 
     @F.pandas_udf(_ASSIGN_T)
     def assign(v: pd.Series) -> pd.DataFrame:
-        x = np.array(v.tolist(), dtype=np.float64)
-        q = np.floor(x * SCALE + 0.5)
-        xi = (np.clip(q, -SHIFT, SHIFT) + SHIFT).astype(np.int64)
+        xi = _quantize(v)
         best_d = ((xi - cmat[0]) ** 2).sum(axis=1)
         best_c = np.zeros(len(xi), dtype=np.int32)
         second = np.full(len(xi), np.iinfo(np.int64).max, dtype=np.int64)
@@ -182,48 +155,36 @@ def _assign_udf(centroids: list[list[int]]):
 
 def assign_fixed(emb: DataFrame, centroids: list[list[int]],
                  dim: int = DIM, emb_col: str = "embedding",
-                 impl: str = "arrow",
                  extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """(vec_id, cid, dist2) under FIXED integer centroids — the assignment
     face shared by the final kmeans round, the batch cluster profile, and
     the streaming occupancy monitor (one definition, never forked).
 
-    DEFAULT impl="arrow": ONE ArrowEvalPython projection (vectorized
-    int64 numpy, centroid matrix in the closure). The declarative
-    impl="column" spells the literal-expanded least/CASE expression the
-    DuckDB oracle mirrors — value-identical (equality-pinned in
-    test_clustering) but its ~k·dim-term trees pay Catalyst/janino
-    COMPILATION per stage, which dominates wall time at any data size
-    (measured 62 s vs ~4 s for the full kmeans_summary at sf0.1 — the
-    v6-key lesson: repeated giant Column trees want a physical Arrow
-    barrier, and CASE arms are invisible to codegen CSE)."""
+    ONE ArrowEvalPython projection (vectorized int64 numpy, centroid
+    matrix in the closure). A declarative literal-expanded least/CASE
+    expression would spell the same values, but its ~k·dim-term trees pay
+    Catalyst/janino COMPILATION per stage, which dominates wall time at
+    any data size (measured 62 s vs ~4 s for the full kmeans_summary at
+    sf0.1 — the v6-key lesson: repeated giant Column trees want a physical
+    Arrow barrier, and CASE arms are invisible to codegen CSE)."""
     if not centroids or any(len(c) != dim for c in centroids):
         raise ValueError(
             f"assign_fixed: centroids must be a non-empty list of "
             f"length-{dim} integer vectors")
-    if impl == "arrow":
-        a = emb.select("vec_id", *extra_cols,
-                       _assign_udf(centroids)(F.col(emb_col)).alias("a"))
-        return a.select("vec_id", *extra_cols,
-                        F.col("a.cid").alias("cid"),
-                        F.col("a.dist2").alias("dist2"))
-    if impl != "column":
-        raise ValueError(f"assign_fixed: impl must be 'arrow' or "
-                         f"'column': {impl!r}")
-    iv = int_vectors(emb.select("vec_id", *extra_cols, emb_col),
-                     emb_col=emb_col, dim=dim, keep=extra_cols)
-    cid_col, dist_col = _assign_cols(centroids, dim)
-    return iv.select("vec_id", *extra_cols, cid_col, dist_col)
+    a = emb.select("vec_id", *extra_cols,
+                   _assign_udf(centroids)(F.col(emb_col)).alias("a"))
+    return a.select("vec_id", *extra_cols,
+                    F.col("a.cid").alias("cid"),
+                    F.col("a.dist2").alias("dist2"))
 
 
 def cluster_profile(emb: DataFrame, centroids: list[list[int]],
-                    dim: int = DIM, emb_col: str = "embedding",
-                    impl: str = "arrow") -> DataFrame:
+                    dim: int = DIM, emb_col: str = "embedding") -> DataFrame:
     """(cid, n_members, inertia) occupancy profile under fixed centroids —
     one scan + a two-phase aggregate onto ≤ len(centroids) groups. Pure
     ADDITION across inputs (profile(A ∪ B) == profile(A) + profile(B)
     per cid), which is what makes the streaming face a counter merge."""
-    a = assign_fixed(emb, centroids, dim=dim, emb_col=emb_col, impl=impl)
+    a = assign_fixed(emb, centroids, dim=dim, emb_col=emb_col)
     return (a.groupBy("cid")
              .agg(F.count(F.lit(1)).alias("n_members"),
                   F.sum("dist2").alias("inertia")))
@@ -270,21 +231,29 @@ def kmeans_crosstab(emb: DataFrame, label_col: str = "label",
 
 def kmeans_summary(emb: DataFrame, k: int = K_CLUSTERS,
                    n_iter: int = N_ITER, dim: int = DIM,
-                   emb_col: str = "embedding",
-                   impl: str = "arrow") -> DataFrame:
+                   emb_col: str = "embedding") -> DataFrame:
     """(cid, n_members, inertia) — the per-cluster rollup of the final
     assignment (inertia = exact BIGINT sum of dist2)."""
-    a = kmeans_assign(emb, k=k, n_iter=n_iter, dim=dim, emb_col=emb_col,
-                      impl=impl)
+    a = kmeans_assign(emb, k=k, n_iter=n_iter, dim=dim, emb_col=emb_col)
     return (a.groupBy("cid")
              .agg(F.count(F.lit(1)).alias("n_members"),
                   F.sum("dist2").alias("inertia")))
 
 
+_TRIPLETS_T = T.StructType([
+    T.StructField("anchor_id", T.LongType()),
+    T.StructField("cid", T.IntegerType()),
+    T.StructField("pos_id", T.LongType()),
+    T.StructField("pos_dist2", T.LongType()),
+    T.StructField("neg_id", T.LongType()),
+    T.StructField("neg_dist2", T.LongType()),
+    T.StructField("n_partners", T.LongType()),
+])
+
+
 def contrastive_triplets(emb: DataFrame, k: int = K_CLUSTERS,
                          n_iter: int = N_ITER, dim: int = DIM,
-                         emb_col: str = "embedding",
-                         impl: str = "arrow") -> DataFrame:
+                         emb_col: str = "embedding") -> DataFrame:
     """Hard-negative mining for contrastive/triplet training: per anchor
     vector, the nearest same-cluster neighbour (positive) and the
     FARTHEST same-cluster neighbour (hard negative — still semantically
@@ -296,128 +265,67 @@ def contrastive_triplets(emb: DataFrame, k: int = K_CLUSTERS,
     partners). Distances are the exact integer dist2 of the shared
     clamp+shift rule (pair dist2 ≤ dim·(2·SHIFT)² ≈ 2.7e8 — int64-safe).
 
-    impl="arrow" (default): ONE applyInPandas over cid groups — the
-    O(|cluster|²·dim) pairwise block runs vectorized int64 numpy inside
-    the Arrow barrier; the shuffle moves each vector ONCE (keyed on cid;
-    cluster occupancy is the documented skew/size knob — at 100 TB cap
-    cluster sizes by raising k or sub-clustering oversized cells, the
-    containment_pairs discipline). impl="column" is the oracle's exact
-    shape — the literal-expanded 64-term pair distance over a cid
-    self-join + two rank windows — equality-pinned, gate-scale only
-    (the assign_fixed compile-cost lesson)."""
+    ONE applyInPandas over cid groups — the O(|cluster|²·dim) pairwise
+    block runs vectorized int64 numpy inside the Arrow barrier; the
+    shuffle moves each vector ONCE (keyed on cid; cluster occupancy is
+    the documented skew/size knob — at 100 TB cap cluster sizes by
+    raising k or sub-clustering oversized cells, the containment_pairs
+    discipline)."""
     cents = train_centroids(emb, k=k, n_iter=n_iter, dim=dim,
-                            emb_col=emb_col, impl=impl)
-    if impl == "arrow":
-        a = assign_fixed(emb.select("vec_id", emb_col), cents, dim=dim,
-                         emb_col=emb_col, extra_cols=(emb_col,))
-        out_t = T.StructType([
-            T.StructField("anchor_id", T.LongType()),
-            T.StructField("cid", T.IntegerType()),
-            T.StructField("pos_id", T.LongType()),
-            T.StructField("pos_dist2", T.LongType()),
-            T.StructField("neg_id", T.LongType()),
-            T.StructField("neg_dist2", T.LongType()),
-            T.StructField("n_partners", T.LongType()),
-        ])
+                            emb_col=emb_col)
+    a = assign_fixed(emb.select("vec_id", emb_col), cents, dim=dim,
+                     emb_col=emb_col, extra_cols=(emb_col,))
 
-        def block(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-            if len(pdf) < 3:
-                # < 2 partners per anchor — nothing qualifies
-                z64 = np.array([], dtype=np.int64)
-                return pd.DataFrame({
-                    "anchor_id": z64, "cid": z64.astype(np.int32),
-                    "pos_id": z64, "pos_dist2": z64,
-                    "neg_id": z64, "neg_dist2": z64, "n_partners": z64})
-            pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-            ids = pdf["vec_id"].to_numpy()
-            x = np.array(pdf[emb_col].tolist(), dtype=np.float64)
-            q = np.floor(x * SCALE + 0.5)
-            xi = (np.clip(q, -SHIFT, SHIFT) + SHIFT).astype(np.int64)
-            # exact int64 pairwise distances via the Gram matrix:
-            # (a-b)² = aa + bb − 2ab (dots ≤ dim·(2·SHIFT)² ≈ 2.7e8 —
-            # far inside int64). The matmul form keeps the intermediate
-            # n², not n²·dim (the (n,None,dim) broadcast materializes
-            # n²·dim·8 bytes — 5 TB at a 25k-member cluster)
-            g = xi @ xi.T
-            sq = np.diag(g)
-            d = sq[:, None] + sq[None, :] - 2 * g
-            n = len(ids)
-            big = np.iinfo(np.int64).max
-            dmin = d.copy()
-            np.fill_diagonal(dmin, big)
-            # argmin first-occurrence == lowest partner id (id-sorted)
-            pos_idx = dmin.argmin(axis=1)
-            dmax = d.copy()
-            np.fill_diagonal(dmax, -1)
-            # last-occurrence argmax == highest partner id on ties
-            neg_idx = (n - 1) - dmax[:, ::-1].argmax(axis=1)
+    def block(pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(pdf) < 3:
+            # < 2 partners per anchor — nothing qualifies
+            z64 = np.array([], dtype=np.int64)
             return pd.DataFrame({
-                "anchor_id": ids,
-                "cid": pdf["cid"].to_numpy(),
-                "pos_id": ids[pos_idx],
-                "pos_dist2": dmin[np.arange(n), pos_idx],
-                "neg_id": ids[neg_idx],
-                "neg_dist2": dmax[np.arange(n), neg_idx],
-                "n_partners": np.full(n, n - 1, dtype=np.int64),
-            })
+                "anchor_id": z64, "cid": z64.astype(np.int32),
+                "pos_id": z64, "pos_dist2": z64,
+                "neg_id": z64, "neg_dist2": z64, "n_partners": z64})
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        ids = pdf["vec_id"].to_numpy()
+        xi = _quantize(pdf[emb_col])
+        # exact int64 pairwise distances via the Gram matrix:
+        # (a-b)² = aa + bb − 2ab (dots ≤ dim·(2·SHIFT)² ≈ 2.7e8 —
+        # far inside int64). The matmul form keeps the intermediate
+        # n², not n²·dim (the (n,None,dim) broadcast materializes
+        # n²·dim·8 bytes — 5 TB at a 25k-member cluster)
+        g = xi @ xi.T
+        sq = np.diag(g)
+        d = sq[:, None] + sq[None, :] - 2 * g
+        n = len(ids)
+        big = np.iinfo(np.int64).max
+        dmin = d.copy()
+        np.fill_diagonal(dmin, big)
+        # argmin first-occurrence == lowest partner id (id-sorted)
+        pos_idx = dmin.argmin(axis=1)
+        dmax = d.copy()
+        np.fill_diagonal(dmax, -1)
+        # last-occurrence argmax == highest partner id on ties
+        neg_idx = (n - 1) - dmax[:, ::-1].argmax(axis=1)
+        return pd.DataFrame({
+            "anchor_id": ids,
+            "cid": pdf["cid"].to_numpy(),
+            "pos_id": ids[pos_idx],
+            "pos_dist2": dmin[np.arange(n), pos_idx],
+            "neg_id": ids[neg_idx],
+            "neg_dist2": dmax[np.arange(n), neg_idx],
+            "n_partners": np.full(n, n - 1, dtype=np.int64),
+        })
 
-        return a.groupBy("cid").applyInPandas(block, out_t)
-    if impl != "column":
-        raise ValueError(f"contrastive_triplets: impl must be 'arrow' or "
-                         f"'column': {impl!r}")
-    asg = assign_fixed(emb, cents, dim=dim, emb_col=emb_col, impl="column")
-    iv = int_vectors(emb, emb_col=emb_col, dim=dim)
-    # physical barrier BEFORE the pair join (gate-scale only — this impl
-    # is the oracle's shape): fusing the 64 quantization trees, the SMJ,
-    # and the 64-term pair distance into one whole-stage-codegen function
-    # overflows janino (measured: compile never returns). localCheckpoint
-    # truncates the plan so the pair stage sees plain integer columns —
-    # the withColumn lesson: only a physical barrier truly materializes.
-    base = (asg.select("vec_id", "cid").join(iv.drop("h"), "vec_id")
-               .localCheckpoint(eager=True))
-    side_a = base.select(F.col("vec_id").alias("anchor_id"), "cid",
-                         *[F.col(f"x{i}").alias(f"a{i}")
-                           for i in range(dim)])
-    side_b = base.select(F.col("vec_id").alias("partner"), "cid",
-                         *[F.col(f"x{i}").alias(f"b{i}")
-                           for i in range(dim)])
-    d2 = reduce(lambda a, b: a + b,
-                [(F.col(f"a{i}") - F.col(f"b{i}"))
-                 * (F.col(f"a{i}") - F.col(f"b{i}")) for i in range(dim)])
-    pairs = (side_a.join(side_b.hint("merge"), "cid")
-                   .where(F.col("anchor_id") != F.col("partner"))
-                   .select("anchor_id", "cid", "partner", d2.alias("d2")))
-    wp = Window.partitionBy("anchor_id").orderBy(
-        F.col("d2").asc(), F.col("partner").asc())
-    wq = Window.partitionBy("anchor_id").orderBy(
-        F.col("d2").desc(), F.col("partner").desc())
-    ranked = (pairs.withColumn("__rp", F.row_number().over(wp))
-                   .withColumn("__rq", F.row_number().over(wq)))
-    return (ranked.groupBy("anchor_id", "cid")
-                  .agg(F.max(F.when(F.col("__rp") == 1,
-                                    F.col("partner"))).alias("pos_id"),
-                       F.max(F.when(F.col("__rp") == 1,
-                                    F.col("d2"))).alias("pos_dist2"),
-                       F.max(F.when(F.col("__rq") == 1,
-                                    F.col("partner"))).alias("neg_id"),
-                       F.max(F.when(F.col("__rq") == 1,
-                                    F.col("d2"))).alias("neg_dist2"),
-                       F.count(F.lit(1)).alias("n_partners"))
-                  .where(F.col("n_partners") >= 2))
+    return a.groupBy("cid").applyInPandas(block, _TRIPLETS_T)
 
 
 def _xi_struct_udf(centroids: list[list[int]]):
     """struct(cid int, xi array<long>) — assignment AND the integerized
     vector in ONE Arrow pass whose Spark plan is CONSTANT across Lloyd
     rounds (the centroids live only in the Python closure). The r6
-    finding: the former per-round shape put the centroid LITERALS in the
-    plan (fresh Catalyst analysis + janino compile of a 64-sum aggregate
-    every round) — at gate scale that compilation dominated wall time by
-    ~5× over the actual 2k-row compute. Same numpy rules as _assign_udf
-    (shared floor/clip quantization, strict-< argmin keeps the LOWEST
-    cid), equality-pinned against the column impl."""
-    import numpy as np
+    finding: a per-round shape with the centroid LITERALS in the plan
+    pays fresh Catalyst analysis + janino compile of a 64-sum aggregate
+    every round — at gate scale that compilation dominated wall time by
+    ~5× over the actual 2k-row compute."""
     cmat = np.array(centroids, dtype=np.int64)
     out_t = T.StructType([
         T.StructField("cid", T.IntegerType()),
@@ -426,33 +334,19 @@ def _xi_struct_udf(centroids: list[list[int]]):
 
     @F.pandas_udf(out_t)
     def f(v: pd.Series) -> pd.DataFrame:
-        x = np.array(v.tolist(), dtype=np.float64)
-        q = np.floor(x * SCALE + 0.5)
-        xi = (np.clip(q, -SHIFT, SHIFT) + SHIFT).astype(np.int64)
-        best_d = ((xi - cmat[0]) ** 2).sum(axis=1)
-        best_c = np.zeros(len(xi), dtype=np.int32)
-        for j in range(1, len(cmat)):
-            d = ((xi - cmat[j]) ** 2).sum(axis=1)
-            better = d < best_d
-            best_d = np.where(better, d, best_d)
-            best_c = np.where(better, np.int32(j), best_c)
-        return pd.DataFrame({"cid": best_c, "xi": list(xi)})
+        xi = _quantize(v)
+        return pd.DataFrame({"cid": _argmin_rows(xi, cmat), "xi": list(xi)})
 
     return f
 
 
 def _xi_arr_udf():
     """array<long> of integerized dims — the shared clamp+shift rule as
-    one closure-free Arrow pass (numpy floor/clip == the SQL rule,
-    equality-pinned)."""
-    import numpy as np
+    one closure-free Arrow pass."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def f(v: pd.Series) -> pd.Series:
-        x = np.array(v.tolist(), dtype=np.float64)
-        q = np.floor(x * SCALE + 0.5)
-        xi = (np.clip(q, -SHIFT, SHIFT) + SHIFT).astype(np.int64)
-        return pd.Series(list(xi))
+        return pd.Series(list(_quantize(v)))
 
     return f
 
@@ -461,9 +355,9 @@ def _init_rows_arrow(emb: DataFrame, k: int, emb_col: str) -> list:
     """The k init vectors — smallest (h, vec_id) — integerized, via a
     SMALL constant plan: TakeOrdered on (h, vec_id) first (h is the
     md5-60 of vec_id alone), then the xi Arrow pass over the k winners
-    only. The former int_vectors init projected all 64 dims declaratively
-    — ~1.3 s of per-call Catalyst analysis at ANY data size (r6
-    measurement). Returns rows with ``vec_id`` and ``xi``."""
+    only. Projecting all 64 dims declaratively instead costs ~1.3 s of
+    per-call Catalyst analysis at ANY data size (r6 measurement). Returns
+    rows with ``vec_id`` and ``xi``."""
     top = (emb.select("vec_id",
                       md5_hash60(F.col("vec_id").cast("string")).alias("h"),
                       emb_col)
@@ -475,69 +369,42 @@ def _init_rows_arrow(emb: DataFrame, k: int, emb_col: str) -> list:
 
 def train_centroids(emb: DataFrame, k: int = K_CLUSTERS,
                     n_iter: int = N_ITER, dim: int = DIM,
-                    emb_col: str = "embedding",
-                    impl: str = "arrow") -> list[list[int]]:
+                    emb_col: str = "embedding") -> list[list[int]]:
     """The trained integer centroid matrix itself (k×dim BIGINTs) — the
     bounded artifact a streaming occupancy monitor pins in its state
     meta. The ONE Lloyd loop (kmeans_assign composes from it).
 
-    Each update round is one scan feeding a two-phase aggregate.
-    impl="arrow" (default) keeps the round plan CONSTANT: the staged
-    struct select (ONE ArrowEvalPython — a field reference inside a
-    Generate splits into TWO nodes, measured) emits (cid, xi array), a
-    second projection posexplodes xi, and the aggregate is one
-    (cid, position) SUM — no centroid literals in the plan, so Catalyst
-    and janino run once per session instead of once per round (r6: the
-    literal-expanded round was ~3.3 s of pure compile at 2k rows; this
-    shape is ~0.7 s). impl="column" is the oracle's literal shape,
-    unchanged and equality-pinned."""
+    Each update round is one scan feeding a two-phase aggregate, and the
+    round plan is CONSTANT: the staged struct select (ONE ArrowEvalPython
+    — a field reference inside a Generate splits into TWO nodes,
+    measured) emits (cid, xi array), a second projection posexplodes xi,
+    and the aggregate is one (cid, position) SUM — no centroid literals
+    in the plan, so Catalyst and janino run once per session instead of
+    once per round (r6: a literal-expanded round was ~3.3 s of pure
+    compile at 2k rows; this shape is ~0.7 s)."""
     if k < 1 or n_iter < 0:
         raise ValueError(f"kmeans: k >= 1 and n_iter >= 0 required "
                          f"(got k={k}, n_iter={n_iter})")
-    if impl == "arrow":
-        # init: k smallest (h, vec_id) — TakeOrdered, never a global sort;
-        # k rows to the driver, integerized via the small constant plan
-        init_rows = _init_rows_arrow(emb, k, emb_col)
-        if len(init_rows) < k:
-            raise ValueError(
-                f"kmeans: k={k} exceeds the {len(init_rows)} input vectors")
-        cents = [list(r["xi"]) for r in init_rows]
-        for _ in range(n_iter):
-            a = emb.select(_xi_struct_udf(cents)(F.col(emb_col)).alias("a"))
-            ex = a.select(F.col("a.cid").alias("cid"),
-                          F.posexplode("a.xi").alias("i", "v"))
-            upd = (ex.groupBy("cid", "i")
-                     .agg(F.count(F.lit(1)).alias("n"),
-                          F.sum("v").alias("sv")).collect())
-            n_by = {r["cid"]: r["n"] for r in upd}
-            sv_by = {(r["cid"], r["i"]): r["sv"] for r in upd}
-            # sums non-negative, so Python // == Spark div == DuckDB //;
-            # an empty cluster keeps its previous centroid
-            cents = [[sv_by[(j, i)] // n_by[j] for i in range(dim)]
-                     if j in n_by else cents[j] for j in range(k)]
-        return cents
-    iv = int_vectors(emb, emb_col=emb_col, dim=dim)
-    # init: k smallest (h, vec_id) — TakeOrderedAndProject (the oracle's
-    # declarative shape)
-    init_rows = (iv.orderBy(F.col("h").asc(), F.col("vec_id").asc())
-                   .limit(k).collect())
+    # init: k smallest (h, vec_id) — TakeOrdered, never a global sort;
+    # k rows to the driver, integerized via the small constant plan
+    init_rows = _init_rows_arrow(emb, k, emb_col)
     if len(init_rows) < k:
         raise ValueError(
             f"kmeans: k={k} exceeds the {len(init_rows)} input vectors")
-    cents = [[r[f"x{i}"] for i in range(dim)] for r in init_rows]
-    xs = [f"x{i}" for i in range(dim)]
+    cents = [list(r["xi"]) for r in init_rows]
     for _ in range(n_iter):
-        cid_col, _ = _assign_cols(cents, dim)
-        assigned = iv.select(cid_col, *xs)
-        upd = (assigned.groupBy("cid")
-               .agg(F.count(F.lit(1)).alias("n"),
-                    *[F.sum(x).alias(f"s{i}") for i, x in enumerate(xs)])
-               .collect())
-        by_cid = {r["cid"]: r for r in upd}
-        # sums are non-negative, so Python // == Spark div == DuckDB //
-        cents = [[by_cid[j][f"s{i}"] // by_cid[j]["n"] for i in range(dim)]
-                 if j in by_cid else cents[j]
-                 for j in range(k)]
+        a = emb.select(_xi_struct_udf(cents)(F.col(emb_col)).alias("a"))
+        ex = a.select(F.col("a.cid").alias("cid"),
+                      F.posexplode("a.xi").alias("i", "v"))
+        upd = (ex.groupBy("cid", "i")
+                 .agg(F.count(F.lit(1)).alias("n"),
+                      F.sum("v").alias("sv")).collect())
+        n_by = {r["cid"]: r["n"] for r in upd}
+        sv_by = {(r["cid"], r["i"]): r["sv"] for r in upd}
+        # sums non-negative, so Python // == Spark div == DuckDB //;
+        # an empty cluster keeps its previous centroid
+        cents = [[sv_by[(j, i)] // n_by[j] for i in range(dim)]
+                 if j in n_by else cents[j] for j in range(k)]
     return cents
 
 
@@ -558,11 +425,18 @@ def _pq_check(m: int, k: int, dim: int) -> int:
     return dim // m
 
 
+def _pq_codes(xi: np.ndarray, mats: list[np.ndarray], d: int) -> np.ndarray:
+    """(rows × m) int32 codes: subspace s of ``xi`` against codebook s."""
+    codes = np.zeros((len(xi), len(mats)), dtype=np.int32)
+    for s, cmat in enumerate(mats):
+        codes[:, s] = _argmin_rows(xi[:, s * d:(s + 1) * d], cmat)
+    return codes
+
+
 def _pq_train_udf(books: list[list[list[int]]], d: int):
     """struct(codes array<int>, xi array<long>) — EVERY subspace's
     assignment plus the integerized dims in one constant-shape Arrow
     pass (the train_centroids r6 round discipline, m-fold)."""
-    import numpy as np
     mats = [np.array(b, dtype=np.int64) for b in books]
     out_t = T.StructType([
         T.StructField("codes", T.ArrayType(T.IntegerType())),
@@ -571,53 +445,30 @@ def _pq_train_udf(books: list[list[list[int]]], d: int):
 
     @F.pandas_udf(out_t)
     def f(v: pd.Series) -> pd.DataFrame:
-        x = np.array(v.tolist(), dtype=np.float64)
-        q = np.floor(x * SCALE + 0.5)
-        xi = (np.clip(q, -SHIFT, SHIFT) + SHIFT).astype(np.int64)
-        codes = np.zeros((len(xi), len(mats)), dtype=np.int32)
-        for s, cmat in enumerate(mats):
-            xs = xi[:, s * d:(s + 1) * d]
-            best_d = ((xs - cmat[0]) ** 2).sum(axis=1)
-            best_c = np.zeros(len(xs), dtype=np.int32)
-            for j in range(1, len(cmat)):
-                dd = ((xs - cmat[j]) ** 2).sum(axis=1)
-                better = dd < best_d
-                best_d = np.where(better, dd, best_d)
-                best_c = np.where(better, np.int32(j), best_c)
-            codes[:, s] = best_c
-        return pd.DataFrame({"codes": list(codes), "xi": list(xi)})
+        xi = _quantize(v)
+        return pd.DataFrame({"codes": list(_pq_codes(xi, mats, d)),
+                             "xi": list(xi)})
 
     return f
 
 
 def pq_train(emb: DataFrame, m: int = PQ_M, k: int = PQ_K,
              n_iter: int = PQ_N_ITER, dim: int = DIM,
-             emb_col: str = "embedding",
-             impl: str = "arrow") -> list[list[list[int]]]:
+             emb_col: str = "embedding") -> list[list[list[int]]]:
     """Per-subspace integer codebooks (m × k × dim/m BIGINTs) — product
     quantization (Jégou et al., TPAMI 2011) on the SAME integerization /
     init / tie / update rules as the k-means operator. m·k·d ints collect
     to the driver — argument-bounded. PQ is the 100-TB ANN compression
     stage: 64 float32 dims → m small codes per vector.
 
-    impl="column" is the composed reference: each subspace is literally
-    ``train_centroids`` over the sliced embedding (the shape the nested
-    kmeans oracle chains mirror). impl="arrow" (default, r6) FUSES the m
-    trainers into one scan per round — every subspace shares the SAME
-    init rows (the k smallest (h, vec_id); h depends only on vec_id, not
-    the slice), and one constant-plan Arrow pass emits all m assignments
-    + the integerized dims, aggregated per (position, code). 3 jobs
-    instead of m×(n_iter+1); bit-identical to the composed loop (the
-    per-subspace numpy rules are unchanged — equality-pinned in
-    test_clustering)."""
+    The m subspace trainers are FUSED into one scan per round (r6): every
+    subspace shares the SAME init rows (the k smallest (h, vec_id); h
+    depends only on vec_id, not the slice), and one constant-plan Arrow
+    pass emits all m assignments + the integerized dims, aggregated per
+    (position, code). 3 jobs instead of m×(n_iter+1); bit-identical to
+    ``train_centroids`` run per sliced subspace (the shape the nested
+    kmeans oracle chains mirror — both pinned in test_clustering)."""
     d = _pq_check(m, k, dim)
-    if impl != "arrow":
-        return [train_centroids(
-                    emb.select("vec_id",
-                               F.slice(F.col(emb_col), s * d + 1, d)
-                                .alias("__sub")),
-                    k=k, n_iter=n_iter, dim=d, emb_col="__sub", impl=impl)
-                for s in range(m)]
     # shared init: one TakeOrdered collect covers every subspace
     init_rows = _init_rows_arrow(emb, k, emb_col)
     if len(init_rows) < k:
@@ -646,65 +497,35 @@ def pq_train(emb: DataFrame, m: int = PQ_M, k: int = PQ_K,
 
 def _pq_encode_udf(books: list[list[list[int]]], d: int):
     """ONE pandas UDF encoding every subspace in a single Arrow pass —
-    the same numpy mirror rules as _assign_udf (shared floor/clip
-    quantization; strict-< argmin keeps the LOWEST code on ties)."""
-    import numpy as np
+    the shared ``_quantize`` / ``_argmin_rows`` rules (LOWEST code on
+    ties)."""
     mats = [np.array(b, dtype=np.int64) for b in books]
     out_t = T.StructType([T.StructField(f"code_{s}", T.IntegerType())
                           for s in range(len(books))])
 
     @F.pandas_udf(out_t)
     def enc(v: pd.Series) -> pd.DataFrame:
-        x = np.array(v.tolist(), dtype=np.float64)
-        q = np.floor(x * SCALE + 0.5)
-        xi = (np.clip(q, -SHIFT, SHIFT) + SHIFT).astype(np.int64)
-        out = {}
-        for s, cmat in enumerate(mats):
-            xs = xi[:, s * d:(s + 1) * d]
-            best_d = ((xs - cmat[0]) ** 2).sum(axis=1)
-            best_c = np.zeros(len(xs), dtype=np.int32)
-            for j in range(1, len(cmat)):
-                dd = ((xs - cmat[j]) ** 2).sum(axis=1)
-                better = dd < best_d
-                best_d = np.where(better, dd, best_d)
-                best_c = np.where(better, np.int32(j), best_c)
-            out[f"code_{s}"] = best_c
-        return pd.DataFrame(out)
+        codes = _pq_codes(_quantize(v), mats, d)
+        return pd.DataFrame({f"code_{s}": codes[:, s]
+                             for s in range(len(mats))})
 
     return enc
 
 
 def pq_encode(emb: DataFrame, books: list[list[list[int]]],
-              dim: int = DIM, emb_col: str = "embedding",
-              impl: str = "arrow") -> DataFrame:
-    """(vec_id, code_0..code_{m-1}) under fixed codebooks. impl="arrow"
-    (default): ONE ArrowEvalPython pass encodes all m subspaces (the
-    assign_fixed compile-cost lesson, m-fold). impl="column" is the
-    oracle's exact shape — m per-subspace assign_fixed(column) relations
-    joined back on vec_id — equality-pinned, gate-scale only."""
+              dim: int = DIM, emb_col: str = "embedding") -> DataFrame:
+    """(vec_id, code_0..code_{m-1}) under fixed codebooks: ONE
+    ArrowEvalPython pass encodes all m subspaces (the assign_fixed
+    compile-cost lesson, m-fold)."""
     if not books:
         raise ValueError("pq_encode: empty codebook list")
     m = len(books)
     d = _pq_check(m, min(len(b) for b in books), dim)
-    if impl == "arrow":
-        a = emb.select("vec_id",
-                       _pq_encode_udf(books, d)(F.col(emb_col)).alias("a"))
-        return a.select("vec_id",
-                        *[F.col(f"a.code_{s}").alias(f"code_{s}")
-                          for s in range(m)])
-    if impl != "column":
-        raise ValueError(f"pq_encode: impl must be 'arrow' or 'column': "
-                         f"{impl!r}")
-    res = None
-    for s, book in enumerate(books):
-        sub = emb.select("vec_id",
-                         F.slice(F.col(emb_col), s * d + 1, d)
-                          .alias("__sub"))
-        asg = (assign_fixed(sub, book, dim=d, emb_col="__sub",
-                            impl="column")
-               .select("vec_id", F.col("cid").alias(f"code_{s}")))
-        res = asg if res is None else res.join(asg, "vec_id")
-    return res
+    a = emb.select("vec_id",
+                   _pq_encode_udf(books, d)(F.col(emb_col)).alias("a"))
+    return a.select("vec_id",
+                    *[F.col(f"a.code_{s}").alias(f"code_{s}")
+                      for s in range(m)])
 
 
 def pq_codes_oracle_sql(m: int = PQ_M, k: int = PQ_K,
@@ -747,8 +568,7 @@ def int_vec_py(vec) -> list[int]:
 def pq_adc_topk(emb: DataFrame, books: list[list[list[int]]],
                 k_top: int = PQ_ADC_TOP_K, query_mod: int = PQ_QUERY_MOD,
                 max_queries: int = PQ_MAX_QUERIES, dim: int = DIM,
-                emb_col: str = "embedding",
-                impl: str = "arrow") -> DataFrame:
+                emb_col: str = "embedding") -> DataFrame:
     """Asymmetric-distance top-k over PQ codes (the PQ ANN scorer):
     per query, adc2(q, v) = Σ_s dist2(q_subspace_s, codeword[code_s(v)]).
 
@@ -790,7 +610,7 @@ def pq_adc_topk(emb: DataFrame, books: list[list[list[int]]],
         structs.append(F.struct(
             F.lit(int(r["vec_id"])).alias("query_id"),
             adc.alias("adc2")))
-    codes = pq_encode(emb, books, dim=dim, emb_col=emb_col, impl=impl)
+    codes = pq_encode(emb, books, dim=dim, emb_col=emb_col)
     ex = (codes.select("vec_id", F.explode(F.array(*structs)).alias("q"))
                .select("vec_id", "q.query_id", "q.adc2")
                .where(F.col("vec_id") != F.col("query_id")))

@@ -13,21 +13,18 @@ vocabulary statistics (token frequency + document frequency heavy hitters).
 
 Scale notes (100 TB):
   * decontaminate: the benchmark side is BOUNDED by contract (a benchmark
-    suite is small by definition) — its distinct n-grams are broadcast, so
-    the corpus side is one explode → broadcast semi-ish join → two-phase
-    partial count. No data-sized relation is ever broadcast; the final
-    hits→docs join is left unhinted (hits is only the contaminated subset,
-    AQE picks the strategy).
+    suite is small by definition) — its distinct n-grams collect once and
+    ship as a SparkContext broadcast into one Arrow pass over the corpus:
+    no join, no shuffle, and no data-sized relation is ever broadcast.
   * pii_redact: pure codegen regexp scan, embarrassingly parallel.
-  * repetition_stats: explode + two-phase hash aggregates keyed by
-    (doc_id, gram) then doc_id — partial aggregation caps the shuffle at
-    the distinct-gram count per partition.
+  * repetition_stats: one Arrow pass — each document's grams are in its
+    own row, so no explode and no shuffle.
   * vocab_top_tokens: the classic vocabulary job — two-phase count on
     token plus an exact distinct-doc count (documented approx alternative:
     approx_count_distinct) and a TakeOrderedAndProject top-k; the full
     vocabulary never collects to the driver.
 
-Every operator is JVM-side; n-gram windows come from the compiled
+Everything else is JVM-side; n-gram windows come from the compiled
 ``pyspark.ml.feature.NGram`` transformer (functions/ngrams.py — the
 higher-order transform/slice alternative is CodegenFallback and measured
 ~8x slower). Each operator has a DuckDB oracle over the same tables.
@@ -88,7 +85,7 @@ _DECON_T = T.StructType([
 
 
 def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
-                  text_col: str = "text", impl: str = "arrow") -> DataFrame:
+                  text_col: str = "text") -> DataFrame:
     """Benchmark decontamination: per document, how many of its word
     n-gram occurrences appear in the benchmark's n-gram set (the GPT-3
     13-gram overlap rule, parameterized n).
@@ -96,62 +93,43 @@ def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
     Returns (doc_id, n_ngrams, n_hits, contaminated). Benchmark documents
     themselves count as contaminated (callers exclude by id if desired).
 
-    impl="arrow" (default, the hot path): the bounded benchmark gram set
-    (≤ _MAX_BENCH_GRAMS, loud guard) collects once and ships as a
-    SparkContext broadcast into ONE ArrowEvalPython pass — no explode, no
-    join, no shuffle; measured 3.6× faster at 1M docs (5.8 s vs 20.7 s,
-    r5 session 7). impl="relational" keeps the explode → broadcast-join →
-    two-phase count shape (the oracle's); both value-identical
-    (equality-pinned, incl. NULL text)."""
-    if impl == "arrow":
-        rows = bench_ngrams(bench, n, text_col).collect()
-        if len(rows) > _MAX_BENCH_GRAMS:
-            raise ValueError(
-                f"decontaminate: {len(rows)} benchmark n-grams exceeds the "
-                f"bounded-bench contract ({_MAX_BENCH_GRAMS}); the bench "
-                f"side must be an eval suite, not a corpus")
-        bc = docs.sparkSession.sparkContext.broadcast({r["g"] for r in rows})
-        word_re = WORD_RE
+    The bounded benchmark gram set (≤ _MAX_BENCH_GRAMS, loud guard)
+    collects once and ships as a SparkContext broadcast into ONE
+    ArrowEvalPython pass — no explode, no join, no shuffle; measured 3.6×
+    faster at 1M docs than the explode → broadcast-join → two-phase count
+    shape the oracle spells (5.8 s vs 20.7 s, r5 session 7). NULL text
+    gives 0 n-grams and 0 hits, as the oracle's greatest(NULL, 0) does."""
+    rows = bench_ngrams(bench, n, text_col).collect()
+    if len(rows) > _MAX_BENCH_GRAMS:
+        raise ValueError(
+            f"decontaminate: {len(rows)} benchmark n-grams exceeds the "
+            f"bounded-bench contract ({_MAX_BENCH_GRAMS}); the bench "
+            f"side must be an eval suite, not a corpus")
+    bc = docs.sparkSession.sparkContext.broadcast({r["g"] for r in rows})
+    word_re = WORD_RE
 
-        @F.pandas_udf(_DECON_T)
-        def _decon_batch(texts: pd.Series) -> pd.DataFrame:
-            import re
-            pat = re.compile(word_re)
-            gs = bc.value
-            n_ngrams, n_hits = [], []
-            for t in texts:
-                # NULL text mirrors the relational path: greatest(NULL, 0)
-                # skips the NULL -> 0 n-grams, 0 hits
-                tk = pat.findall(t.lower()) if t is not None else []
-                m = max(len(tk) - n + 1, 0)
-                n_ngrams.append(m)
-                n_hits.append(sum(1 for i in range(m)
-                                  if " ".join(tk[i:i + n]) in gs))
-            return pd.DataFrame({
-                "n_ngrams": pd.array(n_ngrams, dtype="Int64"),
-                "n_hits": pd.array(n_hits, dtype="Int64")})
+    @F.pandas_udf(_DECON_T)
+    def _decon_batch(texts: pd.Series) -> pd.DataFrame:
+        import re
+        pat = re.compile(word_re)
+        gs = bc.value
+        n_ngrams, n_hits = [], []
+        for t in texts:
+            # NULL text mirrors the oracle: greatest(NULL, 0) skips the
+            # NULL -> 0 n-grams, 0 hits
+            tk = pat.findall(t.lower()) if t is not None else []
+            m = max(len(tk) - n + 1, 0)
+            n_ngrams.append(m)
+            n_hits.append(sum(1 for i in range(m)
+                              if " ".join(tk[i:i + n]) in gs))
+        return pd.DataFrame({
+            "n_ngrams": pd.array(n_ngrams, dtype="Int64"),
+            "n_hits": pd.array(n_hits, dtype="Int64")})
 
-        stats = docs.select("doc_id", _decon_batch(F.col(text_col)).alias("s"))
-        return stats.select("doc_id", "s.n_ngrams", "s.n_hits",
-                            (F.col("s.n_hits") > 0).cast("int")
-                             .alias("contaminated"))
-    if impl != "relational":
-        raise ValueError(f"impl must be 'arrow' or 'relational', got {impl!r}")
-    toks = docs.select("doc_id", _tokens(text_col).alias("tk"))
-    base = toks.select(
-        "doc_id",
-        F.greatest(F.size("tk") - F.lit(n) + F.lit(1), F.lit(0))
-         .cast("long").alias("n_ngrams"))
-    exploded = (with_gram_array(toks, "tk", n)
-                .select("doc_id", F.explode("grams").alias("g")))
-    hits = (exploded.join(F.broadcast(bench_ngrams(bench, n, text_col)), "g")
-                    .groupBy("doc_id").agg(F.count("*").alias("hits")))
-    return (base.join(hits, "doc_id", "left")
-                .select("doc_id", "n_ngrams",
-                        F.coalesce(F.col("hits"), F.lit(0).cast("long"))
-                         .alias("n_hits"),
-                        (F.coalesce(F.col("hits"), F.lit(0)) > 0)
-                         .cast("int").alias("contaminated")))
+    stats = docs.select("doc_id", _decon_batch(F.col(text_col)).alias("s"))
+    return stats.select("doc_id", "s.n_ngrams", "s.n_hits",
+                        (F.col("s.n_hits") > 0).cast("int")
+                         .alias("contaminated"))
 
 
 def pii_redact(df: DataFrame, text_col: str = "text",
@@ -194,7 +172,7 @@ def _rep_stats_batch(texts: pd.Series) -> pd.DataFrame:
     out: dict[str, list] = {k: [] for k in cols}
     for t in texts:
         if t is None:
-            # mirror the relational path: regexp over NULL is NULL
+            # mirror the oracle: regexp over NULL is NULL
             for k in cols:
                 out[k].append(None)
             continue
@@ -217,70 +195,39 @@ def _rep_stats_batch(texts: pd.Series) -> pd.DataFrame:
                          for k, v in out.items()})
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text",
-                     impl: str = "arrow") -> DataFrame:
+def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher/MassiveText-style repetition signals, integerized:
     duplicate-token and top-bigram multiplicity per document, plus a keep
     rule in cross-multiplied integer form (top bigram ≤ 20% of bigrams AND
     ≥ 50% distinct tokens — the published thresholds, floats avoided so the
     oracle hash is exact).
 
-    impl="arrow" (default, the hot path): ONE ArrowEvalPython pass — each
-    doc's grams are already colocated in its row, so the relational
-    explode→two-hash-agg→join shape shuffles 50M (doc_id, gram) strings
-    for per-row-computable stats; the vectorized Counter pass measured 5×
-    faster at 1M docs (9.1 s vs 45.5 s, r5 session 7 — the enrich-v6-key
-    precedent: measure before "optimizing" back). impl="relational" keeps
-    the pure-JVM shape (it IS the oracle's shape); both return identical
-    values (equality-pinned by test on real + crafted rows, incl. NULL
-    text)."""
-    if impl == "arrow":
-        stats = docs.select("doc_id",
-                            _rep_stats_batch(F.col(text_col)).alias("s"))
-        z = F.lit(0).cast("long")
-        nb = F.coalesce(F.col("s.n_bigrams"), z)
-        top = F.coalesce(F.col("s.top_bigram_count"), z)
-        # NULL text: n_tokens_r is NULL, so keep is NULL — same as the
-        # relational path (coalesce only backfills the no-bigram case
-        # there; n_tokens_r NULL propagates through the comparison)
-        keep = ((top * 5 <= nb)
-                & (F.col("s.n_distinct_tokens") * 2
-                   >= F.col("s.n_tokens_r")))
-        # mirror the relational output exactly: bigram columns coalesce to
-        # 0 even when token columns are NULL
-        return stats.select(
-            "doc_id", "s.n_tokens_r", "s.n_distinct_tokens",
-            nb.alias("n_bigrams"),
-            F.coalesce(F.col("s.n_distinct_bigrams"), z)
-             .alias("n_distinct_bigrams"),
-            top.alias("top_bigram_count"),
-            keep.cast("int").alias("keep_rep"))
-    if impl != "relational":
-        raise ValueError(f"impl must be 'arrow' or 'relational', got {impl!r}")
-    toks = docs.select("doc_id", _tokens(text_col).alias("tk"))
-    words = toks.select(
-        "doc_id",
-        F.size("tk").cast("long").alias("n_tokens_r"),
-        F.size(F.array_distinct("tk")).cast("long").alias("n_distinct_tokens"))
-    bigrams = (with_gram_array(toks, "tk", 2)
-               .select("doc_id", F.explode("grams").alias("g")))
-    bstats = (bigrams.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
-                     .groupBy("doc_id")
-                     .agg(F.sum("c").alias("nb"),
-                          F.count("*").alias("ndb"),
-                          F.max("c").alias("top")))
+    ONE ArrowEvalPython pass — each doc's grams are already colocated in
+    its row, so the relational explode→two-hash-agg→join shape the oracle
+    spells would shuffle 50M (doc_id, gram) strings for per-row-computable
+    stats; the vectorized Counter pass measured 5× faster at 1M docs
+    (9.1 s vs 45.5 s, r5 session 7 — the enrich-v6-key precedent: measure
+    before "optimizing" back)."""
+    stats = docs.select("doc_id",
+                        _rep_stats_batch(F.col(text_col)).alias("s"))
     z = F.lit(0).cast("long")
-    nb = F.coalesce(F.col("nb"), z)
-    ndb = F.coalesce(F.col("ndb"), z)
-    top = F.coalesce(F.col("top"), z)
+    nb = F.coalesce(F.col("s.n_bigrams"), z)
+    top = F.coalesce(F.col("s.top_bigram_count"), z)
+    # NULL text: n_tokens_r is NULL, so keep is NULL — as in the oracle
+    # (coalesce only backfills the no-bigram case there; n_tokens_r NULL
+    # propagates through the comparison)
     keep = ((top * 5 <= nb)
-            & (F.col("n_distinct_tokens") * 2 >= F.col("n_tokens_r")))
-    return (words.join(bstats, "doc_id", "left")
-                 .select("doc_id", "n_tokens_r", "n_distinct_tokens",
-                         nb.alias("n_bigrams"),
-                         ndb.alias("n_distinct_bigrams"),
-                         top.alias("top_bigram_count"),
-                         keep.cast("int").alias("keep_rep")))
+            & (F.col("s.n_distinct_tokens") * 2
+               >= F.col("s.n_tokens_r")))
+    # mirror the oracle's output exactly: bigram columns coalesce to 0
+    # even when token columns are NULL
+    return stats.select(
+        "doc_id", "s.n_tokens_r", "s.n_distinct_tokens",
+        nb.alias("n_bigrams"),
+        F.coalesce(F.col("s.n_distinct_bigrams"), z)
+         .alias("n_distinct_bigrams"),
+        top.alias("top_bigram_count"),
+        keep.cast("int").alias("keep_rep"))
 
 
 def clean_corpus(docs: DataFrame, bench: DataFrame, n: int = 5,
@@ -295,10 +242,10 @@ def clean_corpus(docs: DataFrame, bench: DataFrame, n: int = 5,
 
     Scale shape: the per-row flags (quality, language, md5 fingerprint)
     are computed in a single projection of the scan (text_ops.quality_cols
-    / lang_cols — no join for per-row stages); the three relational stages
-    (canonical-id group-by, repetition aggs, decontamination) shuffle on
-    their natural keys and reattach by doc_id — sort-merge territory at
-    100 TB, all partial-aggregated, nothing data-sized broadcast.
+    / lang_cols — no join for per-row stages); the canonical-id group-by
+    shuffles on the fingerprint, repetition and decontamination are
+    per-row Arrow passes, and all three reattach by doc_id — sort-merge
+    territory at 100 TB, nothing data-sized broadcast.
     """
     from logstash_filter_geoip_spark.operators.text_ops import (lang_cols,
                                                                 quality_cols)

@@ -4,13 +4,13 @@ extraction, and per-domain aggregation.
 A web-scale training-data pipeline (CommonCrawl-style) keys almost
 everything on URLs: dedup-by-URL, per-domain quality priors, domain
 blocklists, and crawl frontier stats all need a CANONICAL url and a
-registered domain (eTLD+1). These operators provide that surface as pure
-codegen regexp/CASE expressions — no Python, no shuffle for the per-row
-ops, one two-phase aggregate for the domain rollup.
+registered domain (eTLD+1). These operators provide that surface with no
+shuffle for the per-row ops and one two-phase aggregate for the domain
+rollup.
 
-Engine-shared definitions: every expression here is built from ONE SQL
-template rendered per engine (the ``template_sql``/``hashing`` pattern) —
-the only rendering difference is DuckDB's explicit ``'g'`` flag on global
+Engine-shared definitions: every rule here is ONE SQL template rendered
+per engine (the ``template_sql``/``hashing`` pattern) — the only
+rendering difference is DuckDB's explicit ``'g'`` flag on global
 ``regexp_replace`` (Spark replaces all occurrences by default). All
 regexes are deliberately BACKSLASH-FREE (character classes like ``[0-9]``
 / ``[.]`` instead of ``\\d`` / ``\\.``): Spark SQL string literals treat a
@@ -26,11 +26,13 @@ two-level public suffixes (co.uk, com.au, …, github.io) as a literal
 alternation — production would compile the full Mozilla public-suffix
 list into the same shape.
 
-Scale notes (100 TB): ``url_parts`` / ``url_normalize`` are narrow
-projections inside the scan's whole-stage-codegen span (plan-pinned: no
-Exchange, no Python, no Join); ``domain_counts`` is one two-phase hash
-aggregate whose shuffle carries DISTINCT registered domains (web corpora
-have ~1e7 domains — bounded, never corpus-sized).
+Scale notes (100 TB): ``url_parts`` is a narrow projection inside the
+scan's whole-stage-codegen span (plan-pinned: no Exchange, no Python, no
+Join); ``url_normalize`` is one ArrowEvalPython pass mirroring the
+template decision-for-decision (plan-pinned: no Exchange, no Join);
+``domain_counts`` is one two-phase hash aggregate whose shuffle carries
+DISTINCT registered domains (web corpora have ~1e7 domains — bounded,
+never corpus-sized).
 """
 
 from __future__ import annotations
@@ -175,29 +177,17 @@ def _norm_py(url, pat, track, ip_re, suf_re, lab_re):
     return norm, dom
 
 
-def url_normalize(df: DataFrame, url_col: str = "url",
-                  impl: str = "arrow") -> DataFrame:
+def url_normalize(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Append ``url_norm`` (canonical URL) and ``registered_domain`` — the
     unit of web dedup and domain rollups.
 
-    impl="arrow" (default, the hot path): ONE ArrowEvalPython pass with a
-    compiled-regex Python mirror of the SQL template. The declarative form
-    re-references the part extractions inside CASE arms, and conditional
-    arms are invisible to whole-stage-codegen CSE (the r5 v6-key lesson) —
-    measured 52.2 s vs 9.1 s per 2M rows on local[32] (5.7×; url_parts,
-    whose six extractions are each referenced once, stays pure codegen at
-    2.5 s). impl="sql" keeps the declarative projection — it IS the
-    oracle's shape and stays value-identical (equality-pinned on the full
-    driver derivation plus a crafted edge matrix, incl. the INT-overflow
-    port rule)."""
-    if impl == "sql":
-        host = url_part_exprs(url_col, "spark")["host"]
-        return df.select(
-            "*",
-            F.expr(url_norm_sql(url_col, "spark")).alias("url_norm"),
-            F.expr(registered_domain_sql(host)).alias("registered_domain"))
-    if impl != "arrow":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
+    ONE ArrowEvalPython pass with a compiled-regex Python mirror of the
+    SQL template the oracle renders (``url_norm_sql`` /
+    ``registered_domain_sql``). The declarative form re-references the
+    part extractions inside CASE arms, and conditional arms are invisible
+    to whole-stage-codegen CSE (the r5 v6-key lesson) — measured 52.2 s vs
+    9.1 s per 2M rows on local[32] (5.7×; url_parts, whose six
+    extractions are each referenced once, stays pure codegen at 2.5 s)."""
     import re
 
     url_re, track_re = URL_RE, TRACK_RE

@@ -13,3 +13,14 @@ def spark():
     s = get_spark(app="tests", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def duck_rows(sql: str, **tables) -> list[tuple]:
+    """Run an oracle SQL in DuckDB over crafted rows: each keyword names a
+    view holding that Spark DataFrame's rows (moved through Arrow, so
+    array columns and NULLs keep their types)."""
+    import duckdb
+    con = duckdb.connect()
+    for name, df in tables.items():
+        con.register(name, df.toArrow())
+    return con.execute(sql).fetchall()

@@ -1,16 +1,19 @@
 """Integer k-means semantics beyond the oracle: pure-Python third-engine
-equality, determinism under repartitioning, empty-cluster freeze, clamp
-rule, argument validation, and the assignment plan shape."""
+equality, DuckDB oracle equality on test-scale and crafted tie rows,
+determinism under repartitioning, empty-cluster freeze, clamp rule,
+argument validation, and the assignment plan shape."""
 
 from __future__ import annotations
 
 import math
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from logstash_filter_geoip_spark.functions.hashing import md5_hash60_py
 from logstash_filter_geoip_spark.operators import clustering as km
+from tests.conftest import duck_rows
 
 SF = "/root/testdata/sf0.001"
 
@@ -80,12 +83,11 @@ def test_kmeans_empty_cluster_frozen(spark):
 
 
 def test_kmeans_clamp_extremes(spark):
-    # coordinates beyond ±SHIFT/SCALE clamp identically in the Spark rule
+    # coordinates beyond ±SHIFT/SCALE clamp identically in the numpy rule
     # and the Python mirror (the oracle SQL shares the spelling verbatim)
     rows = [(0, [9.9, -9.9]), (1, [0.0, 0.0]), (2, [9.8, -9.8])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    iv = {r.vec_id: [r[f"x{i}"] for i in range(2)]
-          for r in km.int_vectors(emb, dim=2).collect()}
+    iv = km._quantize(pd.Series([v for _, v in rows])).tolist()
     assert iv[0] == [2 * km.SHIFT, 0]
     assert iv[2] == [2 * km.SHIFT, 0]  # clamp collapses 9.8 and 9.9
     got = {r.vec_id: (r.cid, r.dist2)
@@ -106,33 +108,23 @@ def test_kmeans_validation(spark):
 def test_kmeans_assignment_plan_shape(spark):
     # every Lloyd round's shuffle (the K-group aggregate) has already
     # executed by construction, so the returned assignment is one narrow
-    # scan in both impls: arrow = exactly ONE ArrowEvalPython barrier
-    # (never row-at-a-time BatchEvalPython), column = pure codegen with
-    # no Python at all; neither has an Exchange
+    # scan: exactly ONE ArrowEvalPython barrier (never row-at-a-time
+    # BatchEvalPython) and no Exchange
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     arrow = km.kmeans_assign(emb, n_iter=1)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" not in arrow
     assert arrow.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in arrow
-    col = km.kmeans_assign(emb, n_iter=1, impl="column") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in col
-    assert "Python" not in col and "BatchEval" not in col
-    # the leading `*(1)` star is the whole-stage-codegen marker
-    assert col.lstrip().startswith("*(")
 
 
-def test_kmeans_arrow_equals_column_impl(spark):
-    """The two assignment evaluations are value-identical end-to-end —
-    the column impl IS the oracle's shape, the arrow impl is the
-    production default (the url_normalize equality-pin pattern)."""
+def test_kmeans_matches_oracle_sql(spark):
+    """kmeans_assign == the package's DuckDB oracle (the unrolled Lloyd
+    chain) run over the same test-scale rows."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    a = sorted(map(tuple, km.kmeans_assign(emb).collect()))
-    c = sorted(map(tuple, km.kmeans_assign(emb, impl="column").collect()))
-    assert a == c and a
-    with pytest.raises(ValueError, match="impl"):
-        km.assign_fixed(emb, [[0] * km.DIM], impl="sql")
+    got = sorted(map(tuple, km.kmeans_assign(emb).collect()))
+    want = sorted(duck_rows(km.kmeans_oracle_sql(), embeddings=emb))
+    assert got == want and got
 
 
 # ---------------------------------------------------------------------------
@@ -349,14 +341,12 @@ def test_triplets_match_python_reference(spark):
     assert got == _triplets_py(vecs, km.K_CLUSTERS, km.N_ITER)
 
 
-def test_triplets_arrow_equals_column_impl(spark):
+def test_triplets_match_oracle_sql(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    arrow = {tuple(r) for r in km.contrastive_triplets(emb).collect()}
-    col = {tuple(r)
-           for r in km.contrastive_triplets(emb, impl="column").collect()}
-    assert arrow == col and len(arrow) > 0
-    with pytest.raises(ValueError):
-        km.contrastive_triplets(emb, impl="sql")
+    got = {tuple(r) for r in km.contrastive_triplets(emb).collect()}
+    want = set(duck_rows(km.kmeans_oracle_sql(summary="triplets"),
+                         embeddings=emb))
+    assert got == want and len(got) > 0
 
 
 def test_triplets_tie_rules_and_small_clusters(spark):
@@ -383,6 +373,11 @@ def test_triplets_tie_rules_and_small_clusters(spark):
         assert r.pos_id != r.neg_id and r.n_partners == 3
     # the 2-member cluster contributes no anchors
     assert set(got) == four
+    # the DuckDB oracle spells the same tie rules over the same rows
+    oracle = duck_rows(km.kmeans_oracle_sql(k=2, n_iter=2, dim=dim,
+                                            summary="triplets"),
+                       embeddings=emb)
+    assert {tuple(r) for r in got.values()} == set(oracle)
 
 
 # ---------------------------------------------------------------------------
@@ -414,9 +409,9 @@ def test_pq_codes_match_python_reference(spark):
     got = {r.vec_id: tuple(r[f"code_{s}"] for s in range(km.PQ_M))
            for r in km.pq_encode(emb, books).collect()}
     assert got == want
-    col = {r.vec_id: tuple(r[f"code_{s}"] for s in range(km.PQ_M))
-           for r in km.pq_encode(emb, books, impl="column").collect()}
-    assert col == want
+    oracle = {r[0]: tuple(r[1:])
+              for r in duck_rows(km.pq_codes_oracle_sql(), embeddings=emb)}
+    assert oracle == want
 
 
 def test_pq_adc_matches_python_reference(spark):
@@ -458,25 +453,29 @@ def test_pq_validation(spark):
         km.pq_encode(emb, [])
     books = km.pq_train(emb)
     with pytest.raises(ValueError):
-        km.pq_encode(emb, books, impl="sql")
-    with pytest.raises(ValueError):
         km.pq_adc_topk(emb, books, max_queries=65)
 
 
 def test_pq_train_fused_equals_composed_loop(spark):
-    """r6 pin: the fused one-scan-per-round PQ trainer (impl="arrow")
-    is bit-identical to the composed per-subspace train_centroids loop
-    (impl="column", the shape the nested kmeans oracle chains mirror)."""
+    """r6 pin: the fused one-scan-per-round PQ trainer is bit-identical
+    to the composed per-subspace train_centroids loop AND to the nested
+    kmeans oracle chains' centroids over each sliced subspace."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    fused = km.pq_train(emb, impl="arrow")
-    composed = km.pq_train(emb, impl="column")
-    per_subspace_arrow = [
+    d = km.DIM // km.PQ_M
+    fused = km.pq_train(emb)
+    per_subspace = [
         km.train_centroids(
             emb.select("vec_id",
-                       F.slice(F.col("embedding"),
-                               s * (km.DIM // km.PQ_M) + 1,
-                               km.DIM // km.PQ_M).alias("__sub")),
-            k=km.PQ_K, n_iter=km.PQ_N_ITER, dim=km.DIM // km.PQ_M,
-            emb_col="__sub", impl="arrow")
+                       F.slice(F.col("embedding"), s * d + 1, d)
+                        .alias("__sub")),
+            k=km.PQ_K, n_iter=km.PQ_N_ITER, dim=d, emb_col="__sub")
         for s in range(km.PQ_M)]
-    assert fused == composed == per_subspace_arrow
+    oracle = [
+        [list(r[1:]) for r in sorted(duck_rows(
+            km.kmeans_oracle_sql(
+                k=km.PQ_K, n_iter=km.PQ_N_ITER, dim=d,
+                emb_expr=f"(embedding[{s * d + 1}:{s * d + d}])",
+                summary="centroids"),
+            embeddings=emb))]
+        for s in range(km.PQ_M)]
+    assert fused == per_subspace == oracle

@@ -10,6 +10,7 @@ import re
 
 from logstash_filter_geoip_spark.operators import curation
 from logstash_filter_geoip_spark.plans import checks
+from tests.conftest import duck_rows
 
 
 def _docs(spark, rows):
@@ -34,23 +35,19 @@ def test_decontaminate_edges(spark):
 
 
 def test_decontaminate_broadcasts_only_bench(spark):
-    """Scale contract: the corpus side is NEVER broadcast — with
-    auto-broadcast off, the only BroadcastExchange is the hinted benchmark
-    n-gram set; the hits→docs reattach join goes through the shuffle."""
+    """Scale contract: the corpus side is NEVER broadcast or shuffled —
+    with auto-broadcast off the plan has no BroadcastExchange, no Join and
+    no Exchange, because the bounded bench n-gram set ships as a
+    SparkContext broadcast into the one Arrow pass."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     bench = docs.where(curation._BENCH_PRED_SQL)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = checks.simple_plan(
-            curation.decontaminate(docs, bench, impl="relational"))
-        n_bx = len(re.findall(r"BroadcastExchange", plan))
-        assert n_bx == 1, plan[:4000]
-        bhj = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
-        assert len(bhj) == 1 and "Inner" in bhj[0], bhj
-        # the doc-count reattach is a shuffle join, LeftOuter
-        assert any("SortMergeJoin" in ln and "LeftOuter" in ln
-                   for ln in plan.splitlines()), plan[:4000]
+        plan = checks.simple_plan(curation.decontaminate(docs, bench))
+        assert "BroadcastExchange" not in plan, plan[:4000]
+        assert "Join" not in plan and "Exchange" not in plan, plan[:4000]
+        assert plan.count("ArrowEvalPython") == 1, plan[:4000]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -183,24 +180,21 @@ def test_gram_array_edges(spark):
 
 
 def test_repetition_stats_arrow_equals_relational(spark):
-    """The Arrow hot path and the relational (oracle-shaped) path must be
-    value-identical — on the real corpus AND crafted rows (empty, single
+    """The Arrow pass must equal the relational DuckDB oracle run over
+    the same rows — the real corpus AND crafted rows (empty, single
     token, NULL text, repeated bigrams, unicode-adjacent punctuation)."""
-    import pytest as _pytest
     from logstash_filter_geoip_spark.operators.curation import repetition_stats
     real = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     crafted = spark.createDataFrame(
         [(1, ""), (2, "a"), (3, None), (4, "x y x y x y x y x y"),
          (5, "A.b,c x A.b"), (6, "one two two two three")],
         "doc_id bigint, text string")
+    oracle = curation.oracles()["repetition_stats"]
     for df in (real, crafted):
         a = {r["doc_id"]: tuple(r)[1:] for r in
-             repetition_stats(df, impl="arrow").collect()}
-        b = {r["doc_id"]: tuple(r)[1:] for r in
-             repetition_stats(df, impl="relational").collect()}
+             repetition_stats(df).collect()}
+        b = {r[0]: r[1:] for r in duck_rows(oracle, documents=df)}
         assert a == b
-    with _pytest.raises(ValueError, match="impl"):
-        repetition_stats(real, impl="nope")
 
 
 def test_repetition_stats_arrow_plan(spark):
@@ -215,26 +209,26 @@ def test_repetition_stats_arrow_plan(spark):
 
 
 def test_decontaminate_arrow_equals_relational(spark):
-    """Arrow hot path == relational (oracle-shaped) path, real + crafted
-    rows (NULL/empty/short text; bench member; partial overlap)."""
-    import pytest as _pytest
+    """The Arrow pass == the relational DuckDB oracle over the same rows,
+    real + crafted (NULL/empty/short text; bench member; partial
+    overlap). The oracle's bench is the documents meeting
+    _BENCH_PRED_SQL, so the crafted bench doc has id 97."""
     from logstash_filter_geoip_spark.operators.curation import decontaminate
     real = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    rb = real.where("doc_id % 97 = 0 AND doc_id < 9700")
     crafted = spark.createDataFrame(
         [(1, None), (2, ""), (3, "a b c"),
-         (4, "alpha beta gamma delta epsilon zeta"),
+         (97, "alpha beta gamma delta epsilon zeta"),
          (5, "unrelated words only here now forever")],
         "doc_id bigint, text string")
-    cb = crafted.where("doc_id = 4")
-    for df, b in ((real, rb), (crafted, cb)):
-        a = {r["doc_id"]: tuple(r)[1:] for r in
-             decontaminate(df, b, impl="arrow").collect()}
-        r_ = {r["doc_id"]: tuple(r)[1:] for r in
-              decontaminate(df, b, impl="relational").collect()}
-        assert a == r_
-    with _pytest.raises(ValueError, match="impl"):
-        decontaminate(real, rb, impl="nope")
+    oracle = curation.oracles()["decontaminate"]
+    for df in (real, crafted):
+        a = {r["doc_id"]: tuple(r)[1:] for r in decontaminate(
+            df, df.where(curation._BENCH_PRED_SQL),
+            n=curation.DECONTAM_N).collect()}
+        b = {r[0]: r[1:] for r in duck_rows(oracle, documents=df)}
+        assert a == b
+    # the crafted rows still exercise every branch: a hit, NULL, empty
+    assert a[97] == (2, 2, 1) and a[1] == a[2] == (0, 0, 0)
 
 
 def test_decontaminate_bench_guard(spark, monkeypatch):

@@ -1,8 +1,8 @@
 """URL operators (operators/web.py): parse/normalize/registered-domain
 semantics pinned against Python's urllib.parse (an independent third
-engine — never the oracle SQL), crafted normalization expectations, and
-the pure-codegen plan contract. Oracle parity at sf0.01 is covered by
-test_oracle_parity."""
+engine), the DuckDB rendering of the oracle's SQL template over crafted
+and fuzzed rows, crafted normalization expectations, and the plan
+contracts. Oracle parity at sf0.01 is covered by test_oracle_parity."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ from urllib.parse import urlsplit
 
 from logstash_filter_geoip_spark.operators import web
 from logstash_filter_geoip_spark.plans import checks
+from tests.conftest import duck_rows
 
 VALID = [
     "https://Example.COM/path/a?utm_source=news&id=7",
@@ -124,18 +125,15 @@ def test_domain_counts(spark):
 
 
 def test_url_ops_plan_contracts(spark):
-    """url_parts and url_normalize(impl='sql') are pure-codegen narrow
-    projections (no Exchange/Join/Python); the arrow default is exactly
-    ONE ArrowEvalPython barrier (never row-at-a-time BatchEvalPython) —
-    the CASE-arm re-references of the declarative form are invisible to
-    codegen CSE (measured 52.2 s vs 9.1 s per 2M rows, see docstring);
-    domain_counts never joins."""
+    """url_parts is a pure-codegen narrow projection (no Exchange/Join/
+    Python); url_normalize is exactly ONE ArrowEvalPython barrier (never
+    row-at-a-time BatchEvalPython) — the CASE-arm re-references of the
+    declarative form are invisible to codegen CSE (measured 52.2 s vs
+    9.1 s per 2M rows, see docstring); domain_counts never joins."""
     docs = _df(spark, VALID)
-    for build in (web.url_parts,
-                  lambda d: web.url_normalize(d, impl="sql")):
-        p = checks.simple_plan(build(docs))
-        assert "Exchange" not in p and "Join" not in p, p[:3000]
-        assert "Python" not in p and "Generate" not in p, p[:3000]
+    p = checks.simple_plan(web.url_parts(docs))
+    assert "Exchange" not in p and "Join" not in p, p[:3000]
+    assert "Python" not in p and "Generate" not in p, p[:3000]
     p = checks.simple_plan(web.url_normalize(docs))
     assert p.count("ArrowEvalPython") == 1, p[:3000]
     assert "BatchEvalPython" not in p and "Exchange" not in p, p[:3000]
@@ -143,12 +141,20 @@ def test_url_ops_plan_contracts(spark):
     assert "Join" not in p, p[:3000]
 
 
+def _norm_oracle_sql() -> str:
+    """The oracle's url_norm / registered_domain template over a ``urls``
+    view of (event_id, url) rows, rendered for DuckDB."""
+    host = web.url_part_exprs("url", "duckdb")["host"]
+    return (f"SELECT event_id, {web.url_norm_sql('url', 'duckdb')} "
+            f"AS url_norm, {web.registered_domain_sql(host)} "
+            f"AS registered_domain FROM urls")
+
+
 def test_url_normalize_arrow_equals_sql(spark):
-    """The Arrow hot path and the declarative SQL shape (= the oracle's)
-    must be value-identical — on the full driver derivation at sf0.01 AND
-    a crafted edge matrix (INT-overflow port, bare '&'-headed tracking
+    """The Arrow pass and the oracle's SQL template (run in DuckDB) must
+    be value-identical — on the full driver derivation at sf0.01 AND a
+    crafted edge matrix (INT-overflow port, bare '&'-headed tracking
     query, NULL url, uppercase scheme, empty path with port)."""
-    import pytest as _pytest
     real = web._events_urls(spark, "/root/testdata/sf0.01")
     crafted = spark.createDataFrame(
         [(1, "http://h.example.com:99999999999/x"),   # TRY_CAST overflow
@@ -159,19 +165,18 @@ def test_url_normalize_arrow_equals_sql(spark):
         "event_id long, url string")
     for df in (real, crafted):
         a = sorted((r["event_id"], r["url_norm"], r["registered_domain"])
-                   for r in web.url_normalize(df, impl="arrow").collect())
-        b = sorted((r["event_id"], r["url_norm"], r["registered_domain"])
-                   for r in web.url_normalize(df, impl="sql").collect())
+                   for r in web.url_normalize(df).collect())
+        b = sorted(duck_rows(_norm_oracle_sql(),
+                             urls=df.select("event_id", "url")))
         assert a == b
-    with _pytest.raises(ValueError, match="impl"):
-        web.url_normalize(real, impl="nope")
 
 
 def test_url_normalize_fuzz_arrow_sql_urllib_agree(spark):
     """Seeded fuzz: 120 generated URLs over randomized scheme/host/port/
     path/query/fragment shapes (plus injected garbage rows) — the Arrow
-    and SQL implementations must agree exactly on every row, and the
-    parsed parts must match urllib.urlsplit on every parseable row."""
+    pass and the oracle's SQL template in DuckDB must agree exactly on
+    every row, and the parsed parts must match urllib.urlsplit on every
+    parseable row."""
     import random
     from urllib.parse import urlsplit
 
@@ -197,9 +202,9 @@ def test_url_normalize_fuzz_arrow_sql_urllib_agree(spark):
         urls.append(u)
     df = _df(spark, urls)
     a = sorted((r["event_id"], r["url_norm"], r["registered_domain"])
-               for r in web.url_normalize(df, impl="arrow").collect())
-    b = sorted((r["event_id"], r["url_norm"], r["registered_domain"])
-               for r in web.url_normalize(df, impl="sql").collect())
+               for r in web.url_normalize(df).collect())
+    b = sorted(duck_rows(_norm_oracle_sql(),
+                         urls=df.select("event_id", "url")))
     assert a == b
     parts = {r["url"]: r for r in web.url_parts(df).collect()}
     for u in urls:
