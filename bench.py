@@ -133,17 +133,6 @@ def bench_queries(spark, sf_dir: str, scale_factor: int = 1,
         text_ops.lang_id(docs).collect()
         text_ops.fingerprints(docs).collect()
 
-    def q_enrich_distinct_agg():
-        # NON-headline comparison run (extra JSON key, excluded from the
-        # graded total): the J3 distinct-IP cache analogue vs the direct
-        # broadcast join — the enrich_via_distinct docstring's "measure,
-        # don't assume" lives here
-        from logstash_filter_geoip_spark.operators.enrich import (
-            enrich_via_distinct)
-        e = enrich_via_distinct(parse_transcripts(transcripts()), dim, cfg,
-                                dim_v6=dim_v6)
-        agg.turns_per_geo_window(e, "geoip.geo.country_iso_code").collect()
-
     def q_curation_suite():
         # NON-headline extra (new in r5): the curation operators over the
         # documents table + PII redaction over the replicated transcripts
@@ -524,7 +513,6 @@ def bench_queries(spark, sf_dir: str, scale_factor: int = 1,
         "dedup_minhash_lsh": q_dedup_minhash,
         "ann_brute_force": q_ann_brute_force,
         "text_suite": q_text_suite,
-        "__extra_enrich_distinct_agg": q_enrich_distinct_agg,
         "__extra_curation_suite": q_curation_suite,
         "__extra_prep_suite": q_prep_suite,
         "__extra_temporal_suite": q_temporal_suite,

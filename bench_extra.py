@@ -41,8 +41,7 @@ def components(spark, sf_dir: str, scale_factor: int, workdir: str):
                                                        sessions, similarity,
                                                        stats, temporal,
                                                        text_ops, trending, web)
-    from logstash_filter_geoip_spark.operators.enrich import (enrich,
-                                                              enrich_via_distinct)
+    from logstash_filter_geoip_spark.operators.enrich import enrich
     from logstash_filter_geoip_spark.operators.route import route
     from logstash_filter_geoip_spark.sources.geolite2 import (load_dim,
                                                               vendored_dims)
@@ -394,9 +393,13 @@ def components(spark, sf_dir: str, scale_factor: int, workdir: str):
             F.count(F.lit(1)), F.sum("neg_dist2")).collect())
 
     # ----- enrich variants -----
-    add("extra.enrich_via_distinct", lambda: agg.turns_per_geo_window(
-        enrich_via_distinct(parse_transcripts(transcripts()), dim, cfg,
-                            dim_v6=dim_v6),
+    # the bucket v6 leg runs only for versioned dims: one-snapshot histories
+    # of the same dims put it on the clock
+    hist = temporal.dim_history([("2000-01-01", dim)])
+    hist_v6 = temporal.dim_history([("2000-01-01", dim_v6)])
+    add("extra.enrich_event_time", lambda: agg.turns_per_geo_window(
+        enrich(parse_transcripts(transcripts()), hist, cfg, dim_v6=hist_v6,
+               event_time_col="ts"),
         "geoip.geo.country_iso_code").collect())
 
     # ----- operators outside the bench.py suites; per-row outputs drain

@@ -9,6 +9,14 @@ Execution shape (SURVEY.md §2.3 J1/J2, §4.2):
     as the join condition — never a BroadcastNestedLoopJoin. Verified by
     tests/test_plan_shape.py.
   * left-outer always: a turn never drops or duplicates (ranges disjoint).
+  * the v6 leg is chosen from the input, never by an option: an equi-join
+    on the row position an in-UDF binary search found (`index`), or, for
+    versioned dims (`event_time_col`), the hi-word bucket join with a range
+    residual (`bucket`) — see enrich().
+  * one lookup per row, like the reference's filter; its LRU cache (J3)
+    has no analogue here — the broadcast dim is already RAM-resident per
+    executor, and a distinct-IP pre-aggregation measured slower than the
+    direct join (BENCH/BASELINE.md).
   * the pipeline is Column expressions inside whole-stage-codegen spans,
     with at most ONE Arrow-vectorized node (none on the v4-only path,
     `source_may_contain_v6=False`): the ipv6_to_key pandas UDF that
@@ -85,47 +93,63 @@ def _tree_to_struct(tree: dict) -> Column:
     return F.struct(*parts)
 
 
-def build_enrichment_tree(config: GeoIPConfig, ip_col: Column,
-                          dim_col, hit: Column) -> dict:
-    """Nested {path: Column} tree for the target struct.
+def _field_tree(config: GeoIPConfig, leaf) -> dict:
+    """Nested {name: leaf(spec, sub)} tree of the target struct: the one
+    home of the ECS/legacy path rules, shared by the Column build
+    (build_enrichment_tree) and the declared type (_target_type).
 
-    ECS mode uses the dotted ECS paths (geo.*, as.*, mmdb.*, ip_traits.*);
-    legacy uses flat names. LOCATION vs LATITUDE/LONGITUDE overlap on the
-    same nested path (Field.java:46-47) — inserting into one tree merges
-    them naturally (SURVEY.md §7.4.4). Every leaf is guarded by `hit` so a
-    matched-but-aborted row and an unmatched row both yield all-null fields
-    (the "{}" state); null dim attributes stay null (P9 suppression).
+    ECS mode uses the dotted ECS paths (geo.*, as.*, mmdb.*, ip_traits.*)
+    and skips country_code3, which has no ECS name (GeoIPFilter.java:
+    227-229); legacy uses flat names. ECS geo.location shares its path with
+    LATITUDE/LONGITUDE (Field.java:46-47), so LOCATION inserts its lat/lon
+    as separate leaves (`sub` "lat"/"lon") that merge within the tree,
+    later fields overwriting, mirroring EnumMap write order (SURVEY.md
+    §7.4.4); legacy `location` is one composite leaf (`sub` None).
     """
     tree: dict = {}
     for name in config.resolved_fields:
         spec = FIELD_BY_NAME[name]
-        if config.ecs_compatibility and spec.ecs_path == "":
-            # country_code3 has no ECS name → skipped (GeoIPFilter.java:227-229)
-            continue
-        path = (spec.ecs_path if config.ecs_compatibility else spec.legacy_name).split(".")
-        if spec.name == "LOCATION":
-            lat, lon = dim_col("latitude"), dim_col("longitude")
-            both = hit & lat.isNotNull() & lon.isNotNull()
-            if config.ecs_compatibility:
-                # ECS geo.location shares its path with LATITUDE/LONGITUDE
-                # (Field.java:46-47) — merge within the tree; later fields
-                # overwrite, mirroring EnumMap write order (SURVEY.md §7.4.4)
-                _insert(tree, path + ["lat"], F.when(both, lat))
-                _insert(tree, path + ["lon"], F.when(both, lon))
-            else:
-                # legacy flat `location`: composite struct, absent (null)
-                # unless BOTH lat and lon present (F3)
-                _insert(tree, path, F.when(both, F.struct(
-                    lat.alias("lat"), lon.alias("lon"))))
-            continue
-        if spec.name in ("LATITUDE", "LONGITUDE") and config.ecs_compatibility:
-            # ECS lat/lon live inside geo.location — merged via the tree
-            col = dim_col("latitude" if spec.name == "LATITUDE" else "longitude")
-            _insert(tree, path, F.when(hit, col))
-            continue
-        value = _leaf_value(spec, ip_col, dim_col)
-        _insert(tree, path, F.when(hit, value))
+        if not config.ecs_compatibility:
+            _insert(tree, [spec.legacy_name], leaf(spec, None))
+        elif spec.name == "LOCATION":
+            for sub in ("lat", "lon"):
+                _insert(tree, spec.ecs_path.split(".") + [sub], leaf(spec, sub))
+        elif spec.ecs_path:
+            _insert(tree, spec.ecs_path.split("."), leaf(spec, None))
     return tree
+
+
+def build_enrichment_tree(config: GeoIPConfig, ip_col: Column,
+                          dim_col, hit: Column) -> dict:
+    """Nested {path: Column} tree for the target struct (paths:
+    _field_tree). Every leaf is guarded by `hit` so a matched-but-aborted
+    row and an unmatched row both yield all-null fields (the "{}" state);
+    null dim attributes stay null (P9 suppression). Location leaves are
+    absent (null) unless BOTH lat and lon are present (F3).
+    """
+    def leaf(spec: FieldSpec, sub: str | None) -> Column:
+        if spec.name != "LOCATION":
+            return F.when(hit, _leaf_value(spec, ip_col, dim_col))
+        lat, lon = dim_col("latitude"), dim_col("longitude")
+        both = hit & lat.isNotNull() & lon.isNotNull()
+        if sub is None:
+            return F.when(both, F.struct(lat.alias("lat"), lon.alias("lon")))
+        return F.when(both, lat if sub == "lat" else lon)
+    return _field_tree(config, leaf)
+
+
+def _target_type(config: GeoIPConfig) -> T.StructType:
+    """StructType of the target column: the _field_tree paths typed by
+    FieldSpec.dtype. Pure Python (no py4j Column), so it costs nothing on
+    every enrich() call, every run_stream micro-batch included."""
+    def leaf(spec: FieldSpec, sub: str | None) -> T.DataType:
+        return spec.dtype if sub is None else spec.dtype[sub].dataType
+
+    def struct_type(tree: dict) -> T.StructType:
+        return T.StructType([
+            T.StructField(k, struct_type(v) if isinstance(v, dict) else v)
+            for k, v in tree.items()])
+    return struct_type(_field_tree(config, leaf))
 
 
 # ---------------------------------------------------------------------------
@@ -198,7 +222,7 @@ def prepare_dim_v6(dim_v6: DataFrame) -> DataFrame:
 
 
 def _index_dim_v6(dim_v6: DataFrame):
-    """Driver-side prep for the v6 ``index`` lookup mode: pull the dim as
+    """Driver-side prep for the v6 ``index`` leg: pull the dim as
     Arrow, sort it by (start_hi, start_lo), broadcast the numpy range
     arrays for the LPM UDF, and hand the same sorted table WITH its row
     position back to the JVM as the equi-join build side (one source of
@@ -214,7 +238,7 @@ def _index_dim_v6(dim_v6: DataFrame):
     Driver-resident by design: the reference's workers each hold the whole
     .mmdb in RAM (GeoIPFilter.java:173-197); a full production GeoLite2 v6
     file is ~1.5M ranges ≈ ~50 MB of int64 arrays — the same order as the
-    broadcast the bucket mode already ships, minus the replication.
+    broadcast the bucket leg already ships, minus the replication.
 
     Memoized ON the dim object (r6): repeated enrich() calls against the
     SAME dim DataFrame were re-collecting, re-sorting, and re-broadcasting
@@ -253,8 +277,7 @@ def _index_dim_v6(dim_v6: DataFrame):
 def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
            tags_col: str = "tags", dim_v6: DataFrame | None = None,
            source_may_contain_v6: bool = True,
-           event_time_col: str | None = None,
-           v6_lookup: str = "auto") -> DataFrame:
+           event_time_col: str | None = None) -> DataFrame:
     """Left-join `df` (with `config.source` IP string column) against the
     dimension table(s) and append the target struct + failure tags.
 
@@ -286,21 +309,20 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
     contract (J2) is unchanged, as is the physical plan shape (the interval
     predicate is a residual on the same two broadcast-hash legs).
 
-    `v6_lookup` picks the v6 leg's physical strategy — both are ONE
+    The v6 leg follows from the input — both forms are ONE
     BroadcastHashJoin + the ONE ArrowEvalPython barrier, value-identical:
-      * "index" (the `auto` default): the Arrow key UDF also binary-searches
-        the broadcast sorted range arrays (functions.ipkeys.ipv6_key_lpm_udf)
-        and the join is an equi-join on the matched row index — probe cost
-        O(log n) per v6 value, build side NOT bucket-replicated. The scale
-        path: the bucketed join's probe cost is linear in rows-per-bucket,
-        and real dims are bucket-skewed (the vendored test files already
-        put 200–1,914 rows in one hi-word bucket; a full GeoLite2 is far
-        denser).
-      * "bucket": hi-word /16 bucket equi-key + (hi, lo) range residual,
-        no driver-side collect of the dim. Required for event-time
-        (versioned) dims — their ranges overlap in IP space across
-        snapshots, so LPM-by-position is ill-defined; `auto` falls back to
-        it there, an explicit "index" raises.
+      * index (every non-versioned dim): the Arrow key UDF also
+        binary-searches the broadcast sorted range arrays
+        (functions.ipkeys.ipv6_key_lpm_udf) and the join is an equi-join on
+        the matched row index — probe cost O(log n) per v6 value, build side
+        NOT bucket-replicated. The bucketed join's probe cost is linear in
+        rows-per-bucket, and real dims are bucket-skewed (the vendored test
+        files already put 200–1,914 rows in one hi-word bucket; a full
+        GeoLite2 is far denser).
+      * bucket (`event_time_col` set): hi-word /16 bucket equi-key +
+        (hi, lo) range residual. Versioned dims overlap in IP space across
+        snapshots, so LPM-by-position is ill-defined there; only the range
+        residual (plus the validity interval) can pick the one match.
     """
     if event_time_col is not None:
         if event_time_col not in df.columns:
@@ -310,17 +332,7 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
                 raise ValueError(
                     f"event_time_col requires valid_from/valid_to on {name} "
                     "— build the history with operators.temporal.dim_history")
-    if v6_lookup not in ("auto", "bucket", "index"):
-        raise ValueError(f"v6_lookup must be auto|bucket|index: {v6_lookup!r}")
-    if v6_lookup == "index" and event_time_col is not None:
-        raise ValueError(
-            "v6_lookup='index' is positional LPM over disjoint IP ranges; "
-            "versioned dims overlap in IP space across snapshots — use "
-            "'bucket' (the auto default for event-time enrichment)")
-    mode6 = None
-    if dim_v6 is not None:
-        mode6 = (("bucket" if event_time_col is not None else "index")
-                 if v6_lookup == "auto" else v6_lookup)
+    index6 = dim_v6 is not None and event_time_col is None
 
     ip_col = _source_ip(df, config.source)
     existing_tags = (F.col(tags_col) if tags_col in df.columns else _empty_tags())
@@ -390,10 +402,10 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
         # materialization barrier, so (hi, lo) are computed ONCE and every
         # downstream reference is a cheap long read. The gate ships only
         # ':'-containing values into Arrow (nulls for the v4 majority).
-        # Index mode swaps in the LPM variant of the SAME barrier: one
+        # The index leg swaps in the LPM variant of the SAME barrier: one
         # extra int64 column out of Arrow, the binary search riding the
         # pass the plan already pays for.
-        if mode6 == "index":
+        if index6:
             bc6, dim6_indexed = _index_dim_v6(dim_v6)
             key_udf = ipv6_key_lpm_udf(bc6)
         else:
@@ -413,13 +425,13 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
 
     dim_b = prepare_dim(dim)
 
-    if mode6 == "index":
+    if index6:
         # mapped rows get a NULL match index (null equi-key never matches
         # in the hash join) — the reference looks them up in the v4 trie
         # only, even when the v6 tree has a covering range
         probe = probe.withColumn(
             "__dim_idx", F.when(map4u.isNull(), F.col("__k6.dim_idx")))
-    elif mode6 == "bucket":
+    elif dim_v6 is not None:
         # mapped rows get a NULL v6 bucket (null equi-key never matches in
         # the hash join) — the reference looks them up in the v4 trie only
         probe = probe.withColumn(
@@ -457,7 +469,7 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
     if dim_v6 is not None:
         hi, lo = F.col("__hi"), F.col("__lo")
         s_hi = F.col(_DIM6_PREFIX + "start_hi")
-        if mode6 == "index":
+        if index6:
             # the LPM already happened inside the Arrow barrier — pure
             # equi-join on the matched row position, residual-free
             cond6 = F.col("__dim_idx") == F.col("dim_idx6")
@@ -467,9 +479,8 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
             e_hi, e_lo = F.col(_DIM6_PREFIX + "end_hi"), F.col(_DIM6_PREFIX + "end_lo")
             ge_start = (hi > s_hi) | ((hi == s_hi) & (lo >= s_lo))
             le_end = (hi < e_hi) | ((hi == e_hi) & (lo <= e_lo))
-            cond6 = (F.col("__bucket6") == F.col("prefix_bucket6")) & ge_start & le_end
-            if event_time_col is not None:
-                cond6 = cond6 & _valid_at(_DIM6_PREFIX)
+            cond6 = ((F.col("__bucket6") == F.col("prefix_bucket6"))
+                     & ge_start & le_end & _valid_at(_DIM6_PREFIX))
             joined = joined.join(F.broadcast(prepare_dim_v6(dim_v6)), cond6, "left")
         matched = matched | s_hi.isNotNull()
         canon_ip = F.when(is6 & F.col("__hi").isNotNull(),
@@ -523,121 +534,6 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
     )
 
 
-def enrich_via_distinct(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
-                        tags_col: str = "tags",
-                        broadcast_ips: bool = False,
-                        dim_v6: DataFrame | None = None,
-                        event_time_col: str | None = None,
-                        v6_lookup: str = "auto") -> DataFrame:
-    """J3 — the set-oriented analogue of the reference's LRU lookup cache
-    (CHMCache, GeoIPFilter.java:87; semantics doc geoip.rb:77-91).
-
-    The cache memoizes decoded records per distinct IP; relationally that is:
-    distinct(extracted IPs) → enrich each ONCE → hash-join results back to
-    the turns. Semantically identical to enrich() because the lookup is a
-    pure function of the IP (asserted by tests). Worth it when the enrich
-    payload is expensive relative to a join probe (e.g. a pandas-UDF leg or
-    a very wide struct) and the IP column is heavily repeated; for the pure
-    codegen broadcast join the direct path usually wins — measure, don't
-    assume (bench.py reports `enrich_distinct_agg_sec` alongside the
-    headline `parse_enrich_agg` for exactly this comparison).
-
-    `broadcast_ips` defaults to False (r5): the distinct-IP relation is
-    DATA-SIZED in the worst case (high-cardinality sources at 100 TB have
-    ~as many distinct IPs as rows), so a forced broadcast is the same
-    failure class as the r4 dedup keep-list. Unhinted, AQE broadcasts from
-    measured runtime size exactly when the set actually is small; pass True
-    only when the IP cardinality is known-bounded.
-    """
-    if event_time_col is not None:
-        # the memoization key would have to become (ip, snapshot) — the
-        # distinct set regrows toward the row count and the cache analogy
-        # collapses; use the direct event-time path instead
-        raise ValueError(
-            "enrich_via_distinct memoizes per distinct IP; event-time "
-            "(versioned-dim) enrichment is a function of (ip, ts) — use "
-            "enrich(..., event_time_col=...) directly")
-    if not config.healthy:
-        # no lookup happens at all, so there is nothing to memoize — and the
-        # inner enrich would emit failure tags where the direct path emits
-        # the expired tag; delegate for identical semantics
-        return enrich(df, dim, config, tags_col=tags_col, dim_v6=dim_v6,
-                      v6_lookup=v6_lookup)
-
-    src = config.source
-    ips = df.where(F.col(src).isNotNull()).select(src).distinct()
-    # dim_v6 passes through so a family-agnostic source (ip_any — the
-    # pipeline default) enriches v6 rows identically to enrich(); without it
-    # every v6 IP was a silent guaranteed miss on this path (ADVICE r2).
-    # The diagnostics are renamed too: df may already carry ip_u32/geoip_hit
-    # from a prior enrich (chained City→ASN), which would otherwise make the
-    # post-join references ambiguous.
-    e = enrich(ips, dim, config, tags_col="__ip_tags", dim_v6=dim_v6,
-               v6_lookup=v6_lookup) \
-        .withColumnRenamed(src, "__ip_key") \
-        .withColumnRenamed(config.target, "__ip_target") \
-        .withColumnRenamed("ip_u32", "__ip_u32d") \
-        .withColumnRenamed("geoip_hit", "__ip_hit") \
-        .drop("__ip_tags")
-    if broadcast_ips:
-        e = F.broadcast(e)
-    joined = df.join(e, F.col(src) == F.col("__ip_key"), "left")
-
-    hit = F.coalesce(F.col("__ip_hit"), F.lit(False))
-    existing_tags = (F.col(tags_col) if tags_col in df.columns else _empty_tags())
-    fail_tags = F.array(*[F.lit(t) for t in config.tag_on_failure])
-    tags = F.when(~hit,
-                  F.array_union(F.coalesce(existing_tags, _empty_tags()), fail_tags)
-                  ).otherwise(F.coalesce(existing_tags, _empty_tags()))
-
-    # F9 merge parity with enrich(): the per-IP enrich struct is renamed
-    # before the join (so a pre-existing target never collides —
-    # AMBIGUOUS_REFERENCE in r1), then union-merged with the pre-existing
-    # struct leaf-by-leaf exactly like the direct path.
-    new_type = _target_type(config)
-    target = F.col("__ip_target")
-    if config.target in df.columns:
-        existing_type = df.schema[config.target].dataType
-        if not isinstance(existing_type, T.StructType):
-            raise ValueError(
-                f"target column {config.target!r} pre-exists with non-struct "
-                f"type {existing_type.simpleString()}; cannot merge")
-        absent = F.col(src).isNull() | (F.trim(F.col(src)) == "")
-        tree = _struct_to_tree(target, new_type,
-                               location_is_leaf=not config.ecs_compatibility)
-        merged = _merge_tree(tree, F.col(config.target), existing_type, absent)
-        target = _tree_to_struct(merged)
-
-    keep = [c for c in df.columns
-            if c not in (tags_col, config.target, "ip_u32", "geoip_hit")]
-    return joined.select(
-        *keep,
-        tags.alias(tags_col),
-        target.alias(config.target),
-        F.col("__ip_u32d").alias("ip_u32"),
-        hit.alias("geoip_hit"),
-    )
-
-
-def _struct_to_tree(col: Column, stype: T.StructType,
-                    location_is_leaf: bool = False) -> dict:
-    """Recursively unpack a struct Column into the {name: Column} tree shape
-    `_merge_tree` consumes. Legacy-mode `location` is an atomic {lat, lon}
-    composite (F3: present only when BOTH coordinates are) — kept as a leaf
-    so the merge coalesces it whole; in ECS mode geo.location is an ordinary
-    nested path and recursion keeps per-leaf struct shape identical to the
-    direct enrich() build (location struct of null leaves, never null)."""
-    tree: dict = {}
-    for f in stype.fields:
-        child = col[f.name]
-        if isinstance(f.dataType, T.StructType) \
-                and not (location_is_leaf and f.name == "location"):
-            tree[f.name] = _struct_to_tree(child, f.dataType, location_is_leaf)
-        else:
-            tree[f.name] = child
-    return tree
-
-
 def _merge_tree(tree: dict, existing: Column,
                 existing_type: T.StructType, absent: Column) -> dict:
     """Union-merge an enrichment tree with a pre-existing target struct.
@@ -673,66 +569,3 @@ def _merge_tree(tree: dict, existing: Column,
             else:
                 merged[name] = gated
     return merged
-
-
-_TARGET_TYPE_CACHE: dict = {}
-
-
-def _target_type(config: GeoIPConfig) -> T.DataType:
-    """StructType of the target column for a config (schema of the tree).
-
-    Cached by the config attributes the tree depends on (r6): the dummy
-    tree exists only to derive a pure-Python DataType, yet built ~750
-    py4j Column calls per enrich() invocation."""
-    key = (config.database, tuple(config.fields) if config.fields else None,
-           config.ecs_compatibility)
-    hit = _TARGET_TYPE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    dummy_ip = F.lit(None).cast("string")
-
-    def dummy_dim(col: str) -> Column:
-        return F.lit(None).cast(_DIM_LEAF_TYPES.get(col, "string"))
-
-    tree = build_enrichment_tree(config, dummy_ip, dummy_dim, F.lit(True))
-    out = _tree_type(tree, config)
-    _TARGET_TYPE_CACHE[key] = out
-    return out
-
-
-_DIM_LEAF_TYPES = {
-    "dma_code": "long", "asn": "long",
-    "latitude": "double", "longitude": "double",
-    "hosting_provider": "boolean", "tor_exit_node": "boolean",
-    "anonymous_vpn": "boolean", "anonymous": "boolean",
-    "public_proxy": "boolean", "residential_proxy": "boolean",
-}
-
-
-def _tree_type(tree: dict, config: GeoIPConfig) -> T.StructType:
-    fields = []
-    for name, v in tree.items():
-        if isinstance(v, dict):
-            fields.append(T.StructField(name, _tree_type(v, config)))
-        else:
-            dtype = _leaf_dtype(name, tree)
-            fields.append(T.StructField(name, dtype))
-    return T.StructType(fields)
-
-
-def _leaf_dtype(name: str, tree: dict) -> T.DataType:
-    # leaf dtype by conventional name — mirrors FieldSpec dtypes
-    longs = {"dma_code", "asn", "number"}
-    doubles = {"lat", "lon", "latitude", "longitude"}
-    bools = {"hosting_provider", "tor_exit_node", "anonymous_vpn",
-             "anonymous", "public_proxy", "residential_proxy"}
-    if name == "location":
-        return T.StructType([T.StructField("lat", T.DoubleType()),
-                             T.StructField("lon", T.DoubleType())])
-    if name in longs:
-        return T.LongType()
-    if name in doubles:
-        return T.DoubleType()
-    if name in bools:
-        return T.BooleanType()
-    return T.StringType()

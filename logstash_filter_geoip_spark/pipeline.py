@@ -14,36 +14,28 @@ from .config import GeoIPConfig
 from .functions.parse import parse_transcripts, source_may_contain_v6
 from .operators import aggregate as agg
 from .operators.enrich import enrich
-from .sources.geolite2 import (GOLDEN_ROWS_V6, load_dim_v6, validate_dim,
-                               vendored_dims)
+from .sources.geolite2 import default_dims, validate_dim
 from .sources.transcripts import load_transcripts
 
 
 def enriched_transcripts(spark: SparkSession, sf_dir: str,
-                         config: GeoIPConfig | None = None,
-                         dim: DataFrame | None = None,
-                         dim_v6: DataFrame | None = None) -> DataFrame:
+                         config: GeoIPConfig | None = None) -> DataFrame:
     """transcripts → parse → enrich (the first half of the pipeline).
 
     The default source is the family-agnostic `ip_any` with both the v4 and
     v6 City dims attached — one enrich stage handles either IP family,
     exactly like the reference's single filter (GeoIPFilter.java:172). The
-    default dims are the FULL vendored-database ingestion (the `.mmdb` file
-    IS the default DB, geoip.rb:187-199 — vendored_dims), golden VALUES
-    only when no file is present.
+    dims are geolite2.default_dims, the same pair the stream resolves: the
+    FULL vendored-database ingestion (the `.mmdb` file IS the default DB,
+    geoip.rb:187-199 — vendored_dims), golden VALUES only when no file is
+    present.
     """
     config = config or GeoIPConfig(source="ip_any", target="geoip",
                                    database="City", ecs_compatibility=True)
     t = load_transcripts(spark, sf_dir)
     parsed = parse_transcripts(t)
-    if dim is None:
-        dim, default_v6 = vendored_dims(spark, config.database)
-        validate_dim(dim)
-        if dim_v6 is None and config.source == "ip_any":
-            dim_v6 = default_v6
-    elif dim_v6 is None and config.source == "ip_any" \
-            and config.database in GOLDEN_ROWS_V6:
-        dim_v6 = load_dim_v6(spark, config.database)
+    dim, dim_v6 = default_dims(spark, config)
+    validate_dim(dim)
     return enrich(parsed, dim, config, dim_v6=dim_v6,
                   source_may_contain_v6=source_may_contain_v6(config.source))
 

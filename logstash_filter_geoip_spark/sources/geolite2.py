@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..config import GeoIPConfig
 from ..functions.ipkeys import cidr_to_range, cidr_v6_to_range
 
 # ---------------------------------------------------------------------------
@@ -705,6 +706,16 @@ def vendored_dims(spark: SparkSession,
         return load_dim(spark, database), load_dim_v6(spark, database)
     return (_local_dim(spark, cached[0], SCHEMAS[database]),
             _local_dim(spark, cached[1], SCHEMAS_V6[database]))
+
+
+def default_dims(spark: SparkSession,
+                 config: GeoIPConfig) -> tuple[DataFrame, DataFrame | None]:
+    """(dim, dim_v6) that batch AND stream enrich use when the caller gives
+    none (the one batch/stream dim-parity rule): `vendored_dims` of the
+    config's database, the v6 dim attached only for the family-agnostic
+    `ip_any` source."""
+    dim, dim_v6 = vendored_dims(spark, config.database)
+    return dim, (dim_v6 if config.source == "ip_any" else None)
 
 
 def vendored_dim_sql(database: str, alias4: str = "d",

@@ -22,6 +22,7 @@ Spark mapping:
 
 from __future__ import annotations
 
+import dataclasses
 import os
 from collections.abc import Callable
 
@@ -32,7 +33,7 @@ from pyspark.sql import types as T
 from ..config import GeoIPConfig
 from ..functions.parse import parse_transcripts, source_may_contain_v6
 from ..operators.enrich import enrich
-from ..sources.geolite2 import GOLDEN_ROWS_V6, vendored_dims
+from ..sources.geolite2 import default_dims
 
 TRANSCRIPT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType()),
@@ -51,45 +52,32 @@ def _default_config() -> GeoIPConfig:
                        database="City", ecs_compatibility=True)
 
 
-def _auto_dim_v6(spark: SparkSession, config: GeoIPConfig) -> DataFrame | None:
-    """Auto-loaded v6 leg = the DEFAULT dim path (full vendored ingestion,
-    golden fallback) — the same source the batch pipeline uses, so a
-    provider that returns only a v4 dim cannot make batch and stream
-    enrich against different v6 data."""
-    if config.source == "ip_any" and config.database in GOLDEN_ROWS_V6:
-        return vendored_dims(spark, config.database)[1]
-    return None
-
-
 def _provided_dims(dim_provider, spark: SparkSession, config: GeoIPConfig):
     """Normalize a dim_provider result to (dim, dim_v6).
 
     S4 hot-swap covers BOTH join legs (VERDICT r2 #6): a provider may return
-    either a single v4 dim (back-compat — the v6 dim then auto-loads from
-    the vendored goldens per batch, or is None when the v4 dim is None i.e.
-    expired) or an explicit (dim, dim_v6) tuple, in which case BOTH legs
-    swap per micro-batch and no auto-load happens (a None dim_v6 inside a
-    tuple means "no v6 dim", honestly — v6 rows miss)."""
+    either a single v4 dim (back-compat — the v6 dim is then the batch
+    pipeline's default, geolite2.default_dims, loaded per batch, or None
+    when the v4 dim is None i.e. expired) or an explicit (dim, dim_v6)
+    tuple, in which case BOTH legs swap per micro-batch and no default
+    loads (a None dim_v6 inside a tuple means "no v6 dim", honestly — v6
+    rows miss)."""
     d = dim_provider()
     if isinstance(d, tuple):
-        dim, dim_v6 = d
-        return dim, dim_v6, False
-    return d, (None if d is None else _auto_dim_v6(spark, config)), True
+        return d
+    return d, (None if d is None else default_dims(spark, config)[1])
 
 
 def enrich_batch(batch: DataFrame, dim: DataFrame | None,
                  config: GeoIPConfig,
                  dim_v6: DataFrame | None = None,
-                 auto_v6: bool = True,
                  event_time_col: str | None = None) -> DataFrame:
     """The shared per-micro-batch transform (same code as the batch path).
 
     A None dim models the expired/absent database (S4 `:expire`): enrich()
     with healthy=False never touches the dim argument and tags every row
-    `_geoip_expired_database`. With auto_v6 (default) a missing dim_v6 falls
-    back to the DEFAULT v6 dim (full vendored ingestion — the same pair the
-    batch path uses); callers that resolve both dims through a provider
-    (hot swap) pass auto_v6=False so an explicit None stays None.
+    `_geoip_expired_database`. The dims are used as given (a None dim_v6
+    means no v6 leg); stream callers resolve them through _provided_dims.
 
     `event_time_col` switches to VERSIONED-database enrichment: the
     provider supplies an append-only `temporal.dim_history` and each row
@@ -99,14 +87,7 @@ def enrich_batch(batch: DataFrame, dim: DataFrame | None,
     """
     parsed = parse_transcripts(batch)
     if dim is None:
-        cfg = GeoIPConfig(source=config.source, target=config.target,
-                          fields=config.fields, database=config.database,
-                          ecs_compatibility=config.ecs_compatibility,
-                          tag_on_failure=list(config.tag_on_failure),
-                          healthy=False)
-        return enrich(parsed, None, cfg)
-    if dim_v6 is None and auto_v6:
-        dim_v6 = _auto_dim_v6(batch.sparkSession, config)
+        return enrich(parsed, None, dataclasses.replace(config, healthy=False))
     return enrich(parsed, dim, config, dim_v6=dim_v6,
                   source_may_contain_v6=source_may_contain_v6(config.source),
                   event_time_col=event_time_col)
@@ -152,8 +133,8 @@ def run_stream(spark: SparkSession, input_path: str, output_path: str,
     config = config or _default_config()
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        dim, dim_v6, _ = _provided_dims(dim_provider, spark, config)
-        out = enrich_batch(batch, dim, config, dim_v6=dim_v6, auto_v6=False,
+        dim, dim_v6 = _provided_dims(dim_provider, spark, config)
+        out = enrich_batch(batch, dim, config, dim_v6=dim_v6,
                            event_time_col=event_time_col)
         (out.write.mode("append")
             .partitionBy("role")
@@ -206,8 +187,8 @@ def conv_state_tracker(spark: SparkSession, input_path: str,
     stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
               .option("maxFilesPerTrigger", 4)
               .parquet(input_path))
-    dim, dim_v6, _ = _provided_dims(dim_provider, spark, config)
-    enriched = enrich_batch(stream, dim, config, dim_v6=dim_v6, auto_v6=False)
+    dim, dim_v6 = _provided_dims(dim_provider, spark, config)
+    enriched = enrich_batch(stream, dim, config, dim_v6=dim_v6)
     slim = enriched.select(
         "conv_id", "turn_idx", "ts",
         F.col(f"{config.target}.geo.country_iso_code").alias("country"),
@@ -306,8 +287,8 @@ def geo_velocity_stream(spark: SparkSession, input_path: str,
     stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
               .option("maxFilesPerTrigger", 4)
               .parquet(input_path))
-    dim, dim_v6, _ = _provided_dims(dim_provider, spark, config)
-    enriched = enrich_batch(stream, dim, config, dim_v6=dim_v6, auto_v6=False)
+    dim, dim_v6 = _provided_dims(dim_provider, spark, config)
+    enriched = enrich_batch(stream, dim, config, dim_v6=dim_v6)
     lat = F.col(f"{config.target}.geo.location.lat")
     lon = F.col(f"{config.target}.geo.location.lon")
     # located rows only (misses never break pairing — they are filtered
@@ -453,9 +434,9 @@ def windowed_stream_agg(spark: SparkSession, input_path: str,
     use run_stream for per-micro-batch hot swap."""
     config = config or _default_config()
     stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_path))
-    dim, dim_v6, _ = _provided_dims(dim_provider, spark, config)
+    dim, dim_v6 = _provided_dims(dim_provider, spark, config)
     enriched = enrich_batch(stream.withWatermark("ts", watermark), dim, config,
-                            dim_v6=dim_v6, auto_v6=False)
+                            dim_v6=dim_v6)
     aggregated = (
         enriched.groupBy(
             F.window("ts", window).alias("w"),

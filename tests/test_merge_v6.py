@@ -277,3 +277,24 @@ def test_enrich_ipv6_asn(spark):
         "Merit Network Inc."
     assert out["a3"]["geoip_hit"] is False
     assert out["a4"]["geoip"]["as"]["number"] == 15169  # v4 golden
+
+
+def test_chained_enrich_no_duplicate_columns(spark):
+    """Review r5: the standard City-then-ASN stack must replace the
+    diagnostic columns, not duplicate them."""
+    from collections import Counter
+
+    from logstash_filter_geoip_spark.functions.parse import parse_transcripts
+    from logstash_filter_geoip_spark.sources.transcripts import load_transcripts
+    parsed = parse_transcripts(load_transcripts(spark, "/root/testdata/sf0.001"))
+    city = GeoIPConfig(source="ip_str", target="geoip", database="City")
+    asn = GeoIPConfig(source="ip_str", target="asn_info", database="ASN")
+    e1 = enrich(parsed, load_dim(spark, "City"), city)
+    e2 = enrich(e1, load_dim(spark, "ASN"), asn)
+    dupes = [c for c, k in Counter(e2.columns).items() if k > 1]
+    assert not dupes, dupes
+    # both targets populated for a row that hits both DBs
+    r = e2.where("ip_str = '216.160.83.58'").limit(1).collect()
+    if r:
+        assert r[0]["geoip"] is not None and r[0]["asn_info"] is not None
+    e2.write.format("noop").mode("overwrite").save()  # writable schema

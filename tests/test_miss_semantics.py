@@ -211,8 +211,11 @@ def test_expired_database_preserves_existing_target(spark):
     expired_cfg = GeoIPConfig(source="ip_str", target="geoip",
                               database="City", healthy=False)
     again = enrich(healthy, dim, expired_cfg)
-    # schema identical to the healthy output (hot-swap sink consistency)
+    # schema identical to the healthy output (hot-swap sink consistency):
+    # names AND types — a sink keeps one schema across an expiry only if the
+    # typed-NULL target equals the struct the healthy path builds
     assert again.columns == healthy.columns
+    assert again.schema.simpleString() == healthy.schema.simpleString()
     r = again.collect()[0]
     assert r["geoip"]["geo"]["city_name"] == "Milton"  # untouched
     assert EXPIRED in r["tags"]
@@ -221,4 +224,5 @@ def test_expired_database_preserves_existing_target(spark):
     # absent target: added as typed NULL (schema stability for downstream)
     fresh = enrich(df, dim, expired_cfg)
     assert fresh.columns == healthy.columns
+    assert fresh.schema.simpleString() == healthy.schema.simpleString()
     assert fresh.collect()[0]["geoip"] is None

@@ -13,8 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logstash_filter_geoip_spark.config import GeoIPConfig
-from logstash_filter_geoip_spark.operators.enrich import (
-    enrich, enrich_via_distinct)
+from logstash_filter_geoip_spark.operators.enrich import enrich
 from logstash_filter_geoip_spark.operators.temporal import (
     asof_join, dim_history, snapshot_intervals)
 from logstash_filter_geoip_spark.sources.geolite2 import load_dim
@@ -316,17 +315,6 @@ def test_streaming_event_time_replay_is_drift_free(spark, tmp_path):
     sinks2 = spark.read.parquet(os.path.join(out2, "sinks"))
     assert sinks1.exceptAll(sinks2).count() == 0
     assert sinks2.exceptAll(sinks1).count() == 0
-
-
-def test_enrich_via_distinct_rejects_event_time(spark):
-    dim = load_dim(spark, "City")
-    events = spark.createDataFrame(
-        [("c", 0, "1.1.1.9", _ts("2024-01-10 00:00:00"))],
-        "conv_id string, turn_idx int, ip_str string, ts timestamp")
-    cfg = GeoIPConfig(source="ip_str", target="geoip", database="City",
-                      ecs_compatibility=True)
-    with pytest.raises(ValueError, match="event-time"):
-        enrich_via_distinct(events, dim, cfg, event_time_col="ts")
 
 
 # ---------------------------------------------------------------------------
