@@ -71,12 +71,14 @@ def entry(spark: SparkSession) -> DataFrame:
 # Shared oracle fragments (DuckDB dialect)
 # ---------------------------------------------------------------------------
 
-from logstash_filter_geoip_spark.functions.parse import IPV4_RE, IPV6_RE
+from logstash_filter_geoip_spark.functions.parse import (ERROR_CODE_RE,
+                                                        IPV4_RE, IPV6_RE,
+                                                        TOOL_RE)
 
 _IPV4_RE_SQL = IPV4_RE   # one definition; the oracle must scan identically
 _IPV6_RE_SQL = IPV6_RE
-_ERR_RE_SQL = r"(E\d{3})"
-_TOOL_RE_SQL = r"\b(search|bash|geoip|browser|python)\b"
+_ERR_RE_SQL = ERROR_CODE_RE
+_TOOL_RE_SQL = TOOL_RE
 
 
 def _v6_key_rows() -> list[tuple[str, int, int, str, int | None]]:
@@ -87,7 +89,7 @@ def _v6_key_rows() -> list[tuple[str, int, int, str, int | None]]:
     The (hi, lo) split and the canonical form are pure arithmetic on the
     parsed 128-bit value — precomputing them driver-side gives DuckDB
     (which has no 128-bit key primitive) an exact mirror of the Spark-side
-    ipv6_parts / ipv6_canonical_from_key derivation. mapped_u32 is non-null
+    ipv6_to_key / ipv6_canonical_from_key derivation. mapped_u32 is non-null
     iff the parsed BYTES are ::ffff:a.b.c.d (any textual spelling) — those
     rows take the v4 leg with the dotted quad as canonical ip, mirroring
     Java's convertFromIPv4MappedAddress and ipkeys.ipv4_mapped_u32. The

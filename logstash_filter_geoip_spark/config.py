@@ -12,7 +12,7 @@ from __future__ import annotations
 import warnings
 from dataclasses import dataclass, field
 
-from .fields import DATABASE_DEFAULTS, resolve_fields
+from .fields import DATABASE_DEFAULTS, FIELD_BY_NAME, resolve_fields
 
 # ECS allows the geo enrichment under these top-level field sets
 # (geoip.rb:98-105).
@@ -78,7 +78,18 @@ class GeoIPConfig:
                 f"unknown database {self.database!r}; "
                 f"valid: {sorted(DATABASE_DEFAULTS)}")
         # validates names eagerly (register-time errors, F7)
-        resolve_fields(self.fields, self.database, self.ecs_compatibility)
+        resolved = resolve_fields(self.fields, self.database,
+                                  self.ecs_compatibility)
+        # DEPARTURE from the reference, which registers such a config: in
+        # ECS mode a field with no ECS path is skipped (COUNTRY_CODE3), so
+        # a field list of only those would build an empty struct<> target
+        # that no parquet sink can write
+        if self.fields and self.ecs_compatibility and \
+                not any(FIELD_BY_NAME[f].ecs_path for f in resolved):
+            raise ConfigurationError(
+                f"fields {resolved} have no ECS name, so the ECS target "
+                "would be empty; add a field with an ECS name or set "
+                "ecs_compatibility=False")
         self.target = self.resolve_target()
 
     def resolve_target(self) -> str:

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # RE2-safe subset (works in both Spark's Java regex and DuckDB's RE2, so
@@ -100,9 +100,3 @@ def grok_extract(df: DataFrame, template: str, text_col: str = "text",
     ]
     return df.select("*", *cols)
 
-
-def grok_matches(text: Column, template: str,
-                 extra_patterns: dict[str, str] | None = None) -> Column:
-    """Boolean: does the template match anywhere in `text`."""
-    regex, _ = compile_grok(template, extra_patterns)
-    return text.rlike(regex)

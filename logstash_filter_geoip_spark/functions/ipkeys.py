@@ -1,5 +1,5 @@
 """IP key encoding: dotted-quad <-> uint32 Column expressions, CIDR range
-expansion, /16 bucket replication, and the IPv6 128-bit (hi, lo) pandas UDF.
+expansion, /16 bucket replication, and the IPv6 128-bit (hi, lo) pandas UDFs.
 
 Design (SURVEY.md §2.3 J1, §7.5): the reference's longest-prefix-match mmdb
 trie walk (GeoIPFilter.java:173-197) becomes a broadcast *bucketed* range
@@ -8,13 +8,19 @@ each dimension row is replicated once per /16 bucket it covers, so the probe
 side joins on an equi-key (ip_u32 >> 16) and Catalyst plans a
 BroadcastHashJoin instead of a BroadcastNestedLoopJoin. All hot-path
 expressions are built-in Column functions (whole-stage codegen); the only
-Python is Arrow-vectorized (IPv6 normalization).
+Python is Arrow-vectorized.
+
+IPv6 literals are parsed in exactly one place, `_v6_keys`, which both Arrow
+UDFs call (`ipv6_to_key` for the bucket leg, `ipv6_key_lpm_udf` for the
+index leg). It hands every textual form to `ipaddress`, as the reference
+hands every form to InetAddress.getByName (GeoIPFilter.java:172).
 """
 
 from __future__ import annotations
 
 import ipaddress
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -105,38 +111,52 @@ def explode_buckets(dim, net_start: str = "net_start", net_end: str = "net_end")
     )
 
 
+def _v6_keys(ip: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one IPv6 literal parser: (hi, lo, ok) int64/int64/bool arrays.
+
+    `ipaddress` accepts exactly Java InetAddress's textual grammar: '::'
+    compression, embedded dotted quads ('::ffff:1.2.3.4', NAT64,
+    uncompressed), mapped spellings — and rejects the same malformed forms
+    (leading-zero octets included). 128-bit keys don't fit LongType
+    (SURVEY.md §7.4.3), so each address splits into two longs with the sign
+    bit flipped: signed (hi, lo) order == unsigned 128-bit order. Where
+    `ok` is False (invalid literal, None) hi/lo hold 0 and must be masked.
+    """
+    n = len(ip)
+    hi = np.zeros(n, np.int64)
+    lo = np.zeros(n, np.int64)
+    ok = np.zeros(n, bool)
+    for i, v in enumerate(ip):
+        try:
+            x = int(ipaddress.IPv6Address(v))
+            hi[i] = ((x >> 64) & 0xFFFFFFFFFFFFFFFF) - (1 << 63)
+            lo[i] = (x & 0xFFFFFFFFFFFFFFFF) - (1 << 63)
+            ok[i] = True
+        except (ipaddress.AddressValueError, ValueError, TypeError):
+            pass
+    return hi, lo, ok
+
+
 @F.pandas_udf(T.StructType([
     T.StructField("ip_hi", T.LongType()),
     T.StructField("ip_lo", T.LongType()),
 ]))
 def ipv6_to_key(ip: pd.Series) -> pd.DataFrame:
-    """IPv6 string -> (hi, lo) signed-64 pair for lexicographic range compare.
+    """IPv6 string -> (hi, lo) signed-64 pair for lexicographic range compare
+    (`_v6_keys`); invalid addresses map to (null, null).
 
-    THE enrich hot-path key derivation (r5 — see operators/enrich.py for
-    the measurement that put the Arrow barrier here). `ipaddress` accepts
-    exactly Java InetAddress's textual grammar: '::' compression, embedded
-    dotted quads ('::ffff:1.2.3.4', NAT64, uncompressed), mapped spellings
-    — and rejects the same malformed forms (leading-zero octets included).
-    128-bit keys don't fit LongType (SURVEY.md §7.4.3); we split into two
-    longs with the sign bit flipped so that signed (hi, lo) ordering matches
-    unsigned 128-bit ordering. Arrow-vectorized; never called per-row from
-    the driver. Invalid addresses map to (null, null).
+    The key of enrich's v6 bucket leg (r5 — see operators/enrich.py for the
+    measurement that put the Arrow barrier here). Arrow-vectorized; never
+    called per-row from the driver.
     """
-    his, los = [], []
-    for v in ip:
-        try:
-            n = int(ipaddress.IPv6Address(v))
-            his.append(((n >> 64) & 0xFFFFFFFFFFFFFFFF) - (1 << 63))
-            los.append((n & 0xFFFFFFFFFFFFFFFF) - (1 << 63))
-        except (ipaddress.AddressValueError, ValueError, TypeError):
-            his.append(None)
-            los.append(None)
-    # nullable Int64, NEVER the default dtype: a batch mixing ints and None
-    # would coerce to float64 and silently round 64-bit keys to 53-bit
-    # mantissa precision (observed: low 16 bits of every key zeroed on
-    # full-table batches while filtered all-valid batches stayed exact)
-    return pd.DataFrame({"ip_hi": pd.array(his, dtype="Int64"),
-                         "ip_lo": pd.array(los, dtype="Int64")})
+    hi, lo, ok = _v6_keys(ip)
+    # nullable Int64 via explicit mask, NEVER the default dtype: a batch
+    # mixing ints and None would coerce to float64 and silently round
+    # 64-bit keys to 53-bit mantissa precision (observed: low 16 bits of
+    # every key zeroed on full-table batches while filtered all-valid
+    # batches stayed exact)
+    return pd.DataFrame({"ip_hi": pd.arrays.IntegerArray(hi, mask=~ok),
+                         "ip_lo": pd.arrays.IntegerArray(lo, mask=~ok)})
 
 
 def ipv6_key_lpm_udf(bc):
@@ -169,8 +189,6 @@ def ipv6_key_lpm_udf(bc):
     a hi word — rare in real files). Invalid literals and non-matches
     yield NULL dim_idx (a NULL equi-key never matches in the hash join).
     """
-    import numpy as np
-
     @F.pandas_udf(T.StructType([
         T.StructField("ip_hi", T.LongType()),
         T.StructField("ip_lo", T.LongType()),
@@ -178,17 +196,7 @@ def ipv6_key_lpm_udf(bc):
     ]))
     def ipv6_key_lpm(ip: pd.Series) -> pd.DataFrame:
         n = len(ip)
-        hi = np.zeros(n, np.int64)
-        lo = np.zeros(n, np.int64)
-        ok = np.zeros(n, bool)
-        for i, v in enumerate(ip):
-            try:
-                x = int(ipaddress.IPv6Address(v))
-                hi[i] = ((x >> 64) & 0xFFFFFFFFFFFFFFFF) - (1 << 63)
-                lo[i] = (x & 0xFFFFFFFFFFFFFFFF) - (1 << 63)
-                ok[i] = True
-            except (ipaddress.AddressValueError, ValueError, TypeError):
-                pass
+        hi, lo, ok = _v6_keys(ip)
         d = bc.value
         s_hi, s_lo = d["start_hi"], d["start_lo"]
         e_hi, e_lo = d["end_hi"], d["end_lo"]
@@ -211,13 +219,10 @@ def ipv6_key_lpm_udf(bc):
             pv = np.clip(pos, 0, None)
             match = valid & ((hi < e_hi[pv])
                              | ((hi == e_hi[pv]) & (lo <= e_lo[pv])))
-        # nullable Int64 via explicit mask — NEVER the default dtype (a
-        # batch mixing ints and None coerces to float64 and rounds 64-bit
-        # keys to 53-bit mantissas; the ipv6_to_key lesson)
-        miss = ~ok
+        # nullable Int64 via explicit mask (the ipv6_to_key rule)
         return pd.DataFrame({
-            "ip_hi": pd.arrays.IntegerArray(hi, mask=miss.copy()),
-            "ip_lo": pd.arrays.IntegerArray(lo, mask=miss.copy()),
+            "ip_hi": pd.arrays.IntegerArray(hi, mask=~ok),
+            "ip_lo": pd.arrays.IntegerArray(lo, mask=~ok),
             "dim_idx": pd.arrays.IntegerArray(pos, mask=~match),
         })
 
@@ -225,117 +230,6 @@ def ipv6_key_lpm_udf(bc):
 
 
 _SIGN_BIT = -(1 << 63)  # long with only the sign bit set
-
-# one compiled regex validates the whole literal: either 8 plain hex groups
-# or a single '::' with valid group runs on each side (the '::' branch's
-# group-count bound is enforced arithmetically below)
-_V6_RE = ("^(([0-9A-Fa-f]{1,4}(:[0-9A-Fa-f]{1,4}){7})"
-          "|(([0-9A-Fa-f]{1,4}(:[0-9A-Fa-f]{1,4})*)?"
-          "::([0-9A-Fa-f]{1,4}(:[0-9A-Fa-f]{1,4})*)?))$")
-
-
-def ipv6_parts(ip: Column) -> Column:
-    """IPv6 string -> validated array of 8 hextet strings (null if invalid) —
-    PURE scalar Column expressions, every one whole-stage-codegen-capable:
-    one rlike validation, then '::' expansion via repeat/substring/concat
-    string surgery and a single split. Deliberately NO higher-order
-    functions (forall/array_repeat are CodegenFallback — an interpreted
-    Project in the middle of the enrich span) and no per-element regex.
-
-    MATERIALIZE this into its own column (withColumn) before deriving keys:
-    downstream key derivation references the array 8×, and materializing
-    prevents Catalyst's projection collapse from re-inlining the whole tree
-    per reference (measured 4-10× on the flagship suite — same pathology as
-    the shingle tokenizer note in operators/dedup.py).
-    """
-    shape_ok = ip.rlike(_V6_RE)
-    has_dc = ip.contains("::")
-    left = F.split_part(ip, F.lit("::"), F.lit(1))
-    right = F.split_part(ip, F.lit("::"), F.lit(2))
-    n_l = F.when(left == "", F.lit(0)).otherwise(F.size(F.split(left, ":")))
-    n_r = F.when(right == "", F.lit(0)).otherwise(F.size(F.split(right, ":")))
-    n_fill = F.lit(8) - n_l - n_r
-    fill = F.repeat(F.lit(":0"), n_fill)          # ":0" × missing groups
-    head = F.when(left == "", F.substring(fill, 2, 32)) \
-            .otherwise(F.concat(left, fill))
-    expanded = F.when(right == "", head).otherwise(
-        F.concat(head, F.lit(":"), right))
-    full = F.when(has_dc, F.when(n_fill >= 1, expanded)).otherwise(ip)
-    return F.when(ip.isNotNull() & shape_ok, F.split(full, ":"))
-
-
-def ipv6_key_from_parts(parts: Column) -> tuple[Column, Column]:
-    """(hi, lo) signed-64 key columns from a MATERIALIZED ipv6_parts column.
-
-    Overflow-safe under ANSI: each 64-bit word is assembled as
-    (h0 - 0x8000)*2^48 + h1*2^32 + h2*2^16 + h3, which lands directly in
-    the sign-flipped domain (signed order == unsigned 128-bit order) without
-    ever computing an unsigned value > Long.MAX.
-    """
-    def hextet(i: int) -> Column:
-        # conv(hex, 16, 10) returns a decimal string; values <= 0xFFFF
-        return F.conv(F.get(parts, i), 16, 10).try_cast("long")
-
-    def word(base: int) -> Column:
-        return ((hextet(base) - F.lit(0x8000)) * F.lit(1 << 48)
-                + hextet(base + 1) * F.lit(1 << 32)
-                + hextet(base + 2) * F.lit(1 << 16)
-                + hextet(base + 3))
-
-    return word(0), word(4)
-
-
-def ipv6_key_cols(ip: Column) -> tuple[Column, Column]:
-    """Pure-Column composition of the v6 key — kept for tests and for
-    contexts where an Arrow node is unavailable; fuzz-locked vs `ipaddress`
-    in tests/test_properties.py (semantics == ipv6_to_key for every form:
-    '::' compression, embedded dotted quads, mapped spellings).
-
-    NOT the enrich hot path since r5: when the key is referenced by a join
-    condition + mapped check + canonical build, projection collapse
-    re-inlines this whole tree per reference and codegen CSE skips CASE
-    WHEN arms — measured 45 executor-CPU-s/M rows vs 1.2 for the
-    ipv6_to_key pandas UDF barrier (see operators/enrich.py). Use the UDF
-    when the key feeds multiple consumers; use this for single-consumer
-    derivations or oracle mirroring."""
-    return ipv6_key_from_parts(ipv6_parts(rewrite_embedded_quad(ip)))
-
-
-# A v6 literal ending in an embedded dotted quad: colon-hex prefix whose last
-# character is ':' followed by exactly four 0-255 octets with no leading
-# zeros (Java's textToNumericFormatV6/V4 rejects leading-zero octets, as does
-# Python's `ipaddress`). Covers IPv4-mapped ('::ffff:a.b.c.d' in ANY
-# zero-compression spelling), NAT64 ('64:ff9b::a.b.c.d'), v4-compatible
-# ('::a.b.c.d'), and the uncompressed 6-group form — all of which Java's
-# InetAddress.getByName accepts (GeoIPFilter.java:172).
-_OCTET = r"(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)"
-_EMBEDDED_QUAD_RE = (r"^[0-9A-Fa-f:]*:"
-                     rf"({_OCTET}(?:\.{_OCTET}){{3}})$")
-
-
-def rewrite_embedded_quad(ip: Column) -> Column:
-    """Rewrite a trailing embedded dotted quad into its two hextets so the
-    literal becomes pure colon-hex and flows through ipv6_parts unchanged:
-    '64:ff9b::1.2.3.4' -> '64:ff9b::102:304'. Values without a (valid)
-    trailing quad pass through untouched — an out-of-range or leading-zero
-    octet leaves the original string, which then fails the colon-hex
-    validation and yields a miss (the same observable as Java's
-    getByName UnknownHostException). Pure Column expressions; cheap
-    contains('.') gate so dot-free v6 literals never run the regex.
-
-    MATERIALIZE the result into its own column before feeding ipv6_parts
-    (same projection-collapse rule as ipv6_parts itself — the parser
-    references its input many times)."""
-    quad = F.when(ip.contains(".") & ip.rlike(_EMBEDDED_QUAD_RE),
-                  F.regexp_extract(ip, _EMBEDDED_QUAD_RE, 1))
-    parts = F.split(quad, r"\.")
-    o = [F.get(parts, i).try_cast("long") for i in range(4)]
-    prefix = F.substr(ip, F.lit(1), F.length(ip) - F.length(quad))
-    rewritten = F.concat(
-        prefix,
-        F.hex(o[0] * F.lit(256) + o[1]), F.lit(":"),
-        F.hex(o[2] * F.lit(256) + o[3]))
-    return F.when(quad.isNotNull(), rewritten).otherwise(ip)
 
 
 def ipv4_mapped_u32(hi: Column, lo: Column) -> Column:
@@ -377,18 +271,3 @@ def ipv6_canonical_from_key(hi: Column, lo: Column) -> Column:
         ]
     return F.concat_ws(":", *groups(hi), *groups(lo))
 
-
-@F.pandas_udf(T.StringType())
-def ipv6_canonical(ip: pd.Series) -> pd.Series:
-    """Canonical (exploded) IPv6 form: '2607:f0d0:1002:51::4' ->
-    '2607:f0d0:1002:51:0:0:0:4' — parity with Java getHostAddress
-    (spec/filters/geoip_ecs_spec.rb:144-159)."""
-    def canon(v):
-        try:
-            a = ipaddress.IPv6Address(v)
-            # Java's getHostAddress prints each group without zero-compression
-            return ":".join(format((int(a) >> (112 - 16 * i)) & 0xFFFF, "x")
-                            for i in range(8))
-        except (ipaddress.AddressValueError, ValueError, TypeError):
-            return None
-    return ip.map(canon)

@@ -4,22 +4,20 @@ from transcript text (SURVEY.md §2.4 F10; mandated by BASELINE.json north_star)
 The reference takes the IP from an existing event field and uses the FIRST
 element when that field is a list (GeoIPFilter.java:156-163); our parse stage
 generalizes that: the first IPv4 literal found in `text` wins. Everything is
-built-in `regexp_extract_all` (JVM-side, whole-stage codegen); a pandas-UDF
-variant is provided for richer Python-regex needs and benchmarked against it.
+built-in `regexp_extract_all` (JVM-side, whole-stage codegen): parse runs no
+Python. The patterns below are also the oracle's (__spark_entry__.py imports
+them), so Spark and DuckDB scan with one definition.
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-# Keep these in sync with oracle SQL in __spark_entry__.py (DuckDB uses RE2,
-# Spark uses Java regex — the subset below is common to both; RE2 has no
-# lookbehind, so '::'-leading literals are not extractable from free text).
+# Shared with the DuckDB oracle in __spark_entry__.py, which imports them
+# (DuckDB uses RE2, Spark uses Java regex — the subset below is common to
+# both; RE2 has no lookbehind, so '::'-leading literals are not extractable
+# from free text).
 IPV4_RE = r"(\d{1,3}(?:\.\d{1,3}){3})"
 # colon-delimited hex groups, optionally ending in an embedded dotted quad
 # (NAT64 '64:ff9b::a.b.c.d', mapped '0:0::ffff:a.b.c.d' — VERDICT r3 #5).
@@ -96,34 +94,3 @@ def parse_transcripts(df: DataFrame, text_col: str = "text") -> DataFrame:
           .withColumn("tool_mention", first_tool_mention(t))
     )
 
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized variant (allowed UDF family #1, SURVEY.md §2.8) — used when
-# Python-regex features are needed; semantics identical for the common subset.
-# ---------------------------------------------------------------------------
-
-_IPV4_C = re.compile(IPV4_RE)
-_ERR_C = re.compile(ERROR_CODE_RE)
-_TOOL_C = re.compile(TOOL_RE)
-
-
-@F.pandas_udf(T.StructType([
-    T.StructField("ip_str", T.StringType()),
-    T.StructField("error_code", T.StringType()),
-    T.StructField("tool_mention", T.StringType()),
-]))
-def extract_entities(text: pd.Series) -> pd.DataFrame:
-    """Vectorized (Arrow batch) extraction over pd.Series — no per-row Python
-    at the Spark API level; the regex scan runs batch-at-a-time in the worker.
-    """
-    def first(pattern, v):
-        if not isinstance(v, str):
-            return None
-        m = pattern.search(v)
-        return m.group(1) if m else None
-
-    return pd.DataFrame({
-        "ip_str": text.map(lambda v: first(_IPV4_C, v)),
-        "error_code": text.map(lambda v: first(_ERR_C, v)),
-        "tool_mention": text.map(lambda v: first(_TOOL_C, v)),
-    })

@@ -38,22 +38,12 @@ def conv_turn_features(t: DataFrame) -> DataFrame:
 
 
 def distinct_ip_stats(parsed: DataFrame) -> DataFrame:
-    """Exact distinct-IP cardinality + turn counts (metrics contract;
-    approx_count_distinct is the at-scale variant, exact is the test form
-    per SURVEY §2.5)."""
+    """Exact distinct-IP cardinality + turn counts (metrics contract,
+    SURVEY §2.5)."""
     return parsed.agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.count("ip_str").alias("n_with_ip"),
         F.countDistinct("ip_str").alias("n_distinct_ips"),
-    )
-
-
-def distinct_ip_stats_approx(parsed: DataFrame) -> DataFrame:
-    """HyperLogLog++ variant for 10^12-turn metrics (one pass, no exact
-    distinct shuffle). Rows-only check (approximate by construction)."""
-    return parsed.agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.approx_count_distinct("ip_str").alias("n_distinct_ips_approx"),
     )
 
 

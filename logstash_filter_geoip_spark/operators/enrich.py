@@ -19,10 +19,11 @@ Execution shape (SURVEY.md §2.3 J1/J2, §4.2):
     direct join (BENCH/BASELINE.md).
   * the pipeline is Column expressions inside whole-stage-codegen spans,
     with at most ONE Arrow-vectorized node (none on the v4-only path,
-    `source_may_contain_v6=False`): the ipv6_to_key pandas UDF that
-    materializes the 128-bit (hi, lo) join key (a deliberate barrier — see
-    the inline note in enrich(); measured 30× cheaper than the pure-Column
-    parser, whose tree was re-inlined per downstream reference). No
+    `source_may_contain_v6=False`): the Arrow key UDF (ipkeys.
+    ipv6_key_lpm_udf, or ipv6_to_key on the bucket leg) that materializes
+    the 128-bit (hi, lo) join key (a deliberate barrier — see the inline
+    note in enrich(); measured 30× cheaper than the pure-Column parser it
+    replaced, whose tree was re-inlined per downstream reference). No
     row-at-a-time Python anywhere.
 
 Miss-semantics trichotomy (P1/P3/P5, spec/filters/geoip_offline_spec.rb):
@@ -392,7 +393,7 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
         #
         # WHY a pandas UDF in the hot path (r5 measurement, reversing the
         # r2 call): the pure-Column parser (regex validate + '::' string
-        # surgery + 8× conv) is referenced by the join condition, the
+        # surgery + 8× conv) was referenced by the join condition, the
         # mapped-key check, and the canonical-ip build; Catalyst's
         # projection collapse re-inlines the whole parse tree at EVERY
         # reference and codegen's subexpression elimination cannot rescue

@@ -105,11 +105,6 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(transcripts_sql("spark"))
 
 
-def transcripts_cte(dialect: str = "duckdb") -> str:
-    """`transcripts AS (...)` fragment for embedding in oracle SQL."""
-    return f"transcripts AS (\n{transcripts_sql(dialect)}\n)"
-
-
 def read_transcripts(spark: SparkSession, path: str,
                      fmt: str = "parquet") -> DataFrame:
     """Format-agnostic transcripts reader for MATERIALIZED tables: parquet /

@@ -111,6 +111,44 @@ def foreach_batch_stream(spark: SparkSession, input_path: str,
     return writer.start()
 
 
+def _transcript_stream(spark: SparkSession, input_path: str,
+                       max_files: int | None = 4) -> DataFrame:
+    """The parquet transcript file source of every plan-level stream below.
+    `max_files=None` leaves maxFilesPerTrigger unset (all pending files in
+    one trigger), as windowed_stream_agg and session_stream_agg always
+    have: another batch split would move their watermark, and with it
+    which late rows they drop."""
+    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.parquet(input_path)
+
+
+def _state_sink_stream(out: DataFrame, output_path: str,
+                       checkpoint_path: str, output_mode: str):
+    """Sink of the applyInPandasWithState streams: each micro-batch's
+    emitted rows append to parquet at `output_path`; drains and stops."""
+    def sink(batch, batch_id):
+        batch.write.mode("append").parquet(output_path)
+
+    return (out.writeStream.outputMode(output_mode).foreachBatch(sink)
+            .option("checkpointLocation", checkpoint_path)
+            .trigger(availableNow=True)
+            .start())
+
+
+def _file_sink_stream(out: DataFrame, output_path: str,
+                      checkpoint_path: str):
+    """Append-mode parquet file sink of the watermarked streams; drains
+    and stops."""
+    return (out.writeStream.outputMode("append")
+            .option("checkpointLocation", checkpoint_path)
+            .trigger(availableNow=True)
+            .format("parquet")
+            .option("path", output_path)
+            .start())
+
+
 def run_stream(spark: SparkSession, input_path: str, output_path: str,
                checkpoint_path: str,
                dim_provider: Callable[[], DataFrame | None],
@@ -184,9 +222,7 @@ def conv_state_tracker(spark: SparkSession, input_path: str,
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     config = config or _default_config()
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
+    stream = _transcript_stream(spark, input_path)
     dim, dim_v6 = _provided_dims(dim_provider, spark, config)
     enriched = enrich_batch(stream, dim, config, dim_v6=dim_v6)
     slim = enriched.select(
@@ -218,14 +254,7 @@ def conv_state_tracker(spark: SparkSession, input_path: str,
     updates = slim.groupBy("conv_id").applyInPandasWithState(
         update, CONV_STATE_OUTPUT, CONV_STATE_SCHEMA, "update",
         GroupStateTimeout.NoTimeout)
-
-    def sink(batch, batch_id):
-        batch.write.mode("append").parquet(output_path)
-
-    return (updates.writeStream.outputMode("update").foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start())
+    return _state_sink_stream(updates, output_path, checkpoint_path, "update")
 
 
 VELOCITY_STATE_SCHEMA = T.StructType([
@@ -284,9 +313,7 @@ def geo_velocity_stream(spark: SparkSession, input_path: str,
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     config = config or _default_config()
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
+    stream = _transcript_stream(spark, input_path)
     dim, dim_v6 = _provided_dims(dim_provider, spark, config)
     enriched = enrich_batch(stream, dim, config, dim_v6=dim_v6)
     lat = F.col(f"{config.target}.geo.location.lat")
@@ -331,14 +358,7 @@ def geo_velocity_stream(spark: SparkSession, input_path: str,
     out = located.groupBy("conv_id").applyInPandasWithState(
         update, VELOCITY_OUTPUT, VELOCITY_STATE_SCHEMA, "append",
         GroupStateTimeout.NoTimeout)
-
-    def sink(batch, batch_id):
-        batch.write.mode("append").parquet(output_path)
-
-    return (out.writeStream.outputMode("append").foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start())
+    return _state_sink_stream(out, output_path, checkpoint_path, "append")
 
 
 RETRY_STATE_SCHEMA = T.StructType([
@@ -377,9 +397,7 @@ def retry_collapse_stream(spark: SparkSession, input_path: str,
     from ..operators import hygiene
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
+    stream = _transcript_stream(spark, input_path)
     cols = ["turn_idx", "role", "text"]
     turns = stream.select("conv_id", *cols)
 
@@ -411,14 +429,7 @@ def retry_collapse_stream(spark: SparkSession, input_path: str,
     out = turns.groupBy("conv_id").applyInPandasWithState(
         update, RETRY_OUTPUT, RETRY_STATE_SCHEMA, "append",
         GroupStateTimeout.NoTimeout)
-
-    def sink(batch, batch_id):
-        batch.write.mode("append").parquet(output_path)
-
-    return (out.writeStream.outputMode("append").foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start())
+    return _state_sink_stream(out, output_path, checkpoint_path, "append")
 
 
 def windowed_stream_agg(spark: SparkSession, input_path: str,
@@ -433,7 +444,7 @@ def windowed_stream_agg(spark: SparkSession, input_path: str,
     dim_provider is resolved ONCE at query start (see module docstring);
     use run_stream for per-micro-batch hot swap."""
     config = config or _default_config()
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_path))
+    stream = _transcript_stream(spark, input_path, max_files=None)
     dim, dim_v6 = _provided_dims(dim_provider, spark, config)
     enriched = enrich_batch(stream.withWatermark("ts", watermark), dim, config,
                             dim_v6=dim_v6)
@@ -447,12 +458,7 @@ def windowed_stream_agg(spark: SparkSession, input_path: str,
         .select(F.col("w.start").alias("window_start"), "country_iso_code",
                 "n_turns", "n_failures")
     )
-    return (aggregated.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", output_path)
-            .start())
+    return _file_sink_stream(aggregated, output_path, checkpoint_path)
 
 
 def attribution_join(src: DataFrame, max_lag: str = "30 minutes",
@@ -515,16 +521,9 @@ def error_attribution_stream(spark: SparkSession, input_path: str,
     watermarks, append mode. A match is emitted once both sides have
     arrived; join state for a row is dropped once the other side's
     watermark passes its end of the interval."""
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(input_path))
+    stream = _transcript_stream(spark, input_path)
     out = attribution_join(stream, max_lag=max_lag, watermark=watermark)
-    return (out.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", output_path)
-            .start())
+    return _file_sink_stream(out, output_path, checkpoint_path)
 
 
 def session_stream_agg(spark: SparkSession, input_path: str,
@@ -541,7 +540,7 @@ def session_stream_agg(spark: SparkSession, input_path: str,
     streaming-correct shape for unbounded keys. Late rows beyond `watermark`
     are dropped — the same completeness contract as windowed_stream_agg.
     """
-    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_path)
+    stream = (_transcript_stream(spark, input_path, max_files=None)
               .withWatermark("ts", watermark))
     sessions = (
         stream.groupBy(*keys, F.session_window("ts", gap).alias("sw"))
@@ -550,12 +549,7 @@ def session_stream_agg(spark: SparkSession, input_path: str,
                       F.col("sw.start").alias("session_start"),
                       F.col("sw.end").alias("session_end"),
                       "n_events"))
-    return (sessions.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", output_path)
-            .start())
+    return _file_sink_stream(sessions, output_path, checkpoint_path)
 
 
 def dq_stream_gate(spark: SparkSession, input_path: str, output_path: str,

