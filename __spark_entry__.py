@@ -41,7 +41,8 @@ from logstash_filter_geoip_spark.operators.enrich import enrich
 from logstash_filter_geoip_spark.pipeline import enriched_transcripts, flagship
 from logstash_filter_geoip_spark.sources.geolite2 import (dim_v6_values_sql,
                                                           dim_values_sql,
-                                                          vendored_dims)
+                                                          vendored_dims,
+                                                          vendored_mmdb_path)
 from logstash_filter_geoip_spark.sources.transcripts import (TEXT_CASES,
                                                              load_transcripts,
                                                              transcripts_sql)
@@ -71,14 +72,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # Shared oracle fragments (DuckDB dialect)
 # ---------------------------------------------------------------------------
 
+# one definition of each regex: the oracle must scan identically
 from logstash_filter_geoip_spark.functions.parse import (ERROR_CODE_RE,
                                                         IPV4_RE, IPV6_RE,
                                                         TOOL_RE)
-
-_IPV4_RE_SQL = IPV4_RE   # one definition; the oracle must scan identically
-_IPV6_RE_SQL = IPV6_RE
-_ERR_RE_SQL = ERROR_CODE_RE
-_TOOL_RE_SQL = TOOL_RE
 
 
 def _v6_key_rows() -> list[tuple[str, int, int, str, int | None]]:
@@ -89,7 +86,7 @@ def _v6_key_rows() -> list[tuple[str, int, int, str, int | None]]:
     The (hi, lo) split and the canonical form are pure arithmetic on the
     parsed 128-bit value — precomputing them driver-side gives DuckDB
     (which has no 128-bit key primitive) an exact mirror of the Spark-side
-    ipv6_to_key / ipv6_canonical_from_key derivation. mapped_u32 is non-null
+    ipv6_key_lpm_udf / ipv6_canonical_from_key derivation. mapped_u32 is non-null
     iff the parsed BYTES are ::ffff:a.b.c.d (any textual spelling) — those
     rows take the v4 leg with the dotted quad as canonical ip, mirroring
     Java's convertFromIPv4MappedAddress and ipkeys.ipv4_mapped_u32. The
@@ -101,7 +98,7 @@ def _v6_key_rows() -> list[tuple[str, int, int, str, int | None]]:
 
     out, seen = [], set()
     for text in TEXT_CASES:
-        for m in re.finditer(_IPV6_RE_SQL, text):
+        for m in re.finditer(IPV6_RE, text):
             v = m.group(1)
             if v in seen:
                 continue
@@ -301,10 +298,10 @@ def _oracle_prefix() -> str:
 WITH transcripts AS ({transcripts_sql('duckdb')}),
 parsed AS (
   SELECT conv_id, turn_idx, role, tool, ts, text,
-         nullif(regexp_extract(text, '{_IPV4_RE_SQL}', 1), '') AS ip_str,
-         nullif(regexp_extract(text, '{_IPV6_RE_SQL}', 1), '') AS ip6_str,
-         nullif(regexp_extract(text, '{_ERR_RE_SQL}', 1), '') AS error_code,
-         nullif(regexp_extract(text, '{_TOOL_RE_SQL}', 1), '') AS tool_mention
+         nullif(regexp_extract(text, '{IPV4_RE}', 1), '') AS ip_str,
+         nullif(regexp_extract(text, '{IPV6_RE}', 1), '') AS ip6_str,
+         nullif(regexp_extract(text, '{ERROR_CODE_RE}', 1), '') AS error_code,
+         nullif(regexp_extract(text, '{TOOL_RE}', 1), '') AS tool_mention
   FROM transcripts
 ),
 keyed0 AS (
@@ -555,11 +552,10 @@ def q_enrich_city_from_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("geoip_hit").alias("hit"))
 
 
-# the reference tree's canonical public MaxMind test databases — input for
-# the full-.mmdb ingestion path (S2 end-to-end). Guarded: the query/oracle
-# pair registers only when the directory exists.
-_MMDB_DIR = "/root/reference/src/test/resources/maxmind-test-data"
-_MMDB_CITY = f"{_MMDB_DIR}/GeoLite2-City-Test.mmdb"
+# the reference tree's canonical public MaxMind test databases
+# (geolite2.vendored_mmdb_path) — input for the full-.mmdb ingestion path
+# (S2 end-to-end). Guarded: the query/oracle pair registers only when the
+# City file exists.
 
 
 def q_enrich_city_from_mmdb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -571,7 +567,7 @@ def q_enrich_city_from_mmdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern, upgraded from CSV to the binary format)."""
     from logstash_filter_geoip_spark.sources.geolite2 import load_dim_mmdb
 
-    dim, dim_v6 = load_dim_mmdb(spark, _MMDB_CITY, "City")
+    dim, dim_v6 = load_dim_mmdb(spark, vendored_mmdb_path("City"), "City")
     cfg = GeoIPConfig(source="ip_any", target="geoip", database="City",
                       ecs_compatibility=True)
     e = enrich(_parsed(spark, sf_dir), dim, cfg, dim_v6=dim_v6)
@@ -595,7 +591,7 @@ def _mmdb_city_oracle(prefix: str) -> str:
     from logstash_filter_geoip_spark.sources.geolite2 import (
         SCHEMAS, SCHEMAS_V6, mmdb_dim_rows, rows_values_sql)
 
-    rows4, rows6 = mmdb_dim_rows(_MMDB_CITY, "City")
+    rows4, rows6 = mmdb_dim_rows(vendored_mmdb_path("City"), "City")
     # MATERIALIZED: with the few-hundred-row VALUES inlined in the join,
     # DuckDB re-evaluates the whole literal relation per probe row once any
     # attribute column is projected (observed: count(*) instant, any
@@ -1178,8 +1174,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "equidepth_histogram": q_equidepth_histogram,
         "salted_join_counts": q_salted_join_counts,
     }
-    import os
-    if os.path.exists(_MMDB_CITY):
+    if vendored_mmdb_path("City"):
         out["enrich_city_from_mmdb"] = q_enrich_city_from_mmdb
     out.update(dedup.queries())
     out.update(similarity.queries())
@@ -1754,8 +1749,7 @@ GROUP BY ROLLUP (country_iso_code, city_name)
   WHERE hit AND latitude IS NOT NULL AND longitude IS NOT NULL
 )""" + geo.velocity_oracle_cte("v_hits", carry=("city_name",)),
     }
-    import os
-    if os.path.exists(_MMDB_CITY):
+    if vendored_mmdb_path("City"):
         out["enrich_city_from_mmdb"] = _mmdb_city_oracle(p)
     out.update(dedup.oracles())
     out.update(similarity.oracles())

@@ -10,15 +10,17 @@ BroadcastHashJoin instead of a BroadcastNestedLoopJoin. All hot-path
 expressions are built-in Column functions (whole-stage codegen); the only
 Python is Arrow-vectorized.
 
-IPv6 literals are parsed in exactly one place, `_v6_keys`, which both Arrow
-UDFs call (`ipv6_to_key` for the bucket leg, `ipv6_key_lpm_udf` for the
-index leg). It hands every textual form to `ipaddress`, as the reference
-hands every form to InetAddress.getByName (GeoIPFilter.java:172).
+IPv6 literals are parsed in exactly one place, `_v6_keys`, inside the one
+Arrow key UDF `ipv6_key_lpm_udf` (with a range index on enrich's index leg,
+parse-only with `None` on the bucket leg and with no v6 dim). It hands
+every textual form to `ipaddress`, as the reference hands every form to
+InetAddress.getByName (GeoIPFilter.java:172).
 """
 
 from __future__ import annotations
 
 import ipaddress
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -81,13 +83,13 @@ def cidr_to_range(network: str) -> tuple[int, int]:
 
 def _u64_to_signed(v: int) -> int:
     """Unsigned 64-bit → signed long with flipped sign bit, so signed
-    ordering matches unsigned (same transform as ipv6_to_key)."""
+    ordering matches unsigned (same transform as _v6_keys)."""
     return (v & 0xFFFFFFFFFFFFFFFF) - (1 << 63)
 
 
 def cidr_v6_to_range(network: str) -> tuple[int, int, int, int]:
     """IPv6 CIDR -> (start_hi, start_lo, end_hi, end_lo) signed-64 pairs,
-    lexicographically comparable against ipv6_to_key output."""
+    lexicographically comparable against ipv6_key_lpm_udf keys."""
     net = ipaddress.ip_network(network, strict=False)
     if net.version != 6:
         raise ValueError(f"ipv6 CIDR expected, got {network}")
@@ -137,26 +139,11 @@ def _v6_keys(ip: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return hi, lo, ok
 
 
-@F.pandas_udf(T.StructType([
-    T.StructField("ip_hi", T.LongType()),
-    T.StructField("ip_lo", T.LongType()),
-]))
-def ipv6_to_key(ip: pd.Series) -> pd.DataFrame:
-    """IPv6 string -> (hi, lo) signed-64 pair for lexicographic range compare
-    (`_v6_keys`); invalid addresses map to (null, null).
-
-    The key of enrich's v6 bucket leg (r5 — see operators/enrich.py for the
-    measurement that put the Arrow barrier here). Arrow-vectorized; never
-    called per-row from the driver.
-    """
-    hi, lo, ok = _v6_keys(ip)
-    # nullable Int64 via explicit mask, NEVER the default dtype: a batch
-    # mixing ints and None would coerce to float64 and silently round
-    # 64-bit keys to 53-bit mantissa precision (observed: low 16 bits of
-    # every key zeroed on full-table batches while filtered all-valid
-    # batches stayed exact)
-    return pd.DataFrame({"ip_hi": pd.arrays.IntegerArray(hi, mask=~ok),
-                         "ip_lo": pd.arrays.IntegerArray(lo, mask=~ok)})
+# the index of no ranges, in the broadcast's shape: ipv6_key_lpm_udf(None)
+# parses only
+_NO_RANGES = SimpleNamespace(value={
+    k: np.zeros(0, np.int64)
+    for k in ("start_hi", "start_lo", "end_hi", "end_lo")})
 
 
 def ipv6_key_lpm_udf(bc):
@@ -180,8 +167,10 @@ def ipv6_key_lpm_udf(bc):
 
     ``bc`` is a SparkContext.broadcast of dict(start_hi, start_lo, end_hi,
     end_lo) int64 numpy arrays sorted lexicographically by (start_hi,
-    start_lo) — the sign-flipped encoding (ipv6_to_key's) makes signed
+    start_lo) — the sign-flipped encoding (_v6_keys') makes signed
     int64 order == unsigned 128-bit order, so numpy comparisons are exact.
+    ``bc=None`` is the parse-only form (the bucket leg, and a v6-capable
+    source with no v6 dim): the (hi, lo) key alone, every dim_idx NULL.
     Ranges must be DISJOINT (the mmdb trie property; validate_dim enforces
     well-formedness) — LPM then reduces to "last start <= probe, probe <=
     its end". The back-walk over equal-``hi`` starts is vectorized and
@@ -189,6 +178,9 @@ def ipv6_key_lpm_udf(bc):
     a hi word — rare in real files). Invalid literals and non-matches
     yield NULL dim_idx (a NULL equi-key never matches in the hash join).
     """
+    if bc is None:
+        bc = _NO_RANGES
+
     @F.pandas_udf(T.StructType([
         T.StructField("ip_hi", T.LongType()),
         T.StructField("ip_lo", T.LongType()),
@@ -219,7 +211,11 @@ def ipv6_key_lpm_udf(bc):
             pv = np.clip(pos, 0, None)
             match = valid & ((hi < e_hi[pv])
                              | ((hi == e_hi[pv]) & (lo <= e_lo[pv])))
-        # nullable Int64 via explicit mask (the ipv6_to_key rule)
+        # nullable Int64 via explicit mask, NEVER the default dtype: a batch
+        # mixing ints and None would coerce to float64 and silently round
+        # 64-bit keys to 53-bit mantissa precision (observed: low 16 bits of
+        # every key zeroed on full-table batches while filtered all-valid
+        # batches stayed exact)
         return pd.DataFrame({
             "ip_hi": pd.arrays.IntegerArray(hi, mask=~ok),
             "ip_lo": pd.arrays.IntegerArray(lo, mask=~ok),

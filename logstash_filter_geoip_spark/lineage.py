@@ -23,28 +23,38 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MANIFEST_NAME = "_manifest.json"
 METRICS_DIR = "_metrics"
 
 
-def input_fingerprint(df: DataFrame, key_cols: list[str] | None = None) -> dict:
-    """Order-insensitive content fingerprint: xor/sum of row hashes + count.
+# the columns route() fingerprints its input by
+FINGERPRINT_COLS = ("conv_id", "turn_idx")
 
-    One distributed aggregate; no collect of data rows. At 100 TB this is a
-    single scan with a 2-value result.
-    """
-    cols = key_cols or df.columns
-    h = F.xxhash64(*[F.col(c) for c in cols])
-    # bit_xor is order-insensitive and cannot overflow (ANSI-safe); pair it
-    # with the count so duplicate-row cancellation can't hide a size change
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(h).alias("hash_xor"),
-    ).collect()[0]
+
+def fingerprint_aggs(key_cols) -> list[Column]:
+    """The fingerprint's two aggregates, its one definition: the row count
+    and bit_xor of the key columns' xxhash64. bit_xor is order-insensitive
+    and cannot overflow (ANSI-safe); the count stops duplicate-row
+    cancellation from hiding a size change. Run as an aggregate
+    (input_fingerprint) or folded into a write with df.observe (route)."""
+    h = F.xxhash64(*[F.col(c) for c in key_cols])
+    return [F.count(F.lit(1)).alias("n"), F.bit_xor(h).alias("hash_xor")]
+
+
+def fingerprint_of(row) -> dict:
+    """The fingerprint dict of a fingerprint_aggs result row."""
     return {"n_rows": int(row["n"]), "hash_xor": int(row["hash_xor"] or 0)}
+
+
+def input_fingerprint(df: DataFrame, key_cols=None) -> dict:
+    """Order-insensitive content fingerprint of `df` (all columns unless
+    `key_cols` is given). One distributed aggregate; no collect of data
+    rows. At 100 TB this is a single scan with a 2-value result."""
+    row = df.agg(*fingerprint_aggs(key_cols or df.columns)).collect()[0]
+    return fingerprint_of(row)
 
 
 def manifest_path(base: str) -> str:

@@ -16,11 +16,18 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_TAG_ON_FAILURE
+from .route import SINK_KEYS
 
 
-def failure_flag(tags_col: str = "tags",
-                 tag: str = DEFAULT_TAG_ON_FAILURE[0]) -> Column:
-    return F.when(F.array_contains(F.col(tags_col), tag), F.lit(1)).otherwise(F.lit(0))
+def failure_flag(tags=DEFAULT_TAG_ON_FAILURE) -> Column:
+    """1 where the row's `tags` hold any of `tags` (a pipeline's
+    tag_on_failure), else 0 — the one failure predicate of every failure
+    count, batch and stream. No tags count nothing."""
+    if not tags:
+        return F.lit(0)
+    hit = reduce(lambda a, b: a | b,
+                 [F.array_contains(F.col("tags"), t) for t in tags])
+    return F.when(hit, F.lit(1)).otherwise(F.lit(0))
 
 
 _WINDOW_UNIT_SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
@@ -58,21 +65,19 @@ def turns_per_geo_window(df: DataFrame, country_col: str,
     )
 
 
-def failure_counts_per_sink(df: DataFrame,
-                            sink_keys: tuple[str, ...] = ("role", "tool")) -> DataFrame:
-    """Failure-tag counts keyed by sink (role, tool)."""
+def failure_counts_per_sink(df: DataFrame) -> DataFrame:
+    """Failure-tag counts keyed by sink (route.SINK_KEYS)."""
     return (
-        df.groupBy(*sink_keys)
+        df.groupBy(*SINK_KEYS)
           .agg(F.count(F.lit(1)).alias("n_turns"),
                F.sum(failure_flag()).alias("n_failures"))
     )
 
 
-def routed_row_counts(df: DataFrame,
-                      sink_keys: tuple[str, ...] = ("role", "tool")) -> DataFrame:
+def routed_row_counts(df: DataFrame) -> DataFrame:
     """Row count per sink key — the parity check against sink row counts
     (north_rule 'routed-row equality')."""
-    return df.groupBy(*sink_keys).agg(F.count(F.lit(1)).alias("n_rows"))
+    return df.groupBy(*SINK_KEYS).agg(F.count(F.lit(1)).alias("n_rows"))
 
 
 def _quantile_name(q: float) -> str:

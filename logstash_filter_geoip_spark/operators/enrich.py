@@ -20,7 +20,7 @@ Execution shape (SURVEY.md §2.3 J1/J2, §4.2):
   * the pipeline is Column expressions inside whole-stage-codegen spans,
     with at most ONE Arrow-vectorized node (none on the v4-only path,
     `source_may_contain_v6=False`): the Arrow key UDF (ipkeys.
-    ipv6_key_lpm_udf, or ipv6_to_key on the bucket leg) that materializes
+    ipv6_key_lpm_udf, parse-only on the bucket leg) that materializes
     the 128-bit (hi, lo) join key (a deliberate barrier — see the inline
     note in enrich(); measured 30× cheaper than the pure-Column parser it
     replaced, whose tree was re-inlined per downstream reference). No
@@ -40,6 +40,8 @@ Failure rows get `tag_on_failure` appended via array_union
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,8 +50,8 @@ from ..config import EXPIRED_TAG, GeoIPConfig
 from ..fields import FIELD_BY_NAME, FieldSpec
 from ..functions.ipkeys import (bucket_of, explode_buckets, ipv4_mapped_u32,
                                 ipv4_to_uint32, ipv6_canonical_from_key,
-                                ipv6_key_lpm_udf, ipv6_to_key, uint32_to_ipv4,
-                                v6_bucket_of)
+                                ipv6_key_lpm_udf, uint32_to_ipv4, v6_bucket_of)
+from ..sources.geolite2 import check_v6_rows
 
 _DIM_PREFIX = "__dim_"
 _DIM6_PREFIX = "__dim6_"
@@ -185,33 +187,56 @@ def _source_ip(df: DataFrame, source: str) -> Column:
         "array<string> (parity: GeoIPFilter.java:161-163)")
 
 
+def _memo_on_dim(build):
+    """Memoize a dim-prep step ON the dim object (r6): repeated enrich()
+    calls against the SAME dim DataFrame were re-building its prepared
+    projection (py4j expression trees), re-collecting and re-broadcasting
+    its index, per call. Identity-attached, so a hot-swapped dim (a NEW
+    DataFrame object) prepares fresh — the dim-swap semantics are
+    unchanged; this is reference-data prep, never a result cache. The memo
+    hits only while the caller holds the dim object: `vendored_dims` builds
+    new DataFrames on every call, so each of its results prepares afresh."""
+    attr = f"_memo_{build.__name__}"
+
+    @functools.wraps(build)
+    def memoized(dim: DataFrame):
+        cached = getattr(dim, attr, None)
+        if cached is None:
+            cached = build(dim)
+            try:
+                setattr(dim, attr, cached)
+            except AttributeError:  # exotic DataFrame proxies: no memo
+                pass
+        return cached
+    return memoized
+
+
+@_memo_on_dim
 def prepare_dim(dim: DataFrame) -> DataFrame:
     """Bucket-replicate and column-prefix the dimension table (driver-side
-    prep over a small table; the result is what gets broadcast).
-
-    Memoized ON the dim object (the _index_dim_v6 r6 discipline):
-    repeated enrich() calls against the same dim were re-building the
-    exploded projection's expression tree per call — pure py4j driver
-    overhead. A swapped dim is a new object and prepares fresh."""
-    cached = getattr(dim, "_prepared_dim_cache", None)
-    if cached is not None:
-        return cached
+    prep over a small table; the result is what gets broadcast)."""
     exploded = explode_buckets(dim)
-    renamed = exploded.select(
+    return exploded.select(
         F.col("prefix_bucket"),
         *[F.col(c).alias(_DIM_PREFIX + c) for c in dim.columns],
     )
-    try:
-        dim._prepared_dim_cache = renamed
-    except AttributeError:
-        pass
-    return renamed
 
 
+@_memo_on_dim
 def prepare_dim_v6(dim_v6: DataFrame) -> DataFrame:
-    """v6 counterpart of prepare_dim: replicate per covered hi-word /16
-    bucket so the v6 range join also probes on an equi-key (same
-    BroadcastHashJoin shape as v4, never a nested-loop join)."""
+    """v6 counterpart of prepare_dim for the bucket leg: replicate per
+    covered hi-word /16 bucket so the v6 range join also probes on an
+    equi-key (same BroadcastHashJoin shape as v4, never a nested-loop
+    join).
+
+    The one replication guard (geolite2.check_v6_rows) runs here, over the
+    relation about to be exploded — for event-time enrich that is the whole
+    temporal.dim_history union, so a history whose snapshots each pass but
+    whose sum does not is refused before the broadcast is built. One small
+    collect of the range bounds per dim object."""
+    rows = dim_v6.select("network", "start_hi", "end_hi").collect()
+    check_v6_rows([(r[0], r[1], None, r[2]) for r in rows],
+                  "enrich bucket leg")
     exploded = dim_v6.withColumn(
         "prefix_bucket6",
         F.explode(F.sequence(v6_bucket_of(F.col("start_hi")),
@@ -222,6 +247,7 @@ def prepare_dim_v6(dim_v6: DataFrame) -> DataFrame:
     )
 
 
+@_memo_on_dim
 def _index_dim_v6(dim_v6: DataFrame):
     """Driver-side prep for the v6 ``index`` leg: pull the dim as
     Arrow, sort it by (start_hi, start_lo), broadcast the numpy range
@@ -238,23 +264,12 @@ def _index_dim_v6(dim_v6: DataFrame):
 
     Driver-resident by design: the reference's workers each hold the whole
     .mmdb in RAM (GeoIPFilter.java:173-197); a full production GeoLite2 v6
-    file is ~1.5M ranges ≈ ~50 MB of int64 arrays — the same order as the
-    broadcast the bucket leg already ships, minus the replication.
-
-    Memoized ON the dim object (r6): repeated enrich() calls against the
-    SAME dim DataFrame were re-collecting, re-sorting, and re-broadcasting
-    the index per call — ~0.4 s of pure driver work in every headline bench
-    query. The memo hits only while the caller holds the dim object:
-    `vendored_dims` builds new DataFrames on every call, so each of its
-    results indexes afresh. Identity-attached, so a hot-swapped dim (a NEW
-    DataFrame object) naturally builds a fresh index — the dim-swap
-    semantics are unchanged; this is reference-data prep, never a result
-    cache."""
+    file is ~1.5M ranges ≈ ~50 MB of int64 arrays, and nothing is
+    replicated, so no width bound applies. Memoized: without it every
+    headline bench query paid ~0.4 s re-collecting, re-sorting and
+    re-broadcasting the index."""
     import numpy as np
     import pyarrow as pa
-    cached = getattr(dim_v6, "_lpm_index_cache", None)
-    if cached is not None:
-        return cached
     spark = dim_v6.sparkSession
     table = dim_v6.toArrow().sort_by([("start_hi", "ascending"),
                                       ("start_lo", "ascending")])
@@ -267,16 +282,11 @@ def _index_dim_v6(dim_v6: DataFrame):
     indexed = spark.createDataFrame(table, schema)
     dim6_b = indexed.select(
         "dim_idx6", *[F.col(c).alias(_DIM6_PREFIX + c) for c in dim_v6.columns])
-    out = (spark.sparkContext.broadcast(arrs), dim6_b)
-    try:
-        dim_v6._lpm_index_cache = out
-    except AttributeError:  # exotic DataFrame proxies: skip memoization
-        pass
-    return out
+    return spark.sparkContext.broadcast(arrs), dim6_b
 
 
 def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
-           tags_col: str = "tags", dim_v6: DataFrame | None = None,
+           dim_v6: DataFrame | None = None,
            source_may_contain_v6: bool = True,
            event_time_col: str | None = None) -> DataFrame:
     """Left-join `df` (with `config.source` IP string column) against the
@@ -336,7 +346,7 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
     index6 = dim_v6 is not None and event_time_col is None
 
     ip_col = _source_ip(df, config.source)
-    existing_tags = (F.col(tags_col) if tags_col in df.columns else _empty_tags())
+    existing_tags = F.col("tags") if "tags" in df.columns else _empty_tags()
 
     if config.database == "Unknown":
         # J4: an unrecognized mmdb type REGISTERS with an empty field set
@@ -359,7 +369,7 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
         # (ip_u32, geoip_hit) are appended with the healthy path's types,
         # so sinks keep ONE schema across a hot-swap expiry mid-stream.
         out = df.withColumn(
-            tags_col,
+            "tags",
             F.array_union(F.coalesce(existing_tags, _empty_tags()),
                           F.array(F.lit(EXPIRED_TAG))))
         if config.target not in df.columns:
@@ -382,7 +392,7 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
                    .withColumn("__bucket", bucket_of(F.col("__ip_u32"))))
     else:
         # Any colon-containing literal parses through the Arrow-vectorized
-        # ipv6_to_key UDF (Java funnels EVERY textual form through
+        # ipv6_key_lpm_udf (Java funnels EVERY textual form through
         # InetAddress.getByName, GeoIPFilter.java:172; Python `ipaddress`
         # accepts the identical grammar — embedded dotted quads
         # '::ffff:a.b.c.d' in any spelling, NAT64 '64:ff9b::a.b.c.d',
@@ -403,14 +413,14 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
         # materialization barrier, so (hi, lo) are computed ONCE and every
         # downstream reference is a cheap long read. The gate ships only
         # ':'-containing values into Arrow (nulls for the v4 majority).
-        # The index leg swaps in the LPM variant of the SAME barrier: one
-        # extra int64 column out of Arrow, the binary search riding the
-        # pass the plan already pays for.
+        # The index leg hands the SAME barrier its range index: the binary
+        # search rides the pass the plan already pays for, and the matched
+        # row position comes out as one more int64 column.
+        # The bucket leg and the no-v6-dim path run its parse-only form (no
+        # range index, NULL dim_idx).
         if index6:
             bc6, dim6_indexed = _index_dim_v6(dim_v6)
-            key_udf = ipv6_key_lpm_udf(bc6)
-        else:
-            key_udf = ipv6_to_key
+        key_udf = ipv6_key_lpm_udf(bc6 if index6 else None)
         probe = df.withColumn(
             "__k6", key_udf(F.when(ip_col.contains(":"), ip_col)))
         probe = (probe.withColumn("__hi", F.col("__k6.ip_hi"))
@@ -525,10 +535,10 @@ def enrich(df: DataFrame, dim: DataFrame, config: GeoIPConfig,
     # the standard logstash stack) must replace ip_u32/geoip_hit, not
     # duplicate the column names
     keep = [c for c in df.columns
-            if c not in (tags_col, config.target, "ip_u32", "geoip_hit")]
+            if c not in ("tags", config.target, "ip_u32", "geoip_hit")]
     return joined.select(
         *keep,
-        tags.alias(tags_col),
+        tags.alias("tags"),
         target.alias(config.target),
         F.col("__ip_u32").alias("ip_u32"),
         matched.alias("geoip_hit"),

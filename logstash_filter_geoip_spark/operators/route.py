@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_TAG_ON_FAILURE
-from ..lineage import (METRICS_DIR, input_fingerprint, read_manifest,
+from ..lineage import (FINGERPRINT_COLS, METRICS_DIR, fingerprint_aggs,
+                       fingerprint_of, input_fingerprint, read_manifest,
                        write_manifest)
 
 SINK_KEYS = ("role", "tool")
@@ -83,12 +84,10 @@ def auto_n_salt(df: DataFrame, sink_count: int = 16,
 
 
 def route(df: DataFrame, base_path: str,
-          sink_keys: tuple[str, ...] = SINK_KEYS,
           n_salt: int | None = None,
           fmt: str = "parquet",
-          resume: bool = True,
-          fingerprint_cols: tuple[str, ...] = ("conv_id", "turn_idx")) -> dict:
-    """Write `df` fanned out by sink_keys under base_path; return the manifest.
+          resume: bool = True) -> dict:
+    """Write `df` fanned out by SINK_KEYS under base_path; return the manifest.
 
     n_salt=None (default) sizes the per-sink file split from the input data
     (auto_n_salt); pass an explicit value to pin it.
@@ -101,28 +100,22 @@ def route(df: DataFrame, base_path: str,
     prev = read_manifest(base_path) if resume else None
     if prev and prev.get("status") == "complete":
         # resume probe: one fingerprint scan buys skipping the whole write
-        fp = input_fingerprint(df, list(fingerprint_cols))
-        if prev.get("fingerprint") == fp:
+        if prev.get("fingerprint") == input_fingerprint(df, FINGERPRINT_COLS):
             return prev
-    else:
-        fp = None
 
-    h = F.xxhash64(*[F.col(c) for c in fingerprint_cols])
     obs = Observation("route_fingerprint")
     salted = (df.withColumn("__salt", salt_column(n_salt))
-                .repartition(*[F.col(k) for k in sink_keys], F.col("__salt"))
+                .repartition(*[F.col(k) for k in SINK_KEYS], F.col("__salt"))
                 .drop("__salt")
-                .observe(obs,
-                         F.count(F.lit(1)).alias("n"),
-                         F.bit_xor(h).alias("hash_xor")))
+                .observe(obs, *fingerprint_aggs(FINGERPRINT_COLS)))
 
     (salted.write.format(fmt)
            .mode("overwrite")
-           .partitionBy(*sink_keys)
+           .partitionBy(*SINK_KEYS)
            .save(os.path.join(base_path, "sinks")))
 
-    row = obs.get  # populated by the write action — no second input pass
-    fp = {"n_rows": int(row["n"]), "hash_xor": int(row["hash_xor"] or 0)}
+    # populated by the write action — no second input pass
+    fp = fingerprint_of(obs.get)
 
     spark = df.sparkSession
     routed = read_sink(spark, base_path, fmt)
@@ -135,19 +128,19 @@ def route(df: DataFrame, base_path: str,
     # 800k rows: equal wall; a collect+re-upload variant measured ~0.5s
     # slower per call, hence write-then-read-back.)
     mpath = os.path.join(base_path, METRICS_DIR)
-    sink_file_metrics(routed, sink_keys).write.format(fmt) \
+    sink_file_metrics(routed).write.format(fmt) \
         .mode("overwrite").save(mpath)
     sink_counts = {
-        "|".join(str(r[k]) for k in sink_keys): int(r["n_rows"])
+        "|".join(str(r[k]) for k in SINK_KEYS): int(r["n_rows"])
         for r in spark.read.format(fmt).load(mpath)
-                      .groupBy(*sink_keys)
+                      .groupBy(*SINK_KEYS)
                       .agg(F.sum("n_rows").alias("n_rows")).collect()
     }
 
     manifest = {
         "status": "complete",
         "fingerprint": fp,
-        "sink_keys": list(sink_keys),
+        "sink_keys": list(SINK_KEYS),
         "sink_counts": sink_counts,
         "total_rows": sum(sink_counts.values()),
         "format": fmt,
@@ -156,21 +149,17 @@ def route(df: DataFrame, base_path: str,
 
 
 def sink_file_metrics(routed: DataFrame,
-                      sink_keys: tuple[str, ...] = SINK_KEYS,
-                      tags_col: str = "tags",
-                      failure_tags: tuple[str, ...] = tuple(DEFAULT_TAG_ON_FAILURE)
-                      ) -> DataFrame:
+                      failure_tags=DEFAULT_TAG_ON_FAILURE) -> DataFrame:
     """Per-written-file lineage row: sink key, file, rows, failures — the
     north_rule per-partition audit trail, computed from the routed OUTPUT
     (colocated, column-pruned) rather than a second pass over the input.
     Pass the pipeline's configured tag_on_failure as failure_tags when it
     differs from the default."""
-    flag = (F.when(F.arrays_overlap(
-                F.col(tags_col), F.array(*[F.lit(t) for t in failure_tags])), 1)
-             .otherwise(0)) if tags_col in routed.columns else F.lit(0)
+    from .aggregate import failure_flag
+    flag = failure_flag(failure_tags) if "tags" in routed.columns else F.lit(0)
     return (
         routed.groupBy(F.input_file_name().alias("file"),
-                       *[F.col(k) for k in sink_keys])
+                       *[F.col(k) for k in SINK_KEYS])
               .agg(F.count(F.lit(1)).alias("n_rows"),
                    F.sum(flag).alias("n_failures"))
     )
@@ -320,25 +309,22 @@ def compact_sink(spark: SparkSession, base_path: str,
         shutil.rmtree(old)
         done.append({**p, "n_rows": int(n_before)})
     if done:
-        sink_keys = tuple((read_manifest(base_path) or {})
-                          .get("sink_keys", SINK_KEYS))
         routed = read_sink(spark, base_path, fmt)
         mpath = os.path.join(base_path, METRICS_DIR)
-        sink_file_metrics(routed, sink_keys).write.format(fmt) \
+        sink_file_metrics(routed).write.format(fmt) \
             .mode("overwrite").save(mpath)
     return {"target_bytes": int(target_bytes), "fmt": fmt,
             "compacted": done}
 
 
-def verify_routing(spark: SparkSession, df: DataFrame, base_path: str,
-                   sink_keys: tuple[str, ...] = SINK_KEYS) -> dict:
+def verify_routing(spark: SparkSession, df: DataFrame, base_path: str) -> dict:
     """The north_rule parity check: sum of per-sink rows == input rows, and
     per-sink counts recomputed from routed rows == manifest counts."""
     manifest = read_manifest(base_path)
     routed = read_sink(spark, base_path)
     recomputed = {
-        "|".join(str(r[k]) for k in sink_keys): r["n"]
-        for r in routed.groupBy(*sink_keys).agg(F.count(F.lit(1)).alias("n")).collect()
+        "|".join(str(r[k]) for k in SINK_KEYS): r["n"]
+        for r in routed.groupBy(*SINK_KEYS).agg(F.count(F.lit(1)).alias("n")).collect()
     }
     input_rows = df.count()
     ok = (manifest is not None

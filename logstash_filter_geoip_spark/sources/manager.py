@@ -48,12 +48,9 @@ class SelectedDatabase:
 
 def select_database(spark: SparkSession, database: str = "City",
                     manager: Manager | None = None,
-                    explicit_path: str | None = None,
-                    **mmdb_limits) -> SelectedDatabase:
+                    explicit_path: str | None = None) -> SelectedDatabase:
     """The select_database_path analogue (geoip.rb:187-199).
 
-    mmdb_limits (max_span= / max_total=) forward to load_dim_mmdb so a
-    legitimately wide managed database can raise the v6 replication guard.
     Extraction is mtime-cached (geolite2._mmdb_rows_cached), so per-batch
     re-selection does not re-parse an unchanged file."""
     if manager is not None:
@@ -61,11 +58,10 @@ def select_database(spark: SparkSession, database: str = "City",
         if path is None:
             # managed-but-unprovisioned: unhealthy, NOT a vendored fallback
             return SelectedDatabase(None, "managed", False, None, None)
-        dim, dim_v6 = load_dim_mmdb(spark, path, database, **mmdb_limits)
+        dim, dim_v6 = load_dim_mmdb(spark, path, database)
         return SelectedDatabase(path, "managed", True, dim, dim_v6)
     if explicit_path is not None:
-        dim, dim_v6 = load_dim_mmdb(spark, explicit_path, database,
-                                    **mmdb_limits)
+        dim, dim_v6 = load_dim_mmdb(spark, explicit_path, database)
         return SelectedDatabase(explicit_path, "explicit", True, dim, dim_v6)
     path = vendored_mmdb_path(database)
     # vendored_dims handles both cases itself (full cached ingestion when
@@ -76,14 +72,12 @@ def select_database(spark: SparkSession, database: str = "City",
 
 def dim_provider_from_selection(spark: SparkSession, database: str = "City",
                                 manager: Manager | None = None,
-                                explicit_path: str | None = None,
-                                **mmdb_limits):
+                                explicit_path: str | None = None):
     """A `dim_provider` for streaming.run_stream that re-runs the selection
     per micro-batch: a manager `:update` (new path) takes effect on the next
     batch, a manager `:expire` (None) flips to expired tagging — exactly
     update_filter's two actions (geoip.rb:160-171)."""
     def provider():
-        sel = select_database(spark, database, manager, explicit_path,
-                              **mmdb_limits)
+        sel = select_database(spark, database, manager, explicit_path)
         return (sel.dim, sel.dim_v6) if sel.healthy else None
     return provider

@@ -4,20 +4,29 @@ The reference is a streaming pipeline element with no cross-event state —
 the one time-varying input is the hot database swap (geoip.rb:156-171). The
 Spark mapping:
 
-  * `foreachBatch` runs the IDENTICAL batch transform per micro-batch, so
-    batch and streaming can never drift semantically.
-  * in the `run_stream` (foreachBatch) variant the dimension table is
-    re-loaded via a provider callable at every batch — the hot-swap
-    analogue (S4): push a new CIDR table, the next micro-batch joins
-    against it; a None dim → unhealthy → every row tagged
-    `_geoip_expired_database`. The two plan-level variants below
-    (conv_state_tracker, windowed_stream_agg) resolve the provider ONCE at
-    query start — their enrich join is part of a fixed streaming plan — so
-    hot swap there means restarting the query from its checkpoint; use
-    run_stream when mid-query swaps are required.
+  * `run_stream` (foreachBatch) runs `enrich_batch` per micro-batch: the
+    same parse → enrich code, dims (geolite2.default_dims) and failure
+    predicate (aggregate.failure_flag) as the batch path, so each row's
+    enrichment and tags are the batch row's. The sink is NOT route()'s:
+    run_stream appends parquet partitioned by `role` only, with no `tool`
+    level, no salting and no manifest/metrics; route() writes the
+    salted role × tool tree of the batch path. Compare the two on rows,
+    not on sink layout.
+  * in `run_stream` the dimension table is re-loaded via a provider
+    callable at every batch — the hot-swap analogue (S4): push a new CIDR
+    table, the next micro-batch joins against it; a None dim → unhealthy →
+    every row tagged `_geoip_expired_database`.
+  * six plan-level variants compile one fixed streaming plan instead:
+    conv_state_tracker, geo_velocity_stream and windowed_stream_agg
+    enrich, and resolve the provider ONCE at query start — hot swap there
+    means restarting the query from its checkpoint (use run_stream when
+    mid-query swaps are required); retry_collapse_stream,
+    error_attribution_stream and session_stream_agg read the raw
+    transcripts and enrich nothing.
   * `checkpointLocation` gives exactly-once sink state across restarts; the
-    windowed-aggregate variant adds `withWatermark` so late rows beyond the
-    delay are dropped (documented sink contract).
+    watermarked variants (windowed_stream_agg, session_stream_agg,
+    error_attribution_stream) drop rows later than the delay (documented
+    sink contract).
 """
 
 from __future__ import annotations
@@ -32,6 +41,7 @@ from pyspark.sql import types as T
 
 from ..config import GeoIPConfig
 from ..functions.parse import parse_transcripts, source_may_contain_v6
+from ..operators.aggregate import failure_flag
 from ..operators.enrich import enrich
 from ..sources.geolite2 import default_dims
 
@@ -46,8 +56,8 @@ TRANSCRIPT_SCHEMA = T.StructType([
 
 
 def _default_config() -> GeoIPConfig:
-    """Streaming default mirrors the batch default (pipeline.py): unified
-    family-agnostic source so batch and stream can never drift."""
+    """Streaming default mirrors the batch default (pipeline.py): the
+    unified family-agnostic source, so batch and stream enrich alike."""
     return GeoIPConfig(source="ip_any", target="geoip",
                        database="City", ecs_compatibility=True)
 
@@ -228,7 +238,7 @@ def conv_state_tracker(spark: SparkSession, input_path: str,
     slim = enriched.select(
         "conv_id", "turn_idx", "ts",
         F.col(f"{config.target}.geo.country_iso_code").alias("country"),
-        F.array_contains("tags", "_geoip_lookup_failure").alias("failed"))
+        failure_flag(config.tag_on_failure).alias("failed"))
 
     def update(key, pdf_iter, state: GroupState):
         n, fails, last_country, country_ts = (
@@ -453,8 +463,7 @@ def windowed_stream_agg(spark: SparkSession, input_path: str,
             F.window("ts", window).alias("w"),
             F.col(f"{config.target}.geo.country_iso_code").alias("country_iso_code"))
         .agg(F.count(F.lit(1)).alias("n_turns"),
-             F.sum(F.when(F.array_contains("tags", "_geoip_lookup_failure"), 1)
-                    .otherwise(0)).alias("n_failures"))
+             F.sum(failure_flag(config.tag_on_failure)).alias("n_failures"))
         .select(F.col("w.start").alias("window_start"), "country_iso_code",
                 "n_turns", "n_failures")
     )

@@ -46,7 +46,7 @@ def test_bucket_replication(spark):
 def test_ipv6_key_and_canonical(spark):
     df = spark.createDataFrame(
         [("2607:f0d0:1002:51::4",), ("::1",), ("garbage",)], ["ip"])
-    keyed = df.select(ipkeys.ipv6_to_key(F.col("ip")).alias("k"))
+    keyed = df.select(ipkeys.ipv6_key_lpm_udf(None)(F.col("ip")).alias("k"))
     rows = keyed.select(
         "k",
         ipkeys.ipv6_canonical_from_key(F.col("k.ip_hi"),
@@ -58,6 +58,8 @@ def test_ipv6_key_and_canonical(spark):
     # an invalid literal has a null key; concat_ws would render it as "",
     # which enrich never reads (its v6 leg requires a non-null key)
     assert rows[2]["k"]["ip_hi"] is None and rows[2]["k"]["ip_lo"] is None
+    # the parse-only form (no range index) matches no dim row
+    assert all(r["k"]["dim_idx"] is None for r in rows)
     # ordering: signed (hi, lo) pairs sort like unsigned 128-bit ints
     k0, k1 = rows[0]["k"], rows[1]["k"]
     assert (k1["ip_hi"], k1["ip_lo"]) < (k0["ip_hi"], k0["ip_lo"])
@@ -88,7 +90,7 @@ def test_ipv4_mapped_u32(spark):
         (None, None),
     ]
     df = spark.createDataFrame([(c[0],) for c in cases], ["ip"])
-    keyed = df.select(ipkeys.ipv6_to_key(F.col("ip")).alias("k"))
+    keyed = df.select(ipkeys.ipv6_key_lpm_udf(None)(F.col("ip")).alias("k"))
     hi, lo = F.col("k.ip_hi"), F.col("k.ip_lo")
     out = keyed.select(
         ipkeys.ipv4_mapped_u32(hi, lo).alias("u"),

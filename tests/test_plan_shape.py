@@ -76,7 +76,7 @@ def test_unified_enrich_has_two_broadcast_legs(spark):
     assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) == 2, plan[:3000]
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    # exactly ONE Arrow node — the ipv6_to_key materialization barrier
+    # exactly ONE Arrow node — the ipv6_key_lpm_udf materialization barrier
     # (r5: the pure-Column v6 parser was re-inlined per reference by
     # projection collapse, 30× the CPU; the single ArrowEvalPython computes
     # the (hi, lo) key once). Never row-at-a-time Python.
@@ -111,7 +111,7 @@ def test_v4_only_enrich_skips_v6_machinery(spark):
     # no v6 key derivation at all: neither the Arrow key UDF nor the
     # mapped-key expressions appear in the v4-only plan
     assert "ArrowEvalPython" not in v4_plan
-    assert "ipv6_to_key" not in v4_plan
+    assert "ipv6_key_lpm" not in v4_plan
     assert "BroadcastHashJoin" in v4_plan
     unified_plan = checks.physical_plan(
         m.q_enrich_city(spark, "/root/testdata/sf0.001"))

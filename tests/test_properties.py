@@ -101,12 +101,12 @@ def test_random_ipv6_keys_batch(spark):
     """500 seeded-random IPv6 addresses: (hi, lo) pairs preserve ordering
     and match Python's ipaddress canonical integer."""
     from pyspark.sql import functions as F
-    from logstash_filter_geoip_spark.functions.ipkeys import ipv6_to_key
+    from logstash_filter_geoip_spark.functions.ipkeys import ipv6_key_lpm_udf
 
     rng = random.Random(7)
     addrs = [str(ipaddress.IPv6Address(rng.getrandbits(128))) for _ in range(500)]
     df = spark.createDataFrame([(a,) for a in addrs], ["ip"])
-    rows = df.select("ip", ipv6_to_key(F.col("ip")).alias("k")).collect()
+    rows = df.select("ip", ipv6_key_lpm_udf(None)(F.col("ip")).alias("k")).collect()
     for r in rows:
         n = int(ipaddress.IPv6Address(r["ip"]))
         assert r["k"]["ip_hi"] == ((n >> 64) & (2**64 - 1)) - 2**63
@@ -117,20 +117,9 @@ def test_random_ipv6_keys_batch(spark):
     assert [r["ip"] for r in by_int] == [r["ip"] for r in by_key]
 
 
-def _v6_key_udf(spark, name):
-    from logstash_filter_geoip_spark.functions.ipkeys import (ipv6_key_lpm_udf,
-                                                              ipv6_to_key)
-    from logstash_filter_geoip_spark.operators.enrich import _index_dim_v6
-    from logstash_filter_geoip_spark.sources.geolite2 import load_dim_v6
-    if name == "ipv6_to_key":
-        return ipv6_to_key, None
-    bc, _ = _index_dim_v6(load_dim_v6(spark, "City"))
-    return ipv6_key_lpm_udf(bc), bc.value
-
-
-@pytest.mark.parametrize("udf", ["ipv6_to_key", "ipv6_key_lpm_udf"])
+@pytest.mark.parametrize("udf", ["ipv6_key_lpm_udf"])
 def test_ipv6_key_udf_fuzz_vs_ipaddress(spark, udf):
-    """Adversarial fuzz of both Arrow key UDFs enrich runs: the (hi, lo) key
+    """Adversarial fuzz of the Arrow key UDF enrich runs: the (hi, lo) key
     must agree with Python's ipaddress on EVERY string over the [0-9a-f:.]
     alphabet — valid or not — plus structured near-valid, embedded-quad and
     edge forms, in batches that mix valid and invalid values (the float64
@@ -174,7 +163,11 @@ def test_ipv6_key_udf_fuzz_vs_ipaddress(spark, udf):
             cases.append(":".join(groups[:i]) + "::" + ":".join(groups[j:]))
         else:
             cases.append(":".join(groups))
-    key, ranges = _v6_key_udf(spark, udf)
+    from logstash_filter_geoip_spark.functions.ipkeys import ipv6_key_lpm_udf
+    from logstash_filter_geoip_spark.operators.enrich import _index_dim_v6
+    from logstash_filter_geoip_spark.sources.geolite2 import load_dim_v6
+    bc, _ = _index_dim_v6(load_dim_v6(spark, "City"))
+    key, ranges = ipv6_key_lpm_udf(bc), bc.value
     df = spark.createDataFrame([(c,) for c in cases], "ip string")
     out = df.select("ip", key(F.col("ip")).alias("k")).collect()
     mism = []
@@ -185,14 +178,12 @@ def test_ipv6_key_udf_fuzz_vs_ipaddress(spark, udf):
                     (n & (2**64 - 1)) - 2**63)
         except ValueError:
             want = (None, None)
-        got = (r["k"]["ip_hi"], r["k"]["ip_lo"])
-        if ranges is not None:
-            hits = [] if want[0] is None else [
-                i for i in range(len(ranges["start_hi"]))
-                if (ranges["start_hi"][i], ranges["start_lo"][i]) <= want
-                <= (ranges["end_hi"][i], ranges["end_lo"][i])]
-            want += (hits[0] if hits else None,)
-            got += (r["k"]["dim_idx"],)
+        hits = [] if want[0] is None else [
+            i for i in range(len(ranges["start_hi"]))
+            if (ranges["start_hi"][i], ranges["start_lo"][i]) <= want
+            <= (ranges["end_hi"][i], ranges["end_lo"][i])]
+        want += (hits[0] if hits else None,)
+        got = (r["k"]["ip_hi"], r["k"]["ip_lo"], r["k"]["dim_idx"])
         if got != want:
             mism.append((r["ip"], got, want))
     assert len(out) == len(cases)

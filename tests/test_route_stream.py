@@ -122,6 +122,35 @@ def test_streaming_windowed_agg_matches_batch(spark, tmp_path):
     assert got.count() >= want.count() - 4
 
 
+def test_streaming_windowed_agg_counts_custom_failure_tag(spark, tmp_path):
+    """A custom tag_on_failure is the failure the stream counts: every
+    emitted window's n_failures equals the batch count of rows tagged
+    `_custom` in that window (the one failure predicate,
+    aggregate.failure_flag)."""
+    inp = str(tmp_path / "in_tag")
+    out = str(tmp_path / "out_tag")
+    ckpt = str(tmp_path / "ckpt_tag")
+    _write_stream_input(spark, inp)
+    from logstash_filter_geoip_spark.sources.geolite2 import vendored_dims
+    cfg = GeoIPConfig(source="ip_any", target="geoip", database="City",
+                      ecs_compatibility=True, tag_on_failure=["_custom"])
+    dims = vendored_dims(spark, "City")
+    q = windowed_stream_agg(spark, inp, out, ckpt, lambda: dims, config=cfg)
+    q.awaitTermination(300)
+    got = spark.read.parquet(out)
+
+    batch = enriched_transcripts(spark, SF, cfg)
+    want = (batch.groupBy(F.date_trunc("hour", "ts").alias("window_start"),
+                          F.col("geoip.geo.country_iso_code")
+                           .alias("country_iso_code"))
+                 .agg(F.sum(F.array_contains("tags", "_custom").cast("int"))
+                       .alias("n_failures")))
+    cols = ["window_start", "country_iso_code", "n_failures"]
+    extra = got.select(cols).exceptAll(want.select(cols))
+    assert extra.count() == 0, extra.collect()[:5]
+    assert got.agg(F.sum("n_failures")).collect()[0][0] > 0
+
+
 def test_streaming_hot_db_swap(spark, tmp_path):
     """S4 parity (geoip.rb:156-171): the dimension table re-reads per
     micro-batch — rows processed after a swap see the NEW database without a
