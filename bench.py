@@ -55,6 +55,28 @@ def _build_session(cpus: int):
                      shuffle_partitions=cpus)
 
 
+def materialize_inputs(spark, sf_dir: str, scale_factor: int,
+                       workdir: str) -> None:
+    """Untimed setup: write the transcripts table replicated
+    `scale_factor`× (distinct turn_idx per copy) to `<workdir>/transcripts`
+    and the 4096-range synthetic City dim to `<workdir>/dim`."""
+    from logstash_filter_geoip_spark.sources.geolite2 import load_dim
+    from logstash_filter_geoip_spark.sources.transcripts import load_transcripts
+
+    par = spark.sparkContext.defaultParallelism * 4
+    base = load_transcripts(spark, sf_dir).repartition(par)
+    if scale_factor > 1:
+        base = base.withColumn(
+            "__rep", F.explode(F.sequence(F.lit(1), F.lit(scale_factor)))
+        ).withColumn(
+            "turn_idx",
+            (F.col("turn_idx") * scale_factor + F.col("__rep") - 1).cast("int")
+        ).drop("__rep")
+    base.write.mode("overwrite").parquet(f"{workdir}/transcripts")
+    load_dim(spark, "City", synthetic_n=4096).write.mode(
+        "overwrite").parquet(f"{workdir}/dim")
+
+
 def bench_queries(spark, sf_dir: str, scale_factor: int = 1,
                   workdir: str | None = None):
     """name → zero-arg callable executing one headline job to completion.
@@ -70,22 +92,10 @@ def bench_queries(spark, sf_dir: str, scale_factor: int = 1,
     from logstash_filter_geoip_spark.operators import dedup, similarity, text_ops
     from logstash_filter_geoip_spark.operators.enrich import enrich
     from logstash_filter_geoip_spark.operators.route import route
-    from logstash_filter_geoip_spark.sources.geolite2 import (load_dim,
-                                                              vendored_dims)
-    from logstash_filter_geoip_spark.sources.transcripts import load_transcripts
+    from logstash_filter_geoip_spark.sources.geolite2 import vendored_dims
 
     workdir = workdir or tempfile.mkdtemp(prefix="bench_setup_")
-    par = spark.sparkContext.defaultParallelism * 4
-    base = load_transcripts(spark, sf_dir).repartition(par)
-    if scale_factor > 1:
-        base = base.withColumn(
-            "__rep", F.explode(F.sequence(F.lit(1), F.lit(scale_factor)))
-        ).withColumn(
-            "turn_idx",
-            (F.col("turn_idx") * scale_factor + F.col("__rep") - 1).cast("int")
-        ).drop("__rep")
-    base.write.mode("overwrite").parquet(f"{workdir}/transcripts")
-    load_dim(spark, "City", synthetic_n=4096)         .write.mode("overwrite").parquet(f"{workdir}/dim")
+    materialize_inputs(spark, sf_dir, scale_factor, workdir)
 
     def transcripts():
         return spark.read.parquet(f"{workdir}/transcripts")

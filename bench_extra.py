@@ -463,24 +463,7 @@ def main() -> None:
     spark = bench._build_session(cpus)
     workdir = tempfile.mkdtemp(prefix="bench_extra_")
     try:
-        # same untimed materialization as bench.py
-        from logstash_filter_geoip_spark.sources.geolite2 import load_dim
-        from logstash_filter_geoip_spark.sources.transcripts import (
-            load_transcripts)
-        par = spark.sparkContext.defaultParallelism * 4
-        base = load_transcripts(spark, sf_dir).repartition(par)
-        if scale_factor > 1:
-            base = base.withColumn(
-                "__rep", F.explode(F.sequence(F.lit(1), F.lit(scale_factor)))
-            ).withColumn(
-                "turn_idx",
-                (F.col("turn_idx") * scale_factor + F.col("__rep") - 1)
-                .cast("int")
-            ).drop("__rep")
-        base.write.mode("overwrite").parquet(f"{workdir}/transcripts")
-        load_dim(spark, "City", synthetic_n=4096).write.mode(
-            "overwrite").parquet(f"{workdir}/dim")
-
+        bench.materialize_inputs(spark, sf_dir, scale_factor, workdir)
         comps = components(spark, sf_dir, scale_factor, workdir)
         if filters:
             comps = {k: v for k, v in comps.items()

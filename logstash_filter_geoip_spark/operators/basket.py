@@ -190,7 +190,7 @@ def rule_counts(df: DataFrame, basket_col: str, item_col: str,
     'I' (per-item basket count), 'P' (per-unordered-pair basket count,
     UNFILTERED: min_pair_n is a READ-time threshold, counters must stay
     complete). Counters from disjoint basket sets ADD (groupBy sum) —
-    the state `streaming/incremental.rules_stream` maintains at ingest
+    the state `streaming/incremental.rules_state` maintains at ingest
     under the BASKET-ATOMIC contract (every basket arrives wholly within
     one micro-batch; a split basket would undercount its pairs).
     ``rules_from_counts`` applies the SAME ``_stage2`` the batch operator

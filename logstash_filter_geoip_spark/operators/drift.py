@@ -18,8 +18,8 @@ Four operators:
     date_trunc bucket's category share vs the category's previous
     bucket via lag.
 
-Streaming twins live in streaming/incremental.py (drift_stream /
-rolling_drift_stream): stage-1 counts are pure addition, persisted
+Streaming twins live in streaming/incremental.py (the drift_state /
+rolling_drift_state faces): stage-1 counts are pure addition, persisted
 under the CMS batch-id fence; the read faces apply the SAME stage-2
 arithmetic, so drained == batch row-identically.
 
@@ -77,7 +77,7 @@ def side_counts(df: DataFrame, bucket: Column, bucket_name: str,
                 ts_col: str, split_ts: str) -> DataFrame:
     """Stage 1 — per-bucket (n_base, n_curr) side counts. PURE ADDITION
     under union+re-aggregation, so this is the mergeable state the
-    streaming twin (streaming/incremental.drift_stream) persists."""
+    streaming twin (streaming/incremental.drift_state) persists."""
     # literal cast to the column's OWN type: raw parquet scans surface
     # TIMESTAMP_NTZ and a TIMESTAMP_LTZ literal would not compare (ANSI)
     split = F.lit(split_ts).cast(df.schema[ts_col].dataType)
@@ -298,8 +298,8 @@ def rolling_drift(df: DataFrame, cat_col: str, ts_col: str,
 def rolling_counts_stage(df: DataFrame, cat_col: str, ts_col: str,
                          bucket: str = "day") -> DataFrame:
     """Stage 1 — per-(bucket_ts, category) counts. PURE ADDITION under
-    union+re-aggregation: the mergeable state rolling_drift_stream
-    persists (state size = calendar buckets × categories)."""
+    union+re-aggregation: the mergeable state the rolling_drift_state
+    face persists (state size = calendar buckets × categories)."""
     day = F.date_trunc(bucket, F.col(ts_col))
     return (df.where(F.col(ts_col).isNotNull())
               .groupBy(day.alias("bucket_ts"), F.col(cat_col))

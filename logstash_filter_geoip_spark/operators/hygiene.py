@@ -288,8 +288,8 @@ def seasonal_flags(daily: DataFrame,
                    under_pct: int = SEASONAL_UNDER_PCT) -> DataFrame:
     """Stage 2 (the read face): median baselines + anomaly flags over the
     ALREADY-AGGREGATED daily relation — shared verbatim by the batch
-    operator and seasonal_state_read, so drained-stream == batch is an
-    identity of this one function."""
+    operator and the seasonal face's additive_state_read, so
+    drained-stream == batch is an identity of this one function."""
     if not (0 <= over_pct and 0 <= under_pct <= 100):
         raise ValueError(f"bad pcts: over={over_pct} under={under_pct}")
     wo = Window.partitionBy("event_type", "hr").orderBy("n_events", "day")

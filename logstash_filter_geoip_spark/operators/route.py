@@ -320,11 +320,12 @@ def compact_sink(spark: SparkSession, base_path: str,
 def verify_routing(spark: SparkSession, df: DataFrame, base_path: str) -> dict:
     """The north_rule parity check: sum of per-sink rows == input rows, and
     per-sink counts recomputed from routed rows == manifest counts."""
+    from .aggregate import routed_row_counts
     manifest = read_manifest(base_path)
     routed = read_sink(spark, base_path)
     recomputed = {
-        "|".join(str(r[k]) for k in SINK_KEYS): r["n"]
-        for r in routed.groupBy(*SINK_KEYS).agg(F.count(F.lit(1)).alias("n")).collect()
+        "|".join(str(r[k]) for k in SINK_KEYS): r["n_rows"]
+        for r in routed_row_counts(routed).collect()
     }
     input_rows = df.count()
     ok = (manifest is not None

@@ -57,8 +57,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str],
               left_ts: str, right_ts: str = "valid_from",
               how: str = "left", direction: str = "backward",
               tolerance_s: int | None = None,
-              tie_break: tuple[str, ...] = (),
-              broadcast_right: bool = True) -> DataFrame:
+              tie_break: tuple[str, ...] = ()) -> DataFrame:
     """As-of join: each left row matches AT MOST ONE right row per key —
     backward: the latest right row with ``right_ts <= left_ts``;
     forward: the earliest right row with ``right_ts >= left_ts``
@@ -72,10 +71,9 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str],
     validity intervals (one ``lead``/``lag`` window over the right side
     only), then joined with the key equi-condition plus the interval
     containment residual — so at most one right row can satisfy the
-    condition and the join never duplicates left rows. ``broadcast_right``
-    pins a BroadcastHashJoin for snapshot-sized right sides (the common
-    case: config/dimension snapshots); pass False to let Catalyst pick a
-    shuffled equi-join for data-sized right sides.
+    condition and the join never duplicates left rows. The right side is
+    broadcast (a BroadcastHashJoin): it is snapshot-sized, e.g.
+    config/dimension snapshots.
 
     Right-side non-key columns must not collide with left columns (raises).
     """
@@ -106,10 +104,8 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str],
         # row valid for left_ts in (prev_ts, ts] — at a right-ts tie the
         # FIRST-ordered row matches (the later one's lower bound closes it)
         r = right.withColumn("__asof_until", F.lag(right_ts).over(w))
-    if broadcast_right:
-        r = F.broadcast(r)
 
-    lf, rf = left.alias("__l"), r.alias("__r")
+    lf, rf = left.alias("__l"), F.broadcast(r).alias("__r")
     lts = lf[left_ts]
     rts, until = rf[right_ts], rf["__asof_until"]
     # plain SQL equality: a null key never matches (merge_asof parity — and

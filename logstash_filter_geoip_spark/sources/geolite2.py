@@ -235,13 +235,10 @@ def synthetic_asn_rows(n: int) -> list:
 
 
 def load_dim(spark: SparkSession, database: str = "City",
-             extra_rows: list | None = None,
              synthetic_n: int = 0) -> DataFrame:
-    """Build the dimension DataFrame for a logical database type.
-
-    Parity with S2/S3 (geoip.rb:187-199): when no explicit rows are given,
-    the "vendored" golden tables load by default. `synthetic_n` appends
-    deterministic filler for scale tests.
+    """Build the dimension DataFrame for a logical database type: the
+    golden tables (parity with S2/S3, geoip.rb:187-199). `synthetic_n`
+    appends deterministic filler for scale tests.
     """
     schema = SCHEMAS[database]
     rows = list(GOLDEN_ROWS[database])
@@ -252,8 +249,6 @@ def load_dim(spark: SparkSession, database: str = "City",
             rows += synthetic_asn_rows(synthetic_n)
         else:
             raise ValueError(f"synthetic filler only for City/ASN, not {database}")
-    if extra_rows:
-        rows += extra_rows
     return spark.createDataFrame(rows, schema)
 
 

@@ -31,8 +31,10 @@ verifies above the Jaccard threshold via the signature-agreement estimate.
 Same at-least-once contract, same compaction story (`near_compact_state`).
 
 The additive faces further down (cms, qsketch, drift, rolling_drift, index,
-rules, cluster, seasonal) are exactly-once instead: each is one
-:class:`AdditiveState` spec run by the shared fenced apply/stream/read.
+rules, cluster, seasonal) are exactly-once instead: each public
+``<face>_state`` factory builds one :class:`AdditiveState` spec, and one
+fenced ``additive_apply_batch`` / ``additive_stream`` /
+``additive_state_read`` runs every face.
 """
 
 from __future__ import annotations
@@ -624,11 +626,20 @@ def _sketch_state_read(spark: SparkSession, sketch_path: str,
     return reader.parquet(sketch_path), committed
 
 
-def _additive_apply_batch(spark: SparkSession, spec: AdditiveState,
-                          batch: DataFrame, batch_id: int,
-                          path: str) -> bool:
-    """One maintenance step of any additive face; False when fenced (the
-    fence contract is spelled out on cms_apply_batch)."""
+def additive_apply_batch(spark: SparkSession, spec: AdditiveState,
+                         batch: DataFrame, batch_id: int, path: str) -> bool:
+    """One maintenance step of any additive face into its state directory
+    `path` (``<state_path>/<spec.subdir>``); returns False when the batch
+    was fenced.
+
+    Every face's merge is pure ADDITION — NOT idempotent — so exactly-once
+    cannot lean on the operator like scd2_stream does. Instead the
+    committed batch id rides inside the swapped state directory: a crash
+    between the swap and Spark's checkpoint commit replays the SAME
+    batch_id, the fence sees id <= committed, and the re-application is a
+    no-op. (Corollary, pinned by test: wiping the CHECKPOINT while keeping
+    the state double-counts — the fence is per-batch-id, so the checkpoint
+    is part of an additive face's state, unlike scd2_stream's.)"""
     prev, committed = _sketch_state_read(spark, path, spec.schema)
     if batch_id <= committed:
         return False
@@ -638,25 +649,35 @@ def _additive_apply_batch(spark: SparkSession, spec: AdditiveState,
     return True
 
 
-def _additive_stream(spark: SparkSession, spec: AdditiveState,
-                     input_path: str, state_path: str, checkpoint_path: str,
-                     schema: T.StructType, available_now: bool):
-    """File-source → foreachBatch(fenced apply) into
-    `<state_path>/<spec.subdir>`, with `spec.meta` pinned beside it first.
-    Local state paths only (the rename swap)."""
+def additive_stream(spark: SparkSession, spec: AdditiveState,
+                    input_path: str, state_path: str, checkpoint_path: str,
+                    schema: T.StructType, available_now: bool = True):
+    """Maintain one additive face from a stream: file-source →
+    foreachBatch(additive_apply_batch) into ``<state_path>/<spec.subdir>``
+    — bounded state however much traffic flows. `spec.meta` is pinned
+    beside the state first, so resuming with different parameters raises
+    instead of adding incompatible counters. Local state paths only (the
+    rename swap); remote state belongs in a transactional table."""
     _local_only(state_path)
     _meta_guard(state_path, spec.meta, spec.face, spec.consequence)
     path = os.path.join(state_path, spec.subdir)
     return foreach_batch_stream(
         spark, input_path, schema, checkpoint_path,
-        lambda batch, batch_id: _additive_apply_batch(
+        lambda batch, batch_id: additive_apply_batch(
             spark, spec, batch, batch_id, path),
         available_now, spec.max_files)
 
 
-def _additive_state_read(spark: SparkSession, spec: AdditiveState,
-                         state_path: str, *args, **kw):
-    """Stage 2 over the drained state: ``spec.read_face(counts, ...)``."""
+def additive_state_read(spark: SparkSession, face: str, state_path: str,
+                        *args, **kw):
+    """Stage 2 over a drained state: the face's ``read_face(counts, *args,
+    **kw)``, the IDENTICAL arithmetic the batch operator runs — so the
+    read is row-identical to the batch operator on the union of every
+    ingested input (equality test-pinned per face), answered without
+    rescanning events. The spec is rebuilt from the pinned meta.json, so
+    the face name (drift, rolling_drift, index, rules, cluster or
+    seasonal) and the state path are all a read needs."""
+    spec = _SPEC_FROM_META[face](_pinned_meta(state_path))
     counts, _ = _sketch_state_read(
         spark, os.path.join(state_path, spec.subdir), schema=None)
     if counts is None:
@@ -681,12 +702,19 @@ _CMS_SCHEMA = T.StructType([
 ])
 
 
-def _cms_state(key_col: str, w: int, d: int, salt: str,
-               hash_basis: str) -> AdditiveState:
+def cms_state(key_col: str, w: int | None = None, d: int | None = None,
+              salt: str = "cms-v1",
+              hash_basis: str = "xxhash64") -> AdditiveState:
+    """Count-min frequency face: per micro-batch cms_build, counters added
+    — constant state (d×w counters), the streaming face of the
+    heavy-hitter sketch; estimate with aggregate.cms_estimate over
+    ``<state>/sketch``."""
     # counters are only addable under the EXACT bucket hash that wrote
     # them: a changed (w, d, salt, basis) would fold garbage minima
-    from logstash_filter_geoip_spark.operators.aggregate import (cms_build,
-                                                                 cms_merge)
+    from logstash_filter_geoip_spark.operators.aggregate import (
+        CMS_D, CMS_W, cms_build, cms_merge)
+    w = CMS_W if w is None else w
+    d = CMS_D if d is None else d
     return AdditiveState(
         "cms", "counters from different bucket hashes cannot be added.",
         "sketch", {"w": w, "d": d, "salt": salt, "hash_basis": hash_basis},
@@ -695,54 +723,22 @@ def _cms_state(key_col: str, w: int, d: int, salt: str,
         cms_merge, schema=_CMS_SCHEMA)
 
 
-def cms_apply_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
-                    sketch_path: str, key_col: str, w: int, d: int,
-                    salt: str, hash_basis: str) -> bool:
-    """One maintenance step; returns False when the batch was fenced.
-
-    CMS merge is pure ADDITION — NOT idempotent — so exactly-once cannot
-    lean on the operator like scd2_stream does. Instead the committed
-    batch id rides inside the swapped state directory: a crash between
-    the swap and Spark's checkpoint commit replays the SAME batch_id,
-    the fence sees id <= committed, and the re-application is a no-op.
-    (Corollary, pinned by test: wiping the CHECKPOINT while keeping the
-    state double-counts — the fence is per-batch-id, so the checkpoint is
-    part of this operator's state, unlike scd2_stream's.)"""
-    return _additive_apply_batch(
-        spark, _cms_state(key_col, w, d, salt, hash_basis), batch,
-        batch_id, sketch_path)
-
-
-def cms_stream(spark: SparkSession, input_path: str, state_path: str,
-               checkpoint_path: str, schema: T.StructType, key_col: str,
-               w: int | None = None, d: int | None = None,
-               salt: str = "cms-v1", hash_basis: str = "xxhash64",
-               available_now: bool = True):
-    """Maintain a count-min frequency sketch from a stream: per micro-batch
-    cms_build + counter addition into a swapped parquet state — constant
-    state size (d×w counters) however much traffic flows, the streaming
-    face of the heavy-hitter sketch. Parameters are meta-pinned; replay
-    safety comes from the batch-id fence committed atomically WITH the
-    counters (see cms_apply_batch). Local state paths only (the rename
-    swap); remote state belongs in a transactional table."""
-    from logstash_filter_geoip_spark.operators.aggregate import CMS_D, CMS_W
-    w = CMS_W if w is None else w
-    d = CMS_D if d is None else d
-    return _additive_stream(
-        spark, _cms_state(key_col, w, d, salt, hash_basis), input_path,
-        state_path, checkpoint_path, schema, available_now)
-
-
 # ---------------------------------------------------------------------------
 # streaming quantile-sketch maintenance (the qsketch's streaming face)
 # ---------------------------------------------------------------------------
 
 
-def _qsketch_state(keys: tuple[str, ...], value_col: str,
-                   sub_bits: int) -> AdditiveState:
+def qsketch_state(keys: tuple[str, ...], value_col: str,
+                  sub_bits: int | None = None) -> AdditiveState:
+    """Per-key quantile-sketch face: per micro-batch qsketch_build, bucket
+    counters added — ≤~2k rows per key, latency percentiles answered any
+    time by aggregate.qsketch_quantiles over ``<state>/sketch`` with NO
+    event rescan. The state schema is whatever qsketch_build emits,
+    inferred on read, so keyed sketches of any key type round-trip."""
     # a different sub_bits silently mixes incompatible bucket grids
     from logstash_filter_geoip_spark.operators.aggregate import (
-        qsketch_build, qsketch_merge)
+        QSKETCH_SUB_BITS, qsketch_build, qsketch_merge)
+    sub_bits = QSKETCH_SUB_BITS if sub_bits is None else sub_bits
     return AdditiveState(
         "qsketch", "counters from different bucketings cannot be added.",
         "sketch",
@@ -751,179 +747,69 @@ def _qsketch_state(keys: tuple[str, ...], value_col: str,
         lambda union: qsketch_merge(union, keys))
 
 
-def qsketch_apply_batch(spark: SparkSession, batch: DataFrame,
-                        batch_id: int, sketch_path: str,
-                        keys: tuple[str, ...], value_col: str,
-                        sub_bits: int) -> bool:
-    """One quantile-sketch maintenance step; returns False when fenced.
-
-    Bucket counters are pure ADDITION, so this is the shared additive
-    fence (see cms_apply_batch). The state schema is whatever
-    qsketch_build emits for (keys, bucket, c) — inferred on read, so
-    keyed sketches of any key type round-trip."""
-    return _additive_apply_batch(
-        spark, _qsketch_state(keys, value_col, sub_bits), batch, batch_id,
-        sketch_path)
-
-
-def qsketch_stream(spark: SparkSession, input_path: str, state_path: str,
-                   checkpoint_path: str, schema: T.StructType,
-                   keys: tuple[str, ...], value_col: str,
-                   sub_bits: int | None = None,
-                   available_now: bool = True):
-    """Maintain per-key quantile sketches from a stream: per micro-batch
-    qsketch_build + counter addition into a swapped parquet state —
-    ≤~2k bucket rows per key however much traffic flows, the streaming
-    face of the rank sketch (latency percentiles over an event stream,
-    answered any time from the stored state with qsketch_quantiles and NO
-    event rescan). Parameters meta-pinned; replay safety = the batch-id
-    fence committed atomically with the counters. Local state paths only
-    (the rename swap); remote state belongs in a transactional table."""
-    from logstash_filter_geoip_spark.operators.aggregate import \
-        QSKETCH_SUB_BITS
-    sub_bits = QSKETCH_SUB_BITS if sub_bits is None else sub_bits
-    return _additive_stream(
-        spark, _qsketch_state(keys, value_col, sub_bits), input_path,
-        state_path, checkpoint_path, schema, available_now)
-
-
 # ---------------------------------------------------------------------------
 # streaming distribution-drift maintenance (operators/drift.py's twin)
 # ---------------------------------------------------------------------------
 
 
-def _drift_spec(cat_col: str | None, value_col: str | None,
-                lo: float | None, hi: float | None,
-                n_buckets: int | None, ts_col: str,
-                split_ts: str) -> dict:
+def drift_state(ts_col: str, split_ts: str, cat_col: str | None = None,
+                value_col: str | None = None, lo: float | None = None,
+                hi: float | None = None,
+                n_buckets: int | None = None) -> AdditiveState:
+    """Distribution-drift face: per micro-batch drift.side_counts, side
+    counts added — ≤ |buckets| rows of state, the streaming feed monitor
+    over exactly one of cat_col (categorical) or value_col binned by
+    lo/hi/n_buckets. Read face: drift.with_shares(counts, lift=(12, 10));
+    compose with drift.drift_summary for the TVD rollup."""
     if (cat_col is None) == (value_col is None):
         raise ValueError("exactly one of cat_col / value_col is required")
     if cat_col is not None:
-        return {"kind": "categorical", "col": cat_col,
-                "ts_col": ts_col, "split_ts": split_ts}
+        return _drift_state({"kind": "categorical", "col": cat_col,
+                             "ts_col": ts_col, "split_ts": split_ts})
     if lo is None or hi is None or n_buckets is None:
         raise ValueError("value drift requires lo, hi, n_buckets")
-    return {"kind": "value", "col": value_col, "lo": float(lo),
-            "hi": float(hi), "n_buckets": int(n_buckets),
-            "ts_col": ts_col, "split_ts": split_ts}
-
-
-def _drift_bucket(spec: dict):
-    from logstash_filter_geoip_spark.operators.aggregate import \
-        bucket_idx_expr
-    if spec["kind"] == "categorical":
-        return F.col(spec["col"]), spec["col"]
-    return (bucket_idx_expr(spec["col"], spec["lo"], spec["hi"],
-                            spec["n_buckets"]), "bucket_idx")
+    return _drift_state({"kind": "value", "col": value_col, "lo": float(lo),
+                         "hi": float(hi), "n_buckets": int(n_buckets),
+                         "ts_col": ts_col, "split_ts": split_ts})
 
 
 def _drift_state(spec: dict) -> AdditiveState:
     # the full bucket rule AND split timestamp are pinned: a different
     # split silently mixes windows, a different binning mixes grids
     from logstash_filter_geoip_spark.operators import drift
-    bucket, name = _drift_bucket(spec)
+    from logstash_filter_geoip_spark.operators.aggregate import \
+        bucket_idx_expr
+    if spec["kind"] == "categorical":
+        bucket, name = F.col(spec["col"]), spec["col"]
+    else:
+        bucket, name = bucket_idx_expr(spec["col"], spec["lo"], spec["hi"],
+                                       spec["n_buckets"]), "bucket_idx"
     return AdditiveState(
         "drift", "side counts from different bucket/split rules cannot "
         "be added.", "counts", spec,
         lambda batch, prev: drift.side_counts(
             batch, bucket, name, spec["ts_col"], spec["split_ts"]),
         _sum_by((name,), "n_base", "n_curr"),
-        lambda counts, lift: drift.with_shares(counts, name, lift))
+        lambda counts, lift=(12, 10): drift.with_shares(counts, name, lift))
 
 
-def drift_apply_batch(spark: SparkSession, batch: DataFrame,
-                      batch_id: int, counts_path: str,
-                      spec: dict) -> bool:
-    """One drift-state maintenance step; returns False when fenced.
-
-    Side counts are pure ADDITION — the shared additive fence (see
-    cms_apply_batch); wiping the CHECKPOINT while keeping the state
-    double-counts (the checkpoint is part of this operator's state)."""
-    return _additive_apply_batch(spark, _drift_state(spec), batch,
-                                 batch_id, counts_path)
-
-
-def drift_state_read(spark: SparkSession, state_path: str,
-                     lift: tuple[int, int] = (12, 10)):
-    """The read face: ppm shares + lift flags over the persisted side
-    counts — drift.with_shares, the IDENTICAL stage-2 arithmetic the
-    batch operator runs, so a drained stream's drift relation is
-    row-identical to the batch operator on the union of its inputs
-    (equality test-pinned). Answerable any time without event rescans;
-    compose with drift.drift_summary for the TVD rollup."""
-    return _additive_state_read(
-        spark, _drift_state(_pinned_meta(state_path)), state_path, lift)
-
-
-def drift_stream(spark: SparkSession, input_path: str, state_path: str,
-                 checkpoint_path: str, schema: T.StructType, ts_col: str,
-                 split_ts: str, cat_col: str | None = None,
-                 value_col: str | None = None, lo: float | None = None,
-                 hi: float | None = None, n_buckets: int | None = None,
-                 available_now: bool = True):
-    """Maintain distribution-drift side counts from a stream: per
-    micro-batch drift.side_counts + counter addition into a swapped
-    parquet state — ≤ |buckets| rows of state however much traffic
-    flows, the streaming face of the feed monitor (categorical via
-    cat_col, binned numeric via value_col+lo/hi/n_buckets). Spec is
-    meta-pinned; replay safety = the batch-id fence committed atomically
-    with the counters (see drift_apply_batch). Local state paths only
-    (the rename swap); remote state belongs in a transactional table."""
-    spec = _drift_spec(cat_col, value_col, lo, hi, n_buckets, ts_col,
-                       split_ts)
-    return _additive_stream(spark, _drift_state(spec), input_path,
-                            state_path, checkpoint_path, schema,
-                            available_now)
-
-
-def _rolling_drift_state(spec: dict) -> AdditiveState:
+def rolling_drift_state(cat_col: str, ts_col: str,
+                        bucket: str = "day") -> AdditiveState:
+    """Bucket-over-bucket categorical drift face: per micro-batch
+    drift.rolling_counts_stage, per-(bucket_ts, category) counts added —
+    calendar buckets × categories rows of state. Read face:
+    drift.rolling_shares(counts, lift=(12, 10))."""
     from logstash_filter_geoip_spark.operators import drift
-    col = spec["col"]
     return AdditiveState(
         "rolling-drift", "counts from different bucket granularities or "
-        "category columns cannot be added.", "counts", spec,
+        "category columns cannot be added.", "counts",
+        {"kind": "rolling", "col": cat_col, "ts_col": ts_col,
+         "bucket": bucket},
         lambda batch, prev: drift.rolling_counts_stage(
-            batch, col, spec["ts_col"], spec["bucket"]),
-        _sum_by(("bucket_ts", col), "n"),
-        lambda counts, lift: drift.rolling_shares(counts, col, lift))
-
-
-def rolling_drift_apply_batch(spark: SparkSession, batch: DataFrame,
-                              batch_id: int, counts_path: str,
-                              spec: dict) -> bool:
-    """One rolling-drift maintenance step; returns False when fenced.
-    Per-(bucket_ts, category) counts are pure ADDITION — same fence
-    contract as drift_apply_batch; state size = calendar buckets ×
-    categories (one row per pair, however much traffic flows)."""
-    return _additive_apply_batch(spark, _rolling_drift_state(spec), batch,
-                                 batch_id, counts_path)
-
-
-def rolling_drift_state_read(spark: SparkSession, state_path: str,
-                             lift: tuple[int, int] = (12, 10)):
-    """Read face: drift.rolling_shares — the IDENTICAL stage-2 arithmetic
-    as the batch operator, so a drained stream's rolling-drift relation
-    is row-identical to rolling_drift on the union of its inputs."""
-    return _additive_state_read(
-        spark, _rolling_drift_state(_pinned_meta(state_path)), state_path,
-        lift)
-
-
-def rolling_drift_stream(spark: SparkSession, input_path: str,
-                         state_path: str, checkpoint_path: str,
-                         schema: T.StructType, cat_col: str, ts_col: str,
-                         bucket: str = "day",
-                         available_now: bool = True):
-    """Maintain day-over-day categorical drift from a stream: per
-    micro-batch rolling_counts_stage + counter addition into the swapped
-    parquet state. Spec meta-pinned (a different bucket granularity or
-    category column cannot be added); exactly-once = the CMS batch-id
-    fence. Local state paths only (the rename swap)."""
-    spec = {"kind": "rolling", "col": cat_col, "ts_col": ts_col,
-            "bucket": bucket}
-    return _additive_stream(spark, _rolling_drift_state(spec), input_path,
-                            state_path, checkpoint_path, schema,
-                            available_now)
+            batch, cat_col, ts_col, bucket),
+        _sum_by(("bucket_ts", cat_col), "n"),
+        lambda counts, lift=(12, 10): drift.rolling_shares(
+            counts, cat_col, lift))
 
 
 # ---------------------------------------------------------------------------
@@ -961,7 +847,7 @@ def sample_state_read(spark: SparkSession, state_path: str,
                       strata_col: str, key_col: str, k: int,
                       salt: str) -> DataFrame:
     """Read the maintained sample and re-derive ``sample_rank`` (stage 2 on
-    read, the drift_state_read convention — the state stores rows only;
+    read, the additive_state_read convention — the state stores rows only;
     rank is a pure function of the kept set). Row-identical to running
     sampling.sample_exact_k over everything ingested so far."""
     saved = _pinned_meta(state_path)
@@ -1011,6 +897,30 @@ def sample_stream(spark: SparkSession, input_path: str, state_path: str,
 # ---------------------------------------------------------------------------
 
 
+def index_state(schema: T.StructType,
+                text_col: str = "text") -> AdditiveState:
+    """BM25-probeable inverted-index face: per micro-batch tokenize →
+    postings under the fence. After any drain,
+    ``bm25_from_index(*additive_state_read(spark, "index", state))``
+    returns row-for-row what the batch ``bm25_multi_topk`` computes over
+    every document ingested so far (pinned by test). Re-ingested doc_ids
+    are FIRST-WINS — the batch anti-joins the already-admitted doc set
+    (the dedup_stream admission semantic), so re-publishing a doc never
+    corrupts df. The `schema`'s doc_id type is pinned with the tokenizer.
+
+    State rows use ONE union schema: posting rows (term, doc_id, dl, tf)
+    plus a term-NULL row per admitted doc carrying its dl (NULL for
+    NULL-text docs — they count toward N but not sum_dl, mirroring the
+    batch scan's F.sum semantics). The read face splits them into
+    (postings, doclens).
+
+    Scale note: the swap rewrites the full postings relation per batch —
+    at production scale the state belongs in a transactional table with
+    appends (the dedup_stream boundary); the fence/meta/first-wins
+    semantics carry over unchanged."""
+    return _index_state(text_col, str(schema["doc_id"].dataType))
+
+
 def _index_state(text_col: str, id_type: str) -> AdditiveState:
     # postings built under a different tokenizer/text column are a
     # DIFFERENT index: merging them silently skews df/dl for every query
@@ -1031,69 +941,45 @@ def _index_state(text_col: str, id_type: str) -> AdditiveState:
             F.lit(None).cast("long").alias("tf"))
         return post.unionByName(dld)
 
+    def read_face(state: DataFrame) -> tuple[DataFrame, DataFrame]:
+        # doclens holds EVERY admitted doc, so N and sum_dl reproduce the
+        # batch scan exactly
+        return (state.where(F.col("term").isNotNull())
+                     .select("term", "doc_id", "dl", "tf"),
+                state.where(F.col("term").isNull()).select("doc_id", "dl"))
+
     return AdditiveState(
         "postings index", "postings from different tokenizers/columns "
         "cannot be merged.", "index",
         {"kind": "postings_index", "word_re": WORD_RE,
-         "text_col": text_col, "id_type": id_type}, build)
-
-
-def index_state_read(spark: SparkSession, index_path: str):
-    """(postings, doclens, committed batch id) from the drained index
-    state. ``postings`` is the (term, doc_id, dl, tf) relation
-    :func:`retrieval.bm25_from_index` probes; ``doclens`` is (doc_id, dl)
-    for EVERY admitted doc — zero-token and NULL-text docs ride a
-    term-NULL row so N and sum_dl reproduce the batch scan exactly."""
-    state, committed = _sketch_state_read(spark, index_path, None)
-    if state is None:
-        return None, None, committed
-    return (state.where(F.col("term").isNotNull())
-                 .select("term", "doc_id", "dl", "tf"),
-            state.where(F.col("term").isNull()).select("doc_id", "dl"),
-            committed)
-
-
-def index_apply_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
-                      index_path: str, text_col: str = "text") -> bool:
-    """One index-maintenance step; returns False when the batch was fenced.
-
-    Appends are NOT idempotent (a replayed batch would double tf/df), so
-    the shared additive fence applies. Re-ingested doc_ids are FIRST-WINS
-    — the batch anti-joins the already-admitted doc set (the dedup_stream
-    admission semantic), so re-publishing a doc never corrupts df.
-
-    State rows use ONE union schema: posting rows (term, doc_id, dl, tf)
-    plus a term-NULL row per admitted doc carrying its dl (NULL for
-    NULL-text docs — they count toward N but not sum_dl, mirroring the
-    batch scan's F.sum semantics).
-    """
-    spec = _index_state(text_col, str(batch.schema["doc_id"].dataType))
-    return _additive_apply_batch(spark, spec, batch, batch_id, index_path)
-
-
-def index_stream(spark: SparkSession, input_path: str, state_path: str,
-                 checkpoint_path: str, schema: T.StructType,
-                 text_col: str = "text", available_now: bool = True):
-    """Maintain a BM25-probeable inverted index from a document stream:
-    per micro-batch tokenize → postings append under the batch-id fence —
-    after any drain, ``bm25_from_index(*index_state_read(...))`` returns
-    row-for-row what the batch ``bm25_multi_topk`` computes over every
-    document ingested so far (pinned by test). Tokenizer/text-column/id
-    parameters are meta-pinned; local state paths only (the rename swap).
-
-    Scale note: the swap rewrites the full postings relation per batch —
-    at production scale the state belongs in a transactional table with
-    appends (the dedup_stream boundary); the fence/meta/first-wins
-    semantics carry over unchanged.
-    """
-    spec = _index_state(text_col, str(schema["doc_id"].dataType))
-    return _additive_stream(spark, spec, input_path, state_path,
-                            checkpoint_path, schema, available_now)
+         "text_col": text_col, "id_type": id_type}, build,
+        read_face=read_face)
 
 
 # ---------------------------------------------------------------------------
 # streaming association-rule maintenance (operators/basket.py's twin)
 # ---------------------------------------------------------------------------
+
+
+def rules_state(schema: T.StructType, basket_col: str, item_col: str,
+                max_basket: int | None = None) -> AdditiveState:
+    """Association-rule face: per micro-batch basket.rule_counts, counters
+    added — ≤ |items|² pair rows + |items| item rows + 1 total row;
+    support/confidence/lift answered any time by the read face
+    basket.rules_from_counts(counts, min_pair_n=1) with NO basket rescan.
+    max_basket and the `schema`'s item type are pinned.
+
+    Counter addition is valid ONLY under the BASKET-ATOMIC contract:
+    every basket arrives wholly within one micro-batch (order-shaped
+    ingestion, where an order's lines land together). A basket split
+    across batches is counted as two disjoint sub-baskets — its
+    cross-batch pairs are silently lost; route such feeds through the
+    batch operator over a completed snapshot instead."""
+    from logstash_filter_geoip_spark.operators.basket import MAX_BASKET
+    return _rules_state(
+        basket_col, item_col,
+        MAX_BASKET if max_basket is None else max_basket,
+        schema[item_col].dataType.simpleString())
 
 
 def _rules_state(basket_col: str, item_col: str, max_basket: int,
@@ -1119,66 +1005,24 @@ def _rules_state(basket_col: str, item_col: str, max_basket: int,
         max_files=1)
 
 
-def rules_apply_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
-                      sketch_path: str, basket_col: str, item_col: str,
-                      max_basket: int) -> bool:
-    """One rule-counter maintenance step; returns False when fenced.
-
-    Counter addition is valid ONLY under the BASKET-ATOMIC contract:
-    every basket arrives wholly within one micro-batch (order-shaped
-    ingestion, where an order's lines land together). A basket split
-    across batches is counted as two disjoint sub-baskets — its
-    cross-batch pairs are silently lost; route such feeds through the
-    batch operator over a completed snapshot instead. Addition is NOT
-    idempotent, so exactly-once is the shared additive batch-id fence."""
-    item_type = batch.schema[item_col].dataType.simpleString()
-    return _additive_apply_batch(
-        spark, _rules_state(basket_col, item_col, max_basket, item_type),
-        batch, batch_id, sketch_path)
-
-
-def rules_state_read(spark: SparkSession, state_path: str,
-                     min_pair_n: int = 1):
-    """The current rule relation from stored counters — the identical
-    stage-2 arithmetic as the batch operator (basket.rules_from_counts),
-    no basket rescans."""
-    return _additive_state_read(
-        spark, _rules_state(**_pinned_meta(state_path)), state_path,
-        min_pair_n=min_pair_n)
-
-
-def rules_stream(spark: SparkSession, input_path: str, state_path: str,
-                 checkpoint_path: str, schema: T.StructType,
-                 basket_col: str, item_col: str,
-                 max_basket: int | None = None,
-                 available_now: bool = True):
-    """Maintain association-rule counters from a stream: per micro-batch
-    basket.rule_counts + counter addition into a swapped parquet state —
-    state is ≤ |items|² pair rows + |items| item rows + 1 total row
-    however much traffic flows; support/confidence/lift answered any time
-    from the stored counters (rules_state_read) with NO basket rescan.
-    BASKET-ATOMIC input contract and the CMS exactly-once fence (see
-    rules_apply_batch); parameters meta-pinned incl. the item type.
-    Local state paths only (the rename swap)."""
-    from logstash_filter_geoip_spark.operators.basket import MAX_BASKET
-    max_basket = MAX_BASKET if max_basket is None else max_basket
-    item_type = schema[item_col].dataType.simpleString()
-    return _additive_stream(
-        spark, _rules_state(basket_col, item_col, max_basket, item_type),
-        input_path, state_path, checkpoint_path, schema, available_now)
-
-
 # ---------------------------------------------------------------------------
 # streaming cluster-occupancy monitor (the integer k-means streaming face)
 # ---------------------------------------------------------------------------
 
 
-def _cluster_state(centroids: list[list[int]], dim: int,
-                   emb_col: str) -> AdditiveState:
+def cluster_state(centroids: list[list[int]], dim: int | None = None,
+                  emb_col: str = "embedding") -> AdditiveState:
+    """Cluster-occupancy face: per micro-batch clustering.cluster_profile
+    — the IDENTICAL fixed-centroid assignment + rollup the batch operator
+    runs (one definition, never forked) — with (n_members, inertia) added
+    per cid: ≤ k rows of state, the corpus-composition monitor ("which
+    topics is the feed drifting toward") answered without rescanning
+    vectors. Centroids come from a batch clustering.train_centroids run."""
     # the FULL centroid matrix (k×dim BIGINTs — argument-bounded) is
     # pinned: changed centroids would mix two cluster geometries
-    from logstash_filter_geoip_spark.operators.clustering import \
-        cluster_profile
+    from logstash_filter_geoip_spark.operators.clustering import (
+        DIM, cluster_profile)
+    dim = DIM if dim is None else dim
     return AdditiveState(
         "cluster", "occupancy counters from different centroid sets cannot "
         "be added.", "sketch",
@@ -1189,59 +1033,17 @@ def _cluster_state(centroids: list[list[int]], dim: int,
         _sum_by(("cid",), "n_members", "inertia"))
 
 
-def cluster_apply_batch(spark: SparkSession, batch: DataFrame,
-                        batch_id: int, sketch_path: str,
-                        centroids: list[list[int]], dim: int,
-                        emb_col: str) -> bool:
-    """One occupancy-maintenance step; returns False when fenced.
-
-    The per-batch profile is clustering.cluster_profile — the IDENTICAL
-    assignment + rollup the batch operator runs (one definition, never
-    forked) — and profiles are pure ADDITION across inputs (not
-    idempotent), so exactly-once is the shared sketch batch-id fence
-    committed atomically with the counters."""
-    return _additive_apply_batch(
-        spark, _cluster_state(centroids, dim, emb_col), batch, batch_id,
-        sketch_path)
-
-
-def cluster_state_read(spark: SparkSession, state_path: str) -> DataFrame:
-    """The read face: the (cid, n_members, inertia) occupancy profile —
-    row-identical to batch clustering.cluster_profile over the union of
-    every ingested input (equality test-pinned), answered any time from
-    ≤ k rows of state with no vector rescan."""
-    return _additive_state_read(
-        spark, _cluster_state(**_pinned_meta(state_path)), state_path)
-
-
-def cluster_stream(spark: SparkSession, input_path: str, state_path: str,
-                   checkpoint_path: str, schema: T.StructType,
-                   centroids: list[list[int]], dim: int | None = None,
-                   emb_col: str = "embedding",
-                   available_now: bool = True):
-    """Maintain a cluster-occupancy profile from an embedding stream: per
-    micro-batch fixed-centroid assignment (clustering.assign_fixed — pure
-    codegen, no shuffle beyond the ≤k-group rollup) + counter addition
-    into a swapped parquet state — ≤ k rows of state however much traffic
-    flows, the corpus-composition monitor ("which topics is the feed
-    drifting toward") answered without rescanning vectors. Centroids come
-    from a batch clustering.train_centroids run and are meta-pinned in
-    full; replay safety = the batch-id fence committed atomically with
-    the counters. Local state paths only (the rename swap); remote state
-    belongs in a transactional table."""
-    from logstash_filter_geoip_spark.operators.clustering import DIM
-    dim = DIM if dim is None else dim
-    return _additive_stream(
-        spark, _cluster_state(centroids, dim, emb_col), input_path,
-        state_path, checkpoint_path, schema, available_now)
-
-
 # ---------------------------------------------------------------------------
 # streaming seasonal-baseline maintenance (hygiene.seasonal_anomalies' twin)
 # ---------------------------------------------------------------------------
 
 
-def _seasonal_state(ts_col: str) -> AdditiveState:
+def seasonal_state(ts_col: str = "ts") -> AdditiveState:
+    """Hour-of-day seasonal-baseline face: per micro-batch
+    hygiene.seasonal_daily, cell counts added — types × days × 24 rows of
+    state (the rolling_drift calendar-sized precedent). Read face:
+    hygiene.seasonal_flags(counts, over_pct, under_pct), the batch
+    operator's median baselines + anomaly flags."""
     # a different ts column silently mixes calendars
     from logstash_filter_geoip_spark.operators import hygiene
     return AdditiveState(
@@ -1252,45 +1054,13 @@ def _seasonal_state(ts_col: str) -> AdditiveState:
         hygiene.seasonal_flags)
 
 
-def seasonal_apply_batch(spark: SparkSession, batch: DataFrame,
-                         batch_id: int, counts_path: str,
-                         ts_col: str) -> bool:
-    """One seasonal-state maintenance step; returns False when fenced.
-
-    Daily-hour cell counts are pure ADDITION (not idempotent) — the
-    shared additive fence (see cms_apply_batch); the checkpoint is part
-    of this operator's state."""
-    return _additive_apply_batch(spark, _seasonal_state(ts_col), batch,
-                                 batch_id, counts_path)
-
-
-def seasonal_stream(spark: SparkSession, input_path: str, state_path: str,
-                    checkpoint_path: str, schema: T.StructType,
-                    ts_col: str = "ts", available_now: bool = True):
-    """Maintain hour-of-day seasonal baselines from a stream: per
-    micro-batch hygiene.seasonal_daily + cell-count addition into a
-    swapped parquet state — types × days × 24 rows however much traffic
-    flows (the rolling_drift calendar-sized precedent). The ts column is
-    meta-pinned; replay safety = the batch-id fence committed atomically
-    with the counters. Local state paths only (the rename swap)."""
-    return _additive_stream(spark, _seasonal_state(ts_col), input_path,
-                            state_path, checkpoint_path, schema,
-                            available_now)
-
-
-def seasonal_state_read(spark: SparkSession, state_path: str,
-                        over_pct: int | None = None,
-                        under_pct: int | None = None):
-    """The read face: median baselines + anomaly flags over the persisted
-    daily-hour counts — hygiene.seasonal_flags, the IDENTICAL stage-2
-    windows the batch operator runs, so a drained stream's anomaly
-    relation is row-identical to the batch operator on the union of its
-    inputs (equality test-pinned). Answerable any time without event
-    rescans."""
-    kw = {}
-    if over_pct is not None:
-        kw["over_pct"] = over_pct
-    if under_pct is not None:
-        kw["under_pct"] = under_pct
-    return _additive_state_read(
-        spark, _seasonal_state(**_pinned_meta(state_path)), state_path, **kw)
+# the faces with a read: face name → its spec rebuilt from the pinned meta
+_SPEC_FROM_META: dict[str, Callable[[dict], AdditiveState]] = {
+    "drift": _drift_state,
+    "rolling_drift": lambda m: rolling_drift_state(m["col"], m["ts_col"],
+                                                   m["bucket"]),
+    "index": lambda m: _index_state(m["text_col"], m["id_type"]),
+    "rules": lambda m: _rules_state(**m),
+    "cluster": lambda m: cluster_state(**m),
+    "seasonal": lambda m: seasonal_state(**m),
+}

@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="sf_dir or table path")
     ap.add_argument("--output", required=True)
@@ -36,27 +36,24 @@ def main() -> None:
     ap.add_argument("--n-salt", type=int, default=32)
     ap.add_argument("--format", default="parquet")
     ap.add_argument("--window", default="1 hour")
-    args = ap.parse_args()
+    return ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-    spark = SparkSession.builder.appName("geoip-pipeline").getOrCreate()
 
+def run(spark, args: argparse.Namespace):
+    """The job body: (enriched DataFrame, summary dict). Parse → enrich is
+    pipeline.enriched_transcripts, so the job enriches against the same
+    default dims as every batch and stream caller and plans the v4-only
+    enrich path for parse's `ip_str` source."""
     from logstash_filter_geoip_spark.config import GeoIPConfig
-    from logstash_filter_geoip_spark.functions.parse import parse_transcripts
     from logstash_filter_geoip_spark.operators import aggregate as agg
-    from logstash_filter_geoip_spark.operators.enrich import enrich
     from logstash_filter_geoip_spark.operators.route import route, verify_routing
-    from logstash_filter_geoip_spark.sources.geolite2 import load_dim, validate_dim
-    from logstash_filter_geoip_spark.sources.transcripts import load_transcripts
+    from logstash_filter_geoip_spark.pipeline import enriched_transcripts
 
     cfg = GeoIPConfig(source="ip_str", target=args.target, fields=args.fields,
                       database=args.database, ecs_compatibility=args.ecs)
-    dim = load_dim(spark, args.database)
-    validate_dim(dim)
 
     t0 = time.time()
-    enriched = enrich(parse_transcripts(load_transcripts(spark, args.input)),
-                      dim, cfg)
+    enriched = enriched_transcripts(spark, args.input, cfg)
 
     manifest = route(enriched.drop(args.target), args.output,
                      n_salt=args.n_salt, fmt=args.format)
@@ -70,10 +67,18 @@ def main() -> None:
        .save(os.path.join(args.output, "agg_failures"))
 
     parity = verify_routing(spark, enriched, args.output)
-    print(json.dumps({"manifest": {k: v for k, v in manifest.items()
-                                   if k != "written_at"},
-                      "routing_parity_ok": parity["ok"],
-                      "elapsed_sec": round(time.time() - t0, 2)}))
+    return enriched, {
+        "manifest": {k: v for k, v in manifest.items() if k != "written_at"},
+        "routing_parity_ok": parity["ok"],
+        "elapsed_sec": round(time.time() - t0, 2)}
+
+
+def main() -> None:
+    args = parse_args()
+    from pyspark.sql import SparkSession
+    spark = SparkSession.builder.appName("geoip-pipeline").getOrCreate()
+    _, summary = run(spark, args)
+    print(json.dumps(summary))
     spark.stop()
 
 

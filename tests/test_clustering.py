@@ -153,8 +153,9 @@ def _cl_write(spark, path, rows):
 
 
 def _cl_run(spark, p, cents=_CENTS):
-    q = incremental.cluster_stream(spark, p["in"], p["state"], p["ckpt"],
-                                   _CL_SCHEMA, cents, dim=4)
+    q = incremental.additive_stream(
+        spark, incremental.cluster_state(cents, dim=4), p["in"], p["state"],
+        p["ckpt"], _CL_SCHEMA)
     q.awaitTermination()
 
 
@@ -173,7 +174,8 @@ def test_cluster_stream_matches_batch_profile(spark, tmp_path):
     _cl_write(spark, p["in"], r2)
     _cl_run(spark, p)
     got = sorted(map(tuple,
-                     incremental.cluster_state_read(spark, p["state"])
+                     incremental.additive_state_read(spark, "cluster",
+                                                     p["state"])
                      .collect()))
     want = sorted(map(tuple, km.cluster_profile(
         spark.createDataFrame(r1 + r2, _CL_SCHEMA), _CENTS,
@@ -187,16 +189,17 @@ def test_cluster_apply_batch_fences_replayed_ids(spark, tmp_path):
     sketch_path = os.path.join(p["state"], "sketch")
     batch = spark.createDataFrame(_cl_rows([0.0, 0.0, 0.1, 0.0]),
                                   _CL_SCHEMA)
-    kw = dict(centroids=_CENTS, dim=4, emb_col="embedding")
-    assert incremental.cluster_apply_batch(spark, batch, 0, sketch_path,
-                                           **kw)
+    spec = incremental.cluster_state(centroids=_CENTS, dim=4,
+                                     emb_col="embedding")
+    assert incremental.additive_apply_batch(spark, spec, batch, 0,
+                                            sketch_path)
     once = sorted(map(tuple, spark.read.parquet(sketch_path).collect()))
-    assert not incremental.cluster_apply_batch(spark, batch, 0,
-                                               sketch_path, **kw)
+    assert not incremental.additive_apply_batch(spark, spec, batch, 0,
+                                                sketch_path)
     assert sorted(map(tuple,
                       spark.read.parquet(sketch_path).collect())) == once
-    assert incremental.cluster_apply_batch(spark, batch, 1, sketch_path,
-                                           **kw)
+    assert incremental.additive_apply_batch(spark, spec, batch, 1,
+                                            sketch_path)
     twice = {cid: (n, inertia) for cid, n, inertia in
              spark.read.parquet(sketch_path).collect()}
     for cid, n, inertia in once:
@@ -209,12 +212,13 @@ def test_cluster_stream_centroid_pin_raises(spark, tmp_path):
     _cl_run(spark, p)
     other = [[0] * 4, [2048] * 4]
     with pytest.raises(ValueError, match="cluster state"):
-        incremental.cluster_stream(spark, p["in"], p["state"],
-                                   str(tmp_path / "ckpt2"), _CL_SCHEMA,
-                                   other, dim=4)
+        incremental.additive_stream(
+            spark, incremental.cluster_state(other, dim=4), p["in"],
+            p["state"], str(tmp_path / "ckpt2"), _CL_SCHEMA)
     with pytest.raises(NotImplementedError, match="local"):
-        incremental.cluster_stream(spark, p["in"], "s3://bucket/state",
-                                   p["ckpt"], _CL_SCHEMA, _CENTS, dim=4)
+        incremental.additive_stream(
+            spark, incremental.cluster_state(_CENTS, dim=4), p["in"],
+            "s3://bucket/state", p["ckpt"], _CL_SCHEMA)
 
 
 def test_cluster_profile_trained_centroids_roundtrip(spark):

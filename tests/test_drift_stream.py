@@ -34,8 +34,9 @@ def _write(spark, path, rows):
 
 
 def _run(spark, p, **kw):
-    q = incremental.drift_stream(spark, p["in"], p["state"], p["ckpt"],
-                                 _SCHEMA, "ts", SPLIT, **kw)
+    q = incremental.additive_stream(
+        spark, incremental.drift_state("ts", SPLIT, **kw), p["in"],
+        p["state"], p["ckpt"], _SCHEMA)
     q.awaitTermination()
 
 
@@ -52,7 +53,7 @@ def test_drained_stream_matches_batch_categorical(spark, tmp_path):
     _write(spark, p["in"], ROWS_2)
     _run(spark, p, cat_col="event_type")
     got = sorted((tuple(str(v) for v in r) for r in
-                  incremental.drift_state_read(spark, p["state"])
+                  incremental.additive_state_read(spark, "drift", p["state"])
                   .collect()))
     want = sorted((tuple(str(v) for v in r) for r in drift.categorical_drift(
         spark.createDataFrame(ROWS_1 + ROWS_2, _SCHEMA),
@@ -72,7 +73,7 @@ def test_drained_stream_matches_batch_value(spark, tmp_path):
     _write(spark, p["in"], ROWS_2)
     _run(spark, p, **kw)
     got = sorted((tuple(str(v) for v in r) for r in
-                  incremental.drift_state_read(spark, p["state"])
+                  incremental.additive_state_read(spark, "drift", p["state"])
                   .collect()))
     want = sorted((tuple(str(v) for v in r) for r in drift.value_drift(
         spark.createDataFrame(ROWS_1 + ROWS_2, _SCHEMA),
@@ -80,24 +81,25 @@ def test_drained_stream_matches_batch_value(spark, tmp_path):
     assert got == want
     # summary composes over the read face
     s = drift.drift_summary(
-        incremental.drift_state_read(spark, p["state"])).collect()[0]
+        incremental.additive_state_read(spark, "drift", p["state"])
+    ).collect()[0]
     assert s["tot_base"] == 7 and s["tot_curr"] == 6
 
 
 def test_apply_batch_fences_replayed_ids(spark, tmp_path):
     p = _paths(tmp_path)
     counts = os.path.join(p["state"], "counts")
-    spec = incremental._drift_spec("event_type", None, None, None, None,
-                                   "ts", SPLIT)
+    spec = incremental.drift_state("ts", SPLIT, cat_col="event_type")
     batch = spark.createDataFrame(ROWS_1, _SCHEMA)
-    assert incremental.drift_apply_batch(spark, batch, 0, counts, spec)
+    assert incremental.additive_apply_batch(spark, spec, batch, 0, counts)
     once = sorted(tuple(r) for r in spark.read.parquet(counts).collect())
     # replayed id: fenced, state intact
-    assert not incremental.drift_apply_batch(spark, batch, 0, counts, spec)
+    assert not incremental.additive_apply_batch(spark, spec, batch, 0,
+                                                counts)
     assert sorted(tuple(r) for r in
                   spark.read.parquet(counts).collect()) == once
     # next id folds in: counts double
-    assert incremental.drift_apply_batch(spark, batch, 1, counts, spec)
+    assert incremental.additive_apply_batch(spark, spec, batch, 1, counts)
     twice = {r[0]: (r[1], r[2])
              for r in spark.read.parquet(counts).collect()}
     for k, nb, nc in once:
@@ -110,27 +112,27 @@ def test_spec_pin_and_validation(spark, tmp_path):
     _run(spark, p, cat_col="event_type")
     # different split -> counters not addable -> raises
     with pytest.raises(ValueError, match="drift state"):
-        incremental.drift_stream(spark, p["in"], p["state"],
-                                 str(tmp_path / "ckpt2"), _SCHEMA, "ts",
-                                 "2024-06-16 00:00:00",
-                                 cat_col="event_type")
+        incremental.additive_stream(
+            spark, incremental.drift_state("ts", "2024-06-16 00:00:00",
+                                           cat_col="event_type"),
+            p["in"], p["state"], str(tmp_path / "ckpt2"), _SCHEMA)
     with pytest.raises(ValueError, match="exactly one"):
-        incremental._drift_spec("a", "b", None, None, None, "ts", SPLIT)
+        incremental.drift_state("ts", SPLIT, cat_col="a", value_col="b")
     with pytest.raises(ValueError, match="requires lo"):
-        incremental._drift_spec(None, "value", None, None, None, "ts",
-                                SPLIT)
+        incremental.drift_state("ts", SPLIT, value_col="value")
     with pytest.raises(NotImplementedError, match="local"):
-        incremental.drift_stream(spark, p["in"], "s3://b/state", p["ckpt"],
-                                 _SCHEMA, "ts", SPLIT, cat_col="x")
+        incremental.additive_stream(
+            spark, incremental.drift_state("ts", SPLIT, cat_col="x"),
+            p["in"], "s3://b/state", p["ckpt"], _SCHEMA)
 
 
 def test_rolling_drained_stream_matches_batch(spark, tmp_path):
     p = _paths(tmp_path)
 
     def run(**kw):
-        q = incremental.rolling_drift_stream(
-            spark, p["in"], p["state"], p["ckpt"], _SCHEMA,
-            "event_type", "ts", **kw)
+        q = incremental.additive_stream(
+            spark, incremental.rolling_drift_state("event_type", "ts", **kw),
+            p["in"], p["state"], p["ckpt"], _SCHEMA)
         q.awaitTermination()
 
     _write(spark, p["in"], ROWS_1)
@@ -138,7 +140,8 @@ def test_rolling_drained_stream_matches_batch(spark, tmp_path):
     _write(spark, p["in"], ROWS_2)
     run()
     got = sorted((tuple(str(v) for v in r) for r in
-                  incremental.rolling_drift_state_read(spark, p["state"])
+                  incremental.additive_state_read(spark, "rolling_drift",
+                                                  p["state"])
                   .collect()))
     want = sorted((tuple(str(v) for v in r) for r in drift.rolling_drift(
         spark.createDataFrame(ROWS_1 + ROWS_2, _SCHEMA),
@@ -149,22 +152,21 @@ def test_rolling_drained_stream_matches_batch(spark, tmp_path):
     assert sorted(st.columns) == ["bucket_ts", "event_type", "n"]
     # spec pin: a different bucket granularity raises
     with pytest.raises(ValueError, match="rolling-drift state"):
-        incremental.rolling_drift_stream(
-            spark, p["in"], p["state"], str(tmp_path / "ck2"), _SCHEMA,
-            "event_type", "ts", bucket="hour")
+        incremental.additive_stream(
+            spark, incremental.rolling_drift_state("event_type", "ts",
+                                                   bucket="hour"),
+            p["in"], p["state"], str(tmp_path / "ck2"), _SCHEMA)
 
 
 def test_rolling_apply_batch_fence(spark, tmp_path):
     p = _paths(tmp_path)
     counts = os.path.join(p["state"], "counts")
-    spec = {"kind": "rolling", "col": "event_type", "ts_col": "ts",
-            "bucket": "day"}
+    spec = incremental.rolling_drift_state("event_type", "ts", "day")
     batch = spark.createDataFrame(ROWS_1, _SCHEMA)
-    assert incremental.rolling_drift_apply_batch(spark, batch, 0, counts,
-                                                 spec)
+    assert incremental.additive_apply_batch(spark, spec, batch, 0, counts)
     once = sorted(tuple(str(v) for v in r)
                   for r in spark.read.parquet(counts).collect())
-    assert not incremental.rolling_drift_apply_batch(spark, batch, 0,
-                                                     counts, spec)
+    assert not incremental.additive_apply_batch(spark, spec, batch, 0,
+                                                counts)
     assert sorted(tuple(str(v) for v in r)
                   for r in spark.read.parquet(counts).collect()) == once

@@ -221,7 +221,7 @@ def test_erasure_audit_enumerates_requested_ids(spark):
 
 
 # ---------------------------------------------------------------------------
-# seasonal_stream (the streaming face)
+# seasonal_state (the streaming face)
 # ---------------------------------------------------------------------------
 
 
@@ -248,8 +248,9 @@ def _seas_write(spark, path, rows):
 
 
 def _seas_run(spark, p, **kw):
-    q = incremental.seasonal_stream(spark, p["in"], p["state"], p["ckpt"],
-                                    _SEAS_SCHEMA, **kw)
+    q = incremental.additive_stream(
+        spark, incremental.seasonal_state(**kw), p["in"], p["state"],
+        p["ckpt"], _SEAS_SCHEMA)
     q.awaitTermination()
 
 
@@ -270,7 +271,8 @@ def test_seasonal_drained_stream_matches_batch(spark, tmp_path):
     _seas_write(spark, p["in"], SEAS_2)
     _seas_run(spark, p)
     got = sorted(tuple(str(v) for v in r) for r in
-                 incremental.seasonal_state_read(spark, p["state"])
+                 incremental.additive_state_read(spark, "seasonal",
+                                                 p["state"])
                  .collect())
     want = sorted(tuple(str(v) for v in r) for r in
                   hygiene.seasonal_anomalies(
@@ -294,23 +296,26 @@ def test_seasonal_replay_fence_and_meta_pin(spark, tmp_path):
     before = sorted(map(tuple, spark.read.parquet(counts).collect()))
     # same-batch-id replay is a no-op (the fence)
     batch = spark.createDataFrame(SEAS_1, _SEAS_SCHEMA)
-    assert incremental.seasonal_apply_batch(spark, batch, 0, counts,
-                                            "ts") is False
+    spec = incremental.seasonal_state("ts")
+    assert incremental.additive_apply_batch(spark, spec, batch, 0,
+                                            counts) is False
     assert sorted(map(tuple,
                       spark.read.parquet(counts).collect())) == before
     # next id doubles the drained cells
-    assert incremental.seasonal_apply_batch(spark, batch, 99, counts,
-                                            "ts") is True
+    assert incremental.additive_apply_batch(spark, spec, batch, 99,
+                                            counts) is True
     doubled = {(r.event_type, r.day.day, r.hr): r.n_events
                for r in spark.read.parquet(counts).collect()}
     assert all(v == 2 for v in doubled.values())
     # a different ts column cannot feed the same state
     with pytest.raises(ValueError):
-        incremental.seasonal_stream(spark, p["in"], p["state"], p["ckpt"],
-                                    _SEAS_SCHEMA, ts_col="other_ts")
+        incremental.additive_stream(
+            spark, incremental.seasonal_state(ts_col="other_ts"), p["in"],
+            p["state"], p["ckpt"], _SEAS_SCHEMA)
     with pytest.raises(NotImplementedError):
-        incremental.seasonal_stream(spark, p["in"], "s3://x", p["ckpt"],
-                                    _SEAS_SCHEMA)
+        incremental.additive_stream(
+            spark, incremental.seasonal_state(), p["in"], "s3://x",
+            p["ckpt"], _SEAS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,12 @@
-"""Streaming inverted-index maintenance (streaming/incremental.index_stream):
+"""Streaming inverted-index maintenance (streaming/incremental.index_state):
 drained-state BM25 == batch bm25_multi_topk parity over every ingested doc,
 the batch-id replay fence, first-wins re-ingestion, NULL/zero-token corpus
 accounting, and the tokenizer meta pin."""
 
 from __future__ import annotations
+
+import json
+import os
 
 import pytest
 from pyspark.sql import types as T
@@ -27,8 +30,9 @@ def _paths(tmp_path):
 
 
 def _run(spark, p, **kw):
-    q = incremental.index_stream(spark, p["in"], p["state"], p["ckpt"],
-                                 SCHEMA, **kw)
+    q = incremental.additive_stream(
+        spark, incremental.index_state(SCHEMA, **kw), p["in"], p["state"],
+        p["ckpt"], SCHEMA)
     q.awaitTermination()
 
 
@@ -54,14 +58,14 @@ def test_index_stream_matches_batch(spark, tmp_path):
     a.repartition(3).write.mode("append").parquet(p["in"])
     _run(spark, p)
 
-    post, dld, _ = incremental.index_state_read(spark, p["state"] + "/index")
+    post, dld = incremental.additive_state_read(spark, "index", p["state"])
     want = sorted(tuple(r) for r in
                   bm25_multi_topk(a, _qdf(spark), k=10).collect())
     assert _topk(spark, post, dld) == want and want
 
     b.repartition(3).write.mode("append").parquet(p["in"])
     _run(spark, p)
-    post, dld, _ = incremental.index_state_read(spark, p["state"] + "/index")
+    post, dld = incremental.additive_state_read(spark, "index", p["state"])
     want = sorted(tuple(r) for r in
                   bm25_multi_topk(docs, _qdf(spark), k=10).collect())
     assert _topk(spark, post, dld) == want
@@ -73,22 +77,25 @@ def test_index_replay_fenced_and_first_wins(spark, tmp_path):
     docs.coalesce(1).write.mode("append").parquet(p["in"])
     _run(spark, p)
     idx = p["state"] + "/index"
-    post, dld, committed = incremental.index_state_read(spark, idx)
+    with open(os.path.join(idx, "_commit.json")) as f:
+        committed = json.load(f)["batch_id"]
+    post, dld = incremental.additive_state_read(spark, "index", p["state"])
     before = _topk(spark, post, dld)
     n_before = post.count() + dld.count()
 
     # replayed batch id → fenced, state byte-identical
-    assert incremental.index_apply_batch(
-        spark, docs, committed, idx) is False
-    post, dld, _ = incremental.index_state_read(spark, idx)
+    spec = incremental.index_state(SCHEMA)
+    assert incremental.additive_apply_batch(
+        spark, spec, docs, committed, idx) is False
+    post, dld = incremental.additive_state_read(spark, "index", p["state"])
     assert _topk(spark, post, dld) == before
     assert post.count() + dld.count() == n_before
 
     # NEW batch id, same doc_ids → admitted set unchanged (first wins:
     # re-publishing a doc must not double its tf/df)
-    assert incremental.index_apply_batch(
-        spark, docs, committed + 1, idx) is True
-    post, dld, _ = incremental.index_state_read(spark, idx)
+    assert incremental.additive_apply_batch(
+        spark, spec, docs, committed + 1, idx) is True
+    post, dld = incremental.additive_state_read(spark, "index", p["state"])
     assert _topk(spark, post, dld) == before
     assert post.count() + dld.count() == n_before
 
@@ -102,7 +109,7 @@ def test_index_counts_zero_token_and_null_docs(spark, tmp_path):
     docs = spark.createDataFrame(rows, SCHEMA)
     docs.coalesce(1).write.mode("append").parquet(p["in"])
     _run(spark, p)
-    post, dld, _ = incremental.index_state_read(spark, p["state"] + "/index")
+    post, dld = incremental.additive_state_read(spark, "index", p["state"])
     assert dld.count() == 6          # every doc admitted
     assert post.where("doc_id >= 3 and doc_id <= 5").count() == 0
     want = sorted(tuple(r) for r in
@@ -115,5 +122,6 @@ def test_index_meta_pin_rejects_changed_tokenizer_column(spark, tmp_path):
     _docs(spark).limit(20).coalesce(1).write.mode("append").parquet(p["in"])
     _run(spark, p)
     with pytest.raises(ValueError, match="postings index"):
-        incremental.index_stream(spark, p["in"], p["state"],
-                                 p["ckpt"] + "2", SCHEMA, text_col="other")
+        incremental.additive_stream(
+            spark, incremental.index_state(SCHEMA, text_col="other"),
+            p["in"], p["state"], p["ckpt"] + "2", SCHEMA)

@@ -39,8 +39,9 @@ def _write(spark, path, rows):
 
 
 def _run(spark, p, **kw):
-    q = incremental.rules_stream(spark, p["in"], p["state"], p["ckpt"],
-                                 _SCHEMA, "order_id", "item", **kw)
+    q = incremental.additive_stream(
+        spark, incremental.rules_state(_SCHEMA, "order_id", "item", **kw),
+        p["in"], p["state"], p["ckpt"], _SCHEMA)
     q.awaitTermination()
 
 
@@ -63,8 +64,8 @@ def test_drained_stream_matches_batch(spark, tmp_path):
     _run(spark, p, max_basket=3)
     _write(spark, p["in"], BATCH_2)
     _run(spark, p, max_basket=3)
-    got = _rows(incremental.rules_state_read(spark, p["state"],
-                                             min_pair_n=1))
+    got = _rows(incremental.additive_state_read(spark, "rules", p["state"],
+                                                min_pair_n=1))
     want = _rows(basket.association_rules(
         spark.createDataFrame(BATCH_1 + BATCH_2, _SCHEMA),
         "order_id", "item", min_pair_n=1, max_basket=3))
@@ -80,19 +81,16 @@ def test_replay_fence_is_noop_and_next_id_applies(spark, tmp_path):
     df = spark.createDataFrame(BATCH_1, _SCHEMA)
     sk = os.path.join(p["state"], "sketch")
     os.makedirs(p["state"], exist_ok=True)
-    spec = incremental._rules_state("order_id", "item", 3, "string")
+    spec = incremental.rules_state(_SCHEMA, "order_id", "item", 3)
     incremental._meta_guard(p["state"], spec.meta, spec.face,
                             spec.consequence)
-    assert incremental.rules_apply_batch(spark, df, 0, sk, "order_id",
-                                         "item", 3) is True
+    assert incremental.additive_apply_batch(spark, spec, df, 0, sk) is True
     before = _rows(spark.read.parquet(sk))
     # same batch id replays as a no-op with counters intact
-    assert incremental.rules_apply_batch(spark, df, 0, sk, "order_id",
-                                         "item", 3) is False
+    assert incremental.additive_apply_batch(spark, spec, df, 0, sk) is False
     assert _rows(spark.read.parquet(sk)) == before
     # the next id applies: the total-baskets counter doubles
-    assert incremental.rules_apply_batch(spark, df, 1, sk, "order_id",
-                                         "item", 3) is True
+    assert incremental.additive_apply_batch(spark, spec, df, 1, sk) is True
     after = {r["kind"]: r["n"] for r in spark.read.parquet(sk)
              .where("kind = 'B'").collect()}
     assert after["B"] == 2 * dict(
@@ -106,14 +104,16 @@ def test_meta_universe_pin_raises_on_mismatch(spark, tmp_path):
     _write(spark, p["in"], BATCH_1)
     _run(spark, p, max_basket=3)
     with pytest.raises(ValueError, match="rules"):
-        incremental.rules_stream(spark, p["in"], p["state"],
-                                 str(tmp_path / "ckpt2"), _SCHEMA,
-                                 "order_id", "item", max_basket=4)
+        incremental.additive_stream(
+            spark, incremental.rules_state(_SCHEMA, "order_id", "item",
+                                           max_basket=4),
+            p["in"], p["state"], str(tmp_path / "ckpt2"), _SCHEMA)
 
 
 def test_state_read_missing_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
-        incremental.rules_state_read(spark, str(tmp_path / "nope"))
+        incremental.additive_state_read(spark, "rules",
+                                        str(tmp_path / "nope"))
 
 
 def test_split_basket_undercount_is_the_contract_boundary(spark, tmp_path):

@@ -196,8 +196,9 @@ def _cms_write(spark, path, ids):
 
 
 def _cms_run(spark, p):
-    q = incremental.cms_stream(spark, p["in"], p["state"], p["ckpt"],
-                               _CMS_SCHEMA, "user_id")
+    q = incremental.additive_stream(
+        spark, incremental.cms_state("user_id"), p["in"], p["state"],
+        p["ckpt"], _CMS_SCHEMA)
     q.awaitTermination()
 
 
@@ -242,16 +243,18 @@ def test_cms_apply_batch_fences_replayed_ids(spark, tmp_path):
     sketch_path = os.path.join(p["state"], "sketch")
     batch = spark.createDataFrame([(1, _T1), (1, _T1), (2, _T1)],
                                   _CMS_SCHEMA)
-    kw = dict(key_col="user_id", w=1024, d=4, salt="cms-v1",
-              hash_basis="xxhash64")
-    assert incremental.cms_apply_batch(spark, batch, 0, sketch_path, **kw)
+    spec = incremental.cms_state(key_col="user_id", w=1024, d=4,
+                                 salt="cms-v1", hash_basis="xxhash64")
+    assert incremental.additive_apply_batch(spark, spec, batch, 0,
+                                            sketch_path)
     once = _sketch_rows(spark, p)
     # same batch id replayed after a simulated crash: fenced, state intact
-    assert not incremental.cms_apply_batch(spark, batch, 0, sketch_path,
-                                           **kw)
+    assert not incremental.additive_apply_batch(spark, spec, batch, 0,
+                                                sketch_path)
     assert _sketch_rows(spark, p) == once
     # the NEXT id folds in (counters grow)
-    assert incremental.cms_apply_batch(spark, batch, 1, sketch_path, **kw)
+    assert incremental.additive_apply_batch(spark, spec, batch, 1,
+                                            sketch_path)
     twice = dict(((d_, b), c) for d_, b, c in _sketch_rows(spark, p))
     for (d_, b), c in dict(((x, y), z) for x, y, z in once).items():
         assert twice[(d_, b)] == 2 * c
@@ -259,8 +262,8 @@ def test_cms_apply_batch_fences_replayed_ids(spark, tmp_path):
     # (id 0 <= 1) — i.e. after a wipe the fence UNDER-counts re-delivered
     # batches rather than double-counting; either way the checkpoint is
     # part of this operator's state, unlike scd2_stream's
-    assert not incremental.cms_apply_batch(spark, batch, 0, sketch_path,
-                                           **kw)
+    assert not incremental.additive_apply_batch(spark, spec, batch, 0,
+                                                sketch_path)
 
 
 def test_cms_stream_param_pin_raises(spark, tmp_path):
@@ -268,12 +271,13 @@ def test_cms_stream_param_pin_raises(spark, tmp_path):
     _cms_write(spark, p["in"], [1, 2])
     _cms_run(spark, p)
     with pytest.raises(ValueError, match="cms state"):
-        incremental.cms_stream(spark, p["in"], p["state"],
-                               str(tmp_path / "ckpt2"), _CMS_SCHEMA,
-                               "user_id", w=2048)
+        incremental.additive_stream(
+            spark, incremental.cms_state("user_id", w=2048), p["in"],
+            p["state"], str(tmp_path / "ckpt2"), _CMS_SCHEMA)
     with pytest.raises(NotImplementedError, match="local"):
-        incremental.cms_stream(spark, p["in"], "s3://bucket/state",
-                               p["ckpt"], _CMS_SCHEMA, "user_id")
+        incremental.additive_stream(
+            spark, incremental.cms_state("user_id"), p["in"],
+            "s3://bucket/state", p["ckpt"], _CMS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -296,8 +300,9 @@ def _qs_write(spark, path, rows):
 
 
 def _qs_run(spark, p, **kw):
-    q = incremental.qsketch_stream(spark, p["in"], p["state"], p["ckpt"],
-                                   _QS_SCHEMA, ("k",), "v", **kw)
+    q = incremental.additive_stream(
+        spark, incremental.qsketch_state(("k",), "v", **kw), p["in"],
+        p["state"], p["ckpt"], _QS_SCHEMA)
     q.awaitTermination()
 
 
@@ -326,23 +331,24 @@ def test_qsketch_stream_matches_batch_sketch(spark, tmp_path):
 
 
 def test_qsketch_apply_batch_fences_replayed_ids(spark, tmp_path):
-    """Same contract as cms_apply_batch: replayed batch_id is a no-op,
+    """Same contract as the cms fence: replayed batch_id is a no-op,
     the next id folds in (counters double for identical batches)."""
     import os
     p = _qs_paths(tmp_path)
     sketch_path = os.path.join(p["state"], "sketch")
     batch = spark.createDataFrame([("a", 5), ("a", 5), ("a", 900)],
                                   _QS_SCHEMA)
-    kw = dict(keys=("k",), value_col="v", sub_bits=5)
-    assert incremental.qsketch_apply_batch(spark, batch, 0, sketch_path,
-                                           **kw)
+    spec = incremental.qsketch_state(keys=("k",), value_col="v",
+                                     sub_bits=5)
+    assert incremental.additive_apply_batch(spark, spec, batch, 0,
+                                            sketch_path)
     once = sorted(map(tuple, spark.read.parquet(sketch_path).collect()))
-    assert not incremental.qsketch_apply_batch(spark, batch, 0,
-                                               sketch_path, **kw)
+    assert not incremental.additive_apply_batch(spark, spec, batch, 0,
+                                                sketch_path)
     assert sorted(map(tuple,
                       spark.read.parquet(sketch_path).collect())) == once
-    assert incremental.qsketch_apply_batch(spark, batch, 1, sketch_path,
-                                           **kw)
+    assert incremental.additive_apply_batch(spark, spec, batch, 1,
+                                            sketch_path)
     twice = {(k, b): c for k, b, c in
              spark.read.parquet(sketch_path).collect()}
     for k, b, c in once:
@@ -354,9 +360,10 @@ def test_qsketch_stream_param_pin_raises(spark, tmp_path):
     _qs_write(spark, p["in"], [("a", 1)])
     _qs_run(spark, p)
     with pytest.raises(ValueError, match="qsketch state"):
-        incremental.qsketch_stream(spark, p["in"], p["state"],
-                                   str(tmp_path / "ckpt2"), _QS_SCHEMA,
-                                   ("k",), "v", sub_bits=7)
+        incremental.additive_stream(
+            spark, incremental.qsketch_state(("k",), "v", sub_bits=7),
+            p["in"], p["state"], str(tmp_path / "ckpt2"), _QS_SCHEMA)
     with pytest.raises(NotImplementedError, match="local"):
-        incremental.qsketch_stream(spark, p["in"], "s3://bucket/state",
-                                   p["ckpt"], _QS_SCHEMA, ("k",), "v")
+        incremental.additive_stream(
+            spark, incremental.qsketch_state(("k",), "v"), p["in"],
+            "s3://bucket/state", p["ckpt"], _QS_SCHEMA)
