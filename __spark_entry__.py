@@ -44,6 +44,7 @@ from logstash_filter_geoip_spark.sources.geolite2 import (dim_v6_values_sql,
                                                           vendored_dims,
                                                           vendored_mmdb_path)
 from logstash_filter_geoip_spark.sources.transcripts import (TEXT_CASES,
+                                                             load_table,
                                                              load_transcripts,
                                                              transcripts_sql)
 
@@ -722,18 +723,14 @@ def q_enrich_asof_city(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESSION_GAP_S = 6 * 3600
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
 def q_sessionize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization over the raw events table (operators/
     sessions.py): per-user session ordinals via one lag+running-sum window,
     then per-session rollups — the canonical log-analytics derived table."""
     from logstash_filter_geoip_spark.operators.sessions import session_stats
     _pin_utc(spark)
-    return session_stats(_events(spark, sf_dir), ["user_id"], "ts",
-                         gap_s=_SESSION_GAP_S)
+    return session_stats(load_table(spark, sf_dir, "events"), ["user_id"],
+                         "ts", gap_s=_SESSION_GAP_S)
 
 
 def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -743,7 +740,8 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logstash_filter_geoip_spark.operators.sessions import (
         session_window_agg)
     _pin_utc(spark)
-    return session_window_agg(_events(spark, sf_dir), ["user_id"], "ts",
+    ev = load_table(spark, sf_dir, "events")
+    return session_window_agg(ev, ["user_id"], "ts",
                               gap=f"{_SESSION_GAP_S} seconds")
 
 
@@ -751,8 +749,8 @@ def q_event_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-group quantiles (type-7 interpolation, bit-identical to
     DuckDB quantile_cont); the approx_percentile scale path is value-locked
     against this in tests/test_sessions_agg.py instead of oracle-hashed."""
-    return agg.quantile_stats(_events(spark, sf_dir), ("event_type",),
-                              "value")
+    ev = load_table(spark, sf_dir, "events")
+    return agg.quantile_stats(ev, ("event_type",), "value")
 
 
 def q_role_tool_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -767,7 +765,7 @@ def q_user_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate.cohort_retention): join-free — distinct (user, week), cohort
     via a partition-wide window min, plain count at the final aggregate."""
     _pin_utc(spark)
-    return agg.cohort_retention(_events(spark, sf_dir), "user_id")
+    return agg.cohort_retention(load_table(spark, sf_dir, "events"), "user_id")
 
 
 _FUNNEL_STEPS = ("view", "click", "purchase")
@@ -777,7 +775,7 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel over the events table (aggregate.funnel_counts):
     users reaching view → click-after-view → purchase-after-click, one
     Exchange + chained partition-wide window mins."""
-    return agg.funnel_counts(_events(spark, sf_dir), "user_id",
+    return agg.funnel_counts(load_table(spark, sf_dir, "events"), "user_id",
                              "event_type", _FUNNEL_STEPS)
 
 
@@ -785,7 +783,8 @@ def q_rolling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user trailing 1-day/7-day event counts via event-time RANGE
     frames (aggregate.rolling_window_counts): one Exchange+Sort, one
     Window evaluating both frames."""
-    out = agg.rolling_window_counts(_events(spark, sf_dir), "user_id")
+    ev = load_table(spark, sf_dir, "events")
+    out = agg.rolling_window_counts(ev, "user_id")
     return out.select("event_id", "user_id", "ts", "n_1d", "n_7d")
 
 
@@ -793,7 +792,7 @@ def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental-maintenance rollup (aggregate.daily_rollup): per
     (day, event_type) counts + exact distinct users — the same relation
     upsert_daily_rollup() maintains via dynamic partition overwrite."""
-    return agg.daily_rollup(_events(spark, sf_dir))
+    return agg.daily_rollup(load_table(spark, sf_dir, "events"))
 
 
 def q_error_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,16 +810,16 @@ def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (aggregate.zscore_outliers): rows more than 3 population standard
     deviations from their type's mean — group stats broadcast back, one
     detection scan."""
-    out = agg.zscore_outliers(_events(spark, sf_dir), ("event_type",),
-                              "value", threshold=3.0)
+    ev = load_table(spark, sf_dir, "events")
+    out = agg.zscore_outliers(ev, ("event_type",), "value", threshold=3.0)
     return out.select("event_id", "event_type", "value")
 
 
 def q_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type Tukey-fence (IQR) outlier screen — the robust sibling of
     value_outliers (aggregate.iqr_outliers), exact type-7 quartiles."""
-    out = agg.iqr_outliers(_events(spark, sf_dir), ("event_type",),
-                           "value", k=1.5)
+    ev = load_table(spark, sf_dir, "events")
+    out = agg.iqr_outliers(ev, ("event_type",), "value", k=1.5)
     return out.select("event_id", "event_type", "value")
 
 
@@ -828,8 +827,8 @@ def q_rate_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type daily event-rate buckets with integer-rational spike flags
     (aggregate.rate_spikes): a day is a spike iff 4*count > 5*prev_count."""
     _pin_utc(spark)
-    return agg.rate_spikes(_events(spark, sf_dir), "event_type", "ts",
-                           bucket="day", factor=(5, 4))
+    ev = load_table(spark, sf_dir, "events")
+    return agg.rate_spikes(ev, "event_type", "ts", bucket="day", factor=(5, 4))
 
 
 # histogram bounds over events.value: [0, 100) × 20 buckets — values above
@@ -842,8 +841,8 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     one mergeable two-phase aggregate — the deterministic 100-TB
     distribution sketch (shared floor/clamp arithmetic, sentinel
     out-of-range buckets)."""
-    return agg.value_histogram(_events(spark, sf_dir), ("event_type",),
-                               "value", **_HIST)
+    ev = load_table(spark, sf_dir, "events")
+    return agg.value_histogram(ev, ("event_type",), "value", **_HIST)
 
 
 def q_distinct_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -853,7 +852,7 @@ def q_distinct_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataSketches estimate is in its exact sparse regime (== exact distinct,
     deterministic), so count(DISTINCT) mirrors it value-exactly — at 100 TB
     the same plan answers from stored daily sketch rows without rescans."""
-    ev = _events(spark, sf_dir).withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.date_trunc("day", F.col("ts")))
     return agg.distinct_sketch_rollup(ev, ("event_type",), "user_id", "day")
 
@@ -934,7 +933,7 @@ def q_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes with the engine-neutral md5-60 family (estimates are a
     deterministic function of the data in BOTH engines, collisions and
     all; no exact-regime argument needed)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     sketch = agg.cms_build(ev, "user_id", hash_basis="md5")
     keys = (ev.where(F.col("user_id") < 25)
               .select(F.col("user_id").alias("key")).distinct())
@@ -1021,7 +1020,7 @@ def q_scd2_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     hygiene rule)."""
     from logstash_filter_geoip_spark.operators.temporal import scd2_merge
     _pin_utc(spark)
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     cut = F.lit(_ASOF_CUTOVER).cast("timestamp")
 
     def snap(pred) -> DataFrame:
@@ -1045,16 +1044,16 @@ def q_resample_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     active day — zero-filled counts, forward-filled bucket state."""
     _pin_utc(spark)
     from logstash_filter_geoip_spark.operators.temporal import resample_fill
-    return resample_fill(_events(spark, sf_dir), ["user_id"], "ts",
-                         "event_type", unit="day")
+    ev = load_table(spark, sf_dir, "events")
+    return resample_fill(ev, ["user_id"], "ts", "event_type", unit="day")
 
 
 def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type equi-depth (quantile-boundary) histogram
     (aggregate.equidepth_histogram) — the adaptive sibling of
     value_histogram; exact type-7 boundaries."""
-    return agg.equidepth_histogram(_events(spark, sf_dir), ("event_type",),
-                                   "value", n_buckets=8)
+    ev = load_table(spark, sf_dir, "events")
+    return agg.equidepth_histogram(ev, ("event_type",), "value", n_buckets=8)
 
 
 def q_salted_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1063,7 +1062,7 @@ def q_salted_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     melted reducer) joined to the per-type stats dim with a 16-way salt;
     the result is provably the plain join (the oracle IS the plain join)."""
     from logstash_filter_geoip_spark.operators.relational import salted_join
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     dim = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("type_total"))
     out = salted_join(ev, dim, ["event_type"], salt_col="event_id",
@@ -1076,7 +1075,7 @@ def q_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     event per user under a TOTAL order (ts desc, event_id asc) —
     WindowGroupLimit prunes to local top-1 below the Exchange."""
     from logstash_filter_geoip_spark.operators.temporal import latest_by_key
-    out = latest_by_key(_events(spark, sf_dir), ["user_id"], "ts",
+    out = latest_by_key(load_table(spark, sf_dir, "events"), ["user_id"], "ts",
                         tie_break=("event_id",))
     return out.select("user_id", "event_id", "ts", "event_type")
 

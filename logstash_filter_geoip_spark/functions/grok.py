@@ -48,27 +48,22 @@ class GrokError(ValueError):
     pass
 
 
-def compile_grok(template: str,
-                 extra_patterns: dict[str, str] | None = None
-                 ) -> tuple[str, list[str]]:
+def compile_grok(template: str) -> tuple[str, list[str]]:
     """'client %{IPV4:ip} said %{ERRORCODE:code}' ->
     (regex with one capturing group per named field, [field names]).
 
     Unnamed references (%{IPV4}) match without capturing. Unknown pattern
     names raise GrokError listing valid names (F7-style error ergonomics).
     """
-    registry = dict(BASE_PATTERNS)
-    if extra_patterns:
-        registry.update(extra_patterns)
     fields: list[str] = []
 
     def sub(m: re.Match) -> str:
         name, field = m.group(1), m.group(2)
-        if name not in registry:
+        if name not in BASE_PATTERNS:
             raise GrokError(
                 f"unknown grok pattern %{{{name}}}; valid: "
-                f"{sorted(registry)}")
-        body = registry[name]
+                f"{sorted(BASE_PATTERNS)}")
+        body = BASE_PATTERNS[name]
         if field:
             if field in fields:
                 raise GrokError(f"duplicate grok field {field!r}")
@@ -87,13 +82,12 @@ def compile_grok(template: str,
     return "".join(out), fields
 
 
-def grok_extract(df: DataFrame, template: str, text_col: str = "text",
-                 extra_patterns: dict[str, str] | None = None) -> DataFrame:
+def grok_extract(df: DataFrame, template: str) -> DataFrame:
     """Append one column per grok field (null when the template or the
     field's group doesn't match). One regexp_extract per field — JVM-side,
     whole-stage codegen, no UDF."""
-    regex, fields = compile_grok(template, extra_patterns)
-    t = F.col(text_col)
+    regex, fields = compile_grok(template)
+    t = F.col("text")
     cols = [
         F.nullif(F.regexp_extract(t, regex, i + 1), F.lit("")).alias(name)
         for i, name in enumerate(fields)

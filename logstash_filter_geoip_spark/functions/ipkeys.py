@@ -98,7 +98,7 @@ def cidr_v6_to_range(network: str) -> tuple[int, int, int, int]:
             _u64_to_signed(e >> 64), _u64_to_signed(e))
 
 
-def explode_buckets(dim, net_start: str = "net_start", net_end: str = "net_end"):
+def explode_buckets(dim):
     """Replicate each dimension row once per /16 bucket its range covers.
 
     A /8 covers 256 buckets; a /24 covers 1. Ranges are disjoint (mmdb trie
@@ -107,8 +107,8 @@ def explode_buckets(dim, net_start: str = "net_start", net_end: str = "net_end")
     return dim.withColumn(
         "prefix_bucket",
         F.explode(F.sequence(
-            F.shiftrightunsigned(F.col(net_start), BUCKET_BITS),
-            F.shiftrightunsigned(F.col(net_end), BUCKET_BITS),
+            F.shiftrightunsigned(F.col("net_start"), BUCKET_BITS),
+            F.shiftrightunsigned(F.col("net_end"), BUCKET_BITS),
         )),
     )
 

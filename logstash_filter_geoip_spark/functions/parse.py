@@ -59,14 +59,14 @@ def first_tool_mention(text: Column) -> Column:
     return F.get(F.regexp_extract_all(text, F.lit(TOOL_RE), 1), 0)
 
 
-def parse_transcripts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def parse_transcripts(df: DataFrame) -> DataFrame:
     """Append extraction columns: ip_str, error_code, tool_mention.
 
     Blank-IP semantics (P3, GeoIPFilter.java:165-167): the IPv4 regex cannot
     match blank/whitespace, so blank text naturally yields null ip_str —
     which downstream maps to the "target absent" miss class.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     # cheap contains() pre-filters skip the regex scan on rows that cannot
     # match (no '.', ':', 'E') — ~28% faster parse stage, identical results
     return (

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_TAG_ON_FAILURE
-from .route import SINK_KEYS
+from .route import SINK_KEYS, salt_column
 
 
 def failure_flag(tags=DEFAULT_TAG_ON_FAILURE) -> Column:
@@ -34,7 +34,7 @@ _WINDOW_UNIT_SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
 
 
 def turns_per_geo_window(df: DataFrame, country_col: str,
-                         ts_col: str = "ts", window: str = "1 hour") -> DataFrame:
+                         window: str = "1 hour") -> DataFrame:
     """Turns per geo bucket per tumbling window.
 
     Uses date_trunc / epoch-floor arithmetic (not F.window) so the oracle
@@ -49,10 +49,10 @@ def turns_per_geo_window(df: DataFrame, country_col: str,
     if unit not in _WINDOW_UNIT_SECONDS:
         raise ValueError(f"unsupported window unit {unit_str!r}")
     if n == 1:
-        start = F.date_trunc(unit, F.col(ts_col))
+        start = F.date_trunc(unit, F.col("ts"))
     else:
         width = n * _WINDOW_UNIT_SECONDS[unit]
-        epoch = F.unix_timestamp(F.col(ts_col))
+        epoch = F.unix_timestamp(F.col("ts"))
         start = F.timestamp_seconds((epoch - F.pmod(epoch, F.lit(width)))
                                     .cast("long"))
     return (
@@ -307,7 +307,7 @@ def pivot_counts(df: DataFrame, row_key: str, pivot_col: str,
               .na.fill(0, list(values)))
 
 
-def cohort_retention(df: DataFrame, user_col: str, ts_col: str = "ts",
+def cohort_retention(df: DataFrame, user_col: str,
                      unit: str = "week") -> DataFrame:
     """Cohort retention: users grouped by their FIRST activity period
     (`cohort`), counted in every later period they were active
@@ -325,7 +325,7 @@ def cohort_retention(df: DataFrame, user_col: str, ts_col: str = "ts",
     divisor = {"day": 1, "week": 7}.get(unit)
     if divisor is None:
         raise ValueError(f"unit must be 'day' or 'week', got {unit!r}")
-    period = F.date_trunc(unit, F.col(ts_col))
+    period = F.date_trunc(unit, F.col("ts"))
     active = df.select(F.col(user_col).alias("user"),
                        period.alias("period")).distinct()
     w = Window.partitionBy("user")
@@ -337,7 +337,7 @@ def cohort_retention(df: DataFrame, user_col: str, ts_col: str = "ts",
 
 
 def funnel_counts(df: DataFrame, user_col: str, type_col: str,
-                  steps: tuple[str, ...], ts_col: str = "ts") -> DataFrame:
+                  steps: tuple[str, ...]) -> DataFrame:
     """Ordered-funnel analysis: how many users reached step k, where step
     k+1 must occur AT OR AFTER the user's earliest completion of step k
     (same-instant conversion counts; a user failing step k can never count
@@ -355,14 +355,14 @@ def funnel_counts(df: DataFrame, user_col: str, type_col: str,
     if len(set(steps)) != len(steps):
         raise ValueError(f"funnel steps must be distinct: {steps}")
     w = Window.partitionBy(user_col)
-    cur = df.select(user_col, ts_col, type_col)
+    cur = df.select(user_col, "ts", type_col)
     for i, s in enumerate(steps):
         cond = F.col(type_col) == s
         if i > 0:
-            cond = cond & (F.col(ts_col) >= F.col(f"__step{i - 1}_ts"))
+            cond = cond & (F.col("ts") >= F.col(f"__step{i - 1}_ts"))
         cur = cur.withColumn(
             f"__step{i}_ts",
-            F.min(F.when(cond, F.col(ts_col))).over(w))
+            F.min(F.when(cond, F.col("ts"))).over(w))
     per_user = cur.groupBy(user_col).agg(
         *[F.max(f"__step{i}_ts").alias(f"__s{i}")
           for i in range(len(steps))])
@@ -454,10 +454,7 @@ def rate_spikes(df: DataFrame, type_col: str, ts_col: str = "ts",
                     .cast("int")).alias("is_spike"))
 
 
-def rolling_window_counts(df: DataFrame, key_col: str, ts_col: str = "ts",
-                          spans: tuple[tuple[str, str], ...] = (
-                              ("n_1d", "1 DAYS"), ("n_7d", "7 DAYS"))
-                          ) -> DataFrame:
+def rolling_window_counts(df: DataFrame, key_col: str) -> DataFrame:
     """Per-key rolling event counts over event-time RANGE frames (e.g.
     events in the trailing 1/7 days INCLUSIVE of the current row) — the
     sliding-rate feature a telemetry pipeline derives per entity.
@@ -470,29 +467,28 @@ def rolling_window_counts(df: DataFrame, key_col: str, ts_col: str = "ts",
     feeding one Window operator evaluating every frame.
     """
     cols = [
-        F.expr(f"count(*) OVER (PARTITION BY {key_col} ORDER BY {ts_col} "
+        F.expr(f"count(*) OVER (PARTITION BY {key_col} ORDER BY ts "
                f"RANGE BETWEEN INTERVAL {span} PRECEDING AND CURRENT ROW)")
          .alias(name)
-        for name, span in spans]
+        for name, span in (("n_1d", "1 DAYS"), ("n_7d", "7 DAYS"))]
     # carry the input columns; downstream projection prunes through Window
     return df.select("*", *cols)
 
 
-def salted_conv_rollup(df: DataFrame, n_salt: int = 32,
-                       agg_col: str = "n_turns") -> DataFrame:
+def salted_conv_rollup(df: DataFrame) -> DataFrame:
     """Two-phase conv_id rollup with explicit salting (north_rule skew
     handling): partial-aggregate on (conv_id, salt) — the hot key fans out
-    over n_salt reducers — then final-aggregate on conv_id. At 10^12 turns a
+    over 32 reducers — then final-aggregate on conv_id. At 10^12 turns a
     single hot conv cannot pin one reducer; AQE skew-join is the backstop
     (session.py sets spark.sql.adaptive.*).
     """
-    salt = F.pmod(F.hash("conv_id", "turn_idx"), F.lit(n_salt)).alias("__salt")
+    salt = salt_column(32).alias("__salt")
     partial = (
         df.select("conv_id", salt)
           .groupBy("conv_id", "__salt")
           .agg(F.count(F.lit(1)).alias("__partial"))
     )
-    return partial.groupBy("conv_id").agg(F.sum("__partial").alias(agg_col))
+    return partial.groupBy("conv_id").agg(F.sum("__partial").alias("n_turns"))
 
 
 def daily_rollup(events: DataFrame, days: list | None = None) -> DataFrame:
@@ -533,7 +529,7 @@ def upsert_daily_rollup(events: DataFrame, path: str,
 
 
 def distinct_sketches(df: DataFrame, keys: tuple[str, ...], col: str,
-                      bucket_col=None, lgk: int = 12) -> DataFrame:
+                      bucket_col=None) -> DataFrame:
     """Bucketed mergeable HLL sketches — the STORABLE state of incremental
     distinct counting (Apache DataSketches via Spark's hll_sketch_agg).
 
@@ -545,12 +541,12 @@ def distinct_sketches(df: DataFrame, keys: tuple[str, ...], col: str,
     any window query folds sketch rows instead of 100 TB of events.
 
     Scale shape: one two-phase hash aggregate (hll_sketch_agg merges
-    partial sketches map-side); state is 2^lgk registers ≈ 4 KB per group
-    at the default lgk=12 (rel. std err 1.04/sqrt(2^lgk) ≈ 1.6%).
+    partial sketches map-side); state is 2^12 registers ≈ 4 KB per group
+    (lgk=12: rel. std err 1.04/sqrt(2^12) ≈ 1.6%).
     """
     gb = [*keys] + ([bucket_col] if bucket_col is not None else [])
     return df.groupBy(*gb).agg(
-        F.hll_sketch_agg(col, F.lit(lgk)).alias("sketch"))
+        F.hll_sketch_agg(col, F.lit(12)).alias("sketch"))
 
 
 def merge_distinct_sketches(sketches: DataFrame,
@@ -567,7 +563,7 @@ def merge_distinct_sketches(sketches: DataFrame,
 
 
 def distinct_sketch_rollup(df: DataFrame, keys: tuple[str, ...], col: str,
-                           bucket_col, lgk: int = 12) -> DataFrame:
+                           bucket_col) -> DataFrame:
     """Build bucketed sketches and immediately merge to per-key estimates —
     the one-shot face of the store-then-merge pair above (the driver
     query's shape). At gate scale the estimate sits in the sketch's exact
@@ -575,7 +571,7 @@ def distinct_sketch_rollup(df: DataFrame, keys: tuple[str, ...], col: str,
     value-exactly — the ann_ivf promotion pattern: the approximation only
     appears at cardinalities far beyond the correctness gate's."""
     return merge_distinct_sketches(
-        distinct_sketches(df, keys, col, bucket_col, lgk), keys)
+        distinct_sketches(df, keys, col, bucket_col), keys)
 
 
 # ---------------------------------------------------------------------------
@@ -584,6 +580,7 @@ def distinct_sketch_rollup(df: DataFrame, keys: tuple[str, ...], col: str,
 
 CMS_W = 1024
 CMS_D = 4
+CMS_SALT = "cms-v1"
 
 
 def _cms_bucket(key_col: str, depth: int, w: int, salt: str,
@@ -608,7 +605,7 @@ def _cms_bucket_sql(key_expr: str, depth: int, w: int, salt: str) -> str:
 
 
 def cms_build(df: DataFrame, key_col: str, w: int = CMS_W, d: int = CMS_D,
-              salt: str = "cms-v1", hash_basis: str = "xxhash64") -> DataFrame:
+              salt: str = CMS_SALT, hash_basis: str = "xxhash64") -> DataFrame:
     """Count-min sketch of a key column's frequencies: (depth, bucket, c)
     counter rows — the STORABLE, mergeable heavy-hitter state (Cormode &
     Muthukrishnan 2005). Estimates overcount only (collisions add, never
@@ -642,37 +639,36 @@ def cms_merge(sketches: DataFrame) -> DataFrame:
     return sketches.groupBy("depth", "bucket").agg(F.sum("c").alias("c"))
 
 
-def cms_estimate(sketch: DataFrame, keys: DataFrame, key_col: str = "key",
-                 w: int = CMS_W, d: int = CMS_D, salt: str = "cms-v1",
+def cms_estimate(sketch: DataFrame, keys: DataFrame, w: int = CMS_W,
+                 d: int = CMS_D, salt: str = CMS_SALT,
                  hash_basis: str = "xxhash64") -> DataFrame:
     """Point-frequency estimates for a key relation: est = min over the d
     counter rows the key hashes to (absent counter rows read 0). The keys
     side is query-sized; the sketch side is d×w rows — bounded, so its
     broadcast is pinned (never the key relation's)."""
     probes = keys.select(
-        key_col,
+        "key",
         F.posexplode(F.array(*[
-            _cms_bucket(key_col, i, w, salt, hash_basis) for i in range(d)
+            _cms_bucket("key", i, w, salt, hash_basis) for i in range(d)
         ])).alias("depth", "bucket"))
     return (probes.join(F.broadcast(sketch), ["depth", "bucket"], "left")
-                  .groupBy(key_col)
+                  .groupBy("key")
                   .agg(F.min(F.coalesce("c", F.lit(0).cast("long")))
                         .alias("est")))
 
 
-def cms_oracle_sql(table: str, key_expr: str, keys_sql: str,
-                   key_alias: str = "key", w: int = CMS_W, d: int = CMS_D,
-                   salt: str = "cms-v1") -> str:
+def cms_oracle_sql(table: str, key_expr: str, keys_sql: str) -> str:
     """DuckDB mirror of cms_build + cms_estimate over ``table``:
-    ``keys_sql`` selects one ``{key_alias}`` column of probe keys."""
+    ``keys_sql`` selects one ``key`` column of probe keys."""
     build_arms = "\n    UNION ALL\n".join(
-        f"    SELECT {i} AS depth, {_cms_bucket_sql(key_expr, i, w, salt)}"
+        f"    SELECT {i} AS depth, "
+        f"{_cms_bucket_sql(key_expr, i, CMS_W, CMS_SALT)}"
         f" AS bucket FROM {table} WHERE {key_expr} IS NOT NULL"
-        for i in range(d))
+        for i in range(CMS_D))
     probe_arms = "\n    UNION ALL\n".join(
-        f"    SELECT {key_alias}, {i} AS depth, "
-        f"{_cms_bucket_sql(key_alias, i, w, salt)} AS bucket FROM keys"
-        for i in range(d))
+        f"    SELECT key, {i} AS depth, "
+        f"{_cms_bucket_sql('key', i, CMS_W, CMS_SALT)} AS bucket FROM keys"
+        for i in range(CMS_D))
     return f"""
 WITH rows_b AS (
 {build_arms}
@@ -684,10 +680,10 @@ keys AS ({keys_sql}),
 probes AS (
 {probe_arms}
 )
-SELECT p.{key_alias}, CAST(min(coalesce(s.c, 0)) AS BIGINT) AS est
+SELECT p.key, CAST(min(coalesce(s.c, 0)) AS BIGINT) AS est
 FROM probes p
 LEFT JOIN sketch s ON s.depth = p.depth AND s.bucket = p.bucket
-GROUP BY p.{key_alias}
+GROUP BY p.key
 """
 
 # ---------------------------------------------------------------------------
@@ -769,9 +765,7 @@ QSKETCH_QS: tuple[tuple[str, int, int], ...] = (
     ("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))
 
 
-def qsketch_quantiles(sketch: DataFrame, keys: tuple[str, ...],
-                      qs: tuple[tuple[str, int, int], ...] = QSKETCH_QS
-                      ) -> DataFrame:
+def qsketch_quantiles(sketch: DataFrame, keys: tuple[str, ...]) -> DataFrame:
     """Quantile estimates from a sketch relation: for each q = num/den the
     answer is the smallest bucket lower bound whose cumulative count
     reaches rank ceil(q·n) (type-1 selection; ceil as integer arithmetic
@@ -790,13 +784,11 @@ def qsketch_quantiles(sketch: DataFrame, keys: tuple[str, ...],
         F.min(F.when(F.col("cum") >= F.expr(f"({num} * n + {den - 1}) "
                                             f"div {den}"),
                      F.col("bucket"))).alias(name)
-        for name, num, den in qs]
+        for name, num, den in QSKETCH_QS]
     return c.groupBy(*keys).agg(*aggs)
 
 
 def qsketch_oracle_sql(table: str, keys: tuple[str, ...], value_expr: str,
-                       sub_bits: int = QSKETCH_SUB_BITS,
-                       qs: tuple[tuple[str, int, int], ...] = QSKETCH_QS,
                        lead: str = "WITH") -> str:
     """DuckDB mirror of qsketch_build → qsketch_quantiles over ``table``.
     Window sums CAST to BIGINT (DuckDB window sums are HUGEINT); rank
@@ -808,10 +800,10 @@ def qsketch_oracle_sql(table: str, keys: tuple[str, ...], value_expr: str,
     sel = ", ".join(
         f"min(CASE WHEN cum >= (({num} * n + {den - 1}) // {den}) "
         f"THEN bucket END) AS {name}"
-        for name, num, den in qs)
+        for name, num, den in QSKETCH_QS)
     return f"""
 {lead} b AS (
-  SELECT {ks}, {_qbucket_sql(value_expr, sub_bits)} AS bucket,
+  SELECT {ks}, {_qbucket_sql(value_expr, QSKETCH_SUB_BITS)} AS bucket,
          count(*) AS c
   FROM {table} WHERE {value_expr} IS NOT NULL
   GROUP BY ALL

@@ -63,6 +63,7 @@ __all__ = ["bloom_build", "bloom_union", "bloom_might_contain",
 WORD_BITS = 63            # positive-BIGINT masks in every engine
 BLOOM_N_WORDS = 1024      # default: 64,512 bits ≈ 6.7k keys at 1% FP
 BLOOM_K = 5
+BLOOM_SALT = "bloom-v1"  # hash-frame salt: build and probe must agree
 # broadcast bound: 2^22 words = 32 MB of bits — far past any sane filter
 _MAX_WORDS = 1 << 22
 
@@ -93,21 +94,20 @@ def _bit_index(key_col: str, i: int, n_words: int, salt: str,
     return F.pmod(h, F.lit(n_words * WORD_BITS)).cast("long")
 
 
-def _bit_index_sql(key_expr: str, i: int, n_words: int, salt: str) -> str:
-    h = md5_hash60_sql(f"'bloom:{salt}:{i}:' || CAST({key_expr} AS STRING)")
+def _bit_index_sql(key_expr: str, i: int, n_words: int) -> str:
+    h = md5_hash60_sql(
+        f"'bloom:{BLOOM_SALT}:{i}:' || CAST({key_expr} AS STRING)")
     return f"({h} % {n_words * WORD_BITS})"
 
 
-def bloom_build(df: DataFrame, key_col: str,
-                n_words: int = BLOOM_N_WORDS, k: int = BLOOM_K,
-                salt: str = "bloom-v1",
-                hash_basis: str = "xxhash64") -> DataFrame:
+def bloom_build(df: DataFrame, key_col: str, n_words: int = BLOOM_N_WORDS,
+                k: int = BLOOM_K, hash_basis: str = "xxhash64") -> DataFrame:
     """Bloom filter of a key column as `(word INT, bits BIGINT)` rows —
     the storable, mergeable, broadcast-bounded join-pruning state. NULL
     keys are skipped (a NULL is never a member — the CMS convention)."""
     _check_params(n_words, k)
     idx = F.explode(F.array(*[
-        _bit_index(key_col, i, n_words, salt, hash_basis)
+        _bit_index(key_col, i, n_words, BLOOM_SALT, hash_basis)
         for i in range(k)])).alias("idx")
     rows = (df.where(F.col(key_col).isNotNull())
               .select(idx)
@@ -127,7 +127,6 @@ def bloom_union(filters: DataFrame) -> DataFrame:
 
 def bloom_might_contain(probe: DataFrame, bloom: DataFrame, key_col: str,
                         n_words: int = BLOOM_N_WORDS, k: int = BLOOM_K,
-                        salt: str = "bloom-v1",
                         hash_basis: str = "xxhash64",
                         out_col: str = "bloom_hit") -> DataFrame:
     """Append `out_col` (int 0/1) to `probe`: 1 iff all k bits for the key
@@ -140,7 +139,7 @@ def bloom_might_contain(probe: DataFrame, bloom: DataFrame, key_col: str,
     for i in range(k):
         w, b, m = f"__bw{i}", f"__bb{i}", f"__bm{i}"
         out = out.withColumn("__bidx", _bit_index(key_col, i, n_words,
-                                                  salt, hash_basis))
+                                                  BLOOM_SALT, hash_basis))
         out = (out.withColumn(w, F.floor(F.col("__bidx") / WORD_BITS)
                                   .cast("int"))
                   .withColumn(m, F.expr(
@@ -166,14 +165,13 @@ def bloom_might_contain(probe: DataFrame, bloom: DataFrame, key_col: str,
 
 def bloom_prune(probe: DataFrame, bloom: DataFrame, key_col: str,
                 n_words: int = BLOOM_N_WORDS, k: int = BLOOM_K,
-                salt: str = "bloom-v1",
                 hash_basis: str = "xxhash64") -> DataFrame:
     """Drop probe rows the filter proves absent. Semantics contract: for
     any downstream INNER/SEMI join on `key_col` against the build relation,
     join(bloom_prune(probe)) == join(probe) row-for-row — false positives
     only add rows the join drops anyway; false negatives don't exist."""
     flagged = bloom_might_contain(probe, bloom, key_col, n_words, k,
-                                  salt, hash_basis, out_col="__bloom_keep")
+                                  hash_basis, out_col="__bloom_keep")
     return flagged.where(F.col("__bloom_keep") == 1).drop("__bloom_keep")
 
 
@@ -181,11 +179,10 @@ def bloom_prune(probe: DataFrame, bloom: DataFrame, key_col: str,
 # DuckDB mirror (md5 basis) — identical integer arithmetic
 # ---------------------------------------------------------------------------
 
-def bloom_oracle_ctes(build_sql: str, build_key: str,
-                      probe_sql: str, probe_key: str,
-                      n_words: int = BLOOM_N_WORDS, k: int = BLOOM_K,
-                      salt: str = "bloom-v1",
-                      probe_cols: str = "*", lead: str = ",") -> str:
+def bloom_oracle_ctes(build_sql: str, build_key: str, probe_sql: str,
+                      probe_key: str, n_words: int = BLOOM_N_WORDS,
+                      k: int = BLOOM_K, probe_cols: str = "*",
+                      lead: str = ",") -> str:
     """DuckDB CTEs rebuilding the SAME filter and probing it: `b_probed`
     exposes `probe_cols` plus `bloom_hit`. `build_sql`/`probe_sql` are
     full SELECTs; keys are column names within them. ``lead=","`` emits a
@@ -195,11 +192,11 @@ def bloom_oracle_ctes(build_sql: str, build_key: str,
     if lead not in (",", "WITH"):
         raise ValueError(f'lead must be "," or "WITH", got {lead!r}')
     build_arms = "\n    UNION ALL\n".join(
-        f"    SELECT {_bit_index_sql(build_key, i, n_words, salt)} AS idx"
+        f"    SELECT {_bit_index_sql(build_key, i, n_words)} AS idx"
         f" FROM b_build WHERE {build_key} IS NOT NULL"
         for i in range(k))
     probe_idx = ",\n         ".join(
-        f"{_bit_index_sql(probe_key, i, n_words, salt)} AS __bidx{i}"
+        f"{_bit_index_sql(probe_key, i, n_words)} AS __bidx{i}"
         for i in range(k))
     joins = "\n".join(
         f"LEFT JOIN b_words w{i} ON w{i}.word = p.__bidx{i} // {WORD_BITS}"
@@ -238,8 +235,8 @@ def bloom_oracle_ctes(build_sql: str, build_key: str,
 # pure-Python reference (value-lock tests)
 # ---------------------------------------------------------------------------
 
-def bloom_py(keys, n_words: int = BLOOM_N_WORDS, k: int = BLOOM_K,
-             salt: str = "bloom-v1") -> dict[int, int]:
+def bloom_py(keys, n_words: int = BLOOM_N_WORDS,
+             k: int = BLOOM_K) -> dict[int, int]:
     """md5-basis reference build: {word: bits}."""
     _check_params(n_words, k)
     words: dict[int, int] = {}
@@ -247,20 +244,19 @@ def bloom_py(keys, n_words: int = BLOOM_N_WORDS, k: int = BLOOM_K,
         if key is None:
             continue
         for i in range(k):
-            h = md5_hash60_py(f"bloom:{salt}:{i}:{key}")
+            h = md5_hash60_py(f"bloom:{BLOOM_SALT}:{i}:{key}")
             idx = h % (n_words * WORD_BITS)
             words[idx // WORD_BITS] = (words.get(idx // WORD_BITS, 0)
                                        | (1 << (idx % WORD_BITS)))
     return words
 
 
-def bloom_probe_py(words: dict[int, int], key,
-                   n_words: int = BLOOM_N_WORDS, k: int = BLOOM_K,
-                   salt: str = "bloom-v1") -> int:
+def bloom_probe_py(words: dict[int, int], key, n_words: int = BLOOM_N_WORDS,
+                   k: int = BLOOM_K) -> int:
     if key is None:
         return 0
     for i in range(k):
-        h = md5_hash60_py(f"bloom:{salt}:{i}:{key}")
+        h = md5_hash60_py(f"bloom:{BLOOM_SALT}:{i}:{key}")
         idx = h % (n_words * WORD_BITS)
         if not (words.get(idx // WORD_BITS, 0) >> (idx % WORD_BITS)) & 1:
             return 0

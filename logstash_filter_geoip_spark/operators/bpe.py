@@ -21,16 +21,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from logstash_filter_geoip_spark.operators.text_ops import WORD_RE
+from logstash_filter_geoip_spark.functions.ngrams import WORD_RE, word_tokens
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
 
-def word_counts(docs: DataFrame, text_col: str = "text",
-                min_count: int = 1) -> DataFrame:
+def word_counts(docs: DataFrame, min_count: int = 1) -> DataFrame:
     """Corpus-wide distinct-word frequencies (lowercased WORD_RE tokens).
     One explode + two-phase hash aggregate; the shuffle carries one row per
     distinct word, not per occurrence."""
     toks = docs.select(F.explode(
-        F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0))
+        word_tokens("text"))
         .alias("word"))
     out = toks.groupBy("word").agg(F.count("*").alias("n"))
     if min_count > 1:
@@ -38,14 +38,13 @@ def word_counts(docs: DataFrame, text_col: str = "text",
     return out
 
 
-def pair_counts(docs: DataFrame, k: int = 50, text_col: str = "text",
-                min_count: int = 1) -> DataFrame:
+def pair_counts(docs: DataFrame, k: int = 50) -> DataFrame:
     """Adjacent-character-pair frequencies over the corpus — the first BPE
     merge step, fully distributed. Pairs are position-exploded from the
     *vocab* (distinct words weighted by their corpus count), so the explode
     is vocab-sized. Top-k with a deterministic (count desc, pair asc)
     tie-break."""
-    w = word_counts(docs, text_col, min_count)
+    w = word_counts(docs)
     return (w.where(F.length("word") >= 2)
              .select("n", "word",
                      F.explode(F.sequence(
@@ -63,8 +62,7 @@ def pair_counts(docs: DataFrame, k: int = 50, text_col: str = "text",
 _DEFAULT_VOCAB_CAP = 1 << 20
 
 
-def bpe_merges(docs: DataFrame, n_merges: int = 20, text_col: str = "text",
-               min_count: int = 1,
+def bpe_merges(docs: DataFrame, n_merges: int = 20,
                vocab_cap: int = _DEFAULT_VOCAB_CAP) -> DataFrame:
     """Full BPE training: one distributed word count, then the sequential
     merge loop on the driver over the bounded vocab.
@@ -77,7 +75,7 @@ def bpe_merges(docs: DataFrame, n_merges: int = 20, text_col: str = "text",
     """
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0, got {n_merges}")
-    rows = (word_counts(docs, text_col, min_count)
+    rows = (word_counts(docs)
             .orderBy(F.col("n").desc(), F.col("word").asc())
             .limit(vocab_cap + 1).collect())
     if len(rows) > vocab_cap:
@@ -138,8 +136,7 @@ def _apply_merges(word: str, merges: list[tuple[str, str, str]]) -> list[str]:
     return syms
 
 
-def bpe_encode(docs: DataFrame, merges: DataFrame,
-               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bpe_encode(docs: DataFrame, merges: DataFrame) -> DataFrame:
     """Apply a trained merge table to the corpus: doc → BPE token array.
 
     The 100-TB shape (what HF/sentencepiece pipelines do on Spark): encode
@@ -153,7 +150,7 @@ def bpe_encode(docs: DataFrame, merges: DataFrame,
     functions, not lambda HOFs). Docs with no tokens (NULL/short text)
     come back with an empty array, not a dropped row.
 
-    Returns (id_col, tokens array<string>, n_tokens int).
+    Returns (doc_id, tokens array<string>, n_tokens int).
     """
     merge_rows = [(r["left"], r["right"], r["merged"])
                   for r in merges.orderBy("rank").collect()]
@@ -163,21 +160,21 @@ def bpe_encode(docs: DataFrame, merges: DataFrame,
         return words.map(lambda w: _apply_merges(w, merge_rows))
 
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0)
+            word_tokens("text")
         ).alias("pos", "word"))
     encoded = (toks.select("word").distinct()
                .withColumn("word_toks", encode_word("word")))
     assembled = (
         toks.join(encoded, "word")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.flatten(
                 F.array_sort(F.collect_list(F.struct("pos", "word_toks")))
                  .getField("word_toks")).alias("tokens")))
-    return (docs.select(id_col)
-            .join(assembled, id_col, "left")
-            .select(id_col,
+    return (docs.select("doc_id")
+            .join(assembled, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("tokens", F.array().cast("array<string>"))
                      .alias("tokens"))
             .withColumn("n_tokens", F.size("tokens")))
@@ -191,19 +188,16 @@ PAIR_TOP_K = 50
 MERGES_N = 16
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def queries():
     return {
         "bpe_pair_counts": lambda s, d: pair_counts(
-            _docs(s, d), k=PAIR_TOP_K),
+            load_table(s, d, "documents"), k=PAIR_TOP_K),
         # rows-only by design: the merge loop is inherently iterative (each
         # merge depends on the rewrite of the previous one) — no SQL oracle;
         # correctness is locked by full merge-table equality against an
         # independent regex-based Python BPE (tests/test_mixing_bpe.py).
-        "bpe_merges": lambda s, d: bpe_merges(_docs(s, d), n_merges=MERGES_N),
+        "bpe_merges": lambda s, d: bpe_merges(
+            load_table(s, d, "documents"), n_merges=MERGES_N),
         # rows-only for the same reason (tokens are a function of the
         # iteratively-trained merge table); locked by independent Python
         # re-encoding of every document in tests/test_mixing_bpe.py.
@@ -215,7 +209,7 @@ def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the merge table, encode the whole corpus with it, return
     (doc_id, n_tokens) — the tokenize step a packing pipeline runs between
     curation and pack_sequences."""
-    docs = _docs(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     merges = bpe_merges(docs, n_merges=MERGES_N)
     return bpe_encode(docs, merges).select("doc_id", "n_tokens")
 

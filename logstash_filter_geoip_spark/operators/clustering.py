@@ -101,15 +101,14 @@ def _argmin_rows(xi: np.ndarray, cmat: np.ndarray) -> np.ndarray:
 
 
 def kmeans_assign(emb: DataFrame, k: int = K_CLUSTERS, n_iter: int = N_ITER,
-                  dim: int = DIM, emb_col: str = "embedding") -> DataFrame:
+                  dim: int = DIM) -> DataFrame:
     """(vec_id, cid, dist2) after ``n_iter`` Lloyd rounds.
 
     Deterministic end-to-end: hash-ranked init, integer distances, total
     tie order, truncating-mean updates, empty clusters frozen. Each round
     collects exactly k×(dim+1) BIGINTs (argument-bounded)."""
-    cents = train_centroids(emb, k=k, n_iter=n_iter, dim=dim,
-                            emb_col=emb_col)
-    return assign_fixed(emb, cents, dim=dim, emb_col=emb_col)
+    cents = train_centroids(emb, k=k, n_iter=n_iter, dim=dim)
+    return assign_fixed(emb, cents, dim=dim)
 
 
 _ASSIGN_T = T.StructType([
@@ -190,9 +189,8 @@ def cluster_profile(emb: DataFrame, centroids: list[list[int]],
                   F.sum("dist2").alias("inertia")))
 
 
-def kmeans_margins(emb: DataFrame, k: int = K_CLUSTERS,
-                   n_iter: int = N_ITER, dim: int = DIM,
-                   emb_col: str = "embedding") -> DataFrame:
+def kmeans_margins(emb: DataFrame, k: int = K_CLUSTERS, n_iter: int = N_ITER,
+                   dim: int = DIM) -> DataFrame:
     """(vec_id, cid, dist2, margin2) — margin2 = second-best minus best
     distance, the assignment-confidence score (margin 0 = the vector sits
     exactly on a cluster boundary; small margins flag label-noise /
@@ -202,39 +200,32 @@ def kmeans_margins(emb: DataFrame, k: int = K_CLUSTERS,
     (no second centroid, no margin)."""
     if k < 2:
         raise ValueError(f"kmeans_margins: k must be >= 2: {k}")
-    cents = train_centroids(emb, k=k, n_iter=n_iter, dim=dim,
-                            emb_col=emb_col)
+    cents = train_centroids(emb, k=k, n_iter=n_iter, dim=dim)
     a = emb.select("vec_id",
-                   _assign_udf(cents)(F.col(emb_col)).alias("a"))
+                   _assign_udf(cents)(F.col("embedding")).alias("a"))
     return a.select("vec_id", F.col("a.cid").alias("cid"),
                     F.col("a.dist2").alias("dist2"),
                     (F.col("a.second2") - F.col("a.dist2"))
                     .alias("margin2"))
 
 
-def kmeans_crosstab(emb: DataFrame, label_col: str = "label",
-                    k: int = K_CLUSTERS, n_iter: int = N_ITER,
-                    dim: int = DIM,
-                    emb_col: str = "embedding") -> DataFrame:
+def kmeans_crosstab(emb: DataFrame) -> DataFrame:
     """(cid, label, n_members) — the cluster × ground-label contingency
     table (cluster purity / topic-drift audit). The label rides the
     assignment scan as a passthrough column — ONE scan, no join-back of
     two data-sized relations."""
     a = assign_fixed(
         emb,
-        train_centroids(emb, k=k, n_iter=n_iter, dim=dim,
-                        emb_col=emb_col),
-        dim=dim, emb_col=emb_col, extra_cols=(label_col,))
-    return (a.groupBy("cid", label_col)
+        train_centroids(emb), extra_cols=("label",))
+    return (a.groupBy("cid", "label")
              .agg(F.count(F.lit(1)).alias("n_members")))
 
 
-def kmeans_summary(emb: DataFrame, k: int = K_CLUSTERS,
-                   n_iter: int = N_ITER, dim: int = DIM,
-                   emb_col: str = "embedding") -> DataFrame:
+def kmeans_summary(emb: DataFrame, k: int = K_CLUSTERS, n_iter: int = N_ITER,
+                   dim: int = DIM) -> DataFrame:
     """(cid, n_members, inertia) — the per-cluster rollup of the final
     assignment (inertia = exact BIGINT sum of dist2)."""
-    a = kmeans_assign(emb, k=k, n_iter=n_iter, dim=dim, emb_col=emb_col)
+    a = kmeans_assign(emb, k=k, n_iter=n_iter, dim=dim)
     return (a.groupBy("cid")
              .agg(F.count(F.lit(1)).alias("n_members"),
                   F.sum("dist2").alias("inertia")))
@@ -252,8 +243,7 @@ _TRIPLETS_T = T.StructType([
 
 
 def contrastive_triplets(emb: DataFrame, k: int = K_CLUSTERS,
-                         n_iter: int = N_ITER, dim: int = DIM,
-                         emb_col: str = "embedding") -> DataFrame:
+                         n_iter: int = N_ITER, dim: int = DIM) -> DataFrame:
     """Hard-negative mining for contrastive/triplet training: per anchor
     vector, the nearest same-cluster neighbour (positive) and the
     FARTHEST same-cluster neighbour (hard negative — still semantically
@@ -271,10 +261,9 @@ def contrastive_triplets(emb: DataFrame, k: int = K_CLUSTERS,
     the documented skew/size knob — at 100 TB cap cluster sizes by
     raising k or sub-clustering oversized cells, the containment_pairs
     discipline)."""
-    cents = train_centroids(emb, k=k, n_iter=n_iter, dim=dim,
-                            emb_col=emb_col)
-    a = assign_fixed(emb.select("vec_id", emb_col), cents, dim=dim,
-                     emb_col=emb_col, extra_cols=(emb_col,))
+    cents = train_centroids(emb, k=k, n_iter=n_iter, dim=dim)
+    a = assign_fixed(emb.select("vec_id", "embedding"), cents, dim=dim,
+                     extra_cols=("embedding",))
 
     def block(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 3:
@@ -286,7 +275,7 @@ def contrastive_triplets(emb: DataFrame, k: int = K_CLUSTERS,
                 "neg_id": z64, "neg_dist2": z64, "n_partners": z64})
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         ids = pdf["vec_id"].to_numpy()
-        xi = _quantize(pdf[emb_col])
+        xi = _quantize(pdf["embedding"])
         # exact int64 pairwise distances via the Gram matrix:
         # (a-b)² = aa + bb − 2ab (dots ≤ dim·(2·SHIFT)² ≈ 2.7e8 —
         # far inside int64). The matmul form keeps the intermediate
@@ -452,10 +441,9 @@ def _pq_train_udf(books: list[list[list[int]]], d: int):
     return f
 
 
-def pq_train(emb: DataFrame, m: int = PQ_M, k: int = PQ_K,
-             n_iter: int = PQ_N_ITER, dim: int = DIM,
-             emb_col: str = "embedding") -> list[list[list[int]]]:
-    """Per-subspace integer codebooks (m × k × dim/m BIGINTs) — product
+def pq_train(emb: DataFrame, m: int = PQ_M) -> list[list[list[int]]]:
+    """Per-subspace integer codebooks (m × PQ_K × DIM/m BIGINTs, PQ_N_ITER
+    rounds) — product
     quantization (Jégou et al., TPAMI 2011) on the SAME integerization /
     init / tie / update rules as the k-means operator. m·k·d ints collect
     to the driver — argument-bounded. PQ is the 100-TB ANN compression
@@ -468,16 +456,17 @@ def pq_train(emb: DataFrame, m: int = PQ_M, k: int = PQ_K,
     (position, code). 3 jobs instead of m×(n_iter+1); bit-identical to
     ``train_centroids`` run per sliced subspace (the shape the nested
     kmeans oracle chains mirror — both pinned in test_clustering)."""
-    d = _pq_check(m, k, dim)
+    d = _pq_check(m, PQ_K, DIM)
     # shared init: one TakeOrdered collect covers every subspace
-    init_rows = _init_rows_arrow(emb, k, emb_col)
-    if len(init_rows) < k:
+    init_rows = _init_rows_arrow(emb, PQ_K, "embedding")
+    if len(init_rows) < PQ_K:
         raise ValueError(
-            f"kmeans: k={k} exceeds the {len(init_rows)} input vectors")
+            f"kmeans: k={PQ_K} exceeds the {len(init_rows)} input vectors")
     books = [[list(r["xi"][s * d:(s + 1) * d]) for r in init_rows]
              for s in range(m)]
-    for _ in range(n_iter):
-        a = emb.select(_pq_train_udf(books, d)(F.col(emb_col)).alias("a"))
+    for _ in range(PQ_N_ITER):
+        a = emb.select(
+            _pq_train_udf(books, d)(F.col("embedding")).alias("a"))
         ex = (a.select(F.posexplode("a.xi").alias("i", "v"),
                        F.col("a.codes").alias("codes"))
                .select("i", "v",
@@ -491,7 +480,7 @@ def pq_train(emb: DataFrame, m: int = PQ_M, k: int = PQ_K,
                      if s * d <= r["i"] < (s + 1) * d}
             books[s] = [[sv_by[(j, s * d + i)] // n_by[j] for i in range(d)]
                         if j in n_by else books[s][j]
-                        for j in range(k)]
+                        for j in range(PQ_K)]
     return books
 
 
@@ -512,39 +501,35 @@ def _pq_encode_udf(books: list[list[list[int]]], d: int):
     return enc
 
 
-def pq_encode(emb: DataFrame, books: list[list[list[int]]],
-              dim: int = DIM, emb_col: str = "embedding") -> DataFrame:
+def pq_encode(emb: DataFrame, books: list[list[list[int]]]) -> DataFrame:
     """(vec_id, code_0..code_{m-1}) under fixed codebooks: ONE
     ArrowEvalPython pass encodes all m subspaces (the assign_fixed
     compile-cost lesson, m-fold)."""
     if not books:
         raise ValueError("pq_encode: empty codebook list")
     m = len(books)
-    d = _pq_check(m, min(len(b) for b in books), dim)
+    d = _pq_check(m, min(len(b) for b in books), DIM)
     a = emb.select("vec_id",
-                   _pq_encode_udf(books, d)(F.col(emb_col)).alias("a"))
+                   _pq_encode_udf(books, d)(F.col("embedding")).alias("a"))
     return a.select("vec_id",
                     *[F.col(f"a.code_{s}").alias(f"code_{s}")
                       for s in range(m)])
 
 
-def pq_codes_oracle_sql(m: int = PQ_M, k: int = PQ_K,
-                        n_iter: int = PQ_N_ITER, dim: int = DIM,
-                        table: str = "embeddings",
-                        emb_expr: str = "embedding") -> str:
+def pq_codes_oracle_sql() -> str:
     """Composed verbatim from m kmeans_oracle_sql chains over sliced
     embeddings (each nested WITH is its own scope — the split_assign
     nesting precedent), joined on vec_id."""
-    d = _pq_check(m, k, dim)
+    d = _pq_check(PQ_M, PQ_K, DIM)
     subs = []
-    for s in range(m):
+    for s in range(PQ_M):
         inner = kmeans_oracle_sql(
-            k=k, n_iter=n_iter, dim=d, table=table,
-            emb_expr=f"({emb_expr}[{s * d + 1}:{s * d + d}])")
+            k=PQ_K, n_iter=PQ_N_ITER, dim=d,
+            emb_expr=f"(embedding[{s * d + 1}:{s * d + d}])")
         subs.append(f"pq_s{s} AS (\nSELECT vec_id, CAST(cid AS INT) AS "
                     f"code_{s} FROM (\n{inner}) q{s}\n)")
-    joins = " ".join(f"JOIN pq_s{s} USING (vec_id)" for s in range(1, m))
-    cols = ", ".join(f"code_{s}" for s in range(m))
+    joins = " ".join(f"JOIN pq_s{s} USING (vec_id)" for s in range(1, PQ_M))
+    cols = ", ".join(f"code_{s}" for s in range(PQ_M))
     return ("WITH " + ",\n".join(subs)
             + f"\nSELECT vec_id, {cols} FROM pq_s0 {joins}\n")
 
@@ -566,13 +551,11 @@ def int_vec_py(vec) -> list[int]:
 
 
 def pq_adc_topk(emb: DataFrame, books: list[list[list[int]]],
-                k_top: int = PQ_ADC_TOP_K, query_mod: int = PQ_QUERY_MOD,
-                max_queries: int = PQ_MAX_QUERIES, dim: int = DIM,
-                emb_col: str = "embedding") -> DataFrame:
+                max_queries: int = PQ_MAX_QUERIES) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes (the PQ ANN scorer):
     per query, adc2(q, v) = Σ_s dist2(q_subspace_s, codeword[code_s(v)]).
 
-    The query set is the ann_brute_force rule (vec_id % query_mod == 0,
+    The query set is the ann_brute_force rule (vec_id % PQ_QUERY_MOD == 0,
     first max_queries — argument-bounded ≤ the similarity ≤64 precedent,
     collected once); each query contributes an m·k integer distance
     TABLE, and scoring is a pure-codegen expression over the code
@@ -582,22 +565,21 @@ def pq_adc_topk(emb: DataFrame, books: list[list[list[int]]],
     (the ann convention). Output (query_id, rank, neighbor_id, adc2) —
     adc2 is the EXACT integer both engines reproduce; ranks total-order
     by (adc2, neighbor_id)."""
-    if k_top < 1 or max_queries < 1 or max_queries > 64:
+    if max_queries < 1 or max_queries > 64:
         raise ValueError(
-            f"pq_adc_topk: need k_top >= 1 and 1 <= max_queries <= 64 "
-            f"(got {k_top}, {max_queries})")
+            f"pq_adc_topk: need 1 <= max_queries <= 64 (got {max_queries})")
     m = len(books)
-    d = _pq_check(m, min(len(b) for b in books), dim)
-    qrows = (emb.where((F.col("vec_id") % query_mod) == 0)
+    d = _pq_check(m, min(len(b) for b in books), DIM)
+    qrows = (emb.where((F.col("vec_id") % PQ_QUERY_MOD) == 0)
                 .orderBy("vec_id").limit(max_queries)
-                .select("vec_id", emb_col).collect())
+                .select("vec_id", "embedding").collect())
     if not qrows:
         raise ValueError(
-            f"pq_adc_topk: no query vectors (no vec_id % {query_mod} == 0 "
-            f"rows) — an empty query set has no top-k to rank")
+            f"pq_adc_topk: no query vectors (no vec_id % {PQ_QUERY_MOD} "
+            f"== 0 rows) — an empty query set has no top-k to rank")
     structs = []
     for r in qrows:
-        qi = int_vec_py(r[emb_col])
+        qi = int_vec_py(r["embedding"])
         adc = None
         for s, book in enumerate(books):
             qs = qi[s * d:(s + 1) * d]
@@ -610,41 +592,35 @@ def pq_adc_topk(emb: DataFrame, books: list[list[list[int]]],
         structs.append(F.struct(
             F.lit(int(r["vec_id"])).alias("query_id"),
             adc.alias("adc2")))
-    codes = pq_encode(emb, books, dim=dim, emb_col=emb_col)
+    codes = pq_encode(emb, books)
     ex = (codes.select("vec_id", F.explode(F.array(*structs)).alias("q"))
                .select("vec_id", "q.query_id", "q.adc2")
                .where(F.col("vec_id") != F.col("query_id")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc2").asc(), F.col("vec_id").asc())
     return (ex.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k_top)
+              .where(F.col("rank") <= PQ_ADC_TOP_K)
               .select("query_id", "rank",
                       F.col("vec_id").alias("neighbor_id"), "adc2"))
 
 
-def pq_adc_oracle_sql(m: int = PQ_M, k: int = PQ_K,
-                      n_iter: int = PQ_N_ITER, dim: int = DIM,
-                      k_top: int = PQ_ADC_TOP_K,
-                      query_mod: int = PQ_QUERY_MOD,
-                      max_queries: int = PQ_MAX_QUERIES,
-                      table: str = "embeddings") -> str:
+def pq_adc_oracle_sql() -> str:
     """Composed from the pq-codes chain + m centroid chains + the shared
     integerization of the query rows — the scorer's every input re-derived
     from the same definitions, so nothing can drift."""
-    d = _pq_check(m, k, dim)
-    codes = pq_codes_oracle_sql(m=m, k=k, n_iter=n_iter, dim=dim,
-                                table=table)
+    d = _pq_check(PQ_M, PQ_K, DIM)
+    codes = pq_codes_oracle_sql()
     qdims = ",\n         ".join(
-        f"{_int_dim_sql('embedding', i)} AS x{i}" for i in range(dim))
+        f"{_int_dim_sql('embedding', i)} AS x{i}" for i in range(DIM))
     ctes = [f"adc_codes AS (\n{codes})",
             f"""adc_q AS (
   SELECT vec_id AS query_id, {qdims}
-  FROM {table} WHERE vec_id % {query_mod} = 0
-  ORDER BY vec_id LIMIT {max_queries}
+  FROM embeddings WHERE vec_id % {PQ_QUERY_MOD} = 0
+  ORDER BY vec_id LIMIT {PQ_MAX_QUERIES}
 )"""]
-    for s in range(m):
+    for s in range(PQ_M):
         cents = kmeans_oracle_sql(
-            k=k, n_iter=n_iter, dim=d, table=table,
+            k=PQ_K, n_iter=PQ_N_ITER, dim=d,
             emb_expr=f"(embedding[{s * d + 1}:{s * d + d}])",
             summary="centroids")
         dist = " + ".join(
@@ -657,8 +633,8 @@ def pq_adc_oracle_sql(m: int = PQ_M, k: int = PQ_K,
 )""")
     tjoins = "\n  ".join(
         f"JOIN adc_t{s} t{s} ON t{s}.query_id = q.query_id "
-        f"AND t{s}.cid = v.code_{s}" for s in range(m))
-    adc = " + ".join(f"t{s}.d2" for s in range(m))
+        f"AND t{s}.cid = v.code_{s}" for s in range(PQ_M))
+    adc = " + ".join(f"t{s}.d2" for s in range(PQ_M))
     return ("WITH " + ",\n".join(ctes) + f""",
 adc_scored AS (
   SELECT q.query_id, v.vec_id AS neighbor_id, {adc} AS adc2
@@ -672,7 +648,7 @@ SELECT query_id, rank, neighbor_id, adc2 FROM (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY adc2, neighbor_id) AS rank
   FROM adc_scored
-) WHERE rank <= {k_top}
+) WHERE rank <= {PQ_ADC_TOP_K}
 """)
 
 
@@ -681,12 +657,12 @@ SELECT query_id, rank, neighbor_id, adc2 FROM (
 # ---------------------------------------------------------------------------
 
 
-def _iv_sql(table: str, emb_expr: str, dim: int) -> str:
+def _iv_sql(emb_expr: str, dim: int) -> str:
     xs = ",\n         ".join(
         f"{_int_dim_sql(emb_expr, i)} AS x{i}" for i in range(dim))
     h = md5_hash60_sql("CAST(vec_id AS VARCHAR)")
     return (f"km_iv AS MATERIALIZED (\n  SELECT vec_id, {h} AS h,\n"
-            f"         {xs}\n  FROM {table}\n)")
+            f"         {xs}\n  FROM embeddings\n)")
 
 
 def _assign_cte(name: str, cents: str, dim: int) -> str:
@@ -702,8 +678,7 @@ def _assign_cte(name: str, cents: str, dim: int) -> str:
 
 
 def kmeans_oracle_sql(k: int = K_CLUSTERS, n_iter: int = N_ITER,
-                      dim: int = DIM, table: str = "embeddings",
-                      emb_expr: str = "embedding",
+                      dim: int = DIM, emb_expr: str = "embedding",
                       summary: bool | str = False) -> str:
     """The identical computation as one DuckDB query: init by the same
     (h, vec_id) rank, per-round assignment via the same (dist2, cid) total
@@ -711,7 +686,7 @@ def kmeans_oracle_sql(k: int = K_CLUSTERS, n_iter: int = N_ITER,
     frozen by the LEFT JOIN coalesce. ``summary``: False = per-vector
     assignment, True = per-cluster rollup, "margins" = the rn=1/rn=2
     margin rows, "crosstab" = cluster × label counts."""
-    ctes = [_iv_sql(table, emb_expr, dim)]
+    ctes = [_iv_sql(emb_expr, dim)]
     xs = ", ".join(f"x{i}" for i in range(dim))
     ctes.append(f"""km_c0 AS MATERIALIZED (
   SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INT) AS cid,
@@ -773,10 +748,10 @@ km_rank AS (
         xs_out = ", ".join(f"x{i}" for i in range(dim))
         body = f"SELECT cid, {xs_out} FROM km_c{n_iter}"
     elif summary == "crosstab":
-        body = (f"SELECT a.cid, e.label,\n"
-                f"       CAST(count(*) AS BIGINT) AS n_members\n"
-                f"FROM km_af a JOIN {table} e USING (vec_id)\n"
-                f"WHERE a.rn = 1 GROUP BY 1, 2")
+        body = ("SELECT a.cid, e.label,\n"
+                "       CAST(count(*) AS BIGINT) AS n_members\n"
+                "FROM km_af a JOIN embeddings e USING (vec_id)\n"
+                "WHERE a.rn = 1 GROUP BY 1, 2")
     elif summary:
         body = ("SELECT cid, CAST(count(*) AS BIGINT) AS n_members,\n"
                 "       CAST(sum(dist2) AS BIGINT) AS inertia\n"

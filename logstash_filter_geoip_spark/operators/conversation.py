@@ -15,6 +15,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# values each Spark operator shares with its DuckDB oracle twin
+START_TOKEN, END_TOKEN = "<start>", "<end>"  # transition sentinels
+CANNED_MIN_CONVS = 3
+TOOL_CHAIN_SEP = ">"
+ERROR_PATTERN = "E[0-9][0-9][0-9]"  # backslash-free: same in both engines
+LATENCY_QS = (0.5, 0.95)
+
 
 def conv_turn_features(t: DataFrame) -> DataFrame:
     """Per-turn conversational features: previous role/tool, seconds since
@@ -47,7 +54,7 @@ def distinct_ip_stats(parsed: DataFrame) -> DataFrame:
     )
 
 
-def sft_pairs(t: DataFrame, joiner: str = "\n") -> DataFrame:
+def sft_pairs(t: DataFrame) -> DataFrame:
     """Extract SFT prompt/response pairs from multi-turn transcripts — the
     instruction-tuning prep step: each user turn opens a pair; the pair's
     response is the ordered concatenation of the assistant turns that
@@ -80,7 +87,7 @@ def sft_pairs(t: DataFrame, joiner: str = "\n") -> DataFrame:
                      .alias("prompt"),
                     F.array_join(
                         F.sort_array(F.collect_list(asst)).getField("text"),
-                        joiner).alias("response"),
+                        "\n").alias("response"),
                     F.sum((F.col("role") == "assistant").cast("int"))
                      .alias("n_assistant"),
                     F.sum((~F.col("role").isin("user", "assistant"))
@@ -88,11 +95,10 @@ def sft_pairs(t: DataFrame, joiner: str = "\n") -> DataFrame:
     return out.where(F.col("n_assistant") >= 1)
 
 
-def sft_pairs_oracle_sql(joiner: str = "\n") -> str:
+def sft_pairs_oracle_sql() -> str:
     """DuckDB mirror, as a CONTINUATION of a WITH chain that already
     defines `transcripts` (append to __spark_entry__'s oracle prefix).
     pair_idx is CAST to BIGINT (DuckDB window sums are HUGEINT)."""
-    j = joiner.replace("\n", "' || chr(10) || '")
     return f""", numbered AS (
   SELECT conv_id, turn_idx, role, text,
          CAST(sum(CASE WHEN role = 'user' THEN 1 ELSE 0 END)
@@ -104,7 +110,7 @@ g AS (
   SELECT conv_id, pair_idx,
          max(CASE WHEN role = 'user' THEN text END) AS prompt,
          string_agg(CASE WHEN role = 'assistant' THEN text END,
-                    '{j}' ORDER BY turn_idx) AS response,
+                    chr(10) ORDER BY turn_idx) AS response,
          CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END)
               AS BIGINT) AS n_assistant,
          CAST(sum(CASE WHEN role NOT IN ('user', 'assistant')
@@ -116,7 +122,7 @@ SELECT * FROM g WHERE n_assistant >= 1
 """
 
 
-def render_chat(t: DataFrame, joiner: str = "\n") -> DataFrame:
+def render_chat(t: DataFrame) -> DataFrame:
     """Render each conversation into ONE training document with role tags
     (the apply-chat-template step that precedes tokenization):
     ``<|role|>text`` per turn, turn order preserved, NULL text renders as
@@ -135,20 +141,19 @@ def render_chat(t: DataFrame, joiner: str = "\n") -> DataFrame:
                       F.sort_array(F.collect_list(
                           F.struct(F.col("turn_idx"),
                                    rendered.alias("s")))).getField("s"),
-                      joiner).alias("chat_text")))
+                      "\n").alias("chat_text")))
 
 
-def render_chat_oracle_sql(joiner: str = "\n") -> str:
+def render_chat_oracle_sql() -> str:
     """DuckDB mirror, as a continuation of a WITH chain defining
     `transcripts` (the sft_pairs_oracle_sql convention)."""
-    j = joiner.replace("\n", "' || chr(10) || '")
     return f""", rendered AS (
   SELECT conv_id, turn_idx,
          '<|' || role || '|>' || coalesce(text, '') AS s
   FROM transcripts
 )
 SELECT conv_id, count(*) AS n_turns,
-       string_agg(s, '{j}' ORDER BY turn_idx) AS chat_text
+       string_agg(s, chr(10) ORDER BY turn_idx) AS chat_text
 FROM rendered GROUP BY conv_id
 """
 
@@ -221,9 +226,7 @@ FROM masked
 """
 
 
-def transition_counts(t: DataFrame, state_col: str = "role",
-                      start_token: str = "<start>",
-                      end_token: str = "<end>") -> DataFrame:
+def transition_counts(t: DataFrame) -> DataFrame:
     """Markov transition matrix over per-conversation state sequences —
     the clickstream/session-flow staple (which role follows which, which
     tool hands off to which): (from_state, to_state, n_transitions,
@@ -247,21 +250,21 @@ def transition_counts(t: DataFrame, state_col: str = "role",
     rows — tiny), with the 1-row total broadcast back (the key_skew ppm
     shape; floor division, integer-exact in every engine)."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    cur = F.col(state_col)
+    cur = F.col("role")
     # window functions must be materialized in their own projection before
     # the Generate consumes them (Spark rejects a window expr under explode)
     stepped = t.select(
         cur.alias("__cur"),
-        F.lag(state_col).over(w).alias("__prev"),
+        F.lag("role").over(w).alias("__prev"),
         (F.row_number().over(w) == 1).alias("__is_first"),
         F.lead(F.lit(1)).over(w).isNull().alias("__is_last"))
     step = F.struct(
-        F.when(F.col("__is_first"), F.lit(start_token))
+        F.when(F.col("__is_first"), F.lit(START_TOKEN))
          .otherwise(F.col("__prev")).alias("from_state"),
         F.col("__cur").alias("to_state"))
     fin = F.when(F.col("__is_last"),
                  F.struct(F.col("__cur").alias("from_state"),
-                          F.lit(end_token).alias("to_state")))
+                          F.lit(END_TOKEN).alias("to_state")))
     pairs = (stepped.select(F.explode(F.array_compact(F.array(step, fin)))
                              .alias("tr"))
                     .select("tr.from_state", "tr.to_state"))
@@ -281,16 +284,14 @@ def transition_counts(t: DataFrame, state_col: str = "role",
                            .alias("share_ppm")))
 
 
-def transition_counts_oracle_sql(state_col: str = "role",
-                                 start_token: str = "<start>",
-                                 end_token: str = "<end>") -> str:
+def transition_counts_oracle_sql() -> str:
     """DuckDB mirror, as a CONTINUATION of a WITH chain defining
     `transcripts`. The sentinel arms key off row position (row_number /
     lead(1)), never off state NULLness — a NULL state stays NULL."""
     return f""", steps AS (
-  SELECT CASE WHEN row_number() OVER w = 1 THEN '{start_token}'
-              ELSE lag({state_col}) OVER w END AS from_state,
-         {state_col} AS to_state,
+  SELECT CASE WHEN row_number() OVER w = 1 THEN '{START_TOKEN}'
+              ELSE lag(role) OVER w END AS from_state,
+         role AS to_state,
          CASE WHEN lead(1) OVER w IS NULL THEN 1 ELSE 0 END AS is_last
   FROM transcripts
   WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
@@ -298,7 +299,7 @@ def transition_counts_oracle_sql(state_col: str = "role",
 trans AS (
   SELECT from_state, to_state FROM steps
   UNION ALL
-  SELECT to_state AS from_state, '{end_token}' AS to_state
+  SELECT to_state AS from_state, '{END_TOKEN}' AS to_state
   FROM steps WHERE is_last = 1
 ),
 tc AS (
@@ -408,7 +409,8 @@ FROM chk_agg
 """
 
 
-def canned_replies(t: DataFrame, min_convs: int = 3) -> DataFrame:
+def canned_replies(t: DataFrame,
+                   min_convs: int = CANNED_MIN_CONVS) -> DataFrame:
     """Template/canned-reply inventory: normalized assistant texts
     (lower(trim(text)); empty/NULL replies excluded — they are
     chat_format_checks' n_empty, not templates) with use counts, distinct
@@ -429,7 +431,7 @@ def canned_replies(t: DataFrame, min_convs: int = 3) -> DataFrame:
                         (F.col("n_convs") >= min_convs).cast("int"))
 
 
-def canned_replies_oracle_sql(min_convs: int = 3) -> str:
+def canned_replies_oracle_sql() -> str:
     return f""", canned AS (
   SELECT lower(trim(text)) AS reply,
          CAST(count(*) AS BIGINT) AS n_uses,
@@ -439,12 +441,13 @@ def canned_replies_oracle_sql(min_convs: int = 3) -> str:
   GROUP BY 1
 )
 SELECT reply, n_uses, n_convs,
-       CAST(n_convs >= {min_convs} AS INT) AS canned
+       CAST(n_convs >= {CANNED_MIN_CONVS} AS INT) AS canned
 FROM canned
 """
 
 
-def canned_share(t: DataFrame, min_convs: int = 3) -> DataFrame:
+def canned_share(t: DataFrame,
+                 min_convs: int = CANNED_MIN_CONVS) -> DataFrame:
     """Per-conversation canned-reply share: how much of each
     conversation's assistant output is template text (n_assistant counts
     only flaggable — nonempty — replies; ppm by truncating integer
@@ -467,14 +470,14 @@ def canned_share(t: DataFrame, min_convs: int = 3) -> DataFrame:
                                 "div nullif(n_assistant, 0)")))
 
 
-def canned_share_oracle_sql(min_convs: int = 3) -> str:
+def canned_share_oracle_sql() -> str:
     return f""", replies AS (
   SELECT conv_id, lower(trim(text)) AS reply
   FROM transcripts
   WHERE role = 'assistant' AND text IS NOT NULL AND trim(text) <> ''
 ), inv AS (
-  SELECT reply, CAST(count(DISTINCT conv_id) >= {min_convs} AS INT)
-           AS canned
+  SELECT reply,
+         CAST(count(DISTINCT conv_id) >= {CANNED_MIN_CONVS} AS INT) AS canned
   FROM replies GROUP BY 1
 )
 SELECT r.conv_id,
@@ -532,7 +535,7 @@ WHERE tokens_from_end <= {max_tokens}
 """
 
 
-def tool_chains(t: DataFrame, sep: str = ">") -> DataFrame:
+def tool_chains(t: DataFrame) -> DataFrame:
     """Tool-call chain mining — the agent-analytics staple transitions
     can't answer (bigrams lose the full workflow): each conversation's
     ordered non-NULL tool sequence becomes one chain string, then chains
@@ -552,18 +555,20 @@ def tool_chains(t: DataFrame, sep: str = ">") -> DataFrame:
                .agg(F.array_join(
                         F.sort_array(
                             F.collect_list(F.struct("turn_idx", "tool")))
-                         .getField("tool"), sep).alias("chain"),
+                         .getField("tool"), TOOL_CHAIN_SEP)
+                     .alias("chain"),
                     F.count(F.lit(1)).alias("n_tool_turns")))
     return (chains.groupBy("chain")
                   .agg(F.max("n_tool_turns").alias("chain_len"),
                        F.count(F.lit(1)).alias("n_convs")))
 
 
-def tool_chains_oracle_sql(sep: str = ">") -> str:
+def tool_chains_oracle_sql() -> str:
     """DuckDB mirror (continuation CTE): string_agg ORDER BY turn_idx ==
     the sorted-struct concat; counts CAST to BIGINT."""
     return f""", chains AS (
-  SELECT conv_id, string_agg(tool, '{sep}' ORDER BY turn_idx) AS chain,
+  SELECT conv_id,
+         string_agg(tool, '{TOOL_CHAIN_SEP}' ORDER BY turn_idx) AS chain,
          CAST(count(*) AS BIGINT) AS n_tool_turns
   FROM transcripts WHERE tool IS NOT NULL GROUP BY conv_id
 )
@@ -573,10 +578,9 @@ FROM chains GROUP BY chain
 """
 
 
-def error_runs(t: DataFrame,
-               pattern: str = "E[0-9][0-9][0-9]") -> DataFrame:
+def error_runs(t: DataFrame) -> DataFrame:
     """Error-burst detection per conversation — the gaps-and-islands
-    pattern: consecutive error turns (text matching ``pattern``,
+    pattern: consecutive error turns (text matching ``ERROR_PATTERN``,
     deliberately BACKSLASH-FREE — the web.py shared-regex-spelling rule)
     group into runs via the row_number difference trick, then each
     conversation reports (max_error_run, n_error_runs, n_error_turns).
@@ -588,7 +592,7 @@ def error_runs(t: DataFrame,
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     base = t.select(
         "conv_id", "turn_idx",
-        F.coalesce(F.col("text").rlike(pattern), F.lit(False))
+        F.coalesce(F.col("text").rlike(ERROR_PATTERN), F.lit(False))
          .alias("is_err"),
         F.row_number().over(w).alias("__rn"))
     errs = (base.where(F.col("is_err"))
@@ -602,12 +606,13 @@ def error_runs(t: DataFrame,
                      F.sum("run_len").alias("n_error_turns")))
 
 
-def error_runs_oracle_sql(pattern: str = "E[0-9][0-9][0-9]") -> str:
+def error_runs_oracle_sql() -> str:
     """DuckDB mirror (continuation CTE): identical row_number-difference
     islands; BIGINT casts on counts/sums."""
     return f""", eflags AS (
   SELECT conv_id, turn_idx,
-         coalesce(regexp_matches(text, '{pattern}'), FALSE) AS is_err,
+         coalesce(regexp_matches(text, '{ERROR_PATTERN}'), FALSE)
+           AS is_err,
          row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx) AS rn
   FROM transcripts
 ), errs AS (
@@ -625,8 +630,7 @@ FROM eruns GROUP BY conv_id
 """
 
 
-def tool_latency_stats(t: DataFrame,
-                       qs: tuple[float, ...] = (0.5, 0.95)) -> DataFrame:
+def tool_latency_stats(t: DataFrame) -> DataFrame:
     """Per-tool response-latency percentiles — the operational SLO query:
     a tool-call turn's latency proxy is the microsecond gap to the NEXT
     turn in its conversation (the conv_turn_features gap rule, exact in
@@ -646,16 +650,18 @@ def tool_latency_stats(t: DataFrame,
                 .cast("long"))
             .where(F.col("tool").isNotNull()
                    & F.col("lat_us").isNotNull()))
-    return quantile_stats(lat, ("tool",), "lat_us", qs=qs, exact=True)
+    return quantile_stats(lat, ("tool",), "lat_us", qs=LATENCY_QS,
+                          exact=True)
 
 
-def tool_latency_oracle_sql(qs: tuple[float, ...] = (0.5, 0.95)) -> str:
+def tool_latency_oracle_sql() -> str:
     """DuckDB mirror (continuation CTE): identical lead-gap in storage
     micros + quantile_cont (type-7 == Spark percentile)."""
     from logstash_filter_geoip_spark.operators.aggregate import \
         _quantile_name
     sel = ",\n       ".join(
-        f"quantile_cont(lat_us, {q}) AS {_quantile_name(q)}" for q in qs)
+        f"quantile_cont(lat_us, {q}) AS {_quantile_name(q)}"
+        for q in LATENCY_QS)
     return f""", lat AS (
   SELECT tool,
          CAST(date_diff('microsecond', ts,

@@ -33,14 +33,15 @@ higher-order transform/slice alternative is CodegenFallback and measured
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-from logstash_filter_geoip_spark.functions.ngrams import with_gram_array
-from logstash_filter_geoip_spark.sources.transcripts import (load_transcripts,
+from logstash_filter_geoip_spark.functions.ngrams import (WORD_RE,
+                                                          with_gram_array)
+from logstash_filter_geoip_spark.functions.ngrams import word_tokens as _tokens
+from logstash_filter_geoip_spark.sources.transcripts import (load_table,
+                                                             load_transcripts,
                                                              transcripts_sql)
-
-WORD_RE = "[a-z0-9]+"
 
 # IPv6 first (embedded dotted-quad as the FIRST alternative — RE2 and Java
 # regex are both leftmost-first and neither backtracks into a later
@@ -53,21 +54,13 @@ IPV4_PII_RE = r"\b\d{1,3}(?:\.\d{1,3}){3}\b"
 EMAIL_PII_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _tokens(text_col: str):
-    return F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0)
-
-
-def bench_ngrams(bench: DataFrame, n: int, text_col: str = "text") -> DataFrame:
+def bench_ngrams(bench: DataFrame, n: int) -> DataFrame:
     """Distinct word n-grams of a benchmark relation → one `g` column.
 
     The benchmark is bounded by contract (an eval suite, not a corpus);
     callers broadcast the result.
     """
-    toks = bench.select(_tokens(text_col).alias("tk"))
+    toks = bench.select(_tokens("text").alias("tk"))
     return (with_gram_array(toks, "tk", n)
             .select(F.explode("grams").alias("g"))
             .distinct())
@@ -84,8 +77,7 @@ _DECON_T = T.StructType([
 ])
 
 
-def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
-                  text_col: str = "text") -> DataFrame:
+def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5) -> DataFrame:
     """Benchmark decontamination: per document, how many of its word
     n-gram occurrences appear in the benchmark's n-gram set (the GPT-3
     13-gram overlap rule, parameterized n).
@@ -99,7 +91,7 @@ def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
     faster at 1M docs than the explode → broadcast-join → two-phase count
     shape the oracle spells (5.8 s vs 20.7 s, r5 session 7). NULL text
     gives 0 n-grams and 0 hits, as the oracle's greatest(NULL, 0) does."""
-    rows = bench_ngrams(bench, n, text_col).collect()
+    rows = bench_ngrams(bench, n).collect()
     if len(rows) > _MAX_BENCH_GRAMS:
         raise ValueError(
             f"decontaminate: {len(rows)} benchmark n-grams exceeds the "
@@ -126,23 +118,22 @@ def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
             "n_ngrams": pd.array(n_ngrams, dtype="Int64"),
             "n_hits": pd.array(n_hits, dtype="Int64")})
 
-    stats = docs.select("doc_id", _decon_batch(F.col(text_col)).alias("s"))
+    stats = docs.select("doc_id", _decon_batch(F.col("text")).alias("s"))
     return stats.select("doc_id", "s.n_ngrams", "s.n_hits",
                         (F.col("s.n_hits") > 0).cast("int")
                          .alias("contaminated"))
 
 
-def pii_redact(df: DataFrame, text_col: str = "text",
-               keys: tuple[str, ...] = ("conv_id", "turn_idx")) -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Scrub IP literals (v6 first — every spelling the parser handles,
     incl. NAT64/mapped/embedded-quad — then plain v4 on the v6-redacted
     text) and emails; count each category. Pure codegen regexp scan."""
-    t = F.col(text_col)
+    t = F.col("text")
     r6 = F.regexp_replace(t, IPV6_PII_RE, "<IP6>")
     r46 = F.regexp_replace(r6, IPV4_PII_RE, "<IP>")
     red = F.regexp_replace(r46, EMAIL_PII_RE, "<EMAIL>")
     return df.select(
-        *keys,
+        "conv_id", "turn_idx",
         red.alias("red_text"),
         F.size(F.regexp_extract_all(r6, F.lit(IPV4_PII_RE), 0)).alias("n_ip4"),
         F.size(F.regexp_extract_all(t, F.lit(IPV6_PII_RE), 0)).alias("n_ip6"),
@@ -195,7 +186,7 @@ def _rep_stats_batch(texts: pd.Series) -> pd.DataFrame:
                          for k, v in out.items()})
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher/MassiveText-style repetition signals, integerized:
     duplicate-token and top-bigram multiplicity per document, plus a keep
     rule in cross-multiplied integer form (top bigram ≤ 20% of bigrams AND
@@ -209,7 +200,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (9.1 s vs 45.5 s, r5 session 7 — the enrich-v6-key precedent: measure
     before "optimizing" back)."""
     stats = docs.select("doc_id",
-                        _rep_stats_batch(F.col(text_col)).alias("s"))
+                        _rep_stats_batch(F.col("text")).alias("s"))
     z = F.lit(0).cast("long")
     nb = F.coalesce(F.col("s.n_bigrams"), z)
     top = F.coalesce(F.col("s.top_bigram_count"), z)
@@ -230,8 +221,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         keep.cast("int").alias("keep_rep"))
 
 
-def clean_corpus(docs: DataFrame, bench: DataFrame, n: int = 5,
-                 lang: str = "en", text_col: str = "text") -> DataFrame:
+def clean_corpus(docs: DataFrame, bench: DataFrame, n: int = 5) -> DataFrame:
     """The full curation pass a training-data pipeline runs before
     tokenization, composed into ONE plan: quality keep rule + language
     filter + repetition keep rule + exact-dedup canonicalization (min
@@ -251,18 +241,17 @@ def clean_corpus(docs: DataFrame, bench: DataFrame, n: int = 5,
                                                                 quality_cols)
     perrow = docs.select(
         "doc_id",
-        F.md5(F.col(text_col).cast("binary")).alias("fp"),
-        quality_cols(text_col)["keep"].alias("keep_q"),
-        (lang_cols(text_col)["lang_pred"] == lang).cast("int")
+        F.md5(F.col("text").cast("binary")).alias("fp"),
+        quality_cols()["keep"].alias("keep_q"),
+        (lang_cols()["lang_pred"] == "en").cast("int")
          .alias("is_lang"))
     canon = perrow.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
     flags = (perrow.join(canon, "fp")
                    .select("doc_id", "keep_q", "is_lang",
                            (F.col("doc_id") == F.col("keep_id")).cast("int")
                             .alias("is_canonical")))
-    rep = repetition_stats(docs, text_col).select("doc_id", "keep_rep")
-    dec = decontaminate(docs, bench, n, text_col).select("doc_id",
-                                                         "contaminated")
+    rep = repetition_stats(docs).select("doc_id", "keep_rep")
+    dec = decontaminate(docs, bench, n).select("doc_id", "contaminated")
     kept = ((F.col("keep_q") == 1) & (F.col("is_lang") == 1)
             & (F.col("keep_rep") == 1) & (F.col("contaminated") == 0)
             & (F.col("is_canonical") == 1))
@@ -289,8 +278,7 @@ def split_segments(docs: DataFrame, unit_re: str = r"\n+",
 
 
 def line_dedup(docs: DataFrame, max_df: int = 2, chunk_tokens: int = 8,
-               joiner: str = " ", id_col: str = "doc_id",
-               text_col: str = "text",
+               joiner: str = " ",
                segments: DataFrame | None = None) -> DataFrame:
     """Line-level corpus deduplication (CCNet / RefinedWeb style): drop
     every segment that appears in more than ``max_df`` documents
@@ -318,23 +306,23 @@ def line_dedup(docs: DataFrame, max_df: int = 2, chunk_tokens: int = 8,
     """
     from logstash_filter_geoip_spark.operators.packing import chunk_documents
     if segments is None:
-        segments = (chunk_documents(docs, chunk_tokens, 0, id_col, text_col)
-                    .select(id_col, F.col("chunk_idx").alias("pos"),
+        segments = (chunk_documents(docs, chunk_tokens, 0)
+                    .select("doc_id", F.col("chunk_idx").alias("pos"),
                             F.col("chunk_text").alias("seg")))
     seg_df = segments.groupBy("seg").agg(
-        F.countDistinct(id_col).alias("seg_df"))
+        F.countDistinct("doc_id").alias("seg_df"))
     kept = (segments.join(seg_df.hint("merge"), "seg")
                     .where(F.col("seg_df") <= max_df))
-    tot = segments.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_segments"))
-    ragg = (kept.groupBy(id_col)
+    tot = segments.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_segments"))
+    ragg = (kept.groupBy("doc_id")
                 .agg(F.count(F.lit(1)).alias("n_kept"),
                      F.array_join(
                          F.sort_array(F.collect_list(F.struct("pos", "seg")))
                           .getField("seg"), joiner).alias("text_dedup")))
-    return (docs.select(id_col)
-                .join(tot.hint("merge"), id_col, "left")
-                .join(ragg.hint("merge"), id_col, "left")
-                .select(id_col,
+    return (docs.select("doc_id")
+                .join(tot.hint("merge"), "doc_id", "left")
+                .join(ragg.hint("merge"), "doc_id", "left")
+                .select("doc_id",
                         F.coalesce("n_segments", F.lit(0).cast("long"))
                          .alias("n_segments"),
                         F.coalesce("n_kept", F.lit(0).cast("long"))
@@ -343,16 +331,13 @@ def line_dedup(docs: DataFrame, max_df: int = 2, chunk_tokens: int = 8,
                          .alias("text_dedup")))
 
 
-def line_dedup_oracle_sql(max_df: int = 2, chunk_tokens: int = 8,
-                          table: str = "documents",
-                          joiner: str = " ") -> str:
+def line_dedup_oracle_sql(max_df: int = 2, chunk_tokens: int = 8) -> str:
     """DuckDB mirror of ``line_dedup`` (chunk-mode segmentation), composed
-    verbatim from the chunking oracle — the training_corpus pattern. The
-    ``joiner`` threads through so the two reassembly definitions cannot
-    drift."""
+    verbatim from the chunking oracle — the training_corpus pattern —
+    reassembled with line_dedup's default ``' '`` joiner."""
     from logstash_filter_geoip_spark.operators.packing import (
         chunk_documents_oracle_sql)
-    chunk_sql = chunk_documents_oracle_sql(chunk_tokens, 0, table)
+    chunk_sql = chunk_documents_oracle_sql(chunk_tokens, 0)
     return f"""
 WITH segs AS (
   SELECT doc_id, chunk_idx AS pos, chunk_text AS seg FROM ({chunk_sql}) c
@@ -365,25 +350,20 @@ kept AS (
 tot AS (SELECT doc_id, count(*) AS n_segments FROM segs GROUP BY doc_id),
 ragg AS (
   SELECT doc_id, count(*) AS n_kept,
-         string_agg(seg, '{joiner}' ORDER BY pos) AS text_dedup
+         string_agg(seg, ' ' ORDER BY pos) AS text_dedup
   FROM kept GROUP BY doc_id
 )
 SELECT d.doc_id,
        CAST(coalesce(t.n_segments, 0) AS BIGINT) AS n_segments,
        CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept,
        coalesce(r.text_dedup, '') AS text_dedup
-FROM {table} d
+FROM documents d
 LEFT JOIN tot t USING (doc_id)
 LEFT JOIN ragg r USING (doc_id)
 """
 
 
-def decontaminate_fuzzy(docs: DataFrame, bench: DataFrame,
-                        n_hashes: int | None = None,
-                        n_bands: int | None = None,
-                        threshold: float | None = None,
-                        text_col: str = "text",
-                        bench_id_col: str = "doc_id") -> DataFrame:
+def decontaminate_fuzzy(docs: DataFrame, bench: DataFrame) -> DataFrame:
     """Fuzzy benchmark decontamination: MinHash-LSH near-dup detection of
     corpus documents against a bounded benchmark set (the Llama/FineWeb
     companion to the exact n-gram rule in ``decontaminate`` — catches
@@ -391,7 +371,8 @@ def decontaminate_fuzzy(docs: DataFrame, bench: DataFrame,
     overlap under-counts).
 
     Returns one row per (doc_id, bench_id) pair whose EXACT word-shingle
-    Jaccard ≥ threshold: (doc_id, bench_id, n_shared, n_doc, n_bench).
+    Jaccard ≥ dedup.JACCARD_THRESHOLD: (doc_id, bench_id, n_shared, n_doc,
+    n_bench).
     MinHash bands generate CANDIDATES only; every emitted value is exact
     (the minhash_lsh_pairs contract), so the output is oracle-checkable
     against the exact cross-Jaccard SQL whenever band recall is total —
@@ -406,16 +387,13 @@ def decontaminate_fuzzy(docs: DataFrame, bench: DataFrame,
     exists anywhere — candidates come only from band-bucket collisions.
     """
     from logstash_filter_geoip_spark.operators import dedup as dd
-    n_hashes = dd.N_MINHASH if n_hashes is None else n_hashes
-    n_bands = dd.N_BANDS if n_bands is None else n_bands
-    threshold = dd.JACCARD_THRESHOLD if threshold is None else threshold
-    bench_docs = bench.select(F.col(bench_id_col).alias("doc_id"), text_col)
-    sh_d = dd._shingles(docs, text_col)
-    sh_b = dd._shingles(bench_docs, text_col)
-    sig_d = dd.minhash_signatures(docs, n_hashes, sh=sh_d)
-    sig_b = dd.minhash_signatures(bench_docs, n_hashes, sh=sh_b)
-    bands_d = dd.band_rows(sig_d, n_hashes, n_bands)
-    bands_b = (dd.band_rows(sig_b, n_hashes, n_bands)
+    bench_docs = bench.select("doc_id", "text")
+    sh_d = dd._shingles(docs)
+    sh_b = dd._shingles(bench_docs)
+    sig_d = dd.minhash_signatures(docs, dd.N_MINHASH, sh=sh_d)
+    sig_b = dd.minhash_signatures(bench_docs, dd.N_MINHASH, sh=sh_b)
+    bands_d = dd.band_rows(sig_d, dd.N_MINHASH, dd.N_BANDS)
+    bands_b = (dd.band_rows(sig_b, dd.N_MINHASH, dd.N_BANDS)
                  .withColumnRenamed("doc_id", "bench_id"))
     cand = (bands_d.join(F.broadcast(bands_b), ["band", "band_hash"])
                    .select("doc_id", "bench_id")
@@ -437,18 +415,17 @@ def decontaminate_fuzzy(docs: DataFrame, bench: DataFrame,
                   .where(F.col("n_shared") * F.lit(1.0)
                          / (F.col("n_doc") + F.col("n_bench")
                             - F.col("n_shared"))
-                         >= F.lit(threshold))
+                         >= F.lit(dd.JACCARD_THRESHOLD))
                   .select("doc_id", "bench_id", "n_shared", "n_doc",
                           "n_bench"))
 
 
-def vocab_top_tokens(docs: DataFrame, k: int = 50,
-                     text_col: str = "text") -> DataFrame:
+def vocab_top_tokens(docs: DataFrame, k: int = 50) -> DataFrame:
     """Global vocabulary heavy hitters: top-k tokens by total occurrences
     (ties broken by token, so the result SET is deterministic) with exact
     document frequency. Two-phase aggregates + TakeOrderedAndProject; swap
     countDistinct for approx_count_distinct when exact df is not needed."""
-    toks = docs.select("doc_id", _tokens(text_col).alias("tk"))
+    toks = docs.select("doc_id", _tokens("text").alias("tk"))
     return (toks.select("doc_id", F.explode("tk").alias("token"))
                 .groupBy("token")
                 .agg(F.count("*").alias("n_occurrences"),
@@ -457,8 +434,11 @@ def vocab_top_tokens(docs: DataFrame, k: int = 50,
                 .limit(k))
 
 
-def vocab_growth(docs: DataFrame, bucket_width: int = 50,
-                 text_col: str = "text") -> DataFrame:
+VOCAB_BUCKET_WIDTH = 50  # doc_id range per bucket, shared with the oracle
+
+
+def vocab_growth(docs: DataFrame,
+                 bucket_width: int = VOCAB_BUCKET_WIDTH) -> DataFrame:
     """Vocabulary-growth (Heaps-law) curve: per ingest-order bucket
     (doc_id div bucket_width), how many never-seen-before tokens arrive —
     the corpus-saturation signal a curation pipeline reads to decide
@@ -478,7 +458,7 @@ def vocab_growth(docs: DataFrame, bucket_width: int = 50,
     if bucket_width < 1:
         raise ValueError(f"bucket_width must be >= 1: {bucket_width}")
     b = F.expr(f"doc_id div {bucket_width}")  # integer div, exact at any id
-    toks = docs.select(b.alias("bucket"), _tokens(text_col).alias("tk"))
+    toks = docs.select(b.alias("bucket"), _tokens("text").alias("tk"))
     occ = toks.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.coalesce(F.size("tk"), F.lit(0)))
@@ -497,14 +477,13 @@ def vocab_growth(docs: DataFrame, bucket_width: int = 50,
                            F.sum("n_new_tokens").over(cum_w)))
 
 
-def vocab_growth_oracle_sql(bucket_width: int = 50,
-                            table: str = "documents") -> str:
+def vocab_growth_oracle_sql() -> str:
     """DuckDB mirror of vocab_growth (window sums BIGINT-cast)."""
     return f"""
 WITH tk AS (
-  SELECT doc_id // {bucket_width} AS bucket,
+  SELECT doc_id // {VOCAB_BUCKET_WIDTH} AS bucket,
          regexp_extract_all(lower(text), '{WORD_RE}') AS tk
-  FROM {table}
+  FROM documents
 ), occ AS (
   SELECT bucket, count(*) AS n_docs,
          CAST(sum(coalesce(len(tk), 0)) AS BIGINT) AS n_token_occurrences
@@ -549,18 +528,26 @@ LINE_DEDUP_MAX_DF = 2
 def queries():
     return {
         "decontaminate": lambda s, d: decontaminate(
-            _docs(s, d), _docs(s, d).where(_BENCH_PRED_SQL), n=DECONTAM_N),
+            load_table(s, d, "documents"),
+            load_table(s, d, "documents").where(_BENCH_PRED_SQL),
+            n=DECONTAM_N),
         "decontaminate_fuzzy": lambda s, d: decontaminate_fuzzy(
-            _docs(s, d), _docs(s, d).where(_FUZZY_BENCH_PRED_SQL)),
+            load_table(s, d, "documents"),
+            load_table(s, d, "documents").where(_FUZZY_BENCH_PRED_SQL)),
         "line_dedup": lambda s, d: line_dedup(
-            _docs(s, d), max_df=LINE_DEDUP_MAX_DF,
+            load_table(s, d, "documents"), max_df=LINE_DEDUP_MAX_DF,
             chunk_tokens=LINE_DEDUP_W),
         "pii_redact": lambda s, d: pii_redact(load_transcripts(s, d)),
-        "repetition_stats": lambda s, d: repetition_stats(_docs(s, d)),
-        "vocab_top_tokens": lambda s, d: vocab_top_tokens(_docs(s, d)),
-        "vocab_growth": lambda s, d: vocab_growth(_docs(s, d)),
+        "repetition_stats": lambda s, d: repetition_stats(
+            load_table(s, d, "documents")),
+        "vocab_top_tokens": lambda s, d: vocab_top_tokens(
+            load_table(s, d, "documents")),
+        "vocab_growth": lambda s, d: vocab_growth(
+            load_table(s, d, "documents")),
         "clean_corpus": lambda s, d: clean_corpus(
-            _docs(s, d), _docs(s, d).where(_BENCH_PRED_SQL), n=DECONTAM_N),
+            load_table(s, d, "documents"),
+            load_table(s, d, "documents").where(_BENCH_PRED_SQL),
+            n=DECONTAM_N),
     }
 
 
@@ -661,14 +648,13 @@ JOIN rep USING (doc_id) JOIN dec USING (doc_id)
     # shingle sets (valid because band recall is total at gate scale — the
     # dedup_minhash_lsh promotion pattern; the shingle construction is the
     # same k=3 word-window comprehension as dedup's _JACCARD_CTES).
-    # EVERY constant comes from dedup — the Spark side shingles via
-    # dedup._shingles, so dedup's tokenizer is the single definition point
-    # (curation.WORD_RE belongs to curation's own n-gram ops).
+    # the shingle constants come from dedup — the Spark side shingles via
+    # dedup._shingles.
     from logstash_filter_geoip_spark.operators.dedup import (
-        JACCARD_THRESHOLD, SHINGLE_K, WORD_RE as _DEDUP_WORD_RE)
+        JACCARD_THRESHOLD, SHINGLE_K)
     fuzzy = f"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '{_DEDUP_WORD_RE}') AS tk
+  SELECT doc_id, regexp_extract_all(lower(text), '{WORD_RE}') AS tk
   FROM documents
 ),
 sh AS (

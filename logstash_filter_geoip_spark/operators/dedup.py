@@ -24,13 +24,16 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logstash_filter_geoip_spark.functions.hashing import (md5_hash60,
                                                            md5_hash60_sql)
+from logstash_filter_geoip_spark.functions.ngrams import (WORD_RE,
+                                                          with_gram_array,
+                                                          word_tokens)
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
-WORD_RE = "[a-z0-9]+"
 SHINGLE_K = 3
 JACCARD_THRESHOLD = 0.5
 DF_CAP = 10_000  # drop shingles more frequent than this (skew guard)
@@ -39,19 +42,15 @@ N_MINHASH = 64
 N_BANDS = 16  # 16 bands × 4 rows
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 # ---------------------------------------------------------------------------
 # exact
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Group identical texts; keep the minimum doc_id as representative."""
     return (
-        df.groupBy(F.md5(F.col(text_col).cast("binary")).alias("text_md5"))
+        df.groupBy(F.md5(F.col("text").cast("binary")).alias("text_md5"))
           .agg(F.min("doc_id").alias("keep_id"),
                F.count(F.lit(1)).alias("n_copies"))
     )
@@ -71,10 +70,9 @@ def _shingles(df: DataFrame, text_col: str = "text") -> DataFrame:
     slower at sf0.1. array_distinct stays per-row (no shuffle) so the
     exploded relation is already distinct per document.
     """
-    from logstash_filter_geoip_spark.functions.ngrams import with_gram_array
     toked = df.select(
         "doc_id",
-        F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0)
+        word_tokens(text_col)
          .alias("__toks"))
     return (with_gram_array(toked, "__toks", SHINGLE_K)
             .select("doc_id",
@@ -178,10 +176,9 @@ def _indexed_pair_stats(df: DataFrame, df_cap: int,
             .select("doc_a", "doc_b", "n_shared", "n_a", "n_b"))
 
 
-def ngram_jaccard_pairs(df: DataFrame, threshold: float = JACCARD_THRESHOLD,
-                        df_cap: int = DF_CAP,
-                        sh: DataFrame | None = None) -> DataFrame:
-    """Candidate pairs via shingle inverted index, exact Jaccard ≥ threshold.
+def ngram_jaccard_pairs(df: DataFrame, df_cap: int = DF_CAP) -> DataFrame:
+    """Candidate pairs via shingle inverted index, exact Jaccard ≥
+    JACCARD_THRESHOLD.
 
     Returns (doc_a, doc_b, n_shared, n_a, n_b) with doc_a < doc_b. The
     Jaccard filter uses integer arithmetic (shared * 1.0 / union) — the
@@ -196,11 +193,11 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = JACCARD_THRESHOLD,
     near-dup dedup should not chain on anyway; raise df_cap to trade skew
     for recall.
     """
-    stats = _indexed_pair_stats(df, df_cap, sh=sh)
+    stats = _indexed_pair_stats(df, df_cap)
     return stats.where(
         F.col("n_shared") * F.lit(1.0)
         / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-        >= F.lit(threshold))
+        >= F.lit(JACCARD_THRESHOLD))
 
 
 def _candidate_pairs(sh: DataFrame, df_cap: int = DF_CAP) -> DataFrame:
@@ -230,9 +227,7 @@ def _candidate_pairs(sh: DataFrame, df_cap: int = DF_CAP) -> DataFrame:
 CONTAIN_PCT = 80  # containment threshold, integer percent
 
 
-def containment_pairs(df: DataFrame, pct: int = CONTAIN_PCT,
-                      df_cap: int = DF_CAP,
-                      sh: DataFrame | None = None) -> DataFrame:
+def containment_pairs(df: DataFrame, pct: int = CONTAIN_PCT) -> DataFrame:
     """Asymmetric near-dup detection: pairs where the SMALLER shingle set
     is ≥ ``pct``% contained in the larger — the quote/subset/expansion
     duplication Jaccard structurally misses (a 50-shingle doc fully
@@ -245,7 +240,7 @@ def containment_pairs(df: DataFrame, pct: int = CONTAIN_PCT,
     Returns (doc_a, doc_b, n_shared, n_a, n_b) with doc_a < doc_b.
 
     Same scale shape as :func:`ngram_jaccard_pairs` (both compose from
-    the ONE :func:`_indexed_pair_stats` helper — never fork): the df_cap
+    the ONE :func:`_indexed_pair_stats` helper — never fork): the DF_CAP
     prune bounds the inverted-index self-join key, n_shared stays exact
     via the over-cap correction term, and the same recall caveat applies
     — a pair glued ONLY by over-cap boilerplate shingles is never
@@ -254,7 +249,7 @@ def containment_pairs(df: DataFrame, pct: int = CONTAIN_PCT,
     if not isinstance(pct, int) or not 1 <= pct <= 100:
         raise ValueError(f"containment pct must be an integer in "
                          f"[1, 100]: {pct!r}")
-    stats = _indexed_pair_stats(df, df_cap, sh=sh)
+    stats = _indexed_pair_stats(df, DF_CAP)
     return stats.where(F.col("n_shared") * F.lit(100)
                        >= F.lit(pct) * F.least(F.col("n_a"), F.col("n_b")))
 
@@ -302,17 +297,15 @@ def band_rows(sig: DataFrame, n_hashes: int = N_MINHASH,
     )
 
 
-def minhash_lsh_pairs(df: DataFrame, n_hashes: int = N_MINHASH,
-                      n_bands: int = N_BANDS,
-                      jaccard_threshold: float = JACCARD_THRESHOLD) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
     """Banded LSH: docs sharing any band bucket become candidates; candidates
     are verified with exact Jaccard (so output = verified near-dup pairs).
     """
     # one shingle pass feeds both the signatures and the candidate verify
     sh = _shingles(df).persist()
     try:
-        sig = minhash_signatures(df, n_hashes, sh=sh)
-        bands = band_rows(sig, n_hashes, n_bands)
+        sig = minhash_signatures(df, sh=sh)
+        bands = band_rows(sig)
         cand = (
             bands.alias("x")
             .join(bands.alias("y"),
@@ -325,7 +318,7 @@ def minhash_lsh_pairs(df: DataFrame, n_hashes: int = N_MINHASH,
         )
         # exact Jaccard for CANDIDATES ONLY — the r1 version ran the full
         # all-pairs inverted-index join here, erasing LSH's entire saving
-        out = verify_candidate_pairs(cand, sh, jaccard_threshold)
+        out = verify_candidate_pairs(cand, sh)
         # materialize before releasing the shingle cache (the result is
         # pair-sized; holding `sh` cached across later driver-contract
         # queries was the r1 cache leak)
@@ -348,8 +341,7 @@ def _simhash_bits(hash_basis: str) -> int:
     raise ValueError(f"unknown hash_basis {hash_basis!r}")
 
 
-def simhash(df: DataFrame, text_col: str = "text",
-            hash_basis: str = "xxhash64") -> DataFrame:
+def simhash(df: DataFrame, hash_basis: str = "xxhash64") -> DataFrame:
     """SimHash: sum ±1 per bit over token hashes, take sign bits.
 
     Vectorized as one conditional sum per bit over the exploded token
@@ -368,8 +360,7 @@ def simhash(df: DataFrame, text_col: str = "text",
     n_bits = _simhash_bits(hash_basis)
     toks = df.select(
         "doc_id",
-        F.explode(F.regexp_extract_all(F.lower(F.col(text_col)),
-                                       F.lit(WORD_RE), 0)).alias("tok"))
+        F.explode(word_tokens("text")).alias("tok"))
     h = F.xxhash64("tok") if hash_basis == "xxhash64" \
         else md5_hash60(F.col("tok"))
     bit_sums = [
@@ -389,15 +380,14 @@ def simhash(df: DataFrame, text_col: str = "text",
 
 
 def simhash_near_dup(df: DataFrame, max_hamming: int = 3,
-                     n_bands: int = 4,
                      hash_basis: str = "xxhash64") -> DataFrame:
     """SimHash near-dup pairs: candidates share at least one exact band of
-    the fingerprint (pigeonhole: any pair within Hamming distance < n_bands
-    must agree on >= one band), then verified with an exact popcount.
+    the fingerprint's 4 bands (pigeonhole: any pair within Hamming distance
+    < 4 must agree on >= one band), then verified with an exact popcount.
     O(candidates), never O(n²) — the banded join is the scale path.
     Returns (doc_a, doc_b, hamming)."""
     n_bits = _simhash_bits(hash_basis)
-    bits_per_band = n_bits // n_bands
+    bits_per_band = n_bits // 4
     fp_col = f"simhash{n_bits}"
     fp = simhash(df, hash_basis=hash_basis)
     bands = fp.select(
@@ -405,7 +395,7 @@ def simhash_near_dup(df: DataFrame, max_hamming: int = 3,
         F.posexplode(F.array(*[
             F.shiftrightunsigned(F.col(fp_col), b * bits_per_band)
              .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-            for b in range(n_bands)
+            for b in range(4)
         ])).alias("band", "band_val"))
     cand = (
         bands.alias("x").join(
@@ -549,7 +539,6 @@ _POS_BITS = 24       # pos packs into the low 24 bits of the owner key
 
 
 def substring_span_stats(df: DataFrame, width: int = SPAN_W,
-                         text_col: str = "text",
                          hash_basis: str = "native") -> DataFrame:
     """Exact-substring duplication audit (the "deduplicating training data"
     ExactSubstr pass, Lee et al. 2022), re-expressed as the standard
@@ -593,9 +582,8 @@ def substring_span_stats(df: DataFrame, width: int = SPAN_W,
     toked = df.select(
         "doc_id",
         F.coalesce(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0),
+            word_tokens("text"),
             F.array().cast("array<string>")).alias("__toks"))
-    from logstash_filter_geoip_spark.functions.ngrams import with_gram_array
     grams = (with_gram_array(toked, "__toks", width)
              .select("doc_id", F.posexplode("grams").alias("pos", "g")))
     if hash_basis == "md5":
@@ -709,25 +697,31 @@ LEFT JOIN sscov c USING (doc_id)
 
 def queries():
     return {
-        "dedup_exact": lambda s, d: exact_dedup(_docs(s, d)),
-        "dedup_ngram_jaccard": lambda s, d: ngram_jaccard_pairs(_docs(s, d)),
-        "dedup_containment": lambda s, d: containment_pairs(_docs(s, d)),
-        "dedup_minhash_lsh": lambda s, d: minhash_lsh_pairs(_docs(s, d)),
+        "dedup_exact": lambda s, d: exact_dedup(load_table(s, d, "documents")),
+        "dedup_ngram_jaccard": lambda s, d: ngram_jaccard_pairs(
+            load_table(s, d, "documents")),
+        "dedup_containment": lambda s, d: containment_pairs(
+            load_table(s, d, "documents")),
+        "dedup_minhash_lsh": lambda s, d: minhash_lsh_pairs(
+            load_table(s, d, "documents")),
         # driver queries run the md5 hash family: identical pipeline logic
         # (tokenize → ±1 bit sums → sign fold → banded pairs), but with a
         # hash all three engines compute — fully oracle-checked. The
         # xxhash64 default stays the production path (value-locked tests).
-        "dedup_simhash": lambda s, d: simhash(_docs(s, d), hash_basis="md5"),
+        "dedup_simhash": lambda s, d: simhash(
+            load_table(s, d, "documents"), hash_basis="md5"),
         "dedup_simhash_pairs": lambda s, d: simhash_near_dup(
-            _docs(s, d), hash_basis="md5"),
+            load_table(s, d, "documents"), hash_basis="md5"),
         # iterative fixpoint → rows-only by design
         "dedup_components": lambda s, d: dedup_components(
-            ngram_jaccard_pairs(_docs(s, d))),
-        "dedup_keep_best": lambda s, d: keep_best(_docs(s, d)),
+            ngram_jaccard_pairs(load_table(s, d, "documents"))),
+        "dedup_keep_best": lambda s, d: keep_best(
+            load_table(s, d, "documents")),
         # md5 basis → fully oracle-checked; xxhash64 stays the production
         # default (hash only keys the groupBy, stats are hash-agnostic)
         "dedup_substring_spans": lambda s, d: substring_span_stats(
-            _docs(s, d), width=SPAN_W_DRIVER, hash_basis="md5"),
+            load_table(s, d, "documents"), width=SPAN_W_DRIVER,
+            hash_basis="md5"),
     }
 
 

@@ -36,6 +36,8 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 # (name, spark predicate builder, DuckDB SQL predicate) — adjacent on
 # purpose: edit both sides of a row together.
 EVENT_CHECKS: list[tuple[str, Callable[[], Column], str]] = [
@@ -516,8 +518,8 @@ def q_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity summary for the declared warehouse/event FK
     relations (two clean FKs + the deliberately partial events→customer
     coverage relation)."""
-    t = lambda n: spark.read.parquet(f"{sf_dir}/{n}.parquet")  # noqa: E731
-    return fk_audit([(name, t(child), ckey, t(parent), pkey)
+    return fk_audit([(name, load_table(spark, sf_dir, child), ckey,
+                      load_table(spark, sf_dir, parent), pkey)
                      for name, child, ckey, parent, pkey in FK_RELATIONS])
 
 
@@ -600,8 +602,7 @@ def q_pk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uniqueness summary for the declared candidate keys (two clean
     warehouse PKs + the deliberately non-unique events
     (user_id, event_type))."""
-    t = lambda n: spark.read.parquet(f"{sf_dir}/{n}.parquet")  # noqa: E731
-    return pk_audit([(name, t(table), keys)
+    return pk_audit([(name, load_table(spark, sf_dir, table), keys)
                      for name, table, keys in PK_RELATIONS])
 
 
@@ -613,14 +614,14 @@ def q_dq_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality gate: every check counted in ONE two-phase
     aggregate pass + an exact duplicate-event_id check (distinct-key
     shuffle only)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     return dq_summary(ev, _event_checks(), unique_key="event_id")
 
 
 def q_dq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level quarantine labels: failed-check array + passed flag, pure
     codegen projection."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     return dq_quarantine(ev, _event_checks()) \
         .select("event_id", "violations", "passed")
 
@@ -628,7 +629,7 @@ def q_dq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-level profile of the events table — nulls, exact distincts,
     portable min/max — in one aggregate pass."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     return profile_columns(ev, [c for c, _ in EVENT_PROFILE_SPEC])
 
 
@@ -639,14 +640,14 @@ _CHECKSUM_COLS = ["event_id", "user_id", "event_type", "props"]
 def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent migration fingerprint of the events table
     (portable columns): one mergeable xor aggregate."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     return table_checksum(ev, _CHECKSUM_COLS)
 
 
 def q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 heaviest user_id keys with ppm shares — the pre-shuffle skew
     measurement."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     return key_skew_stats(ev, ["user_id"], top_k=10)
 
 
@@ -657,7 +658,7 @@ _DIFF_CUT = "2024-01-16 00:00:00"
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level reconciliation of the first-half vs second-half per-user
     profile snapshots (the scd2_user_profile derivation, read-only)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     cut = F.lit(_DIFF_CUT).cast("timestamp")
 
     def snap(pred) -> DataFrame:
@@ -679,7 +680,7 @@ _LDIV_L = 54
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity release screen over (event_type, day) — one two-phase
     aggregate, zeros-not-NULLs on empty input."""
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = (load_table(spark, sf_dir, "events")
           .withColumn("day", F.date_trunc("day", F.col("ts"))))
     return k_anonymity(ev, ["event_type", "day"], _KANON_K)
 
@@ -689,7 +690,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     l=54 populates both classes at the gate scale (distinct user_ids per
     group span 42–67 at sf0.01). Two stacked two-phase aggregates + a
     1-row fold, no joins."""
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = (load_table(spark, sf_dir, "events")
           .withColumn("day", F.date_trunc("day", F.col("ts"))))
     return l_diversity(ev, ["event_type", "day"], "user_id", _LDIV_L)
 

@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 from logstash_filter_geoip_spark.operators.aggregate import (bucket_idx_expr,
                                                              bucket_idx_sql)
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
 PPM = 1_000_000
 
@@ -216,23 +217,19 @@ _LIFT = (12, 10)
 _VHIST = dict(lo=0.0, hi=100.0, n_buckets=20)  # == the value_histogram box
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
 def q_categorical_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-type mix drift across the mid-corpus split (1.2x lift
     flag, integer-exact ppm shares)."""
-    return categorical_drift(_events(spark, sf_dir), "event_type", "ts",
-                             _SPLIT, _LIFT)
+    ev = load_table(spark, sf_dir, "events")
+    return categorical_drift(ev, "event_type", "ts", _SPLIT, _LIFT)
 
 
 def q_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-distribution drift across the same split over the shared
     histogram buckets (sentinel out-of-range buckets exercised — the
     corpus has values above the box)."""
-    return value_drift(_events(spark, sf_dir), "value", "ts", _SPLIT,
-                       lift=_LIFT, **_VHIST)
+    ev = load_table(spark, sf_dir, "events")
+    return value_drift(ev, "value", "ts", _SPLIT, lift=_LIFT, **_VHIST)
 
 
 def q_drift_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,8 +243,8 @@ def q_rolling_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     externally built session matches the oracle's naive instants."""
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return rolling_drift(_events(spark, sf_dir), "event_type", "ts",
-                         "day", _LIFT)
+    ev = load_table(spark, sf_dir, "events")
+    return rolling_drift(ev, "event_type", "ts", "day", _LIFT)
 
 
 def queries():

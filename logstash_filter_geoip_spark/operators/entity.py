@@ -61,12 +61,10 @@ def name_vocabulary(df: DataFrame, name_col: str) -> DataFrame:
                       F.length("name").alias("ln")))
 
 
-def fuzzy_name_pairs(df: DataFrame, name_col: str,
-                     max_dist: int = MAX_DIST,
-                     len_band: int = LEN_BAND,
+def fuzzy_name_pairs(df: DataFrame, name_col: str, max_dist: int = MAX_DIST,
                      block_cap: int | None = None) -> DataFrame:
     """Near-duplicate name pairs: block on the first token, keep pairs
-    within ``len_band`` length difference and ``levenshtein <= max_dist``.
+    within ``LEN_BAND`` length difference and ``levenshtein <= max_dist``.
     Returns (name_a, name_b, dist) with ``name_a < name_b``.
 
     ``block_cap``: drop blocks with more than this many distinct names
@@ -87,7 +85,7 @@ def fuzzy_name_pairs(df: DataFrame, name_col: str,
         b,
         (F.col("a.block") == F.col("b.block"))
         & (F.col("a.name") < F.col("b.name"))
-        & (F.abs(F.col("a.ln") - F.col("b.ln")) <= len_band))
+        & (F.abs(F.col("a.ln") - F.col("b.ln")) <= LEN_BAND))
     dist = F.levenshtein(F.col("a.name"), F.col("b.name"))
     return (cand.select(F.col("a.name").alias("name_a"),
                         F.col("b.name").alias("name_b"),
@@ -96,9 +94,7 @@ def fuzzy_name_pairs(df: DataFrame, name_col: str,
 
 
 def resolve_entities(df: DataFrame, name_col: str,
-                     max_dist: int = MAX_DIST,
-                     len_band: int = LEN_BAND,
-                     block_cap: int | None = None) -> DataFrame:
+                     max_dist: int = MAX_DIST) -> DataFrame:
     """Canonical entity per distinct name: fuzzy pairs -> connected
     components (min-label fixpoint, ``dedup.dedup_components``) -> each
     name mapped to its component representative's name. Singleton names
@@ -111,8 +107,7 @@ def resolve_entities(df: DataFrame, name_col: str,
     from logstash_filter_geoip_spark.operators.dedup import dedup_components
 
     vocab = name_vocabulary(df, name_col)
-    pairs = fuzzy_name_pairs(df, name_col, max_dist=max_dist,
-                             len_band=len_band, block_cap=block_cap)
+    pairs = fuzzy_name_pairs(df, name_col, max_dist=max_dist)
     ids = (pairs.join(vocab.select(F.col("name").alias("name_a"),
                                    F.col("nid").alias("doc_a")), "name_a")
                 .join(vocab.select(F.col("name").alias("name_b"),

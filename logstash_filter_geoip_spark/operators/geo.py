@@ -78,14 +78,10 @@ def _mdeg(c: Column) -> Column:
     return F.round(c * F.lit(_MDEG_SCALE), 0).cast("long")
 
 
-def geo_velocity(df: DataFrame, part_col: str = "conv_id",
-                 order_col: str = "turn_idx", ts_col: str = "ts",
-                 lat_col: str = "lat", lon_col: str = "lon",
-                 vmax_mdeg_per_hr: int = VMAX_MDEG_PER_HR,
-                 max_gap_s: int = MAX_GAP_S,
+def geo_velocity(df: DataFrame, vmax_mdeg_per_hr: int = VMAX_MDEG_PER_HR,
                  carry: tuple[str, ...] = ()) -> DataFrame:
     """Impossible-travel screen: one row per consecutive located pair within
-    ``max_gap_s``, flagged ``is_violation`` when the implied speed exceeds
+    ``MAX_GAP_S``, flagged ``is_violation`` when the implied speed exceeds
     ``vmax_mdeg_per_hr`` (millidegrees/hour; 1000 mdeg ≈ 111 km at the
     equator, so 9000 ≈ 1000 km/h).
 
@@ -96,27 +92,27 @@ def geo_velocity(df: DataFrame, part_col: str = "conv_id",
     ordering) are excluded: a negative delta means clock skew, not travel.
     ``carry`` columns are emitted for both endpoints (``prev_<name>``).
     """
-    _check_params(vmax_mdeg_per_hr, max_gap_s)
-    lat, lon = F.col(lat_col), F.col(lon_col)
+    _check_params(vmax_mdeg_per_hr, MAX_GAP_S)
+    lat, lon = F.col("lat"), F.col("lon")
     hits = (df.where(lat.isNotNull() & lon.isNotNull())
-              .select(part_col, order_col, ts_col, *carry,
+              .select("conv_id", "turn_idx", "ts", *carry,
                       _mdeg(lat).alias("lat_mdeg"),
                       _mdeg(lon).alias("lon_mdeg")))
-    w = Window.partitionBy(part_col).orderBy(order_col)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
     lagged = hits.select(
-        part_col, order_col, ts_col, "lat_mdeg", "lon_mdeg", *carry,
-        F.lag(order_col).over(w).alias(f"prev_{order_col}"),
-        F.lag(ts_col).over(w).alias("__prev_ts"),
+        "conv_id", "turn_idx", "ts", "lat_mdeg", "lon_mdeg", *carry,
+        F.lag("turn_idx").over(w).alias("prev_turn_idx"),
+        F.lag("ts").over(w).alias("__prev_ts"),
         F.lag("lat_mdeg").over(w).alias("prev_lat_mdeg"),
         F.lag("lon_mdeg").over(w).alias("prev_lon_mdeg"),
         *[F.lag(c).over(w).alias(f"prev_{c}") for c in carry])
     # truncating whole-second delta; ts >= prev_ts gate ⇒ truncation == floor
-    dt_s = F.timestamp_diff("SECOND", F.col("__prev_ts"), F.col(ts_col))
+    dt_s = F.timestamp_diff("SECOND", F.col("__prev_ts"), F.col("ts"))
     gated = (lagged
              .where(F.col("__prev_ts").isNotNull()
-                    & (F.col(ts_col) >= F.col("__prev_ts")))
+                    & (F.col("ts") >= F.col("__prev_ts")))
              .withColumn("dt_s", dt_s)
-             .where(F.col("dt_s") <= F.lit(max_gap_s)))
+             .where(F.col("dt_s") <= F.lit(MAX_GAP_S)))
     dlat = F.col("lat_mdeg") - F.col("prev_lat_mdeg")
     adlon = F.abs(F.col("lon_mdeg") - F.col("prev_lon_mdeg"))
     wdlon = F.least(adlon, F.lit(_WRAP) - adlon)
@@ -127,7 +123,7 @@ def geo_velocity(df: DataFrame, part_col: str = "conv_id",
     return (gated
             .withColumn("dist2_mdeg2", dist2)
             .withColumn("is_violation", violated.cast("int"))
-            .select(part_col, f"prev_{order_col}", order_col, "dt_s",
+            .select("conv_id", "prev_turn_idx", "turn_idx", "dt_s",
                     "dist2_mdeg2", "is_violation",
                     *[c for p in carry for c in (f"prev_{p}", p)]))
 
@@ -177,9 +173,7 @@ def velocity_pairs_pd(pts, vmax_mdeg_per_hr: int = VMAX_MDEG_PER_HR,
     })
 
 
-def velocity_oracle_cte(hits_cte: str, part_col: str = "conv_id",
-                        order_col: str = "turn_idx", ts_col: str = "ts",
-                        lat_col: str = "lat", lon_col: str = "lon",
+def velocity_oracle_cte(hits_cte: str,
                         vmax_mdeg_per_hr: int = VMAX_MDEG_PER_HR,
                         max_gap_s: int = MAX_GAP_S,
                         carry: tuple[str, ...] = ()) -> str:
@@ -198,33 +192,33 @@ def velocity_oracle_cte(hits_cte: str, part_col: str = "conv_id",
     vmax2 = vmax_mdeg_per_hr * vmax_mdeg_per_hr
     return f"""
 , v_mdeg AS (
-  SELECT {part_col}, {order_col}, {ts_col}{carry_cols},
-         CAST(round({lat_col} * {_MDEG_SCALE_SQL}) AS BIGINT) AS lat_mdeg,
-         CAST(round({lon_col} * {_MDEG_SCALE_SQL}) AS BIGINT) AS lon_mdeg
+  SELECT conv_id, turn_idx, ts{carry_cols},
+         CAST(round(lat * {_MDEG_SCALE_SQL}) AS BIGINT) AS lat_mdeg,
+         CAST(round(lon * {_MDEG_SCALE_SQL}) AS BIGINT) AS lon_mdeg
   FROM {hits_cte}
 ), v_lag AS (
-  SELECT {part_col}, {order_col}, {ts_col}, lat_mdeg, lon_mdeg{carry_cols},
-         lag({order_col}) OVER w AS prev_{order_col},
-         lag({ts_col}) OVER w AS prev_ts,
+  SELECT conv_id, turn_idx, ts, lat_mdeg, lon_mdeg{carry_cols},
+         lag(turn_idx) OVER w AS prev_turn_idx,
+         lag(ts) OVER w AS prev_ts,
          lag(lat_mdeg) OVER w AS prev_lat_mdeg,
          lag(lon_mdeg) OVER w AS prev_lon_mdeg{carry_lags}
   FROM v_mdeg
-  WINDOW w AS (PARTITION BY {part_col} ORDER BY {order_col})
+  WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)
 ), v_pairs AS (
   SELECT *,
-         (epoch_us({ts_col}) - epoch_us(prev_ts)) // 1000000 AS dt_s,
+         (epoch_us(ts) - epoch_us(prev_ts)) // 1000000 AS dt_s,
          lat_mdeg - prev_lat_mdeg AS dlat,
          least(abs(lon_mdeg - prev_lon_mdeg),
                {_WRAP} - abs(lon_mdeg - prev_lon_mdeg)) AS wdlon
   FROM v_lag
-  WHERE prev_ts IS NOT NULL AND {ts_col} >= prev_ts
+  WHERE prev_ts IS NOT NULL AND ts >= prev_ts
 ), v_out AS (
-  SELECT {part_col}, prev_{order_col}, {order_col}, dt_s,
+  SELECT conv_id, prev_turn_idx, turn_idx, dt_s,
          dlat*dlat + wdlon*wdlon AS dist2_mdeg2{carry_out}
   FROM v_pairs
   WHERE dt_s <= {max_gap_s}
 )
-SELECT {part_col}, prev_{order_col}, {order_col}, dt_s, dist2_mdeg2,
+SELECT conv_id, prev_turn_idx, turn_idx, dt_s, dist2_mdeg2,
        CAST((dist2_mdeg2 * {_SPH2}) > (CAST({vmax2} AS BIGINT) * dt_s * dt_s)
             AS INTEGER) AS is_violation{carry_out}
 FROM v_out

@@ -42,9 +42,7 @@ N_ITER = 5
 DAMPING = 0.85
 
 
-def pagerank(edges: DataFrame, n_iter: int = N_ITER,
-             damping: float = DAMPING, src: str = "src", dst: str = "dst",
-             weight: str | None = None,
+def pagerank(edges: DataFrame, n_iter: int = N_ITER, weight: str | None = None,
              checkpoint: bool = True) -> DataFrame:
     """(node, pagerank) after ``n_iter`` damped iterations over the edge
     relation; parallel edges collapse into summed weights (weight=None →
@@ -64,8 +62,7 @@ def pagerank(edges: DataFrame, n_iter: int = N_ITER,
                 f"AND its out-weight, yielding NaN ranks). Scale "
                 f"fractional weights to integer units first.")
     w = (F.col(weight) if weight is not None else F.lit(1))
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
-                      w.cast("long").alias("w"))
+    e = (edges.select("src", "dst", w.cast("long").alias("w"))
               .groupBy("src", "dst").agg(F.sum("w").alias("w")))
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     nodes = (e.select(F.col("src").alias("node"))
@@ -78,7 +75,7 @@ def pagerank(edges: DataFrame, n_iter: int = N_ITER,
     n_nodes = nodes.count()
     if n_nodes == 0:
         raise ValueError("pagerank: empty edge relation (no nodes)")
-    base = (1.0 - damping) / n_nodes
+    base = (1.0 - DAMPING) / n_nodes
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
     if checkpoint:
         ranks = ranks.localCheckpoint(eager=True)
@@ -91,7 +88,7 @@ def pagerank(edges: DataFrame, n_iter: int = N_ITER,
         ranks = (nodes.join(contrib.withColumnRenamed("dst", "node")
                                    .hint("merge"), "node", "left")
                       .select("node",
-                              (F.lit(base) + F.lit(damping)
+                              (F.lit(base) + F.lit(DAMPING)
                                * F.coalesce("contrib", F.lit(0.0)))
                               .alias("rank")))
         if checkpoint:
@@ -99,13 +96,12 @@ def pagerank(edges: DataFrame, n_iter: int = N_ITER,
     return ranks.select("node", F.col("rank").alias("pagerank"))
 
 
-def pagerank_oracle_sql(edges_sql: str, n_iter: int = N_ITER,
-                        damping: float = DAMPING) -> str:
+def pagerank_oracle_sql(edges_sql: str) -> str:
     """DuckDB mirror: the iteration UNROLLED into a pr0..prK CTE chain.
     ``edges_sql`` must select (src, dst, w). Every float constant carries
     an explicit DOUBLE cast (DuckDB types bare decimal literals DECIMAL,
     whose arithmetic diverges from the IEEE doubles Spark uses)."""
-    d = f"CAST({damping!r} AS DOUBLE)"
+    d = f"CAST({DAMPING!r} AS DOUBLE)"
     base = (f"(CAST(1 AS DOUBLE) - {d}) / (SELECT count(*) FROM nodes)")
     init = "CAST(1 AS DOUBLE) / (SELECT count(*) FROM nodes)"
     ctes = [f"""raw_edges AS ({edges_sql}),
@@ -115,7 +111,7 @@ agg_e AS (
 out_w AS (SELECT src, sum(w) AS out_w FROM agg_e GROUP BY src),
 nodes AS (SELECT src AS node FROM agg_e UNION SELECT dst FROM agg_e),
 pr0 AS (SELECT node, {init} AS rank FROM nodes)"""]
-    for i in range(1, n_iter + 1):
+    for i in range(1, N_ITER + 1):
         ctes.append(f"""pr{i} AS (
   SELECT n.node,
          {base} + {d} * coalesce(c.contrib, CAST(0 AS DOUBLE)) AS rank
@@ -128,7 +124,7 @@ pr0 AS (SELECT node, {init} AS rank FROM nodes)"""]
   ) c ON c.dst = n.node
 )""")
     return ("WITH " + ",\n".join(ctes)
-            + f"\nSELECT node, rank AS pagerank FROM pr{n_iter}\n")
+            + f"\nSELECT node, rank AS pagerank FROM pr{N_ITER}\n")
 
 
 # ---------------------------------------------------------------------------
@@ -138,11 +134,11 @@ pr0 AS (SELECT node, {init} AS rank FROM nodes)"""]
 # ---------------------------------------------------------------------------
 
 
-def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    return (edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull()
-                        & (F.col(src) != F.col(dst)))
-                 .select(F.least(src, dst).alias("a"),
-                         F.greatest(src, dst).alias("b"))
+def _canonical_edges(edges: DataFrame) -> DataFrame:
+    return (edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull()
+                        & (F.col("src") != F.col("dst")))
+                 .select(F.least("src", "dst").alias("a"),
+                         F.greatest("src", "dst").alias("b"))
                  .distinct())
 
 
@@ -170,8 +166,7 @@ def canon_edges_ctes(edges_sql: str, prefix: str,
 # ---------------------------------------------------------------------------
 
 
-def triangle_count(edges: DataFrame, src: str = "src",
-                   dst: str = "dst", cache: bool = True) -> DataFrame:
+def triangle_count(edges: DataFrame, cache: bool = True) -> DataFrame:
     """Per-node triangle participation over an undirected simple graph:
     (node, degree, n_tri) for every node with at least one edge. The input
     is an arbitrary edge relation — direction, parallel duplicates, and
@@ -202,7 +197,7 @@ def triangle_count(edges: DataFrame, src: str = "src",
     reference (7 SMJs re-deriving the input vs 3 over cached state).
     ``cache=False`` keeps the fully declarative plan (the plan contract
     test's view of the join strategy)."""
-    e = _canonical_edges(edges, src, dst)
+    e = _canonical_edges(edges)
     if cache:
         e = e.persist()
     deg = (e.select(F.col("a").alias("node"))
@@ -348,8 +343,7 @@ KCORE_K = 80            # the driver query's core threshold
 KCORE_ORACLE_ROUNDS = 8  # unroll depth; sf0.01 converges in 5 (margin test)
 
 
-def k_core(edges: DataFrame, k: int, src: str = "src",
-           dst: str = "dst") -> DataFrame:
+def k_core(edges: DataFrame, k: int) -> DataFrame:
     """Nodes of the k-core — the maximal subgraph where every node keeps
     degree ≥ k — as (node, degree) with the WITHIN-CORE degree. The
     classic dense-community / spam-subgraph screen: peeling is iterative
@@ -377,7 +371,7 @@ def k_core(edges: DataFrame, k: int, src: str = "src",
     test); the operator itself never bounds rounds."""
     if k < 1:
         raise ValueError(f"k_core: k={k} — the smallest sane core is 1")
-    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
+    e = _canonical_edges(edges).localCheckpoint(eager=True)
     while True:
         deg = (e.select(F.col("a").alias("node"))
                 .unionByName(e.select(F.col("b").alias("node")))
@@ -437,8 +431,8 @@ def q_part_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 LPA_ROUNDS = 3
 
 
-def label_propagation(edges: DataFrame, n_rounds: int = LPA_ROUNDS,
-                      src: str = "src", dst: str = "dst") -> DataFrame:
+def label_propagation(edges: DataFrame,
+                      n_rounds: int = LPA_ROUNDS) -> DataFrame:
     """Community labels by SYNCHRONOUS label propagation over the
     canonical undirected simple graph (triangle_count normalization):
     labels start as the node ids; each round EVERY node simultaneously
@@ -458,7 +452,7 @@ def label_propagation(edges: DataFrame, n_rounds: int = LPA_ROUNDS,
     if n_rounds < 1:
         raise ValueError(f"label_propagation: n_rounds={n_rounds} — "
                          f"need at least one round")
-    e = _canonical_edges(edges, src, dst)
+    e = _canonical_edges(edges)
     nbr = (e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
             .unionByName(
                 e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))

@@ -47,8 +47,11 @@ len(ids)-bounded left join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from logstash_filter_geoip_spark.sources.transcripts import (load_table,
+                                                             load_transcripts)
 
 # driver-scale parameters, read by BOTH the Spark queries and the
 # generated oracle SQL (single definition point per CLAUDE.md)
@@ -148,7 +151,7 @@ WHERE has_next AND role IS NOT DISTINCT FROM next_role
 # ---------------------------------------------------------------------------
 
 
-def prompt_forks(t: DataFrame, min_replies: int = 2) -> DataFrame:
+def prompt_forks(t: DataFrame) -> DataFrame:
     """Normalized user prompts answered inconsistently: (prompt, n_pairs,
     n_replies, n_convs, forked). A pair is a user turn whose IMMEDIATELY
     following turn is an assistant turn (the sft_pairs adjacency);
@@ -174,11 +177,11 @@ def prompt_forks(t: DataFrame, min_replies: int = 2) -> DataFrame:
                       F.count_distinct("reply").alias("n_replies"),
                       F.count_distinct("conv_id").alias("n_convs"))
                  .select("prompt", "n_pairs", "n_replies", "n_convs",
-                         (F.col("n_replies") >= min_replies).cast("int")
+                         (F.col("n_replies") >= 2).cast("int")
                          .alias("forked")))
 
 
-def prompt_forks_oracle_sql(min_replies: int = 2) -> str:
+def prompt_forks_oracle_sql() -> str:
     return f""", pf_pairs AS (
   SELECT lower(trim(text)) AS prompt,
          coalesce(lower(trim(lead(text) OVER w)), '') AS reply,
@@ -192,7 +195,7 @@ SELECT prompt,
        CAST(count(*) AS BIGINT) AS n_pairs,
        CAST(count(DISTINCT reply) AS BIGINT) AS n_replies,
        CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs,
-       CAST(count(DISTINCT reply) >= {min_replies} AS INT) AS forked
+       CAST(count(DISTINCT reply) >= 2 AS INT) AS forked
 FROM pf_pairs
 WHERE role = 'user' AND next_role = 'assistant'
   AND text IS NOT NULL AND trim(text) <> ''
@@ -205,27 +208,22 @@ GROUP BY prompt
 # ---------------------------------------------------------------------------
 
 
-def split_leakage(docs: DataFrame,
-                  weights: tuple[tuple[str, int], ...] = LEAK_WEIGHTS,
-                  salt: str = LEAK_SALT,
-                  threshold: float | None = None,
-                  df_cap: int | None = None) -> DataFrame:
+def split_leakage(docs: DataFrame) -> DataFrame:
     """Near-duplicate pairs straddling split boundaries: (doc_a, doc_b,
-    n_shared, n_a, n_b, split_a, split_b) where jaccard ≥ threshold and
-    split_a ≠ split_b — the contamination a decontaminate-vs-benchmark
-    pass cannot see because both docs live INSIDE the corpus.
+    n_shared, n_a, n_b, split_a, split_b) where jaccard ≥
+    dedup.JACCARD_THRESHOLD and split_a ≠ split_b — the contamination a
+    decontaminate-vs-benchmark pass cannot see because both docs live
+    INSIDE the corpus.
 
     Composed verbatim from ngram_jaccard_pairs (exact near-dup) and
     split_assign (the one split rule); both split joins carry
     hint("merge") — the split side is one row per document, data-sized
     at 100 TB (the session-10 corpus-derived-join rule).
     """
-    from .dedup import DF_CAP, JACCARD_THRESHOLD, ngram_jaccard_pairs
+    from .dedup import ngram_jaccard_pairs
     from .packing import split_assign
-    thr = JACCARD_THRESHOLD if threshold is None else threshold
-    cap = DF_CAP if df_cap is None else df_cap
-    pairs = ngram_jaccard_pairs(docs, threshold=thr, df_cap=cap)
-    splits = split_assign(docs, weights=weights, salt=salt) \
+    pairs = ngram_jaccard_pairs(docs)
+    splits = split_assign(docs, weights=LEAK_WEIGHTS, salt=LEAK_SALT) \
         .select("doc_id", "split")
     sa = (splits.withColumnRenamed("doc_id", "doc_a")
                 .withColumnRenamed("split", "split_a").hint("merge"))
@@ -237,14 +235,12 @@ def split_leakage(docs: DataFrame,
                          "split_a", "split_b"))
 
 
-def split_leakage_oracle_sql(weights: tuple[tuple[str, int], ...]
-                             = LEAK_WEIGHTS,
-                             salt: str = LEAK_SALT) -> str:
+def split_leakage_oracle_sql() -> str:
     """Composed from the jaccard-pair CTEs and split_assign's oracle —
     the two component definitions, never a fork."""
     from .dedup import JACCARD_THRESHOLD, _JACCARD_CTES
     from .packing import split_assign_oracle_sql
-    split = split_assign_oracle_sql(weights, salt)
+    split = split_assign_oracle_sql(LEAK_WEIGHTS, LEAK_SALT)
     return f"""
 WITH {_JACCARD_CTES},
 leak_pairs AS (
@@ -283,15 +279,11 @@ def seasonal_daily(events: DataFrame, ts_col: str = "ts") -> DataFrame:
                   .agg(F.count(F.lit(1)).alias("n_events")))
 
 
-def seasonal_flags(daily: DataFrame,
-                   over_pct: int = SEASONAL_OVER_PCT,
-                   under_pct: int = SEASONAL_UNDER_PCT) -> DataFrame:
+def seasonal_flags(daily: DataFrame) -> DataFrame:
     """Stage 2 (the read face): median baselines + anomaly flags over the
     ALREADY-AGGREGATED daily relation — shared verbatim by the batch
     operator and the seasonal face's additive_state_read, so
     drained-stream == batch is an identity of this one function."""
-    if not (0 <= over_pct and 0 <= under_pct <= 100):
-        raise ValueError(f"bad pcts: over={over_pct} under={under_pct}")
     wo = Window.partitionBy("event_type", "hr").orderBy("n_events", "day")
     wu = Window.partitionBy("event_type", "hr")
     ranked = (daily.select("event_type", "day", "hr", "n_events")
@@ -301,22 +293,20 @@ def seasonal_flags(daily: DataFrame,
             * ((F.col("__rn") == F.expr("(__n + 1) div 2")).cast("long")
                + (F.col("__rn") == F.expr("(__n + 2) div 2")).cast("long")))
     med = ranked.withColumn("base_num", F.sum(pick).over(wu))
-    hi = 200 * F.col("n_events") > (100 + over_pct) * F.col("base_num")
-    lo = 200 * F.col("n_events") < (100 - under_pct) * F.col("base_num")
+    n, base = F.col("n_events"), F.col("base_num")
+    hi = 200 * n > (100 + SEASONAL_OVER_PCT) * base
+    lo = 200 * n < (100 - SEASONAL_UNDER_PCT) * base
     return (med.where(hi | lo)
                .select("event_type", "hr", "day", "n_events", "base_num",
                        F.when(hi, "high").otherwise("low")
                         .alias("direction")))
 
 
-def seasonal_anomalies(events: DataFrame,
-                       over_pct: int = SEASONAL_OVER_PCT,
-                       under_pct: int = SEASONAL_UNDER_PCT,
-                       ts_col: str = "ts") -> DataFrame:
+def seasonal_anomalies(events: DataFrame) -> DataFrame:
     """Hour-of-day anomaly cells: (event_type, hr, day, n_events,
     base_num, direction) for every (type, day, hour) whose count
     deviates from that (type, hour)'s median daily count by more than
-    over_pct above / under_pct below.
+    SEASONAL_OVER_PCT above / SEASONAL_UNDER_PCT below.
 
     base_num = 2 × median, held EXACT as the sum of the two rank-selected
     middle elements (equal when n is odd) — the qsketch rank-selection
@@ -328,13 +318,10 @@ def seasonal_anomalies(events: DataFrame,
     persists) + seasonal_flags (the shared read face) — one definition
     each, never forked.
     """
-    return seasonal_flags(seasonal_daily(events, ts_col),
-                          over_pct, under_pct)
+    return seasonal_flags(seasonal_daily(events))
 
 
-def seasonal_anomalies_oracle_sql(over_pct: int = SEASONAL_OVER_PCT,
-                                  under_pct: int = SEASONAL_UNDER_PCT
-                                  ) -> str:
+def seasonal_anomalies_oracle_sql() -> str:
     # day CAST to TIMESTAMP (DuckDB date_trunc('day') yields DATE); window
     # sums/counts CAST to BIGINT (HUGEINT); CTE names seas_-prefixed (the
     # rolling_drift collision rule).
@@ -360,11 +347,11 @@ seas_med AS (
   FROM seas_rank
 )
 SELECT event_type, hr, day, n_events, base_num,
-       CASE WHEN 200 * n_events > {100 + over_pct} * base_num THEN 'high'
-            ELSE 'low' END AS direction
+       CASE WHEN 200 * n_events > {100 + SEASONAL_OVER_PCT} * base_num
+            THEN 'high' ELSE 'low' END AS direction
 FROM seas_med
-WHERE 200 * n_events > {100 + over_pct} * base_num
-   OR 200 * n_events < {100 - under_pct} * base_num
+WHERE 200 * n_events > {100 + SEASONAL_OVER_PCT} * base_num
+   OR 200 * n_events < {100 - SEASONAL_UNDER_PCT} * base_num
 """
 
 
@@ -385,31 +372,29 @@ def erase_users(df: DataFrame, ids: tuple[int, ...],
     return df.where(col.isNull() | ~col.isin(*ids))
 
 
-def erasure_audit(events: DataFrame, ids: tuple[int, ...] = ERASE_IDS,
-                  id_col: str = "user_id") -> DataFrame:
-    """Per REQUESTED tombstone id: (user_id, n_erased, first_ts, last_ts).
+def erasure_audit(events: DataFrame) -> DataFrame:
+    """Per REQUESTED tombstone id in ERASE_IDS: (user_id, n_erased,
+    first_ts, last_ts).
     Ids with no rows report n_erased = 0 with NULL timestamps — the audit
     enumerates the request list, never just the matches (left join FROM
     the len(ids)-bounded literal relation)."""
-    if not ids:
-        raise ValueError("erasure_audit: empty tombstone list")
     spark = events.sparkSession
-    ids_df = spark.createDataFrame([(int(i),) for i in ids],
-                                   f"{id_col} long")
-    hit = (events.where(F.col(id_col).isin(*ids))
-                 .groupBy(id_col)
+    ids_df = spark.createDataFrame([(int(i),) for i in ERASE_IDS],
+                                   "user_id long")
+    hit = (events.where(F.col("user_id").isin(*ERASE_IDS))
+                 .groupBy("user_id")
                  .agg(F.count(F.lit(1)).alias("n_erased"),
                       F.min("ts").alias("first_ts"),
                       F.max("ts").alias("last_ts")))
-    return (ids_df.join(hit, id_col, "left")
-                  .select(id_col,
+    return (ids_df.join(hit, "user_id", "left")
+                  .select("user_id",
                           F.coalesce("n_erased", F.lit(0)).alias("n_erased"),
                           "first_ts", "last_ts"))
 
 
-def erasure_audit_oracle_sql(ids: tuple[int, ...] = ERASE_IDS) -> str:
-    vals = ", ".join(f"({int(i)})" for i in ids)
-    inlist = ", ".join(str(int(i)) for i in ids)
+def erasure_audit_oracle_sql() -> str:
+    vals = ", ".join(f"({int(i)})" for i in ERASE_IDS)
+    inlist = ", ".join(str(int(i)) for i in ERASE_IDS)
     return f"""
 WITH er_ids(user_id) AS (VALUES {vals}),
 er_hit AS (
@@ -429,26 +414,16 @@ FROM er_ids i LEFT JOIN er_hit h ON h.user_id = i.user_id
 # ---------------------------------------------------------------------------
 
 
-def _t(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.transcripts import load_transcripts
-    return load_transcripts(spark, sf_dir)
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
 def queries():
     return {
-        "retry_collapse": lambda s, d: retry_collapse(_t(s, d)),
-        "prompt_forks": lambda s, d: prompt_forks(_t(s, d)),
-        "split_leakage": lambda s, d: split_leakage(_docs(s, d)),
-        "seasonal_anomalies": lambda s, d: seasonal_anomalies(_events(s, d)),
-        "erasure_audit": lambda s, d: erasure_audit(_events(s, d)),
+        "retry_collapse": lambda s, d: retry_collapse(load_transcripts(s, d)),
+        "prompt_forks": lambda s, d: prompt_forks(load_transcripts(s, d)),
+        "split_leakage": lambda s, d: split_leakage(
+            load_table(s, d, "documents")),
+        "seasonal_anomalies": lambda s, d: seasonal_anomalies(
+            load_table(s, d, "events")),
+        "erasure_audit": lambda s, d: erasure_audit(
+            load_table(s, d, "events")),
     }
 
 

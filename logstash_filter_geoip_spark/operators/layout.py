@@ -105,8 +105,8 @@ def zorder_layout(df: DataFrame, x: Column, y: Column,
 BUCKET_N = 8
 
 
-def bucket_table(df: DataFrame, name: str, keys: list[str],
-                 n_buckets: int, path: str, sort: bool = True) -> DataFrame:
+def bucket_table(df: DataFrame, name: str, keys: list[str], n_buckets: int,
+                 path: str) -> DataFrame:
     """Write ``df`` as a bucketed (and bucket-sorted) parquet TABLE and
     return the catalog-backed relation. This is the "with storage
     bucketing the Exchanges vanish" claim of the relational module made
@@ -122,9 +122,7 @@ def bucket_table(df: DataFrame, name: str, keys: list[str],
     writer API that records it — a bare .parquet(path) write loses the
     bucketing metadata, so readers could not trust it)."""
     spark = df.sparkSession
-    w = df.write.mode("overwrite").bucketBy(n_buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
+    w = df.write.mode("overwrite").bucketBy(n_buckets, *keys).sortBy(*keys)
     w.option("path", path).format("parquet").saveAsTable(name)
     return spark.table(name)
 

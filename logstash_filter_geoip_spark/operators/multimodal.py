@@ -237,8 +237,11 @@ def sample_frames(df: DataFrame, every_k: int = 5,
     return df.mapInPandas(run, FRAME_SCHEMA)
 
 
-def resize_dims(decoded: DataFrame, max_dim: int = 32) -> DataFrame:
-    """Resize planning: target dimensions capped at ``max_dim`` on the long
+MAX_DIM = 32  # resize cap on the long side, pixels
+
+
+def resize_dims(decoded: DataFrame) -> DataFrame:
+    """Resize planning: target dimensions capped at ``MAX_DIM`` on the long
     side, aspect ratio preserved via INTEGER arithmetic ((w*max) DIV
     longest — floor division, identical in every engine; no float scale
     factor). Rows already inside the cap (and dimensionless audio rows,
@@ -247,11 +250,11 @@ def resize_dims(decoded: DataFrame, max_dim: int = 32) -> DataFrame:
     100-TB pipeline filters and batches on) plus the stub contract."""
     w, h = F.col("width").cast("long"), F.col("height").cast("long")
     g = F.greatest(w, h)
-    need = g > max_dim
+    need = g > MAX_DIM
     # `div` = exact integer floor division (no double round-trip)
-    rw = F.expr(f"CAST(width AS BIGINT) * {max_dim} "
+    rw = F.expr(f"CAST(width AS BIGINT) * {MAX_DIM} "
                 f"div greatest(CAST(width AS BIGINT), CAST(height AS BIGINT))")
-    rh = F.expr(f"CAST(height AS BIGINT) * {max_dim} "
+    rh = F.expr(f"CAST(height AS BIGINT) * {MAX_DIM} "
                 f"div greatest(CAST(width AS BIGINT), CAST(height AS BIGINT))")
     return decoded.select(
         "doc_id", "media_type", "width", "height",

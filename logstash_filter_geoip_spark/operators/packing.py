@@ -44,12 +44,13 @@ gets.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from logstash_filter_geoip_spark.functions.hashing import (md5_hash60,
                                                            md5_hash60_sql)
 from logstash_filter_geoip_spark.operators.text_ops import TOKEN_RE
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
 # Block-prefix collect guard: 2^21 blocks (~2M driver rows) is far beyond
 # any sane configuration — hitting it means docs_per_block is mis-sized for
@@ -58,7 +59,6 @@ _MAX_BLOCKS = 1 << 21
 
 
 def pack_sequences(docs: DataFrame, seq_len: int = 2048, eos_tokens: int = 1,
-                   text_col: str = "text",
                    docs_per_block: int = 1 << 16) -> DataFrame:
     """Concat-then-chunk sequence packing metadata.
 
@@ -80,7 +80,7 @@ def pack_sequences(docs: DataFrame, seq_len: int = 2048, eos_tokens: int = 1,
             f"docs_per_block must be positive, got {docs_per_block}")
     narrow = docs.select(
         "doc_id",
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_RE), 0))
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(TOKEN_RE), 0))
          .cast("long").alias("n_tokens"))
     keyed = narrow.select(
         "doc_id", "n_tokens",
@@ -155,8 +155,7 @@ SHUFFLE_SALT = "shuffle-v1"
 
 
 def global_shuffle(docs: DataFrame, n_shards: int = SHUFFLE_SHARDS,
-                   salt: str = SHUFFLE_SALT,
-                   id_col: str = "doc_id") -> DataFrame:
+                   salt: str = SHUFFLE_SALT) -> DataFrame:
     """Deterministic global training-order shuffle + sharding: every doc
     gets a salted 60-bit md5 sort key; shard = key mod n_shards; ``pos`` =
     the doc's rank within its shard under (key, id) order. Reading the
@@ -176,28 +175,28 @@ def global_shuffle(docs: DataFrame, n_shards: int = SHUFFLE_SHARDS,
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     key = md5_hash60(F.concat(F.lit(f"shuffle:{salt}:"),
-                              F.col(id_col).cast("string")))
-    keyed = docs.select(id_col, key.alias("sort_key"),
+                              F.col("doc_id").cast("string")))
+    keyed = docs.select("doc_id", key.alias("sort_key"),
                         F.pmod(key, F.lit(n_shards)).cast("int")
                          .alias("shard"))
-    w = Window.partitionBy("shard").orderBy("sort_key", id_col)
-    return keyed.select(id_col, "shard",
+    w = Window.partitionBy("shard").orderBy("sort_key", "doc_id")
+    return keyed.select("doc_id", "shard",
                         F.row_number().over(w).cast("int").alias("pos"),
                         "sort_key")
 
 
-def global_shuffle_oracle_sql(n_shards: int = SHUFFLE_SHARDS,
-                              salt: str = SHUFFLE_SALT) -> str:
+def global_shuffle_oracle_sql() -> str:
     """DuckDB mirror of global_shuffle: same salted key, same mod-sharding,
     same (key, id) rank."""
-    k = md5_hash60_sql(f"'shuffle:{salt}:' || CAST(doc_id AS VARCHAR)")
+    k = md5_hash60_sql(
+        f"'shuffle:{SHUFFLE_SALT}:' || CAST(doc_id AS VARCHAR)")
     return f"""
 WITH shkeys AS (
   SELECT doc_id, {k} AS sort_key FROM documents
 )
 SELECT doc_id,
-       CAST(sort_key % {n_shards} AS INT) AS shard,
-       CAST(row_number() OVER (PARTITION BY sort_key % {n_shards}
+       CAST(sort_key % {SHUFFLE_SHARDS} AS INT) AS shard,
+       CAST(row_number() OVER (PARTITION BY sort_key % {SHUFFLE_SHARDS}
                                ORDER BY sort_key, doc_id) AS INT) AS pos,
        sort_key
 FROM shkeys
@@ -211,9 +210,7 @@ CURRICULUM_SALT = "curriculum-v1"
 
 def curriculum_order(docs: DataFrame,
                      band_edges: tuple[int, ...] = CURRICULUM_BANDS,
-                     shards_per_band: int = CURRICULUM_SHARDS,
-                     salt: str = CURRICULUM_SALT,
-                     text_col: str = "text") -> DataFrame:
+                     shards_per_band: int = CURRICULUM_SHARDS) -> DataFrame:
     """Deterministic curriculum ordering with a TRUE global position,
     computed scalably: docs band by token count (short → long, the
     easy-first curriculum staple; ``band`` = number of edges ≤ n_tok),
@@ -240,13 +237,13 @@ def curriculum_order(docs: DataFrame,
     if shards_per_band < 1:
         raise ValueError(f"shards_per_band must be >= 1: {shards_per_band}")
     n_tok = F.size(F.regexp_extract_all(
-        F.coalesce(F.col(text_col), F.lit("")),
+        F.coalesce(F.col("text"), F.lit("")),
         F.lit(TOKEN_RE), 0)).cast("long")
     band = None
     for e in band_edges:
         term = (n_tok >= F.lit(int(e))).cast("int")
         band = term if band is None else band + term
-    key = md5_hash60(F.concat(F.lit(f"curr:{salt}:"),
+    key = md5_hash60(F.concat(F.lit(f"curr:{CURRICULUM_SALT}:"),
                               F.col("doc_id").cast("string")))
     # Cache lifetime (the pack_sequences convention): the persist spans the
     # counts collect below AND the caller's consumption of the returned
@@ -274,16 +271,14 @@ def curriculum_order(docs: DataFrame,
                          .alias("global_pos")))
 
 
-def curriculum_order_oracle_sql(band_edges: tuple[int, ...]
-                                = CURRICULUM_BANDS,
-                                shards_per_band: int = CURRICULUM_SHARDS,
-                                salt: str = CURRICULUM_SALT) -> str:
+def curriculum_order_oracle_sql() -> str:
     """DuckDB mirror — global_pos is the INDEPENDENT global row_number
     under the same total order, so the operator's distributed offset
     arithmetic is checked against the genuine global rank."""
-    k = md5_hash60_sql(f"'curr:{salt}:' || CAST(doc_id AS VARCHAR)")
+    k = md5_hash60_sql(
+        f"'curr:{CURRICULUM_SALT}:' || CAST(doc_id AS VARCHAR)")
     band = " + ".join(f"CAST(n_tok >= {int(e)} AS INT)"
-                      for e in band_edges)
+                      for e in CURRICULUM_BANDS)
     return f"""
 WITH curr_tok AS (
   SELECT doc_id,
@@ -294,7 +289,7 @@ WITH curr_tok AS (
 ),
 curr_band AS (
   SELECT doc_id, n_tok, CAST({band} AS INT) AS band,
-         CAST(sort_key % {int(shards_per_band)} AS INT) AS shard, sort_key
+         CAST(sort_key % {CURRICULUM_SHARDS} AS INT) AS shard, sort_key
   FROM curr_tok
 )
 SELECT doc_id, n_tok, band, shard,
@@ -324,8 +319,7 @@ def _rate_to_copies(rate: float) -> tuple[int, int]:
 
 
 def mix_corpus(docs: DataFrame, rates: dict[str, float],
-               default_rate: float = 1.0, source_col: str = "source",
-               salt: str = "mix-v1") -> DataFrame:
+               default_rate: float = 1.0, salt: str = "mix-v1") -> DataFrame:
     """Deterministic domain mixing: emit ``epoch`` copies of each doc so that
     every source hits its target sampling rate in expectation, with the
     fractional part decided by the salted md5 gate (never by ``df.sample``,
@@ -339,7 +333,7 @@ def mix_corpus(docs: DataFrame, rates: dict[str, float],
         F.concat(F.lit(f"mix:{salt}:"), F.col("doc_id").cast("string")))
     base_e, thr_e = None, None
     for src, (b, t) in sorted(plan.items()):
-        cond = F.col(source_col) == src
+        cond = F.col("source") == src
         base_e = (F.when(cond, b) if base_e is None
                   else base_e.when(cond, b))
         thr_e = F.when(cond, t) if thr_e is None else thr_e.when(cond, t)
@@ -348,7 +342,7 @@ def mix_corpus(docs: DataFrame, rates: dict[str, float],
     n_copies = (base_c + F.when(u < thr_c, 1).otherwise(0)).alias("n_copies")
     # Filter BEFORE sequence(): Spark infers step -1 when start > stop, so
     # sequence(0, -1) would yield [0, -1], not an empty array.
-    return (docs.select("doc_id", F.col(source_col).alias("source"),
+    return (docs.select("doc_id", "source",
                         n_copies)
                 .where(F.col("n_copies") > 0)
                 .select("doc_id", "source",
@@ -383,8 +377,7 @@ WHERE n_copies > 0
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 32,
-                    overlap: int = 8, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+                    overlap: int = 8) -> DataFrame:
     """Sliding-window document chunking (the RAG / long-context prep step,
     distinct from ``pack_sequences``' concat-then-chunk): split each doc
     into ``chunk_tokens``-token windows that overlap by ``overlap``.
@@ -405,15 +398,15 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 32,
                          f"{overlap} / {chunk_tokens}")
     stride = chunk_tokens - overlap
     toks = docs.select(
-        id_col,
-        F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_RE), 0).alias("tk"))
+        "doc_id",
+        F.regexp_extract_all(F.col("text"), F.lit(TOKEN_RE), 0).alias("tk"))
     toks = toks.withColumn("n", F.size("tk")).where(F.col("n") > 0)
     starts = F.sequence(F.lit(0),
                         F.greatest(F.col("n") - (overlap + 1), F.lit(0)),
                         F.lit(stride))
-    ex = toks.select(id_col, "tk", "n", F.explode(starts).alias("start"))
+    ex = toks.select("doc_id", "tk", "n", F.explode(starts).alias("start"))
     return ex.select(
-        id_col,
+        "doc_id",
         F.expr(f"CAST(start div {stride} AS BIGINT)").alias("chunk_idx"),
         F.col("start").cast("long").alias("chunk_start"),
         F.least(F.lit(chunk_tokens), F.col("n") - F.col("start"))
@@ -450,11 +443,10 @@ def training_corpus(docs: DataFrame, bench: DataFrame,
                     chunk_tokens: int = 32, overlap: int = 8,
                     weights: tuple[tuple[str, int], ...] = (
                         ("train", 98), ("valid", 1), ("test", 1)),
-                    salt: str = "corpus-v1",
-                    split: str = "train") -> DataFrame:
+                    salt: str = "corpus-v1") -> DataFrame:
     """The end-to-end training-corpus pass: curation (clean_corpus's
     quality + language + repetition + exact-dedup + decontamination kept
-    flag) → deterministic split membership → sliding-window chunks, ONE
+    flag) → the ``train`` split → sliding-window chunks, ONE
     declarative plan.
 
     Scale shape: both gates are doc_id LEFT SEMI joins (no fan-out, the
@@ -467,7 +459,7 @@ def training_corpus(docs: DataFrame, bench: DataFrame,
     kept = (clean_corpus(docs, bench)
             .where(F.col("kept") == 1).select("doc_id"))
     in_split = (split_assign(docs, weights=weights, salt=salt)
-                .where(F.col("split") == split).select("doc_id"))
+                .where(F.col("split") == "train").select("doc_id"))
     selected = (docs.join(kept, "doc_id", "left_semi")
                     .join(in_split, "doc_id", "left_semi"))
     return chunk_documents(selected, chunk_tokens=chunk_tokens,
@@ -476,8 +468,7 @@ def training_corpus(docs: DataFrame, bench: DataFrame,
 
 def split_assign_oracle_sql(weights=(('train', 98), ('valid', 1),
                                     ('test', 1)),
-                            salt: str = "corpus-v1",
-                            table: str = "documents") -> str:
+                            salt: str = "corpus-v1") -> str:
     total = sum(w for _, w in weights)
     key_expr = f"'split:{salt}:' || CAST(doc_id AS VARCHAR)"
     bucket = f"{md5_hash60_sql(key_expr)} % {total}"
@@ -487,7 +478,7 @@ def split_assign_oracle_sql(weights=(('train', 98), ('valid', 1),
         lo += w
     return f"""
 WITH b AS (
-  SELECT doc_id, {bucket} AS bucket FROM {table}
+  SELECT doc_id, {bucket} AS bucket FROM documents
 )
 SELECT doc_id, bucket,
        CASE {' '.join(cases)} ELSE '{weights[-1][0]}' END AS split
@@ -537,27 +528,29 @@ from logstash_filter_geoip_spark.operators.curation import (  # noqa: E402
     _BENCH_PRED_SQL as _CURATION_BENCH_SQL)
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def queries():
     return {
         "pack_sequences": lambda s, d: pack_sequences(
-            _docs(s, d), seq_len=PACK_SEQ_LEN, eos_tokens=PACK_EOS),
+            load_table(s, d, "documents"), seq_len=PACK_SEQ_LEN,
+            eos_tokens=PACK_EOS),
         "split_assign": lambda s, d: split_assign(
-            _docs(s, d), weights=SPLIT_WEIGHTS, salt=SPLIT_SALT),
+            load_table(s, d, "documents"), weights=SPLIT_WEIGHTS,
+            salt=SPLIT_SALT),
         "mix_corpus": lambda s, d: mix_corpus(
-            _docs(s, d), MIX_RATES, default_rate=MIX_DEFAULT,
+            load_table(s, d, "documents"), MIX_RATES, default_rate=MIX_DEFAULT,
             salt=MIX_SALT),
         "doc_chunks": lambda s, d: chunk_documents(
-            _docs(s, d), chunk_tokens=CHUNK_TOKENS, overlap=CHUNK_OVERLAP),
+            load_table(s, d, "documents"), chunk_tokens=CHUNK_TOKENS,
+            overlap=CHUNK_OVERLAP),
         "training_corpus": lambda s, d: training_corpus(
-            _docs(s, d), _docs(s, d).where(_CURATION_BENCH_SQL),
+            load_table(s, d, "documents"),
+            load_table(s, d, "documents").where(_CURATION_BENCH_SQL),
             chunk_tokens=CHUNK_TOKENS, overlap=CHUNK_OVERLAP,
             weights=SPLIT_WEIGHTS, salt=SPLIT_SALT),
-        "shuffle_shard": lambda s, d: global_shuffle(_docs(s, d)),
-        "curriculum_order": lambda s, d: curriculum_order(_docs(s, d)),
+        "shuffle_shard": lambda s, d: global_shuffle(
+            load_table(s, d, "documents")),
+        "curriculum_order": lambda s, d: curriculum_order(
+            load_table(s, d, "documents")),
     }
 
 

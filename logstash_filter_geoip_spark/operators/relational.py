@@ -44,6 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 _SEGMENT = "BUILDING"
 _CUTOFF = "2000-01-01"
 
@@ -61,23 +63,23 @@ def returned_order_priorities(orders: DataFrame,
 
 
 def ship_priority(customer: DataFrame, orders: DataFrame,
-                  lineitem: DataFrame, segment: str = _SEGMENT,
-                  cutoff: str = _CUTOFF, k: int = 10) -> DataFrame:
-    """Top-k revenue orders for one market segment with lines shipped
+                  lineitem: DataFrame) -> DataFrame:
+    """Top-10 revenue orders for one market segment with lines shipped
     after the cutoff (TPC-H Q3 shape; total order under (revenue desc,
     orderkey) so the selected set is unique)."""
-    cust = customer.where(F.col("c_mktsegment") == segment) \
+    cust = customer.where(F.col("c_mktsegment") == _SEGMENT) \
                    .select("c_custkey")
     ords = orders.join(F.broadcast(cust),
                        orders.o_custkey == cust.c_custkey) \
                  .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    lines = lineitem.where(F.col("l_shipdate") > F.lit(cutoff).cast("timestamp"))
+    lines = lineitem.where(
+        F.col("l_shipdate") > F.lit(_CUTOFF).cast("timestamp"))
     rev = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
     return (lines.join(ords, lines.l_orderkey == ords.o_orderkey)
                  .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
                  .agg(F.sum(rev).alias("revenue"))
                  .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-                 .limit(k))
+                 .limit(10))
 
 
 _REGION = "ASIA"
@@ -102,14 +104,13 @@ def _revenue_micro() -> F.Column:
 
 def local_supplier_volume(region: DataFrame, nation: DataFrame,
                           customer: DataFrame, supplier: DataFrame,
-                          orders: DataFrame, lineitem: DataFrame,
-                          region_name: str = _REGION) -> DataFrame:
+                          orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Revenue per nation for one region where the supplying and buying
     nation coincide (TPC-H Q5 shape). Broadcasts ONLY the bounded dims
     (region→nation, ≤25 rows by construction); the four SF-proportional
     relations join on natural keys in whatever regime the optimizer picks
     (SortMergeJoin when data-sized — plan-pinned in both regimes)."""
-    nat = (nation.join(F.broadcast(region.where(F.col("r_name") == region_name)),
+    nat = (nation.join(F.broadcast(region.where(F.col("r_name") == _REGION)),
                        nation.n_regionkey == region.r_regionkey)
                  .select("n_nationkey", "n_name"))
     cust = (customer.join(F.broadcast(nat),
@@ -135,13 +136,12 @@ def local_supplier_volume(region: DataFrame, nation: DataFrame,
                        F.count(F.lit(1)).alias("n_lines")))
 
 
-def brand_volume(part: DataFrame, lineitem: DataFrame,
-                 part_type: str = _PART_TYPE) -> DataFrame:
+def brand_volume(part: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Shipped quantity and revenue per brand for one part type. The dim
     filter applies BEFORE the join (build-side pruning at the scan); part
     is a mid-sized dimension — broadcast at small scale by AQE, a partkey
     shuffle join at 100 TB."""
-    prt = part.where(F.col("p_type") == part_type) \
+    prt = part.where(F.col("p_type") == _PART_TYPE) \
               .select("p_partkey", "p_brand")
     lines = lineitem.select("l_partkey",
                             F.col("l_quantity").cast("long").alias("qty"),
@@ -156,8 +156,7 @@ def brand_volume(part: DataFrame, lineitem: DataFrame,
 _Q17_BRAND = "Brand#11"
 
 
-def small_quantity_revenue(part: DataFrame, lineitem: DataFrame,
-                           brand: str = _Q17_BRAND) -> DataFrame:
+def small_quantity_revenue(part: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q17 shape: revenue from "small" lineitems of one brand, where
     small = quantity below 20% of that part's average quantity. The
     correlated scalar subquery decorrelates into a per-partkey aggregate
@@ -179,7 +178,8 @@ def small_quantity_revenue(part: DataFrame, lineitem: DataFrame,
     ONE lineitem scan, ONE partkey Exchange, one Sort+Window (plan-pinned).
     """
     from pyspark.sql import Window
-    prt = part.where(F.col("p_brand") == brand).select("p_partkey", "p_brand")
+    prt = (part.where(F.col("p_brand") == _Q17_BRAND)
+               .select("p_partkey", "p_brand"))
     lines = lineitem.select("l_partkey",
                             F.col("l_quantity").cast("long").alias("qty"),
                             _revenue_micro().alias("rev_u"))
@@ -200,11 +200,10 @@ _Q21_LATE_DAYS = 90
 
 
 def waiting_suppliers(supplier: DataFrame, nation: DataFrame,
-                      orders: DataFrame, lineitem: DataFrame,
-                      late_days: int = _Q21_LATE_DAYS) -> DataFrame:
+                      orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q21 shape: among finished multi-supplier orders, blame the
     supplier who was the ONLY one to ship late (shipdate more than
-    ``late_days`` past the order date — the synthetic tables carry no
+    ``_Q21_LATE_DAYS`` past the order date — the synthetic tables carry no
     commit/receipt dates, so the late rule is anchored on o_orderdate).
 
     The classic EXISTS/NOT-EXISTS double correlation decorrelates into ONE
@@ -228,7 +227,7 @@ def waiting_suppliers(supplier: DataFrame, nation: DataFrame,
                  .select("o_orderkey", "o_orderdate")
     lines = lineitem.select("l_orderkey", "l_suppkey", "l_shipdate")
     late = (F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr(f"INTERVAL {int(late_days)} DAY"))
+            > F.col("o_orderdate") + F.expr(f"INTERVAL {_Q21_LATE_DAYS} DAY"))
     per_supp = (lines.join(ords, lines.l_orderkey == ords.o_orderkey)
                      .groupBy("o_orderkey", "l_suppkey")
                      .agg(F.max(late.cast("int")).alias("any_late")))
@@ -251,10 +250,9 @@ _Q22_DORMANT_SINCE = "2001-01-01 00:00:00"
 
 
 def idle_rich_customers(customer: DataFrame, orders: DataFrame,
-                        nation: DataFrame,
-                        dormant_since: str = _Q22_DORMANT_SINCE) -> DataFrame:
+                        nation: DataFrame) -> DataFrame:
     """TPC-H Q22 shape: customers whose balance exceeds the global average
-    of positive balances AND who placed no order since ``dormant_since``
+    of positive balances AND who placed no order since ``_Q22_DORMANT_SINCE``
     (every synthetic customer has SOME order, so Q22's "no orders in N
     years" recency rule is the non-vacuous form), summed per nation.
 
@@ -276,7 +274,7 @@ def idle_rich_customers(customer: DataFrame, orders: DataFrame,
                        > F.col("sum_pos")))
     recent = orders.where(
         F.col("o_orderdate")
-        >= F.lit(dormant_since).cast("timestamp_ntz")).select("o_custkey")
+        >= F.lit(_Q22_DORMANT_SINCE).cast("timestamp_ntz")).select("o_custkey")
     idle = rich.join(recent, rich.c_custkey == F.col("o_custkey"),
                      "left_anti")
     return (idle.join(F.broadcast(nation),
@@ -300,9 +298,8 @@ _Q15_START = "1996-01-01 00:00:00"
 _Q15_END = "1996-04-01 00:00:00"
 
 
-def top_supplier_revenue(supplier: DataFrame, lineitem: DataFrame,
-                         start: str = _Q15_START,
-                         end: str = _Q15_END) -> DataFrame:
+def top_supplier_revenue(supplier: DataFrame,
+                         lineitem: DataFrame) -> DataFrame:
     """(s_suppkey, s_name, total_revenue_u) for every supplier achieving
     the MAXIMUM quarterly revenue (exact BIGINT micro-units, so the max
     and its ties are exact — a float revenue would make "equals the max"
@@ -316,8 +313,8 @@ def top_supplier_revenue(supplier: DataFrame, lineitem: DataFrame,
     filter both read the cache); its lifetime ends with the consuming
     action (pack_sequences cache-lifetime convention)."""
     rev = (lineitem
-           .where((F.col("l_shipdate") >= F.lit(start).cast("timestamp"))
-                  & (F.col("l_shipdate") < F.lit(end).cast("timestamp")))
+           .where((F.col("l_shipdate") >= F.lit(_Q15_START).cast("timestamp"))
+                  & (F.col("l_shipdate") < F.lit(_Q15_END).cast("timestamp")))
            .groupBy("l_suppkey")
            .agg(F.sum(_revenue_micro()).alias("total_revenue_u"))).persist()
     mx = rev.agg(F.max("total_revenue_u").alias("__mx"))
@@ -381,8 +378,7 @@ def large_volume_customers(customer: DataFrame, orders: DataFrame,
                           "o_orderkey", "o_orderdate", "total_qty"))
 
 
-def promo_revenue_share(part: DataFrame, lineitem: DataFrame,
-                        promo_type: str = _PART_TYPE) -> DataFrame:
+def promo_revenue_share(part: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q14 shape — the conditional-share rollup: per ship month,
     promo-type revenue vs total revenue as the EXACT BIGINT micro-unit
     PAIR — the share itself is the caller's one division (the
@@ -400,7 +396,7 @@ def promo_revenue_share(part: DataFrame, lineitem: DataFrame,
                           .alias("month"),
                          _revenue_micro().alias("rev_u"))
                  .join(prt, F.col("l_partkey") == F.col("p_partkey")))
-    promo = F.when(F.col("p_type") == promo_type, F.col("rev_u")) \
+    promo = F.when(F.col("p_type") == _PART_TYPE, F.col("rev_u")) \
              .otherwise(F.lit(0))
     return (j.groupBy("month")
              .agg(F.sum(promo).alias("promo_revenue_u"),
@@ -483,8 +479,7 @@ def salted_join(left: DataFrame, right: DataFrame, on: list[str],
 _PRICING_CUTOFF = "2001-06-30 00:00:00"
 
 
-def pricing_summary(lineitem: DataFrame,
-                    cutoff: str = _PRICING_CUTOFF) -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: the full-scan pricing report per (returnflag,
     linestatus) for lines shipped on or before the cutoff.
 
@@ -505,7 +500,8 @@ def pricing_summary(lineitem: DataFrame,
     pct_keep = F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
     pct_tax = F.lit(100) + F.round(F.col("l_tax") * 100).cast("long")
     return (lineitem
-            .where(F.col("l_shipdate") <= F.lit(cutoff).cast("timestamp_ntz"))
+            .where(F.col("l_shipdate")
+                   <= F.lit(_PRICING_CUTOFF).cast("timestamp_ntz"))
             .groupBy("l_returnflag", "l_linestatus")
             .agg(F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
                  F.sum(cents).alias("sum_base_cents"),
@@ -522,9 +518,7 @@ _Q7_NATIONS = ("NATION_18", "NATION_19")
 
 def nation_trade_volume(customer: DataFrame, orders: DataFrame,
                         lineitem: DataFrame, supplier: DataFrame,
-                        nation: DataFrame,
-                        nations: tuple[str, str] = _Q7_NATIONS
-                        ) -> DataFrame:
+                        nation: DataFrame) -> DataFrame:
     """Bilateral trade volume between two nations by ship year (TPC-H Q7
     shape): revenue of lines whose supplier sits in one of the pair and
     whose customer sits in the OTHER, both directions reported. Exact
@@ -533,7 +527,7 @@ def nation_trade_volume(customer: DataFrame, orders: DataFrame,
     ``supp_nation <> cust_nation`` filter over rows already restricted to
     the pair on BOTH legs — each leg prunes at its own dim join, so the
     intermediate never widens beyond pair-member rows."""
-    nat = (nation.where(F.col("n_name").isin(*nations))
+    nat = (nation.where(F.col("n_name").isin(*_Q7_NATIONS))
                  .select("n_nationkey", "n_name"))
     supp = (supplier.join(F.broadcast(nat),
                           supplier.s_nationkey == nat.n_nationkey)
@@ -558,11 +552,8 @@ _Q8_NATION = "NATION_3"
 
 
 def market_share(region: DataFrame, nation: DataFrame, customer: DataFrame,
-                 orders: DataFrame, lineitem: DataFrame,
-                 supplier: DataFrame, part: DataFrame,
-                 target_nation: str = _Q8_NATION,
-                 region_name: str = _REGION,
-                 part_type: str = _PART_TYPE) -> DataFrame:
+                 orders: DataFrame, lineitem: DataFrame, supplier: DataFrame,
+                 part: DataFrame) -> DataFrame:
     """Market share (TPC-H Q8 shape): within one region's market for one
     part type, the share of revenue supplied by the target nation, per
     order year. ``mkt_share_ppm = target_u * 1e6 div total_u`` —
@@ -573,7 +564,7 @@ def market_share(region: DataFrame, nation: DataFrame, customer: DataFrame,
     wrapping (the association_rules contract; sum in decimal(38,0) and
     divide downstream if a corpus ever hits it)."""
     nat_r = (nation.join(F.broadcast(region.where(
-                             F.col("r_name") == region_name)),
+                             F.col("r_name") == _REGION)),
                          nation.n_regionkey == region.r_regionkey)
                    .select("n_nationkey"))
     cust = (customer.join(F.broadcast(nat_r),
@@ -582,7 +573,7 @@ def market_share(region: DataFrame, nation: DataFrame, customer: DataFrame,
     ords = (orders.join(cust, orders.o_custkey == cust.c_custkey)
                   .select("o_orderkey",
                           F.year("o_orderdate").alias("order_year")))
-    prt = part.where(F.col("p_type") == part_type).select("p_partkey")
+    prt = part.where(F.col("p_type") == _PART_TYPE).select("p_partkey")
     supp = (supplier.join(F.broadcast(nation.select("n_nationkey",
                                                     "n_name")),
                           supplier.s_nationkey == F.col("n_nationkey"))
@@ -595,7 +586,7 @@ def market_share(region: DataFrame, nation: DataFrame, customer: DataFrame,
     per_year = (j.groupBy("order_year")
                  .agg(F.sum("rev_u").alias("total_u"),
                       F.coalesce(
-                          F.sum(F.when(F.col("supp_nation") == target_nation,
+                          F.sum(F.when(F.col("supp_nation") == _Q8_NATION,
                                        F.col("rev_u"))),
                           F.lit(0).cast("long")).alias("target_u")))
     # nullif: an all-zero-revenue year yields a NULL share, never an ANSI
@@ -610,8 +601,8 @@ _Q10_K = 20  # the ONE cut both engines read
 
 
 def returned_customer_revenue(customer: DataFrame, orders: DataFrame,
-                              lineitem: DataFrame, nation: DataFrame,
-                              k: int = _Q10_K) -> DataFrame:
+                              lineitem: DataFrame,
+                              nation: DataFrame) -> DataFrame:
     """Top-k customers by returned-line revenue (TPC-H Q10 shape) — the
     "who is returning the most merchandise" report. The returnflag filter
     prunes lineitem AT THE SCAN (pushed predicate); revenue aggregates
@@ -632,7 +623,7 @@ def returned_customer_revenue(customer: DataFrame, orders: DataFrame,
     return (out.select("c_custkey", "c_name", "n_name", "revenue_u",
                        "n_lines")
                .orderBy(F.col("revenue_u").desc(), "c_custkey")
-               .limit(k))
+               .limit(_Q10_K))
 
 
 # (brand, min_qty, max_qty, max_size) disjunction arms — ONE spec both
@@ -645,9 +636,7 @@ _Q19_ARMS: list[tuple[str, int, int, int]] = [
 
 
 def disjunctive_band_revenue(part: DataFrame,
-                             lineitem: DataFrame,
-                             arms: list[tuple[str, int, int, int]]
-                             = _Q19_ARMS) -> DataFrame:
+                             lineitem: DataFrame) -> DataFrame:
     """Revenue under an OR-of-conjunctive-bands predicate (TPC-H Q19
     shape) — per arm AND total, one row per arm plus an __all__ row. The
     pre-join halves of the disjunction are pushed to BOTH scans before
@@ -659,7 +648,7 @@ def disjunctive_band_revenue(part: DataFrame,
     li_any = None
     p_any = None
     arm_cols = []
-    for i, (brand, lo, hi, size) in enumerate(arms):
+    for i, (brand, lo, hi, size) in enumerate(_Q19_ARMS):
         li_arm = (qty >= lo) & (qty <= hi)
         p_arm = (F.col("p_brand") == brand) & (F.col("p_size") <= size)
         li_any = li_arm if li_any is None else (li_any | li_arm)
@@ -684,14 +673,13 @@ def disjunctive_band_revenue(part: DataFrame,
     return per_arm.unionByName(total)
 
 
-def _band_revenue_oracle_sql(arms: list[tuple[str, int, int, int]]
-                             = _Q19_ARMS) -> str:
+def _band_revenue_oracle_sql() -> str:
     """DuckDB mirror generated from the SAME arm spec: identical
     first-match labeling, identical micro-unit arithmetic."""
     label = " ".join(
         f"WHEN l_quantity >= {lo} AND l_quantity <= {hi} "
         f"AND p_brand = '{brand}' AND p_size <= {size} THEN 'arm_{i}'"
-        for i, (brand, lo, hi, size) in enumerate(arms))
+        for i, (brand, lo, hi, size) in enumerate(_Q19_ARMS))
     return f"""
 WITH bd_lab AS (
   SELECT CASE {label} END AS arm,
@@ -711,41 +699,37 @@ FROM bd_m
 """
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def q_priority_semi_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Large-to-large LEFT SEMI join (orders ⋉ returned lineitems) with a
     two-phase priority count — the shuffle-join regime, integer outputs."""
-    return returned_order_priorities(_t(spark, sf_dir, "orders"),
-                                     _t(spark, sf_dir, "lineitem"))
+    return returned_order_priorities(load_table(spark, sf_dir, "orders"),
+                                     load_table(spark, sf_dir, "lineitem"))
 
 
 def q_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: broadcast customer filter, orderkey shuffle join,
     per-order revenue, global top-10 via TakeOrderedAndProject."""
-    return ship_priority(_t(spark, sf_dir, "customer"),
-                         _t(spark, sf_dir, "orders"),
-                         _t(spark, sf_dir, "lineitem"))
+    return ship_priority(load_table(spark, sf_dir, "customer"),
+                         load_table(spark, sf_dir, "orders"),
+                         load_table(spark, sf_dir, "lineitem"))
 
 
 def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: six-table mixed-regime join — bounded dims broadcast,
     natural-key shuffle joins everywhere else, exact BIGINT revenue."""
-    return local_supplier_volume(_t(spark, sf_dir, "region"),
-                                 _t(spark, sf_dir, "nation"),
-                                 _t(spark, sf_dir, "customer"),
-                                 _t(spark, sf_dir, "supplier"),
-                                 _t(spark, sf_dir, "orders"),
-                                 _t(spark, sf_dir, "lineitem"))
+    return local_supplier_volume(load_table(spark, sf_dir, "region"),
+                                 load_table(spark, sf_dir, "nation"),
+                                 load_table(spark, sf_dir, "customer"),
+                                 load_table(spark, sf_dir, "supplier"),
+                                 load_table(spark, sf_dir, "orders"),
+                                 load_table(spark, sf_dir, "lineitem"))
 
 
 def q_brand_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mid-sized-dimension join (lineitem ⋈ part) with the dim filter pushed
     below the join; per-brand quantity/revenue in exact integer units."""
-    return brand_volume(_t(spark, sf_dir, "part"),
-                        _t(spark, sf_dir, "lineitem"))
+    return brand_volume(load_table(spark, sf_dir, "part"),
+                        load_table(spark, sf_dir, "lineitem"))
 
 
 def queries():
@@ -755,37 +739,40 @@ def queries():
         "local_supplier_volume": q_local_supplier_volume,
         "brand_volume": q_brand_volume,
         "small_qty_revenue": lambda s, d: small_quantity_revenue(
-            _t(s, d, "part"), _t(s, d, "lineitem")),
-        "pricing_summary": lambda s, d: pricing_summary(_t(s, d, "lineitem")),
+            load_table(s, d, "part"), load_table(s, d, "lineitem")),
+        "pricing_summary": lambda s, d: pricing_summary(
+            load_table(s, d, "lineitem")),
         "important_parts": lambda s, d: important_parts(
-            _t(s, d, "lineitem")),
+            load_table(s, d, "lineitem")),
         "promo_share": lambda s, d: promo_revenue_share(
-            _t(s, d, "part"), _t(s, d, "lineitem")),
+            load_table(s, d, "part"), load_table(s, d, "lineitem")),
         "waiting_suppliers": lambda s, d: waiting_suppliers(
-            _t(s, d, "supplier"), _t(s, d, "nation"),
-            _t(s, d, "orders"), _t(s, d, "lineitem")),
+            load_table(s, d, "supplier"), load_table(s, d, "nation"),
+            load_table(s, d, "orders"), load_table(s, d, "lineitem")),
         "idle_rich_customers": lambda s, d: idle_rich_customers(
-            _t(s, d, "customer"), _t(s, d, "orders"), _t(s, d, "nation")),
+            load_table(s, d, "customer"), load_table(s, d, "orders"),
+            load_table(s, d, "nation")),
         "nation_trade_volume": lambda s, d: nation_trade_volume(
-            _t(s, d, "customer"), _t(s, d, "orders"),
-            _t(s, d, "lineitem"), _t(s, d, "supplier"),
-            _t(s, d, "nation")),
+            load_table(s, d, "customer"), load_table(s, d, "orders"),
+            load_table(s, d, "lineitem"), load_table(s, d, "supplier"),
+            load_table(s, d, "nation")),
         "market_share": lambda s, d: market_share(
-            _t(s, d, "region"), _t(s, d, "nation"), _t(s, d, "customer"),
-            _t(s, d, "orders"), _t(s, d, "lineitem"),
-            _t(s, d, "supplier"), _t(s, d, "part")),
+            load_table(s, d, "region"), load_table(s, d, "nation"),
+            load_table(s, d, "customer"),
+            load_table(s, d, "orders"), load_table(s, d, "lineitem"),
+            load_table(s, d, "supplier"), load_table(s, d, "part")),
         "returned_customer_revenue": lambda s, d: returned_customer_revenue(
-            _t(s, d, "customer"), _t(s, d, "orders"),
-            _t(s, d, "lineitem"), _t(s, d, "nation")),
+            load_table(s, d, "customer"), load_table(s, d, "orders"),
+            load_table(s, d, "lineitem"), load_table(s, d, "nation")),
         "band_revenue": lambda s, d: disjunctive_band_revenue(
-            _t(s, d, "part"), _t(s, d, "lineitem")),
+            load_table(s, d, "part"), load_table(s, d, "lineitem")),
         "top_supplier_revenue": lambda s, d: top_supplier_revenue(
-            _t(s, d, "supplier"), _t(s, d, "lineitem")),
+            load_table(s, d, "supplier"), load_table(s, d, "lineitem")),
         "customer_order_histogram": lambda s, d: customer_order_histogram(
-            _t(s, d, "customer"), _t(s, d, "orders")),
+            load_table(s, d, "customer"), load_table(s, d, "orders")),
         "large_volume_customers": lambda s, d: large_volume_customers(
-            _t(s, d, "customer"), _t(s, d, "orders"),
-            _t(s, d, "lineitem")),
+            load_table(s, d, "customer"), load_table(s, d, "orders"),
+            load_table(s, d, "lineitem")),
     }
 
 

@@ -43,7 +43,9 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-WORD_RE = "[a-z0-9]+"
+from logstash_filter_geoip_spark.functions.ngrams import WORD_RE, word_tokens
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 # each constant is a LITERAL parsed once per engine (never computed in
 # Python float arithmetic: 1.2 + 1.0 is not bit-identical to the literal
 # 2.2, while both engines' parse of "2.2" is)
@@ -59,10 +61,6 @@ DRIVER_TERMS = ["dup", "merge", "vector"]
 DRIVER_K = 25
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def _check_terms(terms: list[str]) -> list[str]:
     if not terms or len(terms) > MAX_TERMS:
         raise ValueError(
@@ -75,14 +73,13 @@ def _check_terms(terms: list[str]) -> list[str]:
     return terms
 
 
-def bm25_scores(df: DataFrame, terms: list[str],
-                text_col: str = "text") -> DataFrame:
+def bm25_scores(df: DataFrame, terms: list[str]) -> DataFrame:
     """Per-document BM25 micro-unit scores for ``terms`` (every doc with at
     least one matching term). Columns: doc_id, dl, tf_<term>..., score_micro.
     """
     terms = _check_terms(terms)
-    low = F.lower(F.col(text_col))
-    dl = F.size(F.regexp_extract_all(low, F.lit(WORD_RE), 0))
+    low = F.lower(F.col("text"))
+    dl = F.size(word_tokens("text"))
     tf_cols = {t: F.size(F.regexp_extract_all(low, F.lit(rf"\b{t}\b"), 0))
                for t in terms}
     base = df.select("doc_id", dl.alias("dl"),
@@ -118,12 +115,11 @@ def bm25_scores(df: DataFrame, terms: list[str],
                   .where(F.col("score_micro") != 0))
 
 
-def bm25_topk(df: DataFrame, terms: list[str], k: int = 10,
-              text_col: str = "text") -> DataFrame:
+def bm25_topk(df: DataFrame, terms: list[str], k: int = 10) -> DataFrame:
     """Top-k documents by BM25 score; total order (score desc, doc_id) so
     the cut is deterministic. orderBy+limit compiles to
     TakeOrderedAndProject — no global sort at any scale."""
-    return (bm25_scores(df, terms, text_col)
+    return (bm25_scores(df, terms)
             .orderBy(F.col("score_micro").desc(), "doc_id")
             .limit(k))
 
@@ -196,7 +192,7 @@ def build_postings(docs: DataFrame, text_col: str = "text") -> DataFrame:
     corpus."""
     toks = docs.select(
         "doc_id",
-        F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0)
+        word_tokens(text_col)
          .alias("tk"))
     return (toks.select("doc_id", F.size("tk").alias("dl"),
                         F.explode("tk").alias("term"))
@@ -205,7 +201,6 @@ def build_postings(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def bm25_multi_topk(docs: DataFrame, queries_df: DataFrame, k: int = 10,
-                    text_col: str = "text",
                     postings: DataFrame | None = None) -> DataFrame:
     """BM25 top-k per query for a query RELATION (query_id, term) — the
     scale path when the query set is itself data-sized and the bounded-term
@@ -233,11 +228,11 @@ def bm25_multi_topk(docs: DataFrame, queries_df: DataFrame, k: int = 10,
     bm25_scores; the per-(query, doc) sum is an integer aggregate, so it is
     association-free and oracle-exact.
     """
-    tf = postings if postings is not None else build_postings(docs, text_col)
+    tf = postings if postings is not None else build_postings(docs)
     # corpus totals come from the DOCS scan, not the postings: documents
     # with zero tokens have no posting rows but still count toward N
     dld = docs.select("doc_id", F.size(
-        F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0))
+        word_tokens("text"))
         .alias("dl"))
     return bm25_from_index(tf, dld, queries_df, k=k)
 
@@ -342,8 +337,7 @@ def _multi_queries_df(spark: SparkSession) -> DataFrame:
 TFIDF_SCALE = 1_000_000_000
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 5,
-                    text_col: str = "text") -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-k characteristic terms per document — the keyword-extraction /
     topic-tagging primitive of corpus curation (near-dup cluster naming,
     facet indexes, quality audits).
@@ -366,7 +360,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5,
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    postings = build_postings(docs, text_col)
+    postings = build_postings(docs)
     df_rel = (postings.groupBy("term")
                       .agg(F.count(F.lit(1)).alias("df")))
     scored = (postings.join(df_rel.hint("merge"), "term")
@@ -465,7 +459,8 @@ def q_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from logstash_filter_geoip_spark.operators import similarity
 
-    pool = bm25_topk(_docs(spark, sf_dir), DRIVER_TERMS, k=HYBRID_POOL)
+    pool = bm25_topk(load_table(spark, sf_dir, "documents"), DRIVER_TERMS,
+                     k=HYBRID_POOL)
     lex = pool.select(
         "doc_id",
         F.row_number().over(
@@ -479,15 +474,14 @@ def q_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rrf_fuse(lex, sem)
 
 
-def hybrid_oracle_sql(k0: int = RRF_K0, pool: int = HYBRID_POOL,
-                      k: int = HYBRID_K) -> str:
+def hybrid_oracle_sql() -> str:
     """DuckDB mirror composed VERBATIM from the two leg oracles (bm25_sql
     at pool depth; similarity.ann_oracle_sql at pool depth, filtered to
     the fusion query vector) — change a leg, the composition follows."""
     from logstash_filter_geoip_spark.operators import similarity
 
-    lex_sql = bm25_sql(DRIVER_TERMS, pool)
-    sem_sql = similarity.ann_oracle_sql(k=pool)
+    lex_sql = bm25_sql(DRIVER_TERMS, HYBRID_POOL)
+    sem_sql = similarity.ann_oracle_sql(k=HYBRID_POOL)
     return f"""
 WITH hy_lex AS (
   SELECT doc_id,
@@ -507,11 +501,11 @@ hy_j AS (
 hy_sc AS (
   SELECT doc_id, r_lex, r_sem,
          CAST(CASE WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL
-                   THEN {2 * k0} + r_lex + r_sem ELSE 1 END
+                   THEN {2 * RRF_K0} + r_lex + r_sem ELSE 1 END
               AS BIGINT) AS rrf_num,
          CAST(CASE WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL
-                   THEN ({k0} + r_lex) * ({k0} + r_sem)
-                   ELSE {k0} + coalesce(r_lex, r_sem) END
+                   THEN ({RRF_K0} + r_lex) * ({RRF_K0} + r_sem)
+                   ELSE {RRF_K0} + coalesce(r_lex, r_sem) END
               AS BIGINT) AS rrf_den
   FROM hy_j
 )
@@ -519,19 +513,21 @@ SELECT doc_id, r_lex, r_sem, rrf_num, rrf_den,
        CAST(rrf_num AS DOUBLE) / CAST(rrf_den AS DOUBLE) AS rrf_score
 FROM hy_sc
 ORDER BY rrf_score DESC, doc_id
-LIMIT {k}
+LIMIT {HYBRID_K}
 """
 
 
 def queries():
     return {
-        "bm25_topk": lambda s, d: bm25_topk(_docs(s, d), DRIVER_TERMS,
+        "bm25_topk": lambda s, d: bm25_topk(
+            load_table(s, d, "documents"), DRIVER_TERMS,
                                             k=DRIVER_K),
         "hybrid_topk": q_hybrid_topk,
-        "tfidf_top_terms": lambda s, d: tfidf_top_terms(_docs(s, d),
+        "tfidf_top_terms": lambda s, d: tfidf_top_terms(
+            load_table(s, d, "documents"),
                                                         k=TFIDF_K),
         "bm25_multi_topk": lambda s, d: bm25_multi_topk(
-            _docs(s, d), _multi_queries_df(s), k=MULTI_K),
+            load_table(s, d, "documents"), _multi_queries_df(s), k=MULTI_K),
     }
 
 

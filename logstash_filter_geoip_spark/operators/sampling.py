@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from logstash_filter_geoip_spark.functions.hashing import (md5_hash60,
                                                            md5_hash60_sql)
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
 # denominator of every sampling rate: rates are expressed as parts per
 # million so the keep rule is pure integer arithmetic in every engine
@@ -136,17 +137,17 @@ def sample_exact_k_global(df: DataFrame, key_col: str, k: int,
 
 
 def sample_exact_k_oracle_sql(strata_col: str, key_col: str, k: int,
-                              cols: str, salt: str = SAMPLE_K_SALT,
-                              table: str = "documents") -> str:
+                              cols: str) -> str:
     """DuckDB mirror: identical salted rank key, identical total order."""
-    h = md5_hash60_sql(f"'ksample:{salt}:' || CAST({key_col} AS VARCHAR)")
+    h = md5_hash60_sql(
+        f"'ksample:{SAMPLE_K_SALT}:' || CAST({key_col} AS VARCHAR)")
     return f"""
 SELECT {cols}, sample_rank FROM (
   SELECT {cols},
          CAST(row_number() OVER (PARTITION BY {strata_col}
                                  ORDER BY {h}, {key_col}) AS INT)
            AS sample_rank
-  FROM {table}
+  FROM documents
 ) WHERE sample_rank <= {k}
 """
 
@@ -220,14 +221,13 @@ def mixture_gap(df: DataFrame, strata_col: str,
 
 
 def mixture_gap_oracle_sql(strata_col: str,
-                           targets: list[tuple[str, int]],
-                           table: str = "documents") -> str:
+                           targets: list[tuple[str, int]]) -> str:
     total_w = sum(w for _, w in targets)
     vals = ", ".join(f"('{s}', {int(w)})" for s, w in targets)
     return f"""
 WITH mg_obs AS (
   SELECT {strata_col} AS stratum, CAST(count(*) AS BIGINT) AS n_rows
-  FROM {table} GROUP BY 1
+  FROM documents GROUP BY 1
 ),
 mg_tot AS (SELECT CAST(sum(n_rows) AS BIGINT) AS tot FROM mg_obs),
 mg_tgt(stratum, w) AS (VALUES {vals}),
@@ -249,8 +249,7 @@ FROM mg_j, mg_tot
 
 
 def mixture_sample(df: DataFrame, strata_col: str, key_col: str,
-                   targets: list[tuple[str, int]],
-                   salt: str = MIXTURE_SALT) -> DataFrame:
+                   targets: list[tuple[str, int]]) -> DataFrame:
     """Largest exact sample matching a target mixture — the domain/language
     REBALANCING step of a training-corpus build ("50% en, 15% de, ..."),
     deterministic and integer-exact.
@@ -286,7 +285,7 @@ def mixture_sample(df: DataFrame, strata_col: str, key_col: str,
             f"the requested mixture is infeasible (T would be 0)")
     t_total = min(counts[s] * W // w for s, w in targets)
     k_by = {s: w * t_total // W for s, w in targets}
-    rk = _sample_rank_key(key_col, salt)
+    rk = _sample_rank_key(key_col, MIXTURE_SALT)
     w_win = Window.partitionBy(strata_col).orderBy(rk.asc(), F.col(key_col))
     k_expr = F.lit(None).cast("long")
     for s, _ in targets:
@@ -299,9 +298,7 @@ def mixture_sample(df: DataFrame, strata_col: str, key_col: str,
 
 
 def mixture_oracle_sql(strata_col: str, key_col: str,
-                       targets: list[tuple[str, int]], cols: str,
-                       salt: str = MIXTURE_SALT,
-                       table: str = "documents") -> str:
+                       targets: list[tuple[str, int]], cols: str) -> str:
     """DuckDB mirror: the identical T/k_d integer rule computed in SQL
     (non-negative counts, so ``//`` floors exactly like the Python side),
     the identical salted hash-rank total order. Assumes a FEASIBLE mixture
@@ -309,12 +306,13 @@ def mixture_oracle_sql(strata_col: str, key_col: str,
     W = _mixture_check(targets)
     vals = ", ".join(f"('{s}', {w})" for s, w in targets)
     in_list = ", ".join(f"'{s}'" for s, _ in targets)
-    h = md5_hash60_sql(f"'ksample:{salt}:' || CAST({key_col} AS VARCHAR)")
+    h = md5_hash60_sql(
+        f"'ksample:{MIXTURE_SALT}:' || CAST({key_col} AS VARCHAR)")
     return f"""
 WITH mix_t AS (SELECT * FROM (VALUES {vals}) AS t(stratum, w)),
 mix_n AS (
   SELECT {strata_col} AS stratum, count(*) AS n
-  FROM {table} WHERE {strata_col} IN ({in_list}) GROUP BY 1
+  FROM documents WHERE {strata_col} IN ({in_list}) GROUP BY 1
 ),
 mix_tot AS (
   SELECT min(n * {W} // w) AS t FROM mix_n JOIN mix_t USING (stratum)
@@ -327,7 +325,7 @@ mix_r AS (
          CAST(row_number() OVER (PARTITION BY {strata_col}
                                  ORDER BY {h}, {key_col}) AS INT)
            AS sample_rank
-  FROM {table} WHERE {strata_col} IN ({in_list})
+  FROM documents WHERE {strata_col} IN ({in_list})
 )
 SELECT {cols}, sample_rank
 FROM mix_r r JOIN mix_k k ON k.stratum = r.{strata_col}
@@ -335,9 +333,8 @@ WHERE r.sample_rank <= k.k
 """
 
 
-def group_topk(df: DataFrame, group_cols: list[str], order_col: str,
-               k: int, tiebreak_col: str,
-               descending: bool = True) -> DataFrame:
+def group_topk(df: DataFrame, group_cols: list[str], order_col: str, k: int,
+               tiebreak_col: str) -> DataFrame:
     """Top-k rows per group under (order_col, tiebreak_col) — a TOTAL
     order, so the selected set is unique and cross-engine reproducible.
 
@@ -348,7 +345,7 @@ def group_topk(df: DataFrame, group_cols: list[str], order_col: str,
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    oc = F.col(order_col).desc() if descending else F.col(order_col).asc()
+    oc = F.col(order_col).desc()
     w = Window.partitionBy(*group_cols).orderBy(oc, F.col(tiebreak_col))
     return (df.withColumn("rank", F.row_number().over(w))
               .where(F.col("rank") <= k))
@@ -362,14 +359,11 @@ _SAMPLE_RATES = {"en": 0.5, "de": 0.25, "zh": 0.0}
 _SAMPLE_DEFAULT = 0.1
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-stratified deterministic sample of the documents table:
     keep 50% of en, 25% of de, 0% of zh, 10% of everything else."""
-    out = sample_stratified(_docs(spark, sf_dir), "lang", "doc_id",
+    docs = load_table(spark, sf_dir, "documents")
+    out = sample_stratified(docs, "lang", "doc_id",
                             _SAMPLE_RATES, _SAMPLE_DEFAULT)
     return out.select("doc_id", "lang", "source", "n_chars")
 
@@ -377,8 +371,8 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_group_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 longest documents per (lang, source) bucket, doc_id tiebreak
     — the per-bucket quality-selection step."""
-    out = group_topk(_docs(spark, sf_dir), ["lang", "source"], "n_chars",
-                     3, "doc_id")
+    docs = load_table(spark, sf_dir, "documents")
+    out = group_topk(docs, ["lang", "source"], "n_chars", 3, "doc_id")
     return out.select("lang", "source", "rank", "doc_id", "n_chars")
 
 
@@ -395,7 +389,7 @@ def q_quality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-text docs (NULL keep) coalesce into the FAIL stratum — they
     sample at the fail rate, never silently at the 0.0 default."""
     from logstash_filter_geoip_spark.operators.text_ops import quality_cols
-    d = _docs(spark, sf_dir).withColumn(
+    d = load_table(spark, sf_dir, "documents").withColumn(
         "stratum",
         F.coalesce(quality_cols("text")["keep"], F.lit(0)).cast("string"))
     out = sample_stratified(d, "stratum", "doc_id", _QUALITY_RATES)
@@ -409,15 +403,16 @@ _EXACT_K = 40
 def q_sample_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly 40 documents per language, selected by the deterministic
     hash-rank min-k rule (the distributed reservoir)."""
-    out = sample_exact_k(_docs(spark, sf_dir), "lang", "doc_id", _EXACT_K)
+    docs = load_table(spark, sf_dir, "documents")
+    out = sample_exact_k(docs, "lang", "doc_id", _EXACT_K)
     return out.select("doc_id", "lang", "source", "n_chars", "sample_rank")
 
 
 def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The largest deterministic sample of documents matching the
     50/15/15/10/10 en/de/es/fr/zh target mixture."""
-    out = mixture_sample(_docs(spark, sf_dir), "lang", "doc_id",
-                         MIXTURE_TARGETS)
+    docs = load_table(spark, sf_dir, "documents")
+    out = mixture_sample(docs, "lang", "doc_id", MIXTURE_TARGETS)
     return out.select("doc_id", "lang", "source", "n_chars", "sample_rank")
 
 
@@ -428,7 +423,8 @@ def queries():
         "quality_sample": q_quality_sample,
         "sample_exact_k": q_sample_exact_k,
         "mixture_sample": q_mixture_sample,
-        "mixture_gap": lambda s, d: mixture_gap(_docs(s, d), "lang",
+        "mixture_gap": lambda s, d: mixture_gap(
+            load_table(s, d, "documents"), "lang",
                                                 MIXTURE_TARGETS),
     }
 

@@ -38,6 +38,8 @@ import re
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 # Turn OFF Jackson's non-RFC leniency so the Spark-side NULL set matches
 # DuckDB's json_valid on everything except the documented margins above.
 _STRICT_OPTS = {
@@ -75,15 +77,11 @@ def json_field(col: Column, path: str, dtype: str = "string") -> Column:
     return s if dtype == "string" else s.try_cast(dtype)
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
 def q_json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed extraction of props.k + exact per-event-type stats, one scan:
     the JSON parse runs inside the same codegen span as the aggregate's
     map side (integer sums only — no float summation-order noise)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     k = json_field(F.col("props"), "$.k", "bigint")
     return (ev.select("event_type", k.alias("k"))
               .groupBy("event_type")
@@ -99,7 +97,7 @@ def q_json_key_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     how many events carry it — map parse + explode of the key set, two-phase
     count. At 100 TB this is how you find out what's actually IN `props`
     before declaring a schema."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     keys = F.map_keys(json_keys_map(F.col("props")))
     return (ev.select(F.explode(keys).alias("key"))
               .groupBy("key")

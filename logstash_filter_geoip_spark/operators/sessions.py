@@ -45,8 +45,7 @@ def _gap_flag(keys: list[str], ts_col: str, gap_s: int):
 
 
 def sessionize(df: DataFrame, keys: list[str], ts_col: str = "ts",
-               gap_s: int = 1800,
-               session_col: str = "session_idx") -> DataFrame:
+               gap_s: int = 1800) -> DataFrame:
     """Append a per-key session ordinal (1-based): running sum of the
     new-session boundary flag. Null keys COALESCE into one shared window
     partition (SQL GROUP-BY-style null equality) and are sessionized
@@ -59,7 +58,7 @@ def sessionize(df: DataFrame, keys: list[str], ts_col: str = "ts",
         raise ValueError(f"gap_s must be positive, got {gap_s}")
     w = Window.partitionBy(*keys).orderBy(ts_col) \
               .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(session_col,
+    return df.withColumn("session_idx",
                          F.sum(_gap_flag(keys, ts_col, gap_s)).over(w))
 
 

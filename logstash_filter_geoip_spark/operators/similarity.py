@@ -43,6 +43,7 @@ MAX_QUERIES = 64     # hard bound on the query set (driver + broadcast size)
 NEAR_DUP_SIM = 0.95
 N_CELLS = 32         # FIXED IVF centroid count — independent of table size
 NPROBE = 3
+TRAIN_CAP = 4096     # IVF centroid-training sample rows (bounded collect)
 
 # random-hyperplane LSH geometry for embedding_near_dup.
 # P(bit agrees) for cosine s is 1 - arccos(s)/pi; at s = 0.95 that is
@@ -177,11 +178,10 @@ def _train_centroids(sample, n_cells: int, n_iter: int = 10):
     return c
 
 
-def ivf_topk(emb: DataFrame, k: int = TOP_K, query_mod: int = QUERY_MOD,
+def ivf_topk(emb: DataFrame, query_mod: int = QUERY_MOD,
              n_cells: int = N_CELLS, nprobe: int = NPROBE,
-             max_queries: int = MAX_QUERIES,
-             train_cap: int = 4096) -> DataFrame:
-    """IVF-style approximate top-k.
+             max_queries: int = MAX_QUERIES) -> DataFrame:
+    """IVF-style approximate top-TOP_K.
 
     Coarse quantizer: `n_cells` spherical-k-means centroids trained on a
     bounded sample (k FIXED, independent of N — the r1 version grew
@@ -201,7 +201,7 @@ def ivf_topk(emb: DataFrame, k: int = TOP_K, query_mod: int = QUERY_MOD,
 
     spark = emb.sparkSession
     sample = [r["emb"] for r in
-              emb.select("emb").orderBy("vec_id").limit(train_cap).collect()]
+              emb.select("emb").orderBy("vec_id").limit(TRAIN_CAP).collect()]
     if not sample:
         return spark.createDataFrame([], "query_id long, rank int, neighbor_id long")
     cm = _train_centroids(sample, n_cells)
@@ -248,7 +248,7 @@ def ivf_topk(emb: DataFrame, k: int = TOP_K, query_mod: int = QUERY_MOD,
     return (cand.select("query_id", F.col("vec_id").alias("neighbor_id"),
                         pair_cos("q_emb", "emb").alias("sim_r"))
                 .withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
+                .where(F.col("rank") <= TOP_K)
                 .select("query_id", "rank", "neighbor_id"))
 
 
@@ -260,21 +260,19 @@ def ivf_topk(emb: DataFrame, k: int = TOP_K, query_mod: int = QUERY_MOD,
 _HYPERPLANE_BC: dict = {}
 
 
-def lsh_band_values(emb: DataFrame, emb_col: str = "emb",
-                    n_planes: int = N_PLANES, n_bands: int = LSH_BANDS,
-                    seed: int = LSH_SEED):
+def lsh_band_values(emb: DataFrame):
     """pandas UDF Column: array<long> of band values from a random-hyperplane
     signature. The hyperplane matrix is generated ONCE on the driver (the
     embedding dim comes from a one-row peek — an eager .first() job at
     plan-construction time, bounded) and shipped via SparkContext.broadcast,
-    cached per (session, seed, shape) — the r2 version regenerated the
-    (n_planes × dim) gaussian per Arrow batch (ADVICE r2). Same seed →
+    cached per (session, LSH_SEED, shape) — the r2 version regenerated the
+    (N_PLANES × dim) gaussian per Arrow batch (ADVICE r2). Same seed →
     identical planes → identical band values. Returns None on an empty
     input (no dim to peek)."""
     import numpy as np
 
-    bits_per_band = n_planes // n_bands
-    first = emb.select(F.size(emb_col).alias("d")).first()
+    bits_per_band = N_PLANES // LSH_BANDS
+    first = emb.select(F.size("emb").alias("d")).first()
     if first is None or first["d"] is None:
         return None
     spark = emb.sparkSession
@@ -285,12 +283,12 @@ def lsh_band_values(emb: DataFrame, emb_col: str = "emb",
     # long-lived multi-session process (ADVICE r4)
     for stale in [k for k in _HYPERPLANE_BC if k[0] != app_id]:
         del _HYPERPLANE_BC[stale]
-    key = (app_id, seed, n_planes, int(first["d"]))
+    key = (app_id, LSH_SEED, N_PLANES, int(first["d"]))
     bh = _HYPERPLANE_BC.get(key)
     if bh is None:
-        rng = np.random.default_rng(seed)
+        rng = np.random.default_rng(LSH_SEED)
         bh = spark.sparkContext.broadcast(
-            rng.standard_normal((n_planes, int(first["d"]))))
+            rng.standard_normal((N_PLANES, int(first["d"]))))
         _HYPERPLANE_BC[key] = bh
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -299,16 +297,17 @@ def lsh_band_values(emb: DataFrame, emb_col: str = "emb",
         x = np.array(batch.tolist(), dtype=np.float64)
         bits = (x @ bh.value.T) > 0               # (n, n_planes) bool
         weights = 1 << np.arange(bits_per_band, dtype=np.int64)
-        vals = bits.reshape(len(x), n_bands, bits_per_band) @ weights
+        vals = bits.reshape(len(x), LSH_BANDS, bits_per_band) @ weights
         # fold the band index in so values from different bands never collide
-        vals = vals + (np.arange(n_bands, dtype=np.int64) << bits_per_band)
+        vals = vals + (np.arange(LSH_BANDS, dtype=np.int64) << bits_per_band)
         return pd.Series(list(vals))
 
-    return bands(F.col(emb_col))
+    return bands(F.col("emb"))
 
 
-def embedding_near_dup(emb: DataFrame, threshold: float = NEAR_DUP_SIM) -> DataFrame:
-    """All pairs with cosine ≥ threshold (vec_a < vec_b), via LSH banding.
+def embedding_near_dup(emb: DataFrame) -> DataFrame:
+    """All pairs with cosine ≥ NEAR_DUP_SIM (vec_a < vec_b), via LSH
+    banding.
 
     Plan shape: signature UDF → posexplode bands → self-equi-join on
     (band value) → distinct candidates → exact-cosine verify. No
@@ -332,7 +331,7 @@ def embedding_near_dup(emb: DataFrame, threshold: float = NEAR_DUP_SIM) -> DataF
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("eb"))
     pairs = cand.join(ea, "vec_a").join(eb, "vec_b")
     sim = pair_cos(F.col("ea"), F.col("eb"))
-    return (pairs.where(sim >= F.lit(threshold))
+    return (pairs.where(sim >= F.lit(NEAR_DUP_SIM))
                  .select("vec_a", "vec_b"))
 
 
@@ -344,8 +343,7 @@ SEMDEDUP_GATE_SIM = 0.5  # driver/gate threshold: the sf0.01 synthetic
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = SEMDEDUP_SIM,
-                   n_cells: int = N_CELLS,
-                   train_cap: int = 4096) -> DataFrame:
+                   n_cells: int = N_CELLS) -> DataFrame:
     """SemDedup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): coarse k-means clustering, then within-cluster
     pairwise cosine; a vector is a semantic duplicate iff a SMALLER-id
@@ -379,7 +377,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = SEMDEDUP_SIM,
         import numpy as np
 
         sample = [r["emb"] for r in
-                  emb.select("emb").orderBy("vec_id").limit(train_cap)
+                  emb.select("emb").orderBy("vec_id").limit(TRAIN_CAP)
                      .collect()]
         if not sample:
             return spark.createDataFrame([], "vec_id long, keep int")
@@ -438,7 +436,7 @@ def _quantize_batch(v: pd.Series) -> pd.DataFrame:
     })
 
 
-def quantize_embeddings(emb: DataFrame, emb_col: str = "emb") -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 quantization (the storage/serving prep
     step): qvec[i] = floor(x[i]·127/max|x| + 0.5), scale = max|x|/127, so
     dequantization is qvec·scale with element error ≤ scale/2.
@@ -447,7 +445,7 @@ def quantize_embeddings(emb: DataFrame, emb_col: str = "emb") -> DataFrame:
     per Arrow batch, no shuffle, no join; output is ~4× smaller at rest
     (int8-ranged ints + one double). Zero vectors quantize to scale=0 /
     all-zero qvec rather than dividing by zero."""
-    out = emb.withColumn("q", _quantize_batch(F.col(emb_col)))
+    out = emb.withColumn("q", _quantize_batch(F.col("emb")))
     return out.select("vec_id",
                       F.col("q.scale").alias("scale"),
                       F.col("q.qvec").alias("qvec"))
@@ -535,16 +533,15 @@ norms AS (
 )"""
 
 
-def ann_oracle_sql(k: int = TOP_K, query_mod: int = QUERY_MOD,
-                   max_queries: int = MAX_QUERIES) -> str:
+def ann_oracle_sql(k: int = TOP_K) -> str:
     """DuckDB mirror of brute_force_topk at the given parameters —
     self-contained (safe to embed as a derived table); also reused by the
     retrieval module's hybrid-fusion oracle at its pool depth."""
     return f"""
 WITH {_NORMS_CTE},
 qset AS (
-  SELECT vec_id FROM embeddings WHERE vec_id % {query_mod} = 0
-  ORDER BY vec_id LIMIT {max_queries}
+  SELECT vec_id FROM embeddings WHERE vec_id % {QUERY_MOD} = 0
+  ORDER BY vec_id LIMIT {MAX_QUERIES}
 ),
 dots AS (
   SELECT query_id, neighbor_id, sum(ea * eb) AS dot

@@ -31,17 +31,18 @@ from ..functions.hashing import md5_hash60, md5_hash60_sql
 
 BOOTSTRAP_B = 200          # replicates: SE of the 2.5% quantile ~ B^-1/2
 BOOTSTRAP_ALPHA = (1, 40)  # 2.5% per tail as an EXACT rational
+BOOTSTRAP_SALT = "boot-v1"
 
 
-def poisson_thresholds(k_max: int = 8) -> list[int]:
+def poisson_thresholds() -> list[int]:
     """Cumulative Poisson(1) CDF mapped to 60-bit integer thresholds:
     weight(h) = #{k : t_k <= h} for a uniform 60-bit h. Integer
     comparison only — the float CDF values exist solely HERE, at
     threshold-generation time, shared verbatim by both engines (tail
-    mass beyond k_max collapses into weight k_max+1; CDF(8) ≈ 1−1.1e−7,
+    mass beyond k = 8 collapses into weight 9; CDF(8) ≈ 1−1.1e−7,
     negligible bias, identical in both engines either way)."""
     cdf, out = 0.0, []
-    for k in range(k_max + 1):
+    for k in range(9):
         cdf += math.exp(-1) / math.factorial(k)
         out.append(min(int(round(cdf * (1 << 60))), 1 << 60))
     return out
@@ -76,8 +77,6 @@ def _hash60(framed: Column, hash_basis: str) -> Column:
 
 def bootstrap_ci(df: DataFrame, keys: tuple[str, ...], value_col: str,
                  id_col: str, n_replicates: int = BOOTSTRAP_B,
-                 alpha: tuple[int, int] = BOOTSTRAP_ALPHA,
-                 salt: str = "boot-v1",
                  hash_basis: str = "xxhash64") -> DataFrame:
     """Per-key mean with a percentile-bootstrap CI:
     (keys..., n_rows, mean, ci_lo, ci_hi) — the uncertainty layer every
@@ -105,8 +104,8 @@ def bootstrap_ci(df: DataFrame, keys: tuple[str, ...], value_col: str,
               .withColumn("__rep", F.explode(
                   F.sequence(F.lit(0), F.lit(n_replicates - 1)))))
     h = _hash60(F.concat_ws(
-        ":", F.lit("boot"), F.lit(salt), F.col("__rep").cast("string"),
-        F.col("__id")), hash_basis)
+        ":", F.lit("boot"), F.lit(BOOTSTRAP_SALT),
+        F.col("__rep").cast("string"), F.col("__id")), hash_basis)
     w = _weight_col(h, thresholds)
     per_rep = (rows.withColumn("__w", w)
                    .groupBy(*keys, "__rep")
@@ -127,7 +126,7 @@ def bootstrap_ci(df: DataFrame, keys: tuple[str, ...], value_col: str,
                     .withColumn("__pn", F.sum("__n0").over(key_w))
                     .where(F.col("__mean").isNotNull()))
     sel_w = Window.partitionBy(*keys).orderBy("__mean")
-    num, den = alpha
+    num, den = BOOTSTRAP_ALPHA
     ranked = (means.withColumn("__rn", F.row_number().over(sel_w))
                    .withColumn("__b", F.count(F.lit(1)).over(key_w)))
     lo_rank = F.expr(f"({num} * __b + {den - 1}) div {den}")
@@ -141,11 +140,8 @@ def bootstrap_ci(df: DataFrame, keys: tuple[str, ...], value_col: str,
          .alias("ci_hi")))
 
 
-def bootstrap_ci_oracle_sql(table: str, keys: tuple[str, ...],
-                            value_expr: str, id_expr: str,
-                            n_replicates: int = BOOTSTRAP_B,
-                            alpha: tuple[int, int] = BOOTSTRAP_ALPHA,
-                            salt: str = "boot-v1",
+def bootstrap_ci_oracle_sql(table: str, keys: tuple[str, ...], value_expr: str,
+                            id_expr: str, n_replicates: int = BOOTSTRAP_B,
                             lead: str = "WITH") -> str:
     """DuckDB mirror of bootstrap_ci over ``table`` — same hash framing,
     same integer thresholds, same rank rationals. ``lead=','`` emits a
@@ -154,9 +150,10 @@ def bootstrap_ci_oracle_sql(table: str, keys: tuple[str, ...],
     thresholds = poisson_thresholds()
     ks = ", ".join(keys)
     h = md5_hash60_sql(
-        f"'boot:{salt}:' || CAST(__rep AS VARCHAR) || ':' || {id_expr}")
+        f"'boot:{BOOTSTRAP_SALT}:' || CAST(__rep AS VARCHAR) || ':' "
+        f"|| {id_expr}")
     w = _weight_sql("__h", thresholds)
-    num, den = alpha
+    num, den = BOOTSTRAP_ALPHA
     return f"""
 {lead} rows_r AS (
   SELECT {ks}, {value_expr} AS __v, __rep,
@@ -196,10 +193,7 @@ FROM ranked GROUP BY {ks}
 
 
 def bootstrap_ab(df: DataFrame, group_col: str, a_label: str, b_label: str,
-                 value_col: str, id_col: str,
-                 n_replicates: int = BOOTSTRAP_B,
-                 alpha: tuple[int, int] = BOOTSTRAP_ALPHA,
-                 salt: str = "boot-v1",
+                 value_col: str, id_col: str, n_replicates: int = BOOTSTRAP_B,
                  hash_basis: str = "xxhash64") -> DataFrame:
     """Two-sample bootstrap test: difference of means between the A and B
     groups with a percentile CI — ONE row out: (n_a, n_b, mean_a, mean_b,
@@ -225,8 +219,8 @@ def bootstrap_ab(df: DataFrame, group_col: str, a_label: str, b_label: str,
               .withColumn("__rep", F.explode(
                   F.sequence(F.lit(0), F.lit(n_replicates - 1)))))
     h = _hash60(F.concat_ws(
-        ":", F.lit("boot"), F.lit(salt), F.col("__rep").cast("string"),
-        F.col("__id")), hash_basis)
+        ":", F.lit("boot"), F.lit(BOOTSTRAP_SALT),
+        F.col("__rep").cast("string"), F.col("__id")), hash_basis)
     w = _weight_col(h, thresholds)
     side = lambda c: F.sum(F.when(F.col("__is_a"), c))  # noqa: E731
     other = lambda c: F.sum(F.when(~F.col("__is_a"), c))  # noqa: E731
@@ -256,7 +250,7 @@ def bootstrap_ab(df: DataFrame, group_col: str, a_label: str, b_label: str,
                     .withColumn("__tpsb", F.sum("__psb").over(all_w))
                     .withColumn("__tpnb", F.sum("__pnb").over(all_w))
                     .where(F.col("__diff").isNotNull()))
-    num, den = alpha
+    num, den = BOOTSTRAP_ALPHA
     ranked = (diffs.withColumn(
                   "__rn", F.row_number().over(
                       Window.partitionBy().orderBy("__diff")))
@@ -285,16 +279,15 @@ def bootstrap_ab(df: DataFrame, group_col: str, a_label: str, b_label: str,
 def bootstrap_ab_oracle_sql(table: str, group_expr: str, a_label: str,
                             b_label: str, value_expr: str, id_expr: str,
                             n_replicates: int = BOOTSTRAP_B,
-                            alpha: tuple[int, int] = BOOTSTRAP_ALPHA,
-                            salt: str = "boot-v1",
                             lead: str = "WITH") -> str:
     """DuckDB mirror of bootstrap_ab — identical hash framing, thresholds,
     float-op order (mean_a − mean_b), and rank rationals."""
     thresholds = poisson_thresholds()
     h = md5_hash60_sql(
-        f"'boot:{salt}:' || CAST(__rep AS VARCHAR) || ':' || {id_expr}")
+        f"'boot:{BOOTSTRAP_SALT}:' || CAST(__rep AS VARCHAR) || ':' "
+        f"|| {id_expr}")
     w = _weight_sql("__h", thresholds)
-    num, den = alpha
+    num, den = BOOTSTRAP_ALPHA
     return f"""
 {lead} rows_r AS (
   SELECT ({group_expr} = '{a_label}') AS __is_a, {value_expr} AS __v,

@@ -129,8 +129,6 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str],
 
 def scd2_merge(current: DataFrame, updates: DataFrame, keys: list[str],
                attrs: list[str], as_of: str,
-               valid_from: str = "valid_from",
-               valid_to: str = "valid_to",
                full_snapshot: bool = True) -> DataFrame:
     """Type-2 slowly-changing-dimension merge: fold a new full snapshot
     (`updates`: keys + attrs, no validity columns) into a versioned
@@ -167,23 +165,23 @@ def scd2_merge(current: DataFrame, updates: DataFrame, keys: list[str],
         raise ValueError("scd2_merge requires at least one key column")
     if not attrs:
         raise ValueError("scd2_merge requires at least one attribute column")
-    for side, df, need in (("current", current, keys + attrs + [valid_from,
-                                                                valid_to]),
+    for side, df, need in (("current", current, keys + attrs + ["valid_from",
+                                                                "valid_to"]),
                            ("updates", updates, keys + attrs)):
         missing = [c for c in need if c not in df.columns]
         if missing:
             raise ValueError(f"scd2_merge: {side} is missing columns "
                              f"{missing}")
     cut = F.lit(as_of).cast("timestamp")
-    cur_closed = current.where(F.col(valid_to).isNotNull()) \
-                        .select(*keys, *attrs, valid_from, valid_to)
+    cur_closed = current.where(F.col("valid_to").isNotNull()) \
+                        .select(*keys, *attrs, "valid_from", "valid_to")
     # prefix-rename both sides (fresh expression ids) instead of DataFrame
     # aliases: `current` may share lineage with `updates` (re-merging the
     # output with the same snapshot — the idempotence contract), and
     # alias-qualified column access is ambiguous on a self-referencing join
-    c = (current.where(F.col(valid_to).isNull())
+    c = (current.where(F.col("valid_to").isNull())
                 .select(*[F.col(x).alias(f"__c_{x}")
-                          for x in [*keys, *attrs, valid_from]],
+                          for x in [*keys, *attrs, "valid_from"]],
                         F.lit(True).alias("__c")))
     u = (updates.select(*[F.col(x).alias(f"__u_{x}")
                           for x in [*keys, *attrs]],
@@ -199,14 +197,14 @@ def scd2_merge(current: DataFrame, updates: DataFrame, keys: list[str],
     def row(pfx: str, vf: Column, vt: Column) -> Column:
         return F.struct(*[F.col(f"{pfx}{k}").alias(k) for k in keys],
                         *[F.col(f"{pfx}{a_}").alias(a_) for a_ in attrs],
-                        vf.alias(valid_from), vt.alias(valid_to))
+                        vf.alias("valid_from"), vt.alias("valid_to"))
 
     null_ts = F.lit(None).cast("timestamp")
     changed = has_u & ~same if not full_snapshot else (~has_u | ~same)
     closed_old = F.when(has_c & changed,
-                        row("__c_", F.col(f"__c_{valid_from}"), cut))
+                        row("__c_", F.col("__c_valid_from"), cut))
     kept_open = F.when(has_c & ~changed,
-                       row("__c_", F.col(f"__c_{valid_from}"), null_ts))
+                       row("__c_", F.col("__c_valid_from"), null_ts))
     new_open = F.when(has_u & (~has_c | ~same),
                       row("__u_", cut, null_ts))
     merged = (j.select(F.explode(F.array_compact(F.array(

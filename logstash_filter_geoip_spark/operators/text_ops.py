@@ -16,15 +16,17 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logstash_filter_geoip_spark.functions.hashing import (md5_hash60,
                                                            md5_hash60_sql)
-from logstash_filter_geoip_spark.functions.ngrams import with_gram_array
+from logstash_filter_geoip_spark.functions.ngrams import (WORD_RE,
+                                                          with_gram_array,
+                                                          word_tokens)
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
 TOKEN_RE = r"\S+"
-WORD_RE = "[a-z0-9]+"
 
 # language → stopword alternation (tiny n-gram-ish heuristic; parity-safe
 # regex subset for Java regex + RE2)
@@ -36,15 +38,11 @@ LANG_STOPWORDS: list[tuple[str, str]] = [
 ]
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish subword proxy (runs of letters,
     digits, or single punctuation — a cheap upper bound on BPE token count).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     return df.select(
         "doc_id",
         F.length(t).alias("n_chars"),
@@ -73,7 +71,7 @@ def quality_cols(text_col: str = "text") -> dict:
             "keep": keep.cast("int")}
 
 
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Integer-based quality features (ints so the oracle hash is exact):
     char/token/punct/digit/stopword counts and a binary keep flag. The
     stopword leg (task mandate: length/punct/STOPWORD ratios) uses the
@@ -82,13 +80,13 @@ def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     stopword ratio ≥ 2%, a standard natural-text floor) so no float ever
     reaches the oracle hash."""
     return df.select("doc_id", *[c.alias(name) for name, c in
-                                 quality_cols(text_col).items()])
+                                 quality_cols().items()])
 
 
-def lang_cols(text_col: str = "text") -> dict:
+def lang_cols() -> dict:
     """Output-name → Column map for language ID (shared with composed
     pipelines, same contract as quality_cols)."""
-    low = F.lower(F.col(text_col))
+    low = F.lower(F.col("text"))
     scores = {lang: F.size(F.regexp_extract_all(low, F.lit(pat), 0))
               for lang, pat in LANG_STOPWORDS}
     langs = [lang for lang, _ in LANG_STOPWORDS]
@@ -107,15 +105,14 @@ def lang_cols(text_col: str = "text") -> dict:
     return out
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-hit language ID with deterministic argmax tie-break (declared
     order). Rows with zero hits in every language → 'unknown'."""
     return df.select("doc_id", *[c.alias(name) for name, c in
-                                 lang_cols(text_col).items()])
+                                 lang_cols().items()])
 
 
-def fingerprints(df: DataFrame, text_col: str = "text",
-                 hash_basis: str = "native") -> DataFrame:
+def fingerprints(df: DataFrame, hash_basis: str = "native") -> DataFrame:
     """Deterministic document fingerprint: a whole-text hash plus a rolling
     token-fold hash (F.aggregate over a per-token hash — an order-sensitive
     polynomial fold, the set-oriented analogue of a rolling hash).
@@ -128,8 +125,8 @@ def fingerprints(df: DataFrame, text_col: str = "text",
         engines compute bit-identically, making the whole operator
         oracle-checkable; columns (doc_id, doc_fp60, rolling_fp).
     """
-    t = F.col(text_col)
-    toks = F.regexp_extract_all(F.lower(t), F.lit(WORD_RE), 0)
+    t = F.col("text")
+    toks = word_tokens(t)
     if hash_basis == "md5":
         tok_hash = md5_hash60
         whole = md5_hash60(t).alias("doc_fp60")
@@ -206,7 +203,7 @@ _GOPHER_RULES: dict[str, str] = {
 }
 
 
-def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_rules(df: DataFrame) -> DataFrame:
     """Per-document Gopher quality-rule flags (Rae et al. 2021 §A1.1's
     MassiveWeb heuristics): word-count bounds, mean-word-length band,
     symbol-to-word ratio, bullet/ellipsis line screens, alphabetic-word
@@ -217,7 +214,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
     oracle), no shuffle, no Python. NULL text propagates NULL counts and a
     NULL keep in both engines (the quality_scores convention).
     """
-    t = F.col(text_col)
+    t = F.col("text")
 
     def _count(pat: str, lower: bool):
         src = F.lower(t) if lower else t
@@ -270,8 +267,7 @@ SELECT *, CAST({keep} AS INT) AS keep_gopher FROM gflags
 LM_KEEP_AVG_MICRO = -6_500_000  # avg log-prob ≥ -6.5 nats ≈ perplexity 665
 
 
-def lm_bigram_scores(docs: DataFrame, text_col: str = "text",
-                     ref: DataFrame | None = None,
+def lm_bigram_scores(docs: DataFrame, ref: DataFrame | None = None,
                      keep_avg_micro: int = LM_KEEP_AVG_MICRO) -> DataFrame:
     """CCNet-style language-model quality filtering with a self-trained
     bigram model (the KenLM-perplexity stage of published pipelines,
@@ -307,7 +303,7 @@ def lm_bigram_scores(docs: DataFrame, text_col: str = "text",
     ref = docs if ref is None else ref
 
     def _bigrams(df):
-        toks = df.select("doc_id", _tokens_words(text_col).alias("tk"))
+        toks = df.select("doc_id", word_tokens("text").alias("tk"))
         return (with_gram_array(toks, "tk", 2)
                 .select("doc_id", F.explode("grams").alias("g")))
 
@@ -315,7 +311,7 @@ def lm_bigram_scores(docs: DataFrame, text_col: str = "text",
     c2 = ref_bg.groupBy("g").agg(F.count(F.lit(1)).alias("c2"))
     c1 = (ref_bg.select(F.get(F.split("g", " "), 0).alias("w1"))
                 .groupBy("w1").agg(F.count(F.lit(1)).alias("c1")))
-    vocab = (ref.select(F.explode(_tokens_words(text_col)).alias("t"))
+    vocab = (ref.select(F.explode(word_tokens("text")).alias("t"))
                 .agg(F.count_distinct("t").alias("v")))
 
     doc_bg = _bigrams(docs).withColumn(
@@ -347,11 +343,7 @@ def lm_bigram_scores(docs: DataFrame, text_col: str = "text",
                          .cast("int").alias("keep_lm")))
 
 
-def _tokens_words(text_col: str):
-    return F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0)
-
-
-def normalize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """The standard pre-dedup text canonicalization (CCNet-style): lowercase
     → strip everything but [a-z0-9] and whitespace → collapse whitespace
     runs → trim. Emits (doc_id, norm_text, changed).
@@ -365,17 +357,20 @@ def normalize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
     FIRST match unless passed the 'g' flag — the mirror must carry it
     (Spark's replaces all, flag-free).
     """
-    t = F.lower(F.col(text_col))
+    t = F.lower(F.col("text"))
     t = F.regexp_replace(t, r"[^a-z0-9\s]", "")
     t = F.regexp_replace(t, r"\s+", " ")
     norm = F.trim(t)
     return df.select(
         "doc_id", norm.alias("norm_text"),
-        (~norm.eqNullSafe(F.col(text_col))).cast("int").alias("changed"))
+        (~norm.eqNullSafe(F.col("text"))).cast("int").alias("changed"))
 
 
-def collocations(docs: DataFrame, k: int = 30, min_count: int = 5,
-                 text_col: str = "text") -> DataFrame:
+COLLOC_K, COLLOC_MIN_COUNT = 30, 5  # shared with the oracle
+
+
+def collocations(docs: DataFrame, k: int = COLLOC_K,
+                 min_count: int = COLLOC_MIN_COUNT) -> DataFrame:
     """Collocation mining: top-k word bigrams by LIFT (observed bigram
     probability over the independence expectation — the PMI family's
     ratio form, reported raw so no log is needed) with the exact counts
@@ -395,7 +390,7 @@ def collocations(docs: DataFrame, k: int = 30, min_count: int = 5,
     sides corpus-derived vocab relations — the substring_span_stats OOM
     lesson); N and M ride 1-row broadcast cross joins; top-k is a
     TakeOrderedAndProject, never a full sort."""
-    toks = docs.select("doc_id", _tokens_words(text_col).alias("tk"))
+    toks = docs.select("doc_id", word_tokens("text").alias("tk"))
     uni = toks.select(F.explode("tk").alias("w"))
     c1 = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     n_tot = uni.agg(F.count(F.lit(1)).alias("__n"))
@@ -421,14 +416,13 @@ def collocations(docs: DataFrame, k: int = 30, min_count: int = 5,
                .limit(k))
 
 
-def collocations_oracle_sql(k: int = 30, min_count: int = 5,
-                            table: str = "documents") -> str:
+def collocations_oracle_sql() -> str:
     """DuckDB mirror — identical count SQL and the identical pinned
     double expression for lift."""
     return f"""
 WITH toks AS (
   SELECT doc_id, regexp_extract_all(lower(text), '{WORD_RE}') AS tk
-  FROM {table}
+  FROM documents
 ), uni AS (
   SELECT unnest(tk) AS w FROM toks
 ), c1 AS (
@@ -440,7 +434,7 @@ bg AS (
 ), c2 AS (
   SELECT g, count(*) AS n_pair,
          split_part(g, ' ', 1) AS w1, split_part(g, ' ', 2) AS w2
-  FROM bg GROUP BY g HAVING count(*) >= {min_count}
+  FROM bg GROUP BY g HAVING count(*) >= {COLLOC_MIN_COUNT}
 ), m_tot AS (SELECT count(*) AS __m FROM bg)
 SELECT w1, w2, n_pair, a.c AS n_w1, b.c AS n_w2,
        CAST(n_pair AS DOUBLE) * __n * __n
@@ -449,23 +443,30 @@ FROM c2
 JOIN c1 a ON a.w = c2.w1
 JOIN c1 b ON b.w = c2.w2
 CROSS JOIN n_tot CROSS JOIN m_tot
-ORDER BY lift DESC, w1 ASC, w2 ASC LIMIT {k}
+ORDER BY lift DESC, w1 ASC, w2 ASC LIMIT {COLLOC_K}
 """
 
 
 def queries():
     return {
-        "text_token_counts": lambda s, d: token_counts(_docs(s, d)),
-        "text_quality": lambda s, d: quality_scores(_docs(s, d)),
-        "text_lang_id": lambda s, d: lang_id(_docs(s, d)),
+        "text_token_counts": lambda s, d: token_counts(
+            load_table(s, d, "documents")),
+        "text_quality": lambda s, d: quality_scores(
+            load_table(s, d, "documents")),
+        "text_lang_id": lambda s, d: lang_id(load_table(s, d, "documents")),
         # driver query runs the md5 family (oracle-checkable end to end);
         # the native xxhash64+crc32 default stays the production path
-        "text_fingerprint": lambda s, d: fingerprints(_docs(s, d),
+        "text_fingerprint": lambda s, d: fingerprints(
+            load_table(s, d, "documents"),
                                                       hash_basis="md5"),
-        "text_lm_score": lambda s, d: lm_bigram_scores(_docs(s, d)),
-        "text_gopher_rules": lambda s, d: gopher_rules(_docs(s, d)),
-        "text_normalize": lambda s, d: normalize_text(_docs(s, d)),
-        "text_collocations": lambda s, d: collocations(_docs(s, d)),
+        "text_lm_score": lambda s, d: lm_bigram_scores(
+            load_table(s, d, "documents")),
+        "text_gopher_rules": lambda s, d: gopher_rules(
+            load_table(s, d, "documents")),
+        "text_normalize": lambda s, d: normalize_text(
+            load_table(s, d, "documents")),
+        "text_collocations": lambda s, d: collocations(
+            load_table(s, d, "documents")),
     }
 
 

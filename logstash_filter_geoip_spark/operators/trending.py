@@ -31,8 +31,10 @@ cube_rollup keeps them as genuine NULL day groups (gid tells them apart).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
 DECAY_HORIZON_DAYS = 20
 _EPOCH = "1970-01-01"
@@ -108,8 +110,7 @@ FLAP_THRESHOLD = 100.0  # driver-scale state rule: value >= 100 → 'high'
 
 
 def debounced_transitions(df: DataFrame, entity_cols: list[str],
-                          state_col: str, ts_col: str = "ts",
-                          order_cols: tuple[str, ...] = ("ts", "event_id"),
+                          state_col: str,
                           min_run: int = FLAP_MIN_RUN) -> DataFrame:
     """Alert flap suppression — the monitoring dedup: per entity, emit a
     state TRANSITION only when the new state persisted for ≥ ``min_run``
@@ -118,7 +119,7 @@ def debounced_transitions(df: DataFrame, entity_cols: list[str],
     1-row B emits nothing). Returns (entity..., state, prev_state,
     run_len, run_start) — prev_state NULL on the first emitted run.
 
-    One rule in both engines: rows order by ``order_cols`` (a TOTAL
+    One rule in both engines: rows order by (ts, event_id) (a TOTAL
     order — ts alone ties); NULL-ts rows drop (no engine-shared NULL
     ordering — the rolling_drift lesson); state comparisons are
     null-safe (IS DISTINCT FROM), a NULL state is a real state. Shape:
@@ -132,10 +133,10 @@ def debounced_transitions(df: DataFrame, entity_cols: list[str],
     if min_run < 1:
         raise ValueError(f"min_run must be >= 1: {min_run}")
     ents = [F.col(c) for c in entity_cols]
-    w = Window.partitionBy(*ents).orderBy(*[F.col(c) for c in order_cols])
+    w = Window.partitionBy(*ents).orderBy(F.col("ts"), F.col("event_id"))
     chg = (~F.col(state_col).eqNullSafe(F.lag(state_col).over(w))) \
         | (F.row_number().over(w) == 1)
-    runs = (df.where(F.col(ts_col).isNotNull())
+    runs = (df.where(F.col("ts").isNotNull())
               .withColumn("__chg", chg.cast("long"))
               .withColumn("__run", F.sum("__chg").over(
                   w.rowsBetween(Window.unboundedPreceding,
@@ -143,7 +144,7 @@ def debounced_transitions(df: DataFrame, entity_cols: list[str],
               .groupBy(*ents, F.col("__run"))
               .agg(F.min(state_col).alias("state"),
                    F.count(F.lit(1)).alias("run_len"),
-                   F.min(ts_col).alias("run_start")))
+                   F.min("ts").alias("run_start")))
     wq = Window.partitionBy(*ents).orderBy("__run")
     qual = (runs.where(F.col("run_len") >= min_run)
                 .withColumn("prev_state", F.lag("state").over(wq))
@@ -154,16 +155,14 @@ def debounced_transitions(df: DataFrame, entity_cols: list[str],
                         "run_start"))
 
 
-def debounced_transitions_oracle_sql(min_run: int = FLAP_MIN_RUN,
-                                     threshold: float = FLAP_THRESHOLD
-                                     ) -> str:
+def debounced_transitions_oracle_sql() -> str:
     """DuckDB mirror over events with the driver-scale state rule
-    (value >= threshold → 'high'); same total order, same null-safe
+    (value >= FLAP_THRESHOLD → 'high'); same total order, same null-safe
     change flags, same run aggregate + qualifying-run lag."""
     return f"""
 WITH flap_states AS (
   SELECT user_id, event_id, ts,
-         CASE WHEN value >= {threshold} THEN 'high' ELSE 'normal' END
+         CASE WHEN value >= {FLAP_THRESHOLD} THEN 'high' ELSE 'normal' END
              AS state
   FROM events WHERE ts IS NOT NULL
 ),
@@ -191,7 +190,7 @@ flap_agg AS (
 flap_qual AS (
   SELECT *, lag(state) OVER wq AS prev_state,
          row_number() OVER wq = 1 AS is_first
-  FROM flap_agg WHERE run_len >= {min_run}
+  FROM flap_agg WHERE run_len >= {FLAP_MIN_RUN}
   WINDOW wq AS (PARTITION BY user_id ORDER BY run)
 )
 SELECT user_id, state, prev_state, run_len, run_start
@@ -205,10 +204,6 @@ WHERE is_first OR state IS DISTINCT FROM prev_state
 # ---------------------------------------------------------------------------
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
 def _flap_states(events: DataFrame,
                  threshold: float = FLAP_THRESHOLD) -> DataFrame:
     state = (F.when(F.col("value") >= threshold, "high")
@@ -219,11 +214,12 @@ def _flap_states(events: DataFrame,
 
 def queries():
     return {
-        "cube_rollup": lambda s, d: cube_rollup(_events(s, d)),
-        "decayed_counts": lambda s, d: decayed_counts(_events(s, d)),
-        "trend_slopes": lambda s, d: trend_slopes(_events(s, d)),
+        "cube_rollup": lambda s, d: cube_rollup(load_table(s, d, "events")),
+        "decayed_counts": lambda s, d: decayed_counts(
+            load_table(s, d, "events")),
+        "trend_slopes": lambda s, d: trend_slopes(load_table(s, d, "events")),
         "flap_transitions": lambda s, d: debounced_transitions(
-            _flap_states(_events(s, d)), ["user_id"], "state"),
+            _flap_states(load_table(s, d, "events")), ["user_id"], "state"),
     }
 
 

@@ -121,10 +121,10 @@ WHEN regexp_extract({host}, '{TWO_LABEL_RE}', 1) <> ''
 ELSE {host} END"""
 
 
-def url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_parts(df: DataFrame) -> DataFrame:
     """Append parsed URL columns (scheme, host, port, path, query,
     fragment) — one codegen projection, NULLs for unparseable rows."""
-    exprs = url_part_exprs(url_col, "spark")
+    exprs = url_part_exprs("url", "spark")
     return df.select(
         "*", *[F.expr(sql).alias(name) for name, sql in exprs.items()])
 
@@ -177,7 +177,7 @@ def _norm_py(url, pat, track, ip_re, suf_re, lab_re):
     return norm, dom
 
 
-def url_normalize(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_normalize(df: DataFrame) -> DataFrame:
     """Append ``url_norm`` (canonical URL) and ``registered_domain`` — the
     unit of web dedup and domain rollups.
 
@@ -207,17 +207,16 @@ def url_normalize(df: DataFrame, url_col: str = "url") -> DataFrame:
             doms.append(d)
         return pd.DataFrame({"url_norm": norms, "registered_domain": doms})
 
-    out = df.withColumn("__n", _norm_batch(F.col(url_col)))
+    out = df.withColumn("__n", _norm_batch(F.col("url")))
     return out.select(*df.columns, "__n.url_norm", "__n.registered_domain")
 
 
-def domain_counts(df: DataFrame, url_col: str = "url",
-                  id_col: str = "user_id") -> DataFrame:
+def domain_counts(df: DataFrame, id_col: str = "user_id") -> DataFrame:
     """Per registered-domain rollup: page (row) count, distinct canonical
     URLs, distinct ids — the crawl-frontier / domain-prior aggregate. One
     two-phase aggregate; swap countDistinct for approx_count_distinct when
     exact uniques are not required at full corpus scale."""
-    n = url_normalize(df, url_col)
+    n = url_normalize(df)
     return (n.where(F.col("registered_domain").isNotNull())
              .groupBy("registered_domain")
              .agg(F.count(F.lit(1)).alias("n_rows"),

@@ -696,8 +696,7 @@ def default_dims(spark: SparkSession,
     return dim, (dim_v6 if config.source == "ip_any" else None)
 
 
-def vendored_dim_sql(database: str, alias4: str = "d",
-                     alias6: str = "c6") -> tuple[str, str] | None:
+def vendored_dim_sql(database: str) -> tuple[str, str] | None:
     """(v4 VALUES, v6 VALUES) SQL for the vendored rows — None when the
     golden fallback applies (callers then use dim_values_sql /
     dim_v6_values_sql). Wrap in AS MATERIALIZED CTEs: DuckDB re-evaluates
@@ -706,5 +705,5 @@ def vendored_dim_sql(database: str, alias4: str = "d",
     cached = _vendored_rows(database)
     if cached is None:
         return None
-    return (rows_values_sql(list(cached[0]), SCHEMAS[database], alias4),
-            rows_values_sql(list(cached[1]), SCHEMAS_V6[database], alias6))
+    return (rows_values_sql(list(cached[0]), SCHEMAS[database], "d"),
+            rows_values_sql(list(cached[1]), SCHEMAS_V6[database], "c6"))

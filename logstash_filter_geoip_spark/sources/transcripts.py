@@ -93,6 +93,12 @@ FROM (
 """
 
 
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read the ``name`` table (``<sf_dir>/<name>.parquet``) of a
+    scale-factor directory — the loader the driver queries share."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read events parquet → derive the transcripts DataFrame.
 
@@ -100,7 +106,7 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (S1, SURVEY.md §2.1); here the deterministic derivation stands in. The
     parquet scan benefits from pushdown/pruning exactly like an Iceberg scan.
     """
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = load_table(spark, sf_dir, "events")
     events.createOrReplaceTempView("events")
     return spark.sql(transcripts_sql("spark"))
 

@@ -924,8 +924,9 @@ def index_state(schema: T.StructType,
 def _index_state(text_col: str, id_type: str) -> AdditiveState:
     # postings built under a different tokenizer/text column are a
     # DIFFERENT index: merging them silently skews df/dl for every query
-    from logstash_filter_geoip_spark.operators.retrieval import (
-        WORD_RE, build_postings)
+    from logstash_filter_geoip_spark.functions.ngrams import (WORD_RE,
+                                                              word_tokens)
+    from logstash_filter_geoip_spark.operators.retrieval import build_postings
 
     def build(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         if prev is not None:
@@ -936,8 +937,7 @@ def _index_state(text_col: str, id_type: str) -> AdditiveState:
             F.col("tf").cast("long").alias("tf"))
         dld = batch.select(
             F.lit(None).cast("string").alias("term"), "doc_id",
-            F.size(F.regexp_extract_all(F.lower(F.col(text_col)),
-                                        F.lit(WORD_RE), 0)).alias("dl"),
+            F.size(word_tokens(text_col)).alias("dl"),
             F.lit(None).cast("long").alias("tf"))
         return post.unionByName(dld)
 
@@ -1042,7 +1042,7 @@ def seasonal_state(ts_col: str = "ts") -> AdditiveState:
     """Hour-of-day seasonal-baseline face: per micro-batch
     hygiene.seasonal_daily, cell counts added — types × days × 24 rows of
     state (the rolling_drift calendar-sized precedent). Read face:
-    hygiene.seasonal_flags(counts, over_pct, under_pct), the batch
+    hygiene.seasonal_flags(counts), the batch
     operator's median baselines + anomaly flags."""
     # a different ts column silently mixes calendars
     from logstash_filter_geoip_spark.operators import hygiene
