@@ -6,9 +6,9 @@ queries()      — one callable per implemented operator (SURVEY.md §2).
 oracle_sql()   — DuckDB-equivalent SQL per query. The transcripts input is
                  derived deterministically from the `events` view with the
                  SAME SQL in both engines (sources/transcripts.py), so the
-                 oracle sees byte-identical input; the GeoLite2-style
-                 dimension rows are inlined as VALUES from the same Python
-                 constants (sources/geolite2.py).
+                 oracle sees byte-identical input; the dimension rows are
+                 inlined as VALUES from the same resolver the Spark dims
+                 are built from (geolite2.dim_rows).
 """
 
 from __future__ import annotations
@@ -39,8 +39,12 @@ from logstash_filter_geoip_spark.operators import (basket, bloomjoin, bpe,
                                                    trending, web)
 from logstash_filter_geoip_spark.operators.enrich import enrich
 from logstash_filter_geoip_spark.pipeline import enriched_transcripts, flagship
-from logstash_filter_geoip_spark.sources.geolite2 import (dim_v6_values_sql,
+from logstash_filter_geoip_spark.sources.geolite2 import (GOLDEN_ROWS,
+                                                          SCHEMAS,
+                                                          SCHEMAS_V6,
                                                           dim_values_sql,
+                                                          load_dim_mmdb,
+                                                          rows_values_sql,
                                                           vendored_dims,
                                                           vendored_mmdb_path)
 from logstash_filter_geoip_spark.sources.transcripts import (TEXT_CASES,
@@ -137,19 +141,14 @@ _V6_RANGE_SQL = """
        (k.k6_hi > c6.start_hi OR (k.k6_hi = c6.start_hi AND k.k6_lo >= c6.start_lo))
    AND (k.k6_hi < c6.end_hi   OR (k.k6_hi = c6.end_hi   AND k.k6_lo <= c6.end_lo))"""
 
-def _unified_join(name: str, db: str, hit_sql: str | None = None,
-                  v4_values: str | None = None,
-                  v6_values: str | None = None) -> str:
+def _unified_join(name: str, db: str, hit_sql: str | None = None) -> str:
     """One family-agnostic join CTE: v4 leg on the effective uint32 range
     (plain v4 OR an IPv4-mapped v6 literal), v6 leg via the precomputed
     (hi, lo) keys, attributes coalesced v4-first — the SQL mirror of
     enrich(df, dim, cfg, dim_v6=...) with source ip_any. Every database type
     gets one (the reference accepts IPv6 through all seven retrieve paths,
-    GeoIPFilter.java:172-197). `v4_values`/`v6_values` override the golden
-    VALUES relations (used by the mmdb-ingest query, whose dim rows come
-    from the .mmdb extraction both engines share)."""
-    from logstash_filter_geoip_spark.sources.geolite2 import SCHEMAS
-
+    GeoIPFilter.java:172-197); it probes the type's `{name}_d4`/`{name}_d6`
+    dim CTEs."""
     attrs = [f.name for f in SCHEMAS[db].fields[3:]]
     coalesced = ",\n         ".join(
         f"COALESCE(d.{a}, c6.{a}) AS {a}" for a in attrs)
@@ -161,9 +160,9 @@ def _unified_join(name: str, db: str, hit_sql: str | None = None,
          CASE WHEN k.use6 THEN k.ip_canon ELSE k.ip_str END AS ip_val,
          {hit} AS hit
   FROM keyed k
-  LEFT JOIN {v4_values or dim_values_sql(db)}
+  LEFT JOIN {name}_d4 AS d
     ON k.ip_u32 BETWEEN d.net_start AND d.net_end
-  LEFT JOIN {v6_values or dim_v6_values_sql(db, 'c6')}
+  LEFT JOIN {name}_d6 AS c6
     ON {_V6_RANGE_SQL}
 ),"""
 
@@ -185,53 +184,31 @@ _JOIN_SPECS = [
 ]
 
 
-def _dim_ctes_and_joins() -> tuple[str, str, str | None]:
+def _dim_ctes_and_joins() -> tuple[str, str]:
     """Per-type dim CTEs + unified join CTEs for the oracle prefix.
 
-    S3 exact parity (VERDICT r4 #3): when the vendored `.mmdb` exists for a
-    type, BOTH engines use its full extraction — Spark via vendored_dims,
-    the oracle via AS MATERIALIZED VALUES CTEs emitted here (materialized
-    because DuckDB re-evaluates inline multi-hundred-row VALUES per probe
-    row once an attribute is projected). Golden VALUES remain the no-file
-    fallback, inlined as before. Returns (dim_ctes, joins, country_v4) —
-    country_v4 is the relation the v4-only country_join probes.
-    """
-    from logstash_filter_geoip_spark.sources.geolite2 import vendored_dim_sql
-
-    ctes, joins = [], []
-    country_v4 = None
-    for name, db, hit in _JOIN_SPECS:
-        sqls = vendored_dim_sql(db)
-        if sqls is None:
-            joins.append(_unified_join(name, db, hit))
-        else:
-            ctes.append(f"{name}_d4 AS MATERIALIZED (SELECT * FROM {sqls[0]})")
-            ctes.append(f"{name}_d6 AS MATERIALIZED (SELECT * FROM {sqls[1]})")
-            joins.append(_unified_join(name, db, hit,
-                                       v4_values=f"{name}_d4 AS d",
-                                       v6_values=f"{name}_d6 AS c6"))
-            if db == "Country":
-                country_v4 = "country_u_d4 AS d"
-    dim_ctes = "" if not ctes else ",\n" + ",\n".join(ctes)
-    return dim_ctes, "".join(joins), country_v4
+    Both engines probe one source per type, geolite2.dim_rows (S3 exact
+    parity, VERDICT r4 #3): Spark through vendored_dims, the oracle through
+    the `{name}_d4`/`{name}_d6` AS MATERIALIZED CTEs emitted here over
+    geolite2.dim_values_sql. Returns (dim_ctes, joins)."""
+    ctes = []
+    for name, db, _ in _JOIN_SPECS:
+        v4, v6 = dim_values_sql(db)
+        ctes.append(f"{name}_d4 AS MATERIALIZED (SELECT * FROM {v4})")
+        ctes.append(f"{name}_d6 AS MATERIALIZED (SELECT * FROM {v6})")
+    joins = "".join(_unified_join(name, db, hit)
+                    for name, db, hit in _JOIN_SPECS)
+    return ",\n" + ",\n".join(ctes), joins
 
 
 def _asof_city_sql() -> str:
     """Oracle body for enrich_asof_city: the SAME City dim rows the Spark
-    query enriches with (vendored extraction or golden fallback), stacked
+    query enriches with (the prefix's city_d4/city_d6 CTEs), stacked
     into two whole-file snapshots (era 2 suffixes city_name — `|| ' (r2)'`
     keeps NULL city names NULL, exactly like Spark's concat), then the
     unified v4+v6 range join with the half-open validity-interval residual
     on each leg — the SQL mirror of enrich(..., event_time_col='ts') over
     operators/temporal.dim_history."""
-    from logstash_filter_geoip_spark.sources.geolite2 import (
-        SCHEMAS, SCHEMAS_V6, dim_values_sql, dim_v6_values_sql,
-        vendored_dim_sql)
-
-    sqls = vendored_dim_sql("City")
-    v4rel = "city_d4 AS d" if sqls else dim_values_sql("City")
-    v6rel = "city_d6 AS c6" if sqls else dim_v6_values_sql("City", "c6")
-
     def hist(rel: str, alias: str, cols: list[str]) -> str:
         keep = ", ".join(f"{alias}.{c}" for c in cols)
         v2 = ", ".join(
@@ -243,8 +220,9 @@ def _asof_city_sql() -> str:
                 f"  SELECT {v2}, TIMESTAMP '{_ASOF_CUTOVER}' AS valid_from,\n"
                 f"         CAST(NULL AS TIMESTAMP) AS valid_to FROM {rel}")
 
-    h4 = hist(v4rel, "d", [f.name for f in SCHEMAS["City"].fields])
-    h6 = hist(v6rel, "c6", [f.name for f in SCHEMAS_V6["City"].fields])
+    h4 = hist("city_d4 AS d", "d", [f.name for f in SCHEMAS["City"].fields])
+    h6 = hist("city_d6 AS c6", "c6",
+              [f.name for f in SCHEMAS_V6["City"].fields])
     return f"""
 , h4 AS MATERIALIZED (
   {h4}
@@ -281,7 +259,7 @@ def _oracle_prefix() -> str:
 
     All seven *_join CTEs are UNIFIED over both IP families (see
     _unified_join) and probe the SAME dim rows as the Spark queries
-    (vendored .mmdb extraction when present — _dim_ctes_and_joins). `use6`
+    (geolite2.dim_rows — _dim_ctes_and_joins). `use6`
     mirrors the Spark-side ip_any tail-quad preference (parse.py): the v6
     literal wins when the extracted v4 is its trailing embedded quad.
     `ip_u32` is the EFFECTIVE v4 key (plain v4, or the embedded quad of an
@@ -294,7 +272,7 @@ def _oracle_prefix() -> str:
     valid = " AND ".join(f"{o} <= 255" for o in octets)
     u32 = (f"{octets[0]} * 16777216 + {octets[1]} * 65536 + "
            f"{octets[2]} * 256 + {octets[3]}")
-    dim_ctes, unified, country_v4 = _dim_ctes_and_joins()
+    dim_ctes, unified = _dim_ctes_and_joins()
     return f"""
 WITH transcripts AS ({transcripts_sql('duckdb')}),
 parsed AS (
@@ -325,7 +303,7 @@ keyed AS (
 ){dim_ctes},{unified}
 country_join AS (
   SELECT k.*, d.*, (d.net_start IS NOT NULL) AS hit
-  FROM keyed k LEFT JOIN {country_v4 or dim_values_sql('Country')}
+  FROM keyed k LEFT JOIN country_u_d4 AS d
     ON k.ip4_u32 BETWEEN d.net_start AND d.net_end
 )
 """
@@ -355,7 +333,8 @@ def _enrich_flat(spark: SparkSession, sf_dir: str, database: str,
     every DB-type driver query exercises both BroadcastHashJoin legs (the
     reference accepts IPv6 through every type, GeoIPFilter.java:172-197).
     Dims are the DEFAULT vendored-database ingestion (full .mmdb when
-    present, golden fallback) — the oracle probes the same rows."""
+    present, golden fallback: geolite2.dim_rows) — the oracle probes the
+    same rows."""
     cfg = GeoIPConfig(source=source, target="geoip", database=database,
                       ecs_compatibility=True)
     dim, vend_v6 = vendored_dims(spark, database)
@@ -526,6 +505,21 @@ def _golden_city_csvs() -> tuple[str, str]:
     return write_golden_city_csv(d)
 
 
+def _ingested_city(e: DataFrame) -> DataFrame:
+    """The City projection of the two ingestion-path queries."""
+    return e.select(
+        "conv_id", "turn_idx",
+        F.col("geoip.ip").alias("ip"),
+        F.col("geoip.geo.city_name").alias("city_name"),
+        F.col("geoip.geo.country_iso_code").alias("country_iso_code"),
+        F.col("geoip.geo.region_iso_code").alias("region_iso_code"),
+        F.col("geoip.geo.postal_code").alias("postal_code"),
+        F.col("geoip.mmdb.dma_code").alias("dma_code"),
+        F.col("geoip.geo.location.lat").alias("lat"),
+        F.col("geoip.geo.location.lon").alias("lon"),
+        F.col("geoip_hit").alias("hit"))
+
+
 def q_enrich_city_from_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 end-to-end through the PUBLISHED GeoLite2-CSV layout: golden City
     rows written as Blocks-IPv4 + Locations-en CSVs, ingested via
@@ -540,71 +534,28 @@ def q_enrich_city_from_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ecs_compatibility=True)
     e = enrich(_parsed(spark, sf_dir), dim, cfg,
                source_may_contain_v6=source_may_contain_v6(cfg.source))
-    return e.select(
-        "conv_id", "turn_idx",
-        F.col("geoip.ip").alias("ip"),
-        F.col("geoip.geo.city_name").alias("city_name"),
-        F.col("geoip.geo.country_iso_code").alias("country_iso_code"),
-        F.col("geoip.geo.region_iso_code").alias("region_iso_code"),
-        F.col("geoip.geo.postal_code").alias("postal_code"),
-        F.col("geoip.mmdb.dma_code").alias("dma_code"),
-        F.col("geoip.geo.location.lat").alias("lat"),
-        F.col("geoip.geo.location.lon").alias("lon"),
-        F.col("geoip_hit").alias("hit"))
-
-
-# the reference tree's canonical public MaxMind test databases
-# (geolite2.vendored_mmdb_path) — input for the full-.mmdb ingestion path
-# (S2 end-to-end). Guarded: the query/oracle pair registers only when the
-# City file exists.
+    return _ingested_city(e)
 
 
 def q_enrich_city_from_mmdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 end-to-end through a REAL .mmdb file: the public
     GeoLite2-City-Test database is read with the pure-Python format reader
     (sources/mmdb.py), its full v4 AND v6 network sets become the two dim
-    legs, then the standard unified enrich. Oracle: the SAME extracted rows
-    as VALUES — ingestion must be lossless (the enrich_city_from_csv
-    pattern, upgraded from CSV to the binary format)."""
-    from logstash_filter_geoip_spark.sources.geolite2 import load_dim_mmdb
-
+    legs, then the standard unified enrich. Registered only when the
+    vendored City file (geolite2.vendored_mmdb_path) exists; the oracle is
+    then the prefix's city_join over the SAME extraction — ingestion must be
+    lossless (the enrich_city_from_csv pattern, upgraded from CSV to the
+    binary format)."""
     dim, dim_v6 = load_dim_mmdb(spark, vendored_mmdb_path("City"), "City")
     cfg = GeoIPConfig(source="ip_any", target="geoip", database="City",
                       ecs_compatibility=True)
     e = enrich(_parsed(spark, sf_dir), dim, cfg, dim_v6=dim_v6)
-    return e.select(
-        "conv_id", "turn_idx",
-        F.col("geoip.ip").alias("ip"),
-        F.col("geoip.geo.city_name").alias("city_name"),
-        F.col("geoip.geo.country_iso_code").alias("country_iso_code"),
-        F.col("geoip.geo.region_iso_code").alias("region_iso_code"),
-        F.col("geoip.geo.postal_code").alias("postal_code"),
-        F.col("geoip.mmdb.dma_code").alias("dma_code"),
-        F.col("geoip.geo.location.lat").alias("lat"),
-        F.col("geoip.geo.location.lon").alias("lon"),
-        F.col("geoip_hit").alias("hit"))
+    return _ingested_city(e)
 
 
-def _mmdb_city_oracle(prefix: str) -> str:
-    """`prefix` is the caller's already-built _oracle_prefix() — rebuilding
-    it here re-emitted every vendored dim's multi-hundred-row VALUES string
-    a second time per oracle_sql() call."""
-    from logstash_filter_geoip_spark.sources.geolite2 import (
-        SCHEMAS, SCHEMAS_V6, mmdb_dim_rows, rows_values_sql)
-
-    rows4, rows6 = mmdb_dim_rows(vendored_mmdb_path("City"), "City")
-    # MATERIALIZED: with the few-hundred-row VALUES inlined in the join,
-    # DuckDB re-evaluates the whole literal relation per probe row once any
-    # attribute column is projected (observed: count(*) instant, any
-    # projection >200 s); materializing once restores sub-second execution
-    join = _unified_join(
-        "citym", "City", _CITY_HIT_SQL,
-        v4_values="dm AS d", v6_values="c6m AS c6",
-    ).strip().rstrip(",")
-    return prefix + f"""
-, dm AS MATERIALIZED (SELECT * FROM {rows_values_sql(rows4, SCHEMAS["City"], "d")})
-, c6m AS MATERIALIZED (SELECT * FROM {rows_values_sql(rows6, SCHEMAS_V6["City"], "c6")})
-, {join}
+# enrich_city_from_mmdb registers only when the vendored City file exists,
+# and then the prefix's city_join probes that file's extraction
+_MMDB_CITY_ORACLE = """
 SELECT conv_id, turn_idx,
        CASE WHEN hit THEN ip_val END AS ip,
        CASE WHEN hit THEN city_name END AS city_name,
@@ -618,7 +569,7 @@ SELECT conv_id, turn_idx,
        CASE WHEN hit AND latitude IS NOT NULL AND longitude IS NOT NULL
             THEN longitude END AS lon,
        hit
-FROM citym_join
+FROM city_join
 """
 
 
@@ -1338,7 +1289,7 @@ FROM country_u_join
   SELECT k.*, d.*,
          (d.net_start IS NOT NULL
           AND NOT (d.latitude IS NULL AND d.longitude IS NULL)) AS hit4
-  FROM keyed k LEFT JOIN {dim_values_sql('City')}
+  FROM keyed k LEFT JOIN {rows_values_sql(GOLDEN_ROWS["City"], SCHEMAS["City"], "d")}
     ON k.ip4_u32 BETWEEN d.net_start AND d.net_end
 )
 SELECT conv_id, turn_idx,
@@ -1749,7 +1700,7 @@ GROUP BY ROLLUP (country_iso_code, city_name)
 )""" + geo.velocity_oracle_cte("v_hits", carry=("city_name",)),
     }
     if vendored_mmdb_path("City"):
-        out["enrich_city_from_mmdb"] = _mmdb_city_oracle(p)
+        out["enrich_city_from_mmdb"] = p + _MMDB_CITY_ORACLE
     out.update(dedup.oracles())
     out.update(similarity.oracles())
     out.update(text_ops.oracles())

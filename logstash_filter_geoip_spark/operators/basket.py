@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 PPM = 1_000_000
 MAX_BASKET = 1024
 
@@ -241,10 +243,9 @@ BRAND_PAIRS_SQL = """
 def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brand-affinity rules: which brands co-occur in an order beyond
     independence. Bounded output (≤ brands² directed rules)."""
-    li = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-               .select("l_orderkey", "l_partkey"))
-    part = (spark.read.parquet(f"{sf_dir}/part.parquet")
-                 .select("p_partkey", "p_brand"))
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
+                                                      "l_partkey")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = li.join(part, li.l_partkey == part.p_partkey).select(
         F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item"))
     return association_rules(baskets, "basket", "item", min_pair_n=2)

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from logstash_filter_geoip_spark.functions.hashing import (md5_hash60,
                                                            md5_hash60_py,
                                                            md5_hash60_sql)
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
 __all__ = ["bloom_build", "bloom_union", "bloom_might_contain",
            "bloom_prune", "bloom_py", "bloom_probe_py",
@@ -281,7 +282,7 @@ def q_bloom_prune_counts(spark, sf_dir: str) -> DataFrame:
     are bit-identical in DuckDB), probe ALL events, and count by
     (bloom_hit, is_member). The no-false-negative guarantee is IN the
     oracle-checked output: the (0, 1) cell must not exist."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     build = ev.where(F.col("event_type") == "error")
     bloom = bloom_build(build, "event_id", n_words=_Q_WORDS, k=_Q_K,
                         hash_basis="md5")

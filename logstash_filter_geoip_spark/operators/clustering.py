@@ -49,11 +49,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from logstash_filter_geoip_spark.functions.hashing import (md5_hash60,
                                                            md5_hash60_sql)
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
 K_CLUSTERS = 8
 N_ITER = 3
@@ -766,22 +767,24 @@ km_rank AS (
 # ---------------------------------------------------------------------------
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
 def queries():
     return {
-        "kmeans_assign": lambda s, d: kmeans_assign(_emb(s, d)),
-        "kmeans_summary": lambda s, d: kmeans_summary(_emb(s, d)),
-        "kmeans_margins": lambda s, d: kmeans_margins(_emb(s, d)),
-        "kmeans_crosstab": lambda s, d: kmeans_crosstab(_emb(s, d)),
+        "kmeans_assign": lambda s, d: kmeans_assign(
+            load_table(s, d, "embeddings")),
+        "kmeans_summary": lambda s, d: kmeans_summary(
+            load_table(s, d, "embeddings")),
+        "kmeans_margins": lambda s, d: kmeans_margins(
+            load_table(s, d, "embeddings")),
+        "kmeans_crosstab": lambda s, d: kmeans_crosstab(
+            load_table(s, d, "embeddings")),
         "contrastive_triplets": lambda s, d: contrastive_triplets(
-            _emb(s, d)),
-        "pq_codes": lambda s, d: pq_encode(_emb(s, d),
-                                           pq_train(_emb(s, d))),
-        "pq_adc_topk": lambda s, d: pq_adc_topk(_emb(s, d),
-                                                pq_train(_emb(s, d))),
+            load_table(s, d, "embeddings")),
+        "pq_codes": lambda s, d: pq_encode(
+            load_table(s, d, "embeddings"),
+            pq_train(load_table(s, d, "embeddings"))),
+        "pq_adc_topk": lambda s, d: pq_adc_topk(
+            load_table(s, d, "embeddings"),
+            pq_train(load_table(s, d, "embeddings"))),
     }
 
 

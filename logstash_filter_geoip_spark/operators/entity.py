@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from logstash_filter_geoip_spark.functions.hashing import (md5_hash60,
                                                            md5_hash60_sql)
+from logstash_filter_geoip_spark.sources.transcripts import load_table
 
 __all__ = ["name_vocabulary", "fuzzy_name_pairs", "resolve_entities"]
 
@@ -128,20 +129,16 @@ def resolve_entities(df: DataFrame, name_col: str,
 # ---------------------------------------------------------------------------
 
 
-def _part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/part.parquet")
-
-
 def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate part names (distinct vocabulary, first-token block,
     levenshtein <= 2 within a +/-2 length band)."""
-    return fuzzy_name_pairs(_part(spark, sf_dir), "p_name")
+    return fuzzy_name_pairs(load_table(spark, sf_dir, "part"), "p_name")
 
 
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every distinct part name with its canonical (fuzzy-component
     representative) name — the vocabulary-level entity map."""
-    return resolve_entities(_part(spark, sf_dir), "p_name")
+    return resolve_entities(load_table(spark, sf_dir, "part"), "p_name")
 
 
 # the vocabulary + blocking + verify rule, shared by both oracles

@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 N_ITER = 5
 DAMPING = 0.85
 
@@ -312,8 +314,8 @@ def part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded by the cooccurrence_edges cap (every TPC-H-shaped order is
     far under it, so gate values are unchanged — the cap exists for
     adversarial/open inputs)."""
-    li = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-               .select("l_orderkey", "l_partkey"))
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
+                                                      "l_partkey")
     return cooccurrence_edges(li, "l_orderkey", "l_partkey")
 
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 __all__ = ["zorder_key", "zorder_sql", "zorder_py", "zorder_layout"]
 
 # interleave 16-bit x and y into a 32-bit Morton code: classic magic-number
@@ -147,10 +149,9 @@ def q_bucketed_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="lfg_buckets_")
     tag = uuid.uuid4().hex[:8]  # repeated/concurrent invocations never race
     names = (f"lfg_bkt_orders_{tag}", f"lfg_bkt_lineitem_{tag}")
-    od = (spark.read.parquet(f"{sf_dir}/orders.parquet")
-               .select("o_orderkey", "o_orderpriority"))
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
-              .select("l_orderkey")
+    od = load_table(spark, sf_dir, "orders").select("o_orderkey",
+                                                    "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
     try:
         to = bucket_table(od, names[0], ["o_orderkey"], BUCKET_N,
                           os.path.join(d, "orders"))
@@ -181,7 +182,7 @@ _Y_SQL = "date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))"
 def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Morton layout key for every event: x = user bucket, y = day
     index from the corpus epoch — the key zorder_layout clusters by."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     x = F.pmod(F.col("user_id"), F.lit(65536))
     y = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
     return ev.select(

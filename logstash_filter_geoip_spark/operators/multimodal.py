@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("media_type", T.StringType()),     # image|audio|video
@@ -52,7 +54,7 @@ def synth_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fake media table: documents' utf-8 bytes as the payload
     (a stand-in for encoded image/audio bytes; sizes and content are
     deterministic, no external data)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     payload = F.encode("text", "utf-8")
     media_type = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),

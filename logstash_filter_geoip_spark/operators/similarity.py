@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 TOP_K = 5
 QUERY_MOD = 10       # vec_id % QUERY_MOD == 0 → query-set candidate
 MAX_QUERIES = 64     # hard bound on the query set (driver + broadcast size)
@@ -57,7 +59,7 @@ LSH_BITS = N_PLANES // LSH_BANDS  # 8 bits → 256 buckets per band
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    df = load_table(spark, sf_dir, "embeddings")
     # plain Cast, NOT F.transform(...): the HOF form is CodegenFallback and
     # sat as an interpreted Project on the scan feeding all three ANN queries
     # (VERDICT r2); array<float> -> array<double> casts element-wise with

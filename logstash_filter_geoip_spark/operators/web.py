@@ -40,6 +40,8 @@ from __future__ import annotations
 import pandas as pd  # module-level: pandas_udf annotation resolution
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from logstash_filter_geoip_spark.sources.transcripts import load_table
+
 # scheme://host[:port][path][?query][#fragment] — groups 1..6, escape-free
 URL_RE = ("^([A-Za-z][A-Za-z0-9+.-]*)://([^/:?#]+)(?::([0-9]+))?"
           "([^?#]*)(?:[?]([^#]*))?(?:#(.*))?$")
@@ -250,7 +252,7 @@ END"""
 
 
 def _events_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     return ev.select("event_id", "user_id", "ts",
                      F.expr(URL_CASES_SQL).alias("url"))
 

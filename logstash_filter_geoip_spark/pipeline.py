@@ -27,7 +27,7 @@ def enriched_transcripts(spark: SparkSession, sf_dir: str,
     exactly like the reference's single filter (GeoIPFilter.java:172). The
     dims are geolite2.default_dims, the same pair the stream resolves: the
     FULL vendored-database ingestion (the `.mmdb` file IS the default DB,
-    geoip.rb:187-199 — vendored_dims), golden VALUES only when no file is
+    geoip.rb:187-199 — geolite2.dim_rows), golden rows only when no file is
     present.
     """
     config = config or GeoIPConfig(source="ip_any", target="geoip",

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -240,16 +240,25 @@ def load_dim(spark: SparkSession, database: str = "City",
     golden tables (parity with S2/S3, geoip.rb:187-199). `synthetic_n`
     appends deterministic filler for scale tests.
     """
-    schema = SCHEMAS[database]
-    rows = list(GOLDEN_ROWS[database])
+    rows = GOLDEN_ROWS[database]
     if synthetic_n:
         if database == "City":
-            rows += synthetic_city_rows(synthetic_n)
+            rows = rows + synthetic_city_rows(synthetic_n)
         elif database == "ASN":
-            rows += synthetic_asn_rows(synthetic_n)
+            rows = rows + synthetic_asn_rows(synthetic_n)
         else:
             raise ValueError(f"synthetic filler only for City/ASN, not {database}")
-    return spark.createDataFrame(rows, schema)
+    return _local_dim(spark, rows, SCHEMAS[database])
+
+
+def _malformed_range() -> Column:
+    """The one malformed-v4-row predicate: a null or reversed bound, or a
+    bound outside uint32. An out-of-range row would otherwise explode in
+    ipkeys.explode_buckets (net_end = 2^40 → 2^24 bucket rows; a negative
+    start wraps to a bucket near 2^48)."""
+    start, end = F.col("net_start"), F.col("net_end")
+    return (start.isNull() | end.isNull() | (start > end) | (start < 0)
+            | (end > F.lit(2**32 - 1)))
 
 
 def split_malformed(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -257,21 +266,19 @@ def split_malformed(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     (SURVEY §7.1 M3: the corrupted-record analogue — the reference wraps
     decode errors so the pipeline never throws, GeoIPFilter.java:55-59,
     GeoIPFilterTest.java:276-283). Returns (good, quarantined)."""
-    bad_cond = (F.col("net_start").isNull() | F.col("net_end").isNull()
-                | (F.col("net_start") > F.col("net_end"))
-                | (F.col("net_start") < 0)
-                | (F.col("net_end") > F.lit(2**32 - 1)))
-    return df.where(~bad_cond), df.where(bad_cond)
+    bad = _malformed_range()
+    return df.where(~bad), df.where(bad)
 
 
 def validate_dim(df: DataFrame) -> None:
     """Schema/shape validation, parity with DB validation at
     GeoIPFilter.java:109-119: required key columns must exist; malformed rows
-    (start > end) are a hard error at load time, never at query time."""
+    (the rows split_malformed quarantines) are a hard error at load time,
+    never at query time."""
     for col in ("network", "net_start", "net_end"):
         if col not in df.columns:
             raise ValueError(f"dimension table missing required column {col}")
-    bad = df.where("net_start > net_end OR net_start IS NULL OR net_end IS NULL").count()
+    bad = df.where(_malformed_range()).count()
     if bad:
         raise ValueError(f"dimension table has {bad} malformed range rows")
 
@@ -327,11 +334,6 @@ def rows_values_sql(rows: list, schema: T.StructType, alias: str) -> str:
         for r in rows
     )
     return f"(VALUES\n    {values}\n) AS {alias}({cols})"
-
-
-def dim_values_sql(database: str) -> str:
-    """`(VALUES (...), ...) AS d(network, net_start, ...)` for DuckDB."""
-    return rows_values_sql(GOLDEN_ROWS[database], SCHEMAS[database], "d")
 
 
 # ---------------------------------------------------------------------------
@@ -516,14 +518,7 @@ def validate_dim_v6(df: DataFrame) -> None:
 
 
 def load_dim_v6(spark: SparkSession, database: str = "City") -> DataFrame:
-    return spark.createDataFrame(GOLDEN_ROWS_V6[database], SCHEMAS_V6[database])
-
-
-def dim_v6_values_sql(database: str, alias: str = "d6") -> str:
-    """VALUES relation of the v6 dim (hi/lo precomputed driver-side — the key
-    derivation is deterministic, so DuckDB needs no 128-bit primitive)."""
-    return rows_values_sql(GOLDEN_ROWS_V6[database], SCHEMAS_V6[database],
-                           alias)
+    return _local_dim(spark, GOLDEN_ROWS_V6[database], SCHEMAS_V6[database])
 
 
 # ---------------------------------------------------------------------------
@@ -619,16 +614,14 @@ def load_dim_mmdb(spark: SparkSession, path: str, database: str = "City"
                   ) -> tuple[DataFrame, DataFrame]:
     """S2 end-to-end from a real .mmdb: returns (dim, dim_v6) ready for
     `enrich(df, dim, cfg, dim_v6=dim_v6)`."""
-    rows4, rows6 = mmdb_dim_rows(path, database)
-    return (_local_dim(spark, rows4, SCHEMAS[database]),
-            _local_dim(spark, rows6, SCHEMAS_V6[database]))
+    return _local_dims(spark, database, *mmdb_dim_rows(path, database))
 
 
 def _local_dim(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
-    """Rows → a JVM-local relation (LocalTableScan) through an Arrow table
-    typed by `schema`. `createDataFrame(list_of_tuples)` plans as a
-    pickled-row `Scan ExistingRDD` that every query over the dim re-runs
-    as a Python-fed job of its own."""
+    """The one dim constructor: rows → a JVM-local relation (LocalTableScan)
+    through an Arrow table typed by `schema`. `createDataFrame(list_of_tuples)`
+    plans as a pickled-row `Scan ExistingRDD` that every query over the dim
+    re-runs as a Python-fed job of its own."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     cols = list(zip(*rows)) or [()] * len(schema)
@@ -636,16 +629,23 @@ def _local_dim(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
+def _local_dims(spark: SparkSession, database: str, rows4, rows6
+                ) -> tuple[DataFrame, DataFrame]:
+    return (_local_dim(spark, rows4, SCHEMAS[database]),
+            _local_dim(spark, rows6, SCHEMAS_V6[database]))
+
+
 # ---------------------------------------------------------------------------
-# Vendored-database selection (S3 exact parity, VERDICT r4 #3): the reference
+# The default dimension source (S3 exact parity, VERDICT r4 #3): the reference
 # vendors the GeoLite2 `.mmdb` files THEMSELVES as the default databases
 # (geoip.rb:187-199, build.gradle:147-155) — the file is the DB, not a
 # hand-mirrored subset. Our stand-in for the vendored files is the public
 # MaxMind test-database tree the reference ships for its own specs; when the
-# file for a type is present, the default dim pair is the FULL ingestion of
-# that file, with the golden VALUES tables as the no-file fallback. The
-# extraction is cached per type (driver-side pure Python over a <100 KB
-# file; every driver query shares one parse).
+# file for a type is present, the default rows are the FULL ingestion of
+# that file (mtime-cached, mmdb_dim_rows), with the golden rows as the
+# no-file fallback. `dim_rows` is the one resolver: Spark builds the default
+# dims from it (vendored_dims) and the DuckDB oracle emits the same rows
+# (dim_values_sql), so both engines always probe one source.
 # ---------------------------------------------------------------------------
 
 VENDORED_MMDB_DIR = "/root/reference/src/test/resources/maxmind-test-data"
@@ -666,24 +666,20 @@ def vendored_mmdb_path(database: str) -> str | None:
     return path if os.path.exists(path) else None
 
 
-@lru_cache(maxsize=None)
-def _vendored_rows(database: str) -> tuple[tuple, tuple] | None:
+def dim_rows(database: str) -> tuple[list, list]:
+    """(v4_rows, v6_rows) of a type's DEFAULT database: the vendored file's
+    full extraction when it exists, the golden rows otherwise. Callers must
+    not mutate the returned lists."""
     path = vendored_mmdb_path(database)
     if path is None:
-        return None
-    rows4, rows6 = mmdb_dim_rows(path, database)
-    return tuple(rows4), tuple(rows6)
+        return GOLDEN_ROWS[database], GOLDEN_ROWS_V6[database]
+    return mmdb_dim_rows(path, database)
 
 
 def vendored_dims(spark: SparkSession,
                   database: str = "City") -> tuple[DataFrame, DataFrame]:
-    """(dim, dim_v6) for the DEFAULT database of a type: full vendored-file
-    ingestion when the file exists, golden VALUES fallback otherwise."""
-    cached = _vendored_rows(database)
-    if cached is None:
-        return load_dim(spark, database), load_dim_v6(spark, database)
-    return (_local_dim(spark, cached[0], SCHEMAS[database]),
-            _local_dim(spark, cached[1], SCHEMAS_V6[database]))
+    """(dim, dim_v6) for the DEFAULT database of a type (`dim_rows`)."""
+    return _local_dims(spark, database, *dim_rows(database))
 
 
 def default_dims(spark: SparkSession,
@@ -696,14 +692,11 @@ def default_dims(spark: SparkSession,
     return dim, (dim_v6 if config.source == "ip_any" else None)
 
 
-def vendored_dim_sql(database: str) -> tuple[str, str] | None:
-    """(v4 VALUES, v6 VALUES) SQL for the vendored rows — None when the
-    golden fallback applies (callers then use dim_values_sql /
-    dim_v6_values_sql). Wrap in AS MATERIALIZED CTEs: DuckDB re-evaluates
-    inline multi-hundred-row VALUES per probe row once any attribute is
-    projected (observed: count(*) instant, projection >200 s)."""
-    cached = _vendored_rows(database)
-    if cached is None:
-        return None
-    return (rows_values_sql(list(cached[0]), SCHEMAS[database], "d"),
-            rows_values_sql(list(cached[1]), SCHEMAS_V6[database], "c6"))
+def dim_values_sql(database: str) -> tuple[str, str]:
+    """(v4 VALUES aliased d, v6 VALUES aliased c6) SQL over `dim_rows` — the
+    DuckDB side of the default dims. Wrap in AS MATERIALIZED CTEs: DuckDB
+    re-evaluates inline multi-hundred-row VALUES per probe row once any
+    attribute is projected (observed: count(*) instant, projection >200 s)."""
+    rows4, rows6 = dim_rows(database)
+    return (rows_values_sql(rows4, SCHEMAS[database], "d"),
+            rows_values_sql(rows6, SCHEMAS_V6[database], "c6"))

@@ -19,12 +19,12 @@ driver loop.
 
 from __future__ import annotations
 
-import ipaddress
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.ipkeys import cidr_to_range
 
 
 @F.pandas_udf(T.StructType([
@@ -32,19 +32,17 @@ from pyspark.sql import types as T
     T.StructField("net_end", T.LongType()),
 ]))
 def cidr_bounds(network: pd.Series) -> pd.DataFrame:
-    """Vectorized CIDR→inclusive uint32 bounds; malformed rows → nulls
+    """Vectorized CIDR→inclusive uint32 bounds through the one v4 CIDR
+    parser (ipkeys.cidr_to_range); malformed or non-v4 rows → nulls
     (quarantined downstream by split_malformed, never thrown)."""
     starts, ends = [], []
     for v in network:
         try:
-            net = ipaddress.ip_network(v, strict=False)
-            if net.version != 4:
-                raise ValueError
-            starts.append(int(net.network_address))
-            ends.append(int(net.broadcast_address))
+            s, e = cidr_to_range(v)
         except (ValueError, TypeError):
-            starts.append(None)
-            ends.append(None)
+            s = e = None
+        starts.append(s)
+        ends.append(e)
     # CLAUDE.md Int64 rule: a batch mixing ints and None coerces to float64
     # (53-bit mantissa) — harmless for uint32 today, silent corruption the
     # moment this is extended to 64-bit bounds

@@ -39,7 +39,7 @@ Manager = Callable[[str], "str | None"]
 class SelectedDatabase:
     """Outcome of setup-time selection: which database the filter will use,
     where it came from, and the ready-to-join dim pair."""
-    path: str | None          # last_db_path analogue (None = golden VALUES)
+    path: str | None          # last_db_path analogue (None = golden rows)
     kind: str                 # "managed" | "explicit" | "vendored"
     healthy: bool             # False → expired tagging until an update
     dim: DataFrame | None
@@ -64,8 +64,8 @@ def select_database(spark: SparkSession, database: str = "City",
         dim, dim_v6 = load_dim_mmdb(spark, explicit_path, database)
         return SelectedDatabase(explicit_path, "explicit", True, dim, dim_v6)
     path = vendored_mmdb_path(database)
-    # vendored_dims handles both cases itself (full cached ingestion when
-    # the file exists, golden VALUES stand-in otherwise)
+    # vendored_dims resolves through geolite2.dim_rows (full cached
+    # ingestion when the file exists, the golden rows otherwise)
     dim, dim_v6 = vendored_dims(spark, database)
     return SelectedDatabase(path, "vendored", True, dim, dim_v6)
 

@@ -111,10 +111,8 @@ def test_index_build_side_is_local_relation(spark):
 
 
 @pytest.mark.parametrize("database", sorted(SCHEMAS))
-def test_vendored_dims_are_local_relations(spark, monkeypatch, database):
-    rows4 = tuple(geolite2.GOLDEN_ROWS[database])
-    rows6 = tuple(geolite2.GOLDEN_ROWS_V6[database])
-    monkeypatch.setattr(geolite2, "_vendored_rows", lambda db: (rows4, rows6))
+def test_vendored_dims_are_local_relations(spark, database):
+    rows4, rows6 = geolite2.dim_rows(database)
     dim, dim_v6 = geolite2.vendored_dims(spark, database)
     for df, rows, schema in ((dim, rows4, SCHEMAS[database]),
                              (dim_v6, rows6, SCHEMAS_V6[database])):

@@ -120,6 +120,21 @@ def test_malformed_dim_rows_rejected_at_load(spark):
         validate_dim(bad)
 
 
+@pytest.mark.parametrize("start,end", [(-5, 5), (0, 2**40)])
+def test_out_of_uint32_dim_rows_rejected_at_load(spark, start, end):
+    # validate_dim refuses what split_malformed quarantines: a bound outside
+    # uint32 would explode in ipkeys.explode_buckets at query time (net_end
+    # 2^40 → 2^24 bucket rows; a negative start wraps near bucket 2^48)
+    from logstash_filter_geoip_spark.sources.geolite2 import (split_malformed,
+                                                              validate_dim)
+    dim = load_dim(spark, "ASN")
+    bad = dim.unionByName(spark.createDataFrame(
+        [("bad/24", start, end, 1, "x")], dim.schema))
+    assert split_malformed(bad)[1].count() == 1
+    with pytest.raises(ValueError, match="1 malformed range rows"):
+        validate_dim(bad)
+
+
 def test_unknown_database_registers_then_raises_at_enrich(spark):
     """J4 (Database.java:102-124 + GeoIPFilter.java:195-196): an
     Unknown-typed database REGISTERS fine (config accepts it, empty field
