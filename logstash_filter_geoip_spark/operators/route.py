@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 import urllib.parse
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -37,8 +38,8 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_TAG_ON_FAILURE
 from ..lineage import (FINGERPRINT_COLS, METRICS_DIR, fingerprint_aggs,
-                       fingerprint_of, input_fingerprint, read_manifest,
-                       write_manifest)
+                       fingerprint_of, input_fingerprint, interrupted_swaps,
+                       read_manifest, recover, swap_dir, write_manifest)
 
 SINK_KEYS = ("role", "tool")
 DEFAULT_N_SALT = 32
@@ -126,13 +127,16 @@ def route(df: DataFrame, base_path: str,
     # routed rows: at scale the old second pass re-enumerated every output
     # file's footer; this one reads a handful of metrics rows. (A/B at
     # 800k rows: equal wall; a collect+re-upload variant measured ~0.5s
-    # slower per call, hence write-then-read-back.)
+    # slower per call, hence write-then-read-back.) Named files, because a
+    # read of the underscore directory logs "All paths were ignored".
     mpath = os.path.join(base_path, METRICS_DIR)
     sink_file_metrics(routed).write.format(fmt) \
         .mode("overwrite").save(mpath)
+    mfiles = [os.path.join(d, f) for d, fs in _leaf_partition_dirs(mpath)
+              for f in fs]
     sink_counts = {
         "|".join(str(r[k]) for k in SINK_KEYS): int(r["n_rows"])
-        for r in spark.read.format(fmt).load(mpath)
+        for r in spark.read.format(fmt).load(mfiles)
                       .groupBy(*SINK_KEYS)
                       .agg(F.sum("n_rows").alias("n_rows")).collect()
     }
@@ -170,10 +174,12 @@ def read_sink(spark: SparkSession, base_path: str,
     """Read the routed sinks back. With fmt=None the format recorded in the
     manifest wins (so a json/csv/iceberg route round-trips without the
     caller re-stating it); parquet is the no-manifest fallback."""
-    if fmt is None:
-        manifest = read_manifest(base_path)
-        fmt = (manifest or {}).get("format", "parquet")
-    return spark.read.format(fmt).load(os.path.join(base_path, "sinks"))
+    return spark.read.format(_sink_format(base_path, fmt)) \
+        .load(os.path.join(base_path, "sinks"))
+
+
+def _sink_format(base_path: str, fmt: str | None) -> str:
+    return fmt or (read_manifest(base_path) or {}).get("format", "parquet")
 
 
 DEFAULT_TARGET_BYTES = 128 << 20  # the route() auto-size floor
@@ -193,42 +199,12 @@ def _leaf_partition_dirs(sinks_dir: str) -> list[tuple[str, list[str]]]:
     return out
 
 
-def _compaction_leftovers(sinks_dir: str) -> list[str]:
-    """Hidden ``.compact-*`` / ``.old-*`` dirs left by an interrupted
-    compact_sink, anywhere in the sink tree."""
-    out = []
-    for dirpath, dirs, _files in os.walk(sinks_dir):
-        out += [os.path.join(dirpath, x) for x in dirs
-                if x.startswith((".compact-", ".old-"))]
-        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-    return sorted(out)
-
-
 def recover_interrupted_compaction(base_path: str) -> list[dict]:
-    """Sweep leftovers from a compact_sink crash (the incremental-state
-    _recover discipline applied to the sink tree): a ``.old-<name>``
-    whose ``<name>`` is missing is the mid-swap backup — restore it; a
-    ``.old-<name>`` beside a live ``<name>`` is a completed swap's
-    backup — drop it; any ``.compact-<name>`` is an unverified or
-    already-superseded rewrite — drop it. Returns the action audit."""
-    import shutil
-    sinks = os.path.join(base_path, "sinks")
-    actions = []
-    for p in _compaction_leftovers(sinks):
-        parent, name = os.path.split(p)
-        if name.startswith(".old-"):
-            orig = os.path.join(parent, name[len(".old-"):])
-            if os.path.exists(orig):
-                shutil.rmtree(p)
-                actions.append({"action": "dropped_backup", "path": p})
-            else:
-                os.rename(p, orig)
-                actions.append({"action": "restored", "path": orig})
-    for p in _compaction_leftovers(sinks):
-        if os.path.basename(p).startswith(".compact-"):
-            shutil.rmtree(p)
-            actions.append({"action": "dropped_tmp", "path": p})
-    return actions
+    """Sweep the leftovers of a compact_sink crash anywhere in the sink
+    tree: lineage.recover (restore-or-drop) on every partition directory
+    with a swap leftover beside it. Returns the action audit."""
+    return [a for d in interrupted_swaps(os.path.join(base_path, "sinks"))
+            for a in recover(d)]
 
 
 def compaction_plan(base_path: str,
@@ -242,11 +218,11 @@ def compaction_plan(base_path: str,
     (~100k entries at 10^12 rows × 1 GB files)."""
     if target_bytes <= 0:
         raise ValueError(f"target_bytes must be positive: {target_bytes}")
-    leftovers = _compaction_leftovers(os.path.join(base_path, "sinks"))
+    leftovers = interrupted_swaps(os.path.join(base_path, "sinks"))
     if leftovers:
         raise RuntimeError(
-            f"compaction_plan: leftover swap dirs from an interrupted "
-            f"compaction ({leftovers[:3]}{'...' if len(leftovers) > 3 else ''}) "
+            f"compaction_plan: interrupted compaction swaps of "
+            f"{leftovers[:3]}{'...' if len(leftovers) > 3 else ''} "
             f"— run recover_interrupted_compaction(base_path) first")
     plan = []
     for d, files in _leaf_partition_dirs(os.path.join(base_path, "sinks")):
@@ -262,51 +238,38 @@ def compact_sink(spark: SparkSession, base_path: str,
                  target_bytes: int = DEFAULT_TARGET_BYTES,
                  fmt: str | None = None) -> dict:
     """Compact small sink files in place: each planned partition directory
-    is rewritten to its target file count and swapped in atomically (the
-    house rename-swap), with a row-count verification BEFORE the swap —
-    a mismatch aborts that partition loudly and leaves the original
-    untouched. Temp/backup dirs are DOT-PREFIXED siblings
-    (``.compact-<name>`` / ``.old-<name>``) so partition discovery can
-    never ingest them as bogus ``key=value`` partitions, and any
-    leftovers from a previous crash are swept (restore-or-drop, see
-    :func:`recover_interrupted_compaction`) before planning. Parquet partitions re-encode through the engine; json/csv
-    partitions compact in TEXT mode — byte-identical line concatenation,
-    immune to schema-inference re-rendering (caveat: line-oriented
-    records only, which routed jsonl always is and routed csv is for
-    newline-free columns). Row counts are UNCHANGED by contract, so the
-    manifest stays valid; the per-file lineage metrics table is
-    recomputed (one scan of the compacted output, the route() pattern).
-    Returns the audit: per-partition files before/after + rows."""
-    import shutil
-    if fmt is None:
-        manifest = read_manifest(base_path)
-        fmt = (manifest or {}).get("format", "parquet")
+    is rewritten to its target file count and published by lineage.swap_dir
+    (hidden ``.compact-<leaf>`` / ``.old-<leaf>`` siblings, never ingested
+    as bogus ``key=value`` partitions), with a row-count verification
+    BEFORE the swap — a mismatch aborts that partition loudly and leaves
+    it untouched. Leftovers of a previous crash are swept first (see
+    :func:`recover_interrupted_compaction`). Parquet partitions re-encode
+    through the engine; json/csv partitions compact in TEXT mode —
+    byte-identical line concatenation, immune to schema-inference
+    re-rendering (caveat: line-oriented records only, which routed jsonl
+    always is and routed csv is for newline-free columns). Row counts are
+    UNCHANGED by contract, so the manifest stays valid; the per-file
+    lineage metrics table is recomputed (one scan of the compacted output,
+    the route() pattern). Returns the audit: per-partition files
+    before/after + rows."""
+    fmt = _sink_format(base_path, fmt)
     recover_interrupted_compaction(base_path)
-    plan = compaction_plan(base_path, target_bytes)
     done = []
-    for p in plan:
+    for p in compaction_plan(base_path, target_bytes):
         d = p["dir"]
-        parent, leaf = os.path.split(d)
         reader = spark.read.parquet if fmt == "parquet" else spark.read.text
         df = reader(d)
         n_before = df.count()
-        tmp = os.path.join(parent, f".compact-{leaf}")
-        writer = df.coalesce(p["n_after"]).write.mode("overwrite")
-        if fmt == "parquet":
-            writer.parquet(tmp)
-            n_rewritten = spark.read.parquet(tmp).count()
-        else:
-            writer.text(tmp)
-            n_rewritten = spark.read.text(tmp).count()
-        if n_rewritten != n_before:
-            shutil.rmtree(tmp)
-            raise RuntimeError(
-                f"compact_sink: rewrite of {d!r} changed the row count "
-                f"({n_before} -> {n_rewritten}); partition left untouched")
-        old = os.path.join(parent, f".old-{leaf}")
-        os.rename(d, old)
-        os.rename(tmp, d)
-        shutil.rmtree(old)
+        with swap_dir(d) as tmp:
+            writer = df.coalesce(p["n_after"]).write.mode("overwrite")
+            (writer.parquet if fmt == "parquet" else writer.text)(tmp)
+            n_rewritten = reader(tmp).count()
+            if n_rewritten != n_before:
+                shutil.rmtree(tmp)
+                raise RuntimeError(
+                    f"compact_sink: rewrite of {d!r} changed the row count "
+                    f"({n_before} -> {n_rewritten}); partition left "
+                    "untouched")
         done.append({**p, "n_rows": int(n_before)})
     if done:
         routed = read_sink(spark, base_path, fmt)

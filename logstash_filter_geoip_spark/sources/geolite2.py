@@ -505,14 +505,16 @@ def check_v6_rows(rows: list, source: str) -> None:
 
 def validate_dim_v6(df: DataFrame) -> None:
     """validate_dim's v6 counterpart for user-supplied dimension DataFrames:
-    required key columns and ordered ranges. One small count over a
-    dim-sized relation at load time; the replication bounds are the bucket
-    leg's own check (enrich.prepare_dim_v6)."""
+    required key columns, no null bound, and (start_hi, start_lo) <=
+    (end_hi, end_lo) in the probe's lexicographic order. One small count
+    over a dim-sized relation at load time; the replication bounds are the
+    bucket leg's own check (enrich.prepare_dim_v6)."""
     for col in ("network", "start_hi", "start_lo", "end_hi", "end_lo"):
         if col not in df.columns:
             raise ValueError(f"v6 dimension table missing required column {col}")
     bad = df.where(
-        "start_hi IS NULL OR end_hi IS NULL OR start_hi > end_hi").count()
+        "start_hi IS NULL OR start_lo IS NULL OR end_hi IS NULL OR end_lo "
+        "IS NULL OR (start_hi, start_lo) > (end_hi, end_lo)").count()
     if bad:
         raise ValueError(f"v6 dimension table has {bad} malformed range rows")
 

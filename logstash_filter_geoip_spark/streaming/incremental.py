@@ -12,7 +12,8 @@ against everything already accepted). The 100-TB shape:
   deterministic), then LEFT ANTI joins the state table. Both are
   hash-partitioned shuffles; nothing data-sized is broadcast or collected;
 - the state table is append-only per batch; ``compact_state`` rewrites it
-  distinct. Compaction swaps the state directory in place, so run it only
+  distinct. Compaction swaps the state directory in place (lineage's
+  crash-safe swap_dir, as every state rewrite here), so run it only
   while NO dedup stream is writing (between ``availableNow`` drains, or
   after stopping a continuous query) — a concurrent micro-batch's state
   append landing mid-swap would be discarded and its content re-admitted
@@ -41,7 +42,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -50,6 +50,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.errors import AnalysisException
 
+from logstash_filter_geoip_spark.lineage import (is_local, local_only,
+                                                 publish_json, recover,
+                                                 swap_dir)
 from logstash_filter_geoip_spark.streaming.pipeline import foreach_batch_stream
 
 STATE_SCHEMA = T.StructType([T.StructField("content_h", T.StringType())])
@@ -73,70 +76,41 @@ def _content_hash(key_cols: tuple[str, ...]):
     return F.md5(F.concat_ws("\x00", *parts))
 
 
-def _local_only(path: str) -> None:
-    """Reject a remote path before anything is written for it: every state
-    swap in this module is a local directory rename."""
-    if "://" in path:
-        raise NotImplementedError(
-            f"{path!r}: incremental state is swapped in place via os.rename "
-            "and supports local paths only; for remote state use a "
-            "transactional table format (Delta/Iceberg MERGE, or append "
-            "and OPTIMIZE)")
-
-
-def _recover_interrupted_compaction(state_path: str) -> None:
-    """A crash inside a ``_swap_dir`` directory swap can leave the live
-    state under ``<state>.old`` (swap half-done) or a stale ``.old``/
-    ``.compact`` beside a healthy state. Roll forward/back so the state
-    is never silently lost and the next swap never trips on leftovers.
-    Local paths only — remote swaps are rejected up front."""
-    if "://" in state_path:
-        return
-    old = state_path.rstrip("/") + ".old"
-    tmp = state_path.rstrip("/") + ".compact"
-    if os.path.exists(old):
-        if not os.path.exists(state_path):
-            # crashed between the two renames: .old IS the live state
-            os.rename(old, state_path)
-        else:
-            # crashed after the swap, before cleanup: .old is a stale copy
-            shutil.rmtree(old)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-
-
 def _swap_dir(df: DataFrame, path: str, batch_id: int | None = None) -> None:
     """Replace the parquet directory `path` with `df`, which may itself
-    read `path`: materialize to `<path>.compact` (plus `_commit.json` when
-    a fenced face passes its `batch_id`, so data and fence publish in one
-    rename), then rename-swap. Every crash point is rolled forward/back by
-    _recover_interrupted_compaction on the next read or swap."""
-    _local_only(path)
-    tmp = path.rstrip("/") + ".compact"
-    df.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        with open(os.path.join(tmp, "_commit.json"), "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-    if os.path.exists(path):
-        old = path.rstrip("/") + ".old"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, path)
+    read `path`, through lineage.swap_dir. A fenced face passes its
+    `batch_id`: `_commit.json` is written inside the new directory, so
+    data and fence publish in one rename."""
+    with swap_dir(path) as tmp:
+        df.write.mode("overwrite").parquet(tmp)
+        if batch_id is not None:
+            publish_json(os.path.join(tmp, "_commit.json"),
+                         {"batch_id": batch_id})
 
 
-def _read_state_df(spark: SparkSession, state_path: str,
-                   schema: T.StructType) -> DataFrame:
-    _recover_interrupted_compaction(state_path)
+def _read_state(spark: SparkSession, path: str,
+                schema: T.StructType | None):
+    """(state DataFrame, committed batch id) of one state directory, after
+    lineage.recover. The id travels INSIDE the swapped directory
+    (`_commit.json`, ignored by the parquet reader); unfenced states and a
+    state not written yet read -1, the latter as an empty frame of
+    `schema` (None with ``schema=None``: inferred once written)."""
+    recover(path)
     # local-FS fast path: avoids a noisy WARN + JVM stack in the logs on
     # the very first batch; the exception fallback covers remote stores
-    if "://" not in state_path and not os.path.exists(state_path):
-        return spark.createDataFrame([], schema)
-    try:
-        return spark.read.schema(schema).parquet(state_path)
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
+    if not is_local(path) or os.path.exists(path):
+        committed = -1
+        cp = os.path.join(path, "_commit.json")
+        if os.path.exists(cp):
+            with open(cp) as f:
+                committed = json.load(f)["batch_id"]
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        try:
+            return reader.parquet(path), committed
+        except AnalysisException:
+            pass
+    return (None if schema is None
+            else spark.createDataFrame([], schema)), -1
 
 
 def dedup_batch_against_state(batch: DataFrame, seen: DataFrame,
@@ -175,7 +149,7 @@ def _admit_first_seen(spark: SparkSession, batch: DataFrame,
                       key_cols: tuple[str, ...], id_col: str) -> None:
     """One first-seen micro-batch: append the admitted rows to
     `<output_path>/data`, THEN their hashes to the state (at-least-once)."""
-    seen = _read_state_df(spark, state_path, STATE_SCHEMA)
+    seen, _ = _read_state(spark, state_path, STATE_SCHEMA)
     fresh = dedup_batch_against_state(batch, seen, key_cols, id_col)
     # two writes need the batch twice; keep it to ONE upstream compute
     fresh = fresh.persist()
@@ -198,14 +172,11 @@ def _compact_dir(spark: SparkSession, state_path: str,
     schema=None reads whatever the directory holds (the near-dup state's
     id type is input-derived, not fixed). A directory that was never
     created (no state written yet) compacts to 0 without touching disk."""
-    _local_only(state_path)
-    _recover_interrupted_compaction(state_path)
+    local_only(state_path)
+    state, _ = _read_state(spark, state_path, schema)
     if not os.path.exists(state_path):
         return 0
-    if schema is None:
-        seen = spark.read.parquet(state_path).distinct().persist()
-    else:
-        seen = _read_state_df(spark, state_path, schema).distinct().persist()
+    seen = state.distinct().persist()
     n = seen.count()
     _swap_dir(seen, state_path)
     seen.unpersist()
@@ -248,28 +219,29 @@ def _near_sigs_schema(id_type: T.DataType = T.LongType()) -> T.StructType:
 
 def _meta_guard(state_path: str, spec: dict, what: str,
                 consequence: str) -> None:
-    """The shared pin-or-raise core of every persisted-state guard: write
-    `spec` to meta.json beside the state on first use; raise loudly when
-    an existing pin differs (restarting with changed parameters would
-    silently corrupt additive/probed state — each caller states the
-    concrete consequence)."""
+    """The shared pin-or-raise core of every persisted-state guard: pin
+    `spec` as meta.json beside a LOCAL state on first use (a remote path
+    raises before anything is written), then _check_pin."""
+    local_only(state_path)
     os.makedirs(state_path, exist_ok=True)
     mp = os.path.join(state_path, "meta.json")
-    if os.path.exists(mp):
-        saved = _pinned_meta(state_path)
-        if saved != spec:
-            raise ValueError(
-                f"{what} state at {state_path!r} was written with "
-                f"{saved}; this stream is configured with {spec} — "
-                f"{consequence} Use the original parameters or a fresh "
-                "state path.")
-    else:
-        # publish atomically: a kill mid-dump must not leave a truncated
-        # pin that fails every restart with a JSON decode error
-        tmp = mp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(spec, f)
-        os.replace(tmp, mp)
+    if not os.path.exists(mp):
+        publish_json(mp, spec)
+    _check_pin(state_path, spec, what, consequence)
+
+
+def _check_pin(state_path: str, spec: dict, what: str,
+               consequence: str) -> None:
+    """Raise loudly when the pinned meta.json differs from `spec`: resuming
+    or reading with changed parameters would silently corrupt additive/
+    probed state — each caller states the concrete consequence."""
+    saved = _pinned_meta(state_path)
+    if saved != spec:
+        raise ValueError(
+            f"{what} state at {state_path!r} was written with "
+            f"{saved}; this call uses {spec} — "
+            f"{consequence} Use the original parameters or a fresh "
+            "state path.")
 
 
 def _pinned_meta(state_path: str) -> dict:
@@ -283,7 +255,7 @@ def _near_meta_guard(state_path: str, n_hashes: int, n_bands: int,
     are only comparable under the EXACT hash family that wrote them —
     changed params would silently re-admit every near-dup. Local paths
     only (the compaction contract already pins this state to local FS)."""
-    if "://" in state_path:
+    if not is_local(state_path):
         return
     _meta_guard(state_path,
                 {"n_hashes": n_hashes, "n_bands": n_bands,
@@ -438,9 +410,9 @@ def near_dedup_stream(spark: SparkSession, input_path: str, output_path: str,
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         _near_meta_guard(state_path, nh, nb, id_type.simpleString())
-        state_bands = _read_state_df(spark, bands_path,
+        state_bands, _ = _read_state(spark, bands_path,
                                      _near_bands_schema(id_type))
-        state_sigs = _read_state_df(spark, sigs_path,
+        state_sigs, _ = _read_state(spark, sigs_path,
                                     _near_sigs_schema(id_type))
         kept, ksigs = near_dedup_batch_against_state(
             batch, state_bands, state_sigs, n_hashes=nh, n_bands=nb,
@@ -534,7 +506,7 @@ def scd2_stream(spark: SparkSession, input_path: str, dim_path: str,
     transactional sink, because the operator itself is a converging merge.
     """
     def handle(batch: DataFrame, batch_id: int) -> None:
-        current = _read_state_df(spark, dim_path,
+        current, _ = _read_state(spark, dim_path,
                                  _dim_schema(batch, keys, attrs))
         merged = scd2_apply_batch(current, batch, keys, attrs, ts_col,
                                   full_snapshot)
@@ -605,27 +577,6 @@ class AdditiveState:
     schema: T.StructType | None = None
 
 
-def _sketch_state_read(spark: SparkSession, sketch_path: str,
-                       schema: T.StructType | None):
-    """(sketch DataFrame or None, committed batch id) — the id travels
-    INSIDE the swapped directory (`_commit.json`, underscore-prefixed so
-    the parquet reader ignores it), so counters and the fence commit
-    atomically in one rename. With ``schema=None`` a missing state reads
-    as None (schema inferred from the first written state thereafter)."""
-    _recover_interrupted_compaction(sketch_path)
-    if not os.path.exists(sketch_path):
-        empty = (spark.createDataFrame([], schema)
-                 if schema is not None else None)
-        return empty, -1
-    committed = -1
-    cp = os.path.join(sketch_path, "_commit.json")
-    if os.path.exists(cp):
-        with open(cp) as f:
-            committed = json.load(f)["batch_id"]
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    return reader.parquet(sketch_path), committed
-
-
 def additive_apply_batch(spark: SparkSession, spec: AdditiveState,
                          batch: DataFrame, batch_id: int, path: str) -> bool:
     """One maintenance step of any additive face into its state directory
@@ -640,7 +591,7 @@ def additive_apply_batch(spark: SparkSession, spec: AdditiveState,
     no-op. (Corollary, pinned by test: wiping the CHECKPOINT while keeping
     the state double-counts — the fence is per-batch-id, so the checkpoint
     is part of an additive face's state, unlike scd2_stream's.)"""
-    prev, committed = _sketch_state_read(spark, path, spec.schema)
+    prev, committed = _read_state(spark, path, spec.schema)
     if batch_id <= committed:
         return False
     fresh = spec.build(batch, prev)
@@ -658,7 +609,6 @@ def additive_stream(spark: SparkSession, spec: AdditiveState,
     beside the state first, so resuming with different parameters raises
     instead of adding incompatible counters. Local state paths only (the
     rename swap); remote state belongs in a transactional table."""
-    _local_only(state_path)
     _meta_guard(state_path, spec.meta, spec.face, spec.consequence)
     path = os.path.join(state_path, spec.subdir)
     return foreach_batch_stream(
@@ -678,7 +628,7 @@ def additive_state_read(spark: SparkSession, face: str, state_path: str,
     the face name (drift, rolling_drift, index, rules, cluster or
     seasonal) and the state path are all a read needs."""
     spec = _SPEC_FROM_META[face](_pinned_meta(state_path))
-    counts, _ = _sketch_state_read(
+    counts, _ = _read_state(
         spark, os.path.join(state_path, spec.subdir), schema=None)
     if counts is None:
         raise FileNotFoundError(f"no {spec.face} state at {state_path!r}")
@@ -834,13 +784,17 @@ def sample_apply_batch(spark: SparkSession, batch: DataFrame,
     from logstash_filter_geoip_spark.operators.sampling import \
         _sample_rank_key
 
-    current = _read_state_df(spark, state_path, batch.schema)
+    current, _ = _read_state(spark, state_path, batch.schema)
     union = current.unionByName(batch).dropDuplicates()
     rk = _sample_rank_key(key_col, salt)
     w = Window.partitionBy(strata_col).orderBy(rk.asc(), F.col(key_col))
     kept = (union.withColumn("__rn", F.row_number().over(w))
                  .where(F.col("__rn") <= k).drop("__rn"))
     _swap_dir(kept, state_path)
+
+
+_SAMPLE_CONSEQUENCE = ("rows selected under different specs are different "
+                       "draws and cannot be merged.")
 
 
 def sample_state_read(spark: SparkSession, state_path: str,
@@ -850,17 +804,14 @@ def sample_state_read(spark: SparkSession, state_path: str,
     read, the additive_state_read convention — the state stores rows only;
     rank is a pure function of the kept set). Row-identical to running
     sampling.sample_exact_k over everything ingested so far."""
-    saved = _pinned_meta(state_path)
     spec = {"kind": "exact_k_sample", "strata_col": strata_col,
             "key_col": key_col, "k": k, "salt": salt}
-    if saved != spec:
-        raise ValueError(
-            f"sample state at {state_path!r} was maintained with {saved}; "
-            f"read requested {spec} — a different spec is a different "
-            "draw, not a reranking of this one.")
+    _check_pin(state_path, spec, "exact-k sample", _SAMPLE_CONSEQUENCE)
     from logstash_filter_geoip_spark.operators.sampling import \
         _sample_rank_key
-    rows = spark.read.parquet(os.path.join(state_path, "rows"))
+    rows, _ = _read_state(spark, os.path.join(state_path, "rows"), None)
+    if rows is None:
+        raise FileNotFoundError(f"no exact-k sample at {state_path!r}")
     rk = _sample_rank_key(key_col, salt)
     w = Window.partitionBy(strata_col).orderBy(rk.asc(), F.col(key_col))
     return rows.withColumn("sample_rank", F.row_number().over(w))
@@ -876,13 +827,10 @@ def sample_stream(spark: SparkSession, input_path: str, state_path: str,
     batch parity test pins it). The spec is meta-pinned — resuming with a
     different (strata, key, k, salt) raises instead of silently mixing
     two different draws. Local state paths only (the rename swap)."""
-    _local_only(state_path)
     spec = {"kind": "exact_k_sample", "strata_col": strata_col,
             "key_col": key_col, "k": k, "salt": salt}
     rows_path = os.path.join(state_path, "rows")
-    _meta_guard(state_path, spec, "exact-k sample",
-                "rows selected under different specs are different draws "
-                "and cannot be merged.")
+    _meta_guard(state_path, spec, "exact-k sample", _SAMPLE_CONSEQUENCE)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         sample_apply_batch(spark, batch, rows_path, strata_col, key_col,

@@ -163,13 +163,16 @@ def test_compaction_crash_recovery(spark, tmp_path):
     _write_batch(spark, p["in"], [(0, "alpha"), (1, "beta")])
     _run(spark, p)
 
-    # crash BETWEEN the two renames: state gone, .old holds the live set
-    os.rename(p["state"], p["state"] + ".old")
+    old = os.path.join(os.path.dirname(p["state"]), ".old-state")
+    tmp = os.path.join(os.path.dirname(p["state"]), ".compact-state")
+    # crash BETWEEN the two renames: state gone, .old-state holds the set
+    os.rename(p["state"], old)
     assert incremental.compact_state(spark, p["state"]) == 2
 
-    # crash AFTER the swap, before cleanup: stale .old + leftover .compact
-    shutil.copytree(p["state"], p["state"] + ".old")
-    shutil.copytree(p["state"], p["state"] + ".compact")
+    # crash AFTER the swap, before cleanup: stale .old-state + leftover
+    # .compact-state
+    shutil.copytree(p["state"], old)
+    shutil.copytree(p["state"], tmp)
     assert incremental.compact_state(spark, p["state"]) == 2
 
     _write_batch(spark, p["in"], [(2, "alpha"), (3, "gamma")])

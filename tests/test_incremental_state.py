@@ -42,27 +42,30 @@ def _counters(spark, path):
 
 
 def test_fenced_sketch_recovers_crash_between_renames(spark, tmp_path):
-    """Batch 1's swap died after parking the live sketch in `.old` and
-    before promoting its `.compact`: the next apply rolls back to the old
-    counters and batch id 0, so the replayed batch 1 lands exactly once."""
+    """Batch 1's swap died after parking the live sketch in `.old-sketch`
+    and before promoting its `.compact-sketch`: the next apply rolls back
+    to the old counters and batch id 0, so the replayed batch 1 lands
+    exactly once."""
     sk = str(tmp_path / "state" / "sketch")
+    tmp, old = (str(tmp_path / "state" / ".compact-sketch"),
+                str(tmp_path / "state" / ".old-sketch"))
     batch = spark.createDataFrame([(1,), (1,), (2,)], "user_id long")
     spec = incremental.cms_state(key_col="user_id", w=64, d=2,
                                  salt="cms-v1", hash_basis="xxhash64")
     assert incremental.additive_apply_batch(spark, spec, batch, 0, sk)
     once = _counters(spark, sk)
-    shutil.copytree(sk, sk + ".compact")
-    with open(os.path.join(sk + ".compact", "_commit.json"), "w") as f:
+    shutil.copytree(sk, tmp)
+    with open(os.path.join(tmp, "_commit.json"), "w") as f:
         json.dump({"batch_id": 1}, f)
-    os.rename(sk, sk + ".old")
+    os.rename(sk, old)
 
     assert incremental.additive_apply_batch(spark, spec, batch, 1, sk)
     assert not incremental.additive_apply_batch(spark, spec, batch, 1, sk)
     assert _counters(spark, sk) == {k: 2 * c for k, c in once.items()}
     with open(os.path.join(sk, "_commit.json")) as f:
         assert json.load(f) == {"batch_id": 1}
-    assert not os.path.exists(sk + ".old")
-    assert not os.path.exists(sk + ".compact")
+    assert not os.path.exists(old)
+    assert not os.path.exists(tmp)
 
 
 _SCHEMA = T.StructType([

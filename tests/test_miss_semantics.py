@@ -135,6 +135,21 @@ def test_out_of_uint32_dim_rows_rejected_at_load(spark, start, end):
         validate_dim(bad)
 
 
+@pytest.mark.parametrize("start_lo,end_lo", [(9, 1), (None, 1)])
+def test_malformed_v6_dim_rows_rejected_at_load(spark, start_lo, end_lo):
+    # the v6 sibling: a range reversed in its low half (hi words equal) or
+    # with a null low word can never match the probe's lexicographic
+    # (hi, lo) comparison, so validate_dim_v6 refuses it at load time
+    from logstash_filter_geoip_spark.sources.geolite2 import (load_dim_v6,
+                                                              validate_dim_v6)
+    dim = load_dim_v6(spark, "ASN")
+    validate_dim_v6(dim)
+    bad = dim.unionByName(spark.createDataFrame(
+        [("bad/64", 5, start_lo, 5, end_lo, 1, "x")], dim.schema))
+    with pytest.raises(ValueError, match="1 malformed range rows"):
+        validate_dim_v6(bad)
+
+
 def test_unknown_database_registers_then_raises_at_enrich(spark):
     """J4 (Database.java:102-124 + GeoIPFilter.java:195-196): an
     Unknown-typed database REGISTERS fine (config accepts it, empty field

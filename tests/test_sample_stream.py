@@ -86,6 +86,34 @@ def test_sample_stream_replay_converges(spark, tmp_path):
     assert after == before
 
 
+def test_sample_stream_recovers_interrupted_rows_swap(spark, tmp_path):
+    """A crash inside the `rows` swap — the live rows parked as
+    `.old-rows`, an unverified partial rewrite left in `.compact-rows` —
+    is undone by the next drain, which ends equal to an uncrashed run."""
+    import os
+    crashed, clean = _paths(tmp_path / "crashed"), _paths(tmp_path / "clean")
+    docs = _docs(spark)
+    for p in (crashed, clean):
+        docs.where("doc_id % 2 = 0").coalesce(1) \
+            .write.mode("append").parquet(p["in"])
+        _run(spark, p)
+    state = crashed["state"]
+    spark.read.parquet(os.path.join(state, "rows")).limit(1) \
+         .write.parquet(os.path.join(state, ".compact-rows"))
+    os.rename(os.path.join(state, "rows"), os.path.join(state, ".old-rows"))
+    for p in (crashed, clean):
+        docs.where("doc_id % 2 = 1").coalesce(1) \
+            .write.mode("append").parquet(p["in"])
+        _run(spark, p)
+
+    def sample(p):
+        return sorted(tuple(r) for r in incremental.sample_state_read(
+            spark, p["state"], "lang", "doc_id", K, "ksample-v1").collect())
+
+    assert sample(crashed) == sample(clean) and sample(clean)
+    assert sorted(os.listdir(state)) == ["meta.json", "rows"]
+
+
 def test_sample_stream_spec_pin_k(spark, tmp_path):
     p = _paths(tmp_path)
     _docs(spark).limit(50).coalesce(1).write.mode("append").parquet(p["in"])

@@ -122,6 +122,27 @@ def test_scd2_stream_matches_batch_merges(spark, tmp_path):
         (r.k, r.v, r.valid_from, r.valid_to) for r in want.collect())
 
 
+def test_scd2_stream_recovers_interrupted_dim_swap(spark, tmp_path):
+    """A crash inside the dim swap — the live dim parked as `.old-dim`, an
+    unverified partial rewrite left in `.compact-dim` — is undone by the
+    next drain, which ends equal to an uncrashed run."""
+    import os
+    crashed, clean = _paths(tmp_path / "crashed"), _paths(tmp_path / "clean")
+    for p in (crashed, clean):
+        _write_batch(spark, p["in"], [("k1", 1, _T1), ("k2", 2, _T1)])
+        _run(spark, p)
+    parent = str(tmp_path / "crashed")
+    spark.read.parquet(crashed["dim"]).where("k = 'k2'") \
+         .write.parquet(os.path.join(parent, ".compact-dim"))
+    os.rename(crashed["dim"], os.path.join(parent, ".old-dim"))
+    for p in (crashed, clean):
+        _write_batch(spark, p["in"], [("k1", 3, _T2)])
+        _run(spark, p)
+    assert _dim(spark, crashed) == _dim(spark, clean) == [
+        ("k1", 1, _T1, _T2), ("k1", 3, _T2, None), ("k2", 2, _T1, None)]
+    assert sorted(os.listdir(parent)) == ["ckpt", "dim", "in"]
+
+
 def test_scd2_stream_remote_dim_path_raises(spark):
     df = spark.createDataFrame([("a", 1, _T1)], SCHEMA)
     with pytest.raises(NotImplementedError, match="local paths"):
